@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 
-import graft.table.KeyedTable
+import graft.table.{KeyedTable, TableMetaCache}
 
 /** Serves GROUPED top-k — `row_number()/rank() OVER (PARTITION BY cat
   * ORDER BY col DESC) ≤ N` over a keyed table's declarative read —
@@ -67,7 +67,6 @@ import graft.table.KeyedTable
   */
 class GroupTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  private val memo = new DeclineMemo[Any]
 
   private def pfColumn(pf: PartitionConjuncts.PartFilter): String = pf match {
     case PartitionConjuncts.PartIn(c, _, _) => c
@@ -76,11 +75,11 @@ class GroupTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (KeyedTable.specRegistry.isEmpty) return plan
-    plan.transformUp {
+    TableMetaCache.pinVersions(plan.transformUp {
       case f: Filter =>
         try tryRewrite(f).orElse(tryMorRewrite(f)).getOrElse(f)
         catch { case scala.util.control.NonFatal(_) => f }
-    }
+    })
   }
 
   private[plans] final case class GroupTopKMatch(
@@ -115,7 +114,8 @@ class GroupTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def tryRewrite(f: Filter): Option[LogicalPlan] =
     matchShape(f).flatMap { m =>
-      memo.gated((m.root, m.groupCols, m.sortCol, m.n, m.desc, m.nullsFirst,
+      TableMetaCache.declineGated(spark, this, m.root)((m.root, m.groupCols,
+        m.sortCol, m.n, m.desc, m.nullsFirst,
         m.partFilters.toVector, m.ranges.toVector, m.notNull.toVector,
         m.inLists.map { case (c, vs) => (c, vs.toVector) }.toVector)) {
         serve(m)
@@ -482,7 +482,8 @@ class GroupTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def tryMorRewrite(f: Filter): Option[LogicalPlan] =
     matchMorShape(f).flatMap { m =>
-      memo.gated(("mor", m.spec.path, m.groupCols, m.sortCol, m.n, m.desc,
+      TableMetaCache.declineGated(spark, this, m.spec.path)(("mor",
+        m.spec.path, m.groupCols, m.sortCol, m.n, m.desc,
         m.nullsFirst, m.partFilters.toVector, m.ranges.toVector,
         m.notNull.toVector,
         m.inLists.map { case (c, vs) => (c, vs.toVector) }.toVector)) {
@@ -677,7 +678,7 @@ class GroupTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       val settled = table.settledWinnerEntries(spark).getOrElse(return None)
       val stRel = st.withColumn(
         "_rfile", table.relOfFileCol(spark, col("file")))
-      val MorWinnerMaps.WinnerMaps(_, cntByFile, wcU) =
+      val MorWinnerMaps.WinnerMaps(_, cntByFile, wcU, _) =
         MorWinnerMaps.of(spark, table, settled, stRel)
           .getOrElse(return None)
       val joined = PartitionConjuncts.select(

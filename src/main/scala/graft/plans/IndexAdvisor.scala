@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.table.KeyedTable
+import graft.table.{KeyedTable, TableMetaCache}
 
 /** Workload-driven INDEX advisor — the index-family twin of [[MvAdvisor]]:
   * analyze a set of query frames, find the literal point probes over
@@ -32,57 +32,32 @@ object IndexAdvisor {
   final case class IndexAdvice(
       recommendations: Seq[IndexRec], skipped: Seq[String])
 
-  // (table path, column) -> (mutation tick at probe time, cardinality).
-  // The global tick is conservative (any table's mutation invalidates
-  // every memo) but free to check; the probe it guards is a full
-  // column scan.
-  private val cardMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), (Long, Long)]
-
-  // (table path) -> (mutation tick, per-file sizes). One recursive
-  // listing per table per table-state generation, shared across the
-  // advisor's arms (rollup bytes gate, compaction sizing) and across
-  // consecutive analyze() calls on an unchanged table — the same
-  // listing-discipline as the KMV memo below, one class cheaper.
-  private val sizesMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Seq[Long])]
-
+  /** Per-file sizes from one recursive listing, cached per table
+    * version ([[TableMetaCache]]): shared across the advisor's arms
+    * (rollup bytes gate, compaction sizing) and across consecutive
+    * analyze() calls on an unchanged table.
+    */
   private def memoizedFileSizes(
       spark: org.apache.spark.sql.SparkSession,
-      t: KeyedTable): Seq[Long] = {
-    val tick = KeyedTable.mutationTick.get()
-    Option(sizesMemo.get(t.spec.path)) match {
-      case Some((at, sizes)) if at == tick => sizes
-      case _ =>
-        val sizes = t.dataFileSizes(spark)
-        sizesMemo.put(t.spec.path, (tick, sizes))
-        sizes
-    }
-  }
+      t: KeyedTable): Seq[Long] =
+    TableMetaCache.get(spark, t.spec.path, "fileSizes")(t.dataFileSizes(spark))
 
-  /** The grouped-rollup arm's KMV cardinality probe, memoized by
-    * [[KeyedTable.mutationTick]]: one column-pruned scan per (table,
-    * column) per table-state generation, O(1) on re-analysis of an
-    * unchanged workload.
+  /** The grouped-rollup arm's KMV cardinality probe, cached per table
+    * version: one column-pruned scan per (table, column) per table
+    * state, O(1) on re-analysis of an unchanged workload.
     */
   private def memoizedCardinality(
       spark: org.apache.spark.sql.SparkSession,
-      t: KeyedTable, gcol: String): Long = {
-    val tick = KeyedTable.mutationTick.get()
-    val key = (t.spec.path, gcol.toLowerCase(java.util.Locale.ROOT))
-    Option(cardMemo.get(key)) match {
-      case Some((at, card)) if at == tick => card
-      case _ =>
-        val meas = t.read(spark).agg(
-          graft.functions.KmvDistinct.kmvDistinct(
-            org.apache.spark.sql.functions.xxhash64(
-              org.apache.spark.sql.functions.col(gcol)), 1024).as("card"))
-          .collect()(0)
-        val card = if (meas.isNullAt(0)) 0L else meas.getLong(0)
-        cardMemo.put(key, (tick, card))
-        card
+      t: KeyedTable, gcol: String): Long =
+    TableMetaCache.get(spark, t.spec.path,
+        ("kmv", gcol.toLowerCase(java.util.Locale.ROOT))) {
+      val meas = t.read(spark).agg(
+        graft.functions.KmvDistinct.kmvDistinct(
+          org.apache.spark.sql.functions.xxhash64(
+            org.apache.spark.sql.functions.col(gcol)), 1024).as("card"))
+        .collect()(0)
+      if (meas.isNullAt(0)) 0L else meas.getLong(0)
     }
-  }
 
   def analyze(spark: SparkSession, queries: Seq[DataFrame]): IndexAdvice = {
     val rule = new PointLookupRewrite(spark)
@@ -265,9 +240,9 @@ object IndexAdvisor {
           // Gate order: the metadata-sized listing FIRST — a table too
           // small to pass the bytes-per-value bound at ANY cardinality
           // (card ≥ 1 ⇒ bytes/card ≤ bytes) never pays the data-scan
-          // probe. The KMV probe itself is memoized per (table, column)
-          // by the global mutation tick: re-analyzing an unchanged
-          // workload costs O(listing), not O(table data) per call.
+          // probe. The KMV probe itself is cached per (table, column)
+          // and table version: re-analyzing an unchanged workload
+          // costs O(listing), not O(table data) per call.
           val bytes = IndexAdvisor.memoizedFileSizes(spark, t).sum
           if (bytes < 2 * rollupTarget) Nil
           else {

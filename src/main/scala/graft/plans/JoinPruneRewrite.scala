@@ -12,7 +12,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 import org.apache.spark.sql.types.{StructField, StructType}
 
-import graft.table.KeyedTable
+import graft.table.{KeyedTable, TableMetaCache}
 
 /** Prunes the FACT side of a star join through the index family — the
   * logical-plan analogue of a runtime filter / dynamic "file" pruning:
@@ -90,19 +90,13 @@ class JoinPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
   private val pointRule = new PointLookupRewrite(spark)
   private val rangeRule = new RangePruneRewrite(spark)
 
-  // Semantic decline memo: a join whose probes found nothing to prune
-  // pays its plan-time index IO once, not once per optimizer iteration
-  // (sibling rules rebuild node instances between iterations, so the
-  // key is the derived probe, not the node).
-  private val memo = new DeclineMemo[Any]
-
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (KeyedTable.specRegistry.isEmpty) return plan
-    plan.transformUp {
+    TableMetaCache.pinVersions(plan.transformUp {
       case j: Join =>
         try tryRewrite(j).getOrElse(j)
         catch { case scala.util.control.NonFatal(_) => j }
-    }
+    })
   }
 
   private def tryRewrite(j: Join): Option[LogicalPlan] = {
@@ -332,7 +326,8 @@ class JoinPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         val key = (fact.root, dim.root,
           joined.map { case (fa, dc) => (fa.name, dc) },
           probe.viaKey, probe.probes.map(p => (p._1.name, p._2.toVector)))
-        memo.gated(key)(serveOrientation(j, fact, dim, probe, joined))
+        TableMetaCache.declineGated(spark, this, fact.root, dim.root)(key)(
+          serveOrientation(j, fact, dim, probe, joined))
       case None =>
         // Range arm: keys derive from a bounded stats-pruned dim scan,
         // so any dim attribute joins — but the dim must be plain COW
@@ -348,7 +343,8 @@ class JoinPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           joined.map { case (fa, dc) => (fa.name, lower(dc)) },
           rm.ranges.toVector, rm.nullPreds.toVector,
           rm.inLists.map { case (c, vs) => (c, vs.toVector) }.toVector)
-        memo.gated(key)(serveRangeOrientation(j, fact, dim, rm, joined))
+        TableMetaCache.declineGated(spark, this, fact.root, dim.root)(key)(
+          serveRangeOrientation(j, fact, dim, rm, joined))
     }
   }
 

@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 import org.apache.spark.sql.types.{StructField, StructType}
 
-import graft.table.KeyedTable
+import graft.table.{KeyedTable, TableMetaCache}
 
 /** Serves point lookups on a keyed table's DECLARATIVE read plan through
   * the record-level index — the planner-side half of [[KeyedTable.lookupKeys]]:
@@ -63,22 +63,20 @@ class PointLookupRewrite(spark: SparkSession)
     */
   private val MaxProbeValues = 128
 
-  private val memo = new DeclineMemo[Any]
-
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (KeyedTable.specRegistry.isEmpty) return plan
-    plan.transformUp {
+    TableMetaCache.pinVersions(plan.transformUp {
       case f: Filter =>
         try tryRewrite(f).getOrElse(f)
         catch { case scala.util.control.NonFatal(_) => f }
-    }
+    })
   }
 
   private def tryRewrite(f: Filter): Option[LogicalPlan] =
     matchProbe(f).flatMap { m =>
       val key = (m.root, m.viaKey,
         m.probes.map(p => (p._1.name, p._2.toVector)))
-      memo.gated(key)(serveProbe(m))
+      TableMetaCache.declineGated(spark, this, m.root)(key)(serveProbe(m))
     }
 
   /** The shape half of the match, index-IO-free — shared with

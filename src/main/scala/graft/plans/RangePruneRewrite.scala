@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 import org.apache.spark.sql.types._
 
-import graft.table.KeyedTable
+import graft.table.{KeyedTable, TableMetaCache}
 
 /** Serves RANGE predicates on a keyed table's declarative read plan
   * through the column-stats sidecar — the planner-side half of
@@ -86,15 +86,13 @@ class RangePruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     */
   private val MaxResolveKeys = 128
 
-  private val memo = new DeclineMemo[Any]
-
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (KeyedTable.specRegistry.isEmpty) return plan
-    plan.transformUp {
+    TableMetaCache.pinVersions(plan.transformUp {
       case f: Filter =>
         try tryRewrite(f).getOrElse(f)
         catch { case scala.util.control.NonFatal(_) => f }
-    }
+    })
   }
 
   /** The shape half of the match, sidecar-IO-free — shared with
@@ -135,7 +133,7 @@ class RangePruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       val key = (m.root, m.ranges.toVector, m.nullPreds.toVector,
         m.inLists.map { case (c, vs) => (c, vs.toVector) }.toVector,
         m.morKeyAttrs.isDefined, m.partFilters.toVector)
-      memo.gated(key)(serveRange(m))
+      TableMetaCache.declineGated(spark, this, m.root)(key)(serveRange(m))
     }
 
   private def matchRange(f: Filter): Option[RangeMatch] = {

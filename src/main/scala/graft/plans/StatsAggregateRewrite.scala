@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFil
 import org.apache.spark.sql.functions.{coalesce, col, count, countDistinct, lit, max, min, sum, when}
 import org.apache.spark.sql.types._
 
-import graft.table.KeyedTable
+import graft.table.{KeyedTable, TableMetaCache}
 
 /** Answers `min`/`max`/`count` aggregates from the column-stats sidecar
   * alone — aggregate pushdown to table metadata, the move Iceberg/Hudi
@@ -93,11 +93,9 @@ import graft.table.KeyedTable
 class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
   import StatsAggregateRewrite.MaxGroups
 
-  private val memo = new DeclineMemo[Any]
-
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (KeyedTable.specRegistry.isEmpty) return plan
-    plan.transformUp {
+    TableMetaCache.pinVersions(plan.transformUp {
       case a: Aggregate =>
         try serve(a).getOrElse(a)
         catch {
@@ -105,7 +103,7 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
             logInfo(s"stats-aggregate rewrite declined on error: $e")
             a
         }
-    }
+    })
   }
 
   private def integral(t: DataType): Boolean = t match {
@@ -231,7 +229,7 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         // declined cast shape memoized under the bare key would rob
         // the cast-free twin of its hybrid serve for the session.
         m.casts.toVector.map { case (i, c) => (i, c.dataType) }.sortBy(_._1))
-      memo.gated(key)(serveAgg(m))
+      TableMetaCache.declineGated(spark, this, m.spec.path)(key)(serveAgg(m))
     }.orElse(serveMorCount(a)).orElse(serveMorStats(a))
       .orElse(serveDistinctValues(a)).orElse(serveMorDistinct(a))
 
@@ -333,7 +331,7 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     val memoKey = ("distinctValues", spec.path, relAttr.name,
       partFilters.toVector, ex.ranges.toVector, notNull.toVector,
       ex.inLists.map { case (c, vs) => (c, vs.toVector) }.toVector)
-    memo.gated(memoKey) {
+    TableMetaCache.declineGated(spark, this, spec.path)(memoKey) {
       val table = KeyedTable(spec)
       table.colStatsFrame(spark).flatMap { st =>
         def statCol(prefix: String): Option[String] =
@@ -521,7 +519,8 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     if (rnConds.map(_._2) != Seq(0) || rest.nonEmpty) return None
     val table = KeyedTable(spec)
     if (groupAttrs.isEmpty) {
-      memo.gated(("morCount", spec.path)) {
+      TableMetaCache.declineGated(spark, this, spec.path)(
+          ("morCount", spec.path)) {
         table.resolvedCount(spark).map { n =>
           logInfo(s"stats-aggregate rewrite: ${spec.path} resolved count " +
             s"served from the record-level index ($n live rows, no scan)")
@@ -533,7 +532,7 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       }
     } else {
       val key = ("morGroupCount", spec.path, groupAttrs.map(_.name).toVector)
-      memo.gated(key) {
+      TableMetaCache.declineGated(spark, this, spec.path)(key) {
         table.resolvedGroupCounts(spark).flatMap { tuples =>
           // Combine the full partition tuples down to the requested
           // grouping projection (a subset groups coarser; counts add).
@@ -640,7 +639,7 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         m.groupAttrs.map(_.name).toVector, m.partFilters.toVector,
         m.ranges.toVector, m.notNull.toVector,
         m.inLists.map { case (c, vs) => (c, vs.toVector) }.toVector)
-      memo.gated(key) {
+      TableMetaCache.declineGated(spark, this, m.spec.path)(key) {
         serveMorStatsImpl(a, table, m)
       }
     }
@@ -789,7 +788,7 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       val settled = table.settledWinnerEntries(spark).getOrElse(return None)
       val stRel = st.withColumn(
         "_rfile", table.relOfFileCol(spark, col("file")))
-      val MorWinnerMaps.WinnerMaps(wcByFile, cntByFile, wcU) =
+      val MorWinnerMaps.WinnerMaps(wcByFile, cntByFile, wcU, _) =
         MorWinnerMaps.of(spark, table, settled, stRel).getOrElse(return None)
       // Partition point conjuncts select whole sidecar rows BEFORE the
       // classification — both the fold and the scan sides then see
@@ -1226,7 +1225,8 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     if (ex.other.nonEmpty || ex.nullPreds.exists(_._2)) return None
     val notNull = ex.nullPreds.map(_._1)
     val table = KeyedTable(spec)
-    memo.gated(("morDistinct", spec.path, relAttr.name,
+    TableMetaCache.declineGated(spark, this, spec.path)((
+        "morDistinct", spec.path, relAttr.name,
       partFilters.toVector, ex.ranges.toVector, notNull.toVector,
       ex.inLists.map { case (c, vs) => (c, vs.toVector) }.toVector)) {
       table.colStatsFrame(spark).flatMap { st =>
@@ -2222,70 +2222,54 @@ object StatsAggregateRewrite {
 /** Per-file winner/stored-count maps for a history table's resolved
   * serves — shared by every rule composing the winner-file
   * classification ([[StatsAggregateRewrite]]'s value/distinct arms,
-  * [[TopKPruneRewrite]]'s resolved walk). (table path) → (mutation
-  * tick, winner count per table-relative file, stored row count per
-  * table-relative file). Both maps are file-count-sized — the same
-  * class as a Hudi timeline. Any mutation anywhere bumps the global
-  * tick and invalidates — conservative but free to check, and it keeps
-  * the per-invocation serve to ONE index-sized fold job instead of
+  * [[TopKPruneRewrite]]'s resolved walk): winner count per
+  * table-relative file, stored row count per table-relative file. Both
+  * maps are file-count-sized — the same class as a Hudi timeline.
+  * Cached per table version ([[TableMetaCache]]), which keeps the
+  * per-invocation serve to ONE index-sized fold job instead of
   * re-aggregating the index per query.
   */
 private[plans] object MorWinnerMaps {
 
-  /** The per-tick winner artifacts: the driver-side maps (plan-time
+  /** The per-version winner artifacts: the in-memory maps (plan-time
     * walks, prune accounting) plus the winner-count lookup UDF, which
     * closes over a BROADCAST handle rather than the map itself — the
     * per-task closure stays O(1) at 10⁶-file scale, the map ships once
-    * per executor via torrent instead of once per task.
+    * per executor via torrent instead of once per task. Closing it
+    * destroys the broadcast: the cache does so when a racing planner's
+    * copy loses the install or the table's version supersedes it
+    * (non-blocking; a query racing the table change that superseded it
+    * was already in undefined territory), so stale winner maps never
+    * accumulate for the JVM lifetime.
     */
   private[plans] final case class WinnerMaps(
       wcByFile: Map[String, Long], cntByFile: Map[String, Long],
-      wcU: org.apache.spark.sql.expressions.UserDefinedFunction)
+      wcU: org.apache.spark.sql.expressions.UserDefinedFunction,
+      bc: org.apache.spark.broadcast.Broadcast[Map[String, Long]])
+      extends AutoCloseable {
+    def close(): Unit = bc.destroy()
+  }
 
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[String,
-      (Long, org.apache.spark.broadcast.Broadcast[Map[String, Long]],
-        WinnerMaps)]
-
-  /** The maps + lookup UDF, memoized per mutation tick, with the
+  /** The maps + lookup UDF, cached per table version, with the
     * soundness cross-check applied: every winner entry's file must be
     * covered by the stats sidecar (exists ⇒ current guarantees it; a
     * violation means a racing write — `None`: decline, don't drop
-    * winners). Installation is atomic per (path, tick): exactly one
-    * broadcast survives a planning race, and a superseded tick's
-    * broadcast is `destroy()`ed eagerly when its entry is replaced
-    * (non-blocking; a query racing the table mutation that bumped the
-    * tick was already in undefined territory), so stale winner maps
-    * never accumulate for the JVM lifetime.
+    * winners).
     */
   def of(
       spark: SparkSession, table: KeyedTable,
       settled: org.apache.spark.sql.DataFrame,
       stRel: org.apache.spark.sql.DataFrame): Option[WinnerMaps] = {
     import org.apache.spark.sql.functions.{col, count, lit, udf}
-    val tick = KeyedTable.mutationTick.get()
-    val path = table.spec.path
-    val m = cache.get(path) match {
-      case Some((t, _, m0)) if t == tick => m0
-      case _ =>
-        val w0 = settled.groupBy(col("file"))
-          .agg(count(lit(1)).as("wcnt")).collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        val c0 = KeyedTable.withMetaConf(spark)(
-          stRel.select(col("_rfile"), col("cnt")).collect()
-            .map(r => r.getString(0) -> r.getLong(1)).toMap)
-        val bc = spark.sparkContext.broadcast(w0)
-        val m0 = WinnerMaps(w0, c0, udf((f: String) => bc.value.get(f)))
-        @annotation.tailrec
-        def install(): WinnerMaps = cache.putIfAbsent(path, (tick, bc, m0)) match {
-          case None => m0
-          case Some(old @ (t, oldBc, oldM)) =>
-            if (t == tick) { bc.destroy(); oldM }            // lost the race
-            else if (cache.replace(path, old, (tick, bc, m0))) {
-              oldBc.destroy(); m0                            // superseded tick
-            } else install()
-        }
-        install()
+    val m = TableMetaCache.get(spark, table.spec.path, "winnerMaps") {
+      val w0 = settled.groupBy(col("file"))
+        .agg(count(lit(1)).as("wcnt")).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val c0 = KeyedTable.withMetaConf(spark)(
+        stRel.select(col("_rfile"), col("cnt")).collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap)
+      val bc = spark.sparkContext.broadcast(w0)
+      WinnerMaps(w0, c0, udf((f: String) => bc.value.get(f)), bc)
     }
     if (!m.wcByFile.keySet.subsetOf(m.cntByFile.keySet)) None else Some(m)
   }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 
-import graft.table.KeyedTable
+import graft.table.{KeyedTable, TableMetaCache}
 
 /** Serves `ORDER BY col [ASC|DESC] LIMIT k` over a keyed table's
   * declarative read through the column-stats sidecar — the third member
@@ -66,15 +66,13 @@ import graft.table.KeyedTable
   */
 class TopKPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  private val memo = new DeclineMemo[Any]
-
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (KeyedTable.specRegistry.isEmpty) return plan
-    plan.transformUp {
+    TableMetaCache.pinVersions(plan.transformUp {
       case lim: GlobalLimit =>
         try tryRewrite(lim).orElse(tryMorRewrite(lim)).getOrElse(lim)
         catch { case scala.util.control.NonFatal(_) => lim }
-    }
+    })
   }
 
   private def projOk(pl: Seq[NamedExpression]): Boolean = pl.forall {
@@ -114,7 +112,8 @@ class TopKPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def tryRewrite(lim: GlobalLimit): Option[LogicalPlan] =
     matchTopK(lim).flatMap { m =>
-      memo.gated((m.root, m.sortCol, m.k, m.desc, m.nullsFirst,
+      TableMetaCache.declineGated(spark, this, m.root)((m.root, m.sortCol,
+        m.k, m.desc, m.nullsFirst,
         m.partFilters.toVector, m.ranges.toVector, m.notNull.toVector,
         m.inLists.map { case (c, vs) => (c, vs.toVector) }.toVector)) {
         serveTopK(m)
@@ -486,7 +485,8 @@ class TopKPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def tryMorRewrite(lim: GlobalLimit): Option[LogicalPlan] =
     matchMorTopK(lim).flatMap { m =>
-      memo.gated(("mor", m.spec.path, m.sortCol, m.k, m.desc,
+      TableMetaCache.declineGated(spark, this, m.spec.path)(("mor",
+        m.spec.path, m.sortCol, m.k, m.desc,
         m.nullsFirst, m.partFilters.toVector, m.ranges.toVector,
         m.notNull.toVector,
         m.inLists.map { case (c, vs) => (c, vs.toVector) }.toVector)) {
@@ -527,7 +527,7 @@ class TopKPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       val settled = table.settledWinnerEntries(spark).getOrElse(return None)
       val stRel = st.withColumn(
         "_rfile", table.relOfFileCol(spark, col("file")))
-      val MorWinnerMaps.WinnerMaps(_, cntByFile, wcU) =
+      val MorWinnerMaps.WinnerMaps(_, cntByFile, wcU, _) =
         MorWinnerMaps.of(spark, table, settled, stRel)
           .getOrElse(return None)
       val joined = PartitionConjuncts.select(

@@ -673,16 +673,18 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     * rendering), the index's stored (m, k) and the indexed-file count —
     * previously three separate actions per bloom probe.
     */
-  /** The sidecar's build boundary via the memoized head probe (one
-    * `limit(1)` job per (session, dir, mutation tick) instead of one
-    * per consumer call); falls back to a direct probe of `idx` when the
-    * memo read fails. `None` = empty sidecar.
+  /** The sidecar's build boundary — the `built_at` of its head row — the
+    * freshness probe every index consumer runs before its real work.
+    * Cached per (dir, table version): one `limit(1)` job instead of one
+    * per consumer call, without collecting the (potentially
+    * key-count-sized) sidecar itself. `None` = empty sidecar.
     */
   private def builtAtOf(
       spark: SparkSession, sidecarDir: String, idx: DataFrame): Option[String] =
-    KeyedTable.sidecarHead(spark, sidecarDir, Seq("built_at"))
-      .getOrElse(idx.select(col("built_at")).limit(1).collect().headOption)
-      .map(_.getString(0))
+    TableMetaCache.get(spark, spec.path, ("builtAt", sidecarDir)) {
+      KeyedTable.withMetaConf(spark)(
+        idx.select(col("built_at")).limit(1).collect()).headOption.map(_.getString(0))
+    }
 
   private def bloomHeadAgg(idx: DataFrame): org.apache.spark.sql.Row =
     idx.agg(
@@ -938,23 +940,6 @@ final class KeyedTable(val spec: KeyedTableSpec) {
   private val RliDirName = "_graft_rli"
   private def rliDir = s"${spec.path}/$RliDirName"
 
-  /** An index sidecar frame for PROBE paths: the size-gated driver-local
-    * snapshot ([[KeyedTable.localMetaFrame]] — one collect per (session,
-    * dir, mutation tick)) when the sidecar is genuinely metadata-sized,
-    * else the parquet-backed frame. Probe paths re-read their sidecar on
-    * every serve (candidate selection, resolved counts, grouped walks),
-    * and each parquet-backed read pays file listing + a scan job —
-    * ~100–300 ms of fixed cost per action at any data scale; the
-    * snapshot turns those into local jobs with the SAME Spark expression
-    * semantics. A 100 TB table's key-count-sized index exceeds the gate
-    * and streams through Spark exactly as before. Probe-only: the
-    * build/refresh paths keep their parquet-backed reads (they publish a
-    * new sidecar from what they read, and their cost is the subject).
-    */
-  private def probeSidecarFrame(spark: SparkSession, dir: String): DataFrame =
-    KeyedTable.localMetaFrame(spark, dir).map(_._1)
-      .getOrElse(spark.read.parquet(dir))
-
   /** The table-relative rendering of `input_file_name()` — the same
     * normalization the commit markers record, so index entries and
     * marker file records compare as equals.
@@ -1044,7 +1029,6 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     f.delete(dst, true)
     if (!f.rename(tmp, dst))
       throw new java.io.IOException(s"rename $tmp -> $dst failed")
-    KeyedTable.mutationTick.incrementAndGet()
   }
 
   private def publishRli(spark: SparkSession, entries: DataFrame): Unit =
@@ -1157,7 +1141,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     val f = fs(spark)
     if (!f.exists(new Path(rliDir))) return None
     try {
-      val idx = probeSidecarFrame(spark, rliDir)
+      val idx = spark.read.parquet(rliDir)
       if (!rliRequiredCols.subsetOf(idx.columns.toSet)) return None
       val builtAt = builtAtOf(spark, rliDir, idx).getOrElse(return None)
       KeyedTable.fileDeltaSince(spark, spec.path, builtAt).map {
@@ -1203,7 +1187,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     val f = fs(spark)
     if (!f.exists(new Path(rliDir)) || !spec.retainHistory) return None
     try {
-      val idx = probeSidecarFrame(spark, rliDir)
+      val idx = spark.read.parquet(rliDir)
       if (!rliRequiredCols.subsetOf(idx.columns.toSet)) return None
       val builtAt = builtAtOf(spark, rliDir, idx).getOrElse(return None)
       KeyedTable.fileDeltaSince(spark, spec.path, builtAt).map {
@@ -1240,7 +1224,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     if (!f.exists(new Path(rliDir)) || !spec.retainHistory ||
         spec.partitionCols.isEmpty) return None
     try {
-      val idx = probeSidecarFrame(spark, rliDir)
+      val idx = spark.read.parquet(rliDir)
       if (!rliRequiredCols.subsetOf(idx.columns.toSet) ||
           !rliPvCols.forall(idx.columns.contains)) return None
       val builtAt = builtAtOf(spark, rliDir, idx).getOrElse(return None)
@@ -1282,7 +1266,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     val f = fs(spark)
     if (!f.exists(new Path(rliDir)) || !spec.retainHistory) return None
     try {
-      val idx = probeSidecarFrame(spark, rliDir)
+      val idx = spark.read.parquet(rliDir)
       if (!rliRequiredCols.subsetOf(idx.columns.toSet)) return None
       val builtAt = builtAtOf(spark, rliDir, idx).getOrElse(return None)
       KeyedTable.fileDeltaSince(spark, spec.path, builtAt).map {
@@ -1371,7 +1355,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
           st.columns.find(_.equalsIgnoreCase(s"p_$c")))
         if (pCols.exists(_.isEmpty) || !st.columns.contains("cnt"))
           return None
-        val idx = probeSidecarFrame(spark, rliDir)
+        val idx = spark.read.parquet(rliDir)
         if (!rliRequiredCols.subsetOf(idx.columns.toSet)) return None
         val builtAt = builtAtOf(spark, rliDir, idx).getOrElse(return None)
         val fresh = KeyedTable
@@ -1686,7 +1670,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     val dir = new Path(new Path(spec.path), siDirName(column))
     if (!f.exists(dir)) return None
     try {
-      val idx = probeSidecarFrame(spark, dir.toString)
+      val idx = spark.read.parquet(dir.toString)
       if (!siRequiredCols.subsetOf(idx.columns.toSet)) return None
       val builtAt = builtAtOf(spark, dir.toString, idx).getOrElse(return None)
       KeyedTable.fileDeltaSince(spark, spec.path, builtAt).map {
@@ -1915,7 +1899,6 @@ final class KeyedTable(val spec: KeyedTableSpec) {
       .coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(colStatsDir)
     f.delete(new Path(staleStatsDir), true)
-    KeyedTable.mutationTick.incrementAndGet()
   }
 
   /** Bring the column-stats sidecar current over the SAME columns it
@@ -1961,14 +1944,37 @@ final class KeyedTable(val spec: KeyedTableSpec) {
   private[graft] def colStatsFrame(spark: SparkSession): Option[DataFrame] = {
     if (!fs(spark).exists(new Path(colStatsDir)) || isEvolved(spark))
       return None
-    // Metadata-sized sidecars serve from a driver-local snapshot (one
-    // collect per (session, dir, mutation tick)); oversize or
-    // unreadable ones keep the parquet-backed frame.
-    KeyedTable.localMetaFrame(spark, colStatsDir).map(_._1).orElse {
+    colStatsSnapshot(spark).map(_._1).orElse {
       try Some(spark.read.parquet(colStatsDir))
       catch { case scala.util.control.NonFatal(_) => None }
     }
   }
+
+  /** In-memory snapshot of the column-stats sidecar plus its row
+    * count, or `None` when it is absent, unreadable or past
+    * [[KeyedTable.MaxSnapshotRows]] (callers fall back to the
+    * parquet-backed frame). The serve rules probe this tiny frame several
+    * times per query (classification, walk, selection), and each probe
+    * over a parquet-backed frame pays file listing + a scan job — 100–300
+    * ms of fixed cost per action at any data scale. Collected ONCE per
+    * (session, table version) into a LocalRelation, every later probe is
+    * a local job with the SAME Spark expression semantics (UTF8String
+    * ordering, decimal comparisons — nothing re-implemented by hand).
+    * The gate counts rows, so planner memory is bounded whatever the
+    * sidecar's compressed size: a 100 TB table's million-file sidecar
+    * stays parquet-backed and streams through Spark.
+    */
+  private def colStatsSnapshot(spark: SparkSession): Option[(DataFrame, Int)] =
+    TableMetaCache.get(spark, spec.path, ("colstats", spark)) {
+      try {
+        val src = spark.read.parquet(colStatsDir)
+        val rows = KeyedTable.withMetaConf(spark)(
+          src.limit(KeyedTable.MaxSnapshotRows + 1).collect())
+        if (rows.length > KeyedTable.MaxSnapshotRows) None
+        else Some((spark.createDataFrame(
+          java.util.Arrays.asList(rows: _*), src.schema), rows.length))
+      } catch { case scala.util.control.NonFatal(_) => None }
+    }
 
   /** The stats index's candidate files for a conjunction of ranges, as
     * absolute [[Path]]s plus the total indexed file count, or `None`
@@ -2139,7 +2145,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     // Localized sidecar: the total count rides the snapshot and the
     // selection is ONE local action instead of a parquet count + a
     // parquet filter-collect (two scan jobs per serve).
-    val snap = KeyedTable.localMetaFrame(spark, colStatsDir)
+    val snap = colStatsSnapshot(spark)
     val st = snap.map(_._1).getOrElse(spark.read.parquet(colStatsDir))
     val all = snap.map(_._2).getOrElse(st.count().toInt)
     val rangePreds = ranges.map { r =>
@@ -3129,6 +3135,15 @@ final class KeyedTable(val spec: KeyedTableSpec) {
 
   private def registerInSession(spark: SparkSession, tableName: String): Unit = {
     if (spark.catalog.tableExists(tableName)) {
+      // `CREATE TABLE … LOCATION` froze the columns the files had then;
+      // like the reference's hive_sync, add the columns the table has
+      // gained since (older files read them as null).
+      val known = spark.table(tableName).columns.map(_.toLowerCase).toSet
+      val gained = sidecarSchema(spark).toSeq.flatMap(_.fields)
+        .filterNot(f => known(f.name.toLowerCase))
+      if (gained.nonEmpty)
+        spark.sql(s"ALTER TABLE $tableName ADD COLUMNS " +
+          gained.map(_.toDDL).mkString("(", ", ", ")"))
       spark.catalog.refreshTable(tableName)
     } else {
       spark.sql(
@@ -3279,9 +3294,9 @@ final class KeyedTable(val spec: KeyedTableSpec) {
 
   /** Partition-scoped APPEND through a sibling staging directory: the
     * batch is written once (partitioned, the same write job a direct
-    * append runs) into `<path>_graft_ins_tmp`, each produced part file
-    * is MOVED (rename) into its table partition dir, and the moved
-    * table-relative names are returned — the commit's EXACT file
+    * append runs) into `<path>_graft_ins_<unique>_tmp`, each produced
+    * part file is MOVED (rename) into its table partition dir, and the
+    * moved table-relative names are returned — the commit's EXACT file
     * record. Replaces the direct-append sequence [batch-scan
     * partition-tuple collect → scoped pre-listing → append → scoped
     * post-listing]: the staging tree itself names the touched dirs and
@@ -3295,16 +3310,19 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     * can land without a marker; readers see them as committed rows
     * exactly as a torn append's); rename collisions are impossible in
     * practice (part names embed the write job's UUID) and checked
-    * loudly. Local/HDFS-style rename is O(1); an object-store backend
-    * would pay a copy per file — the direct-append path there pays the
-    * same copy inside its commit protocol.
+    * loudly. The staging dir is the writer's own, and only it is
+    * deleted: two unlocked concurrent appends never remove each other's
+    * staged files (the `_tmp` suffix leaves a crashed writer's dir to
+    * [[rollbackDebris]]). Local/HDFS-style rename is O(1); an
+    * object-store backend would pay a copy per file — the direct-append
+    * path there pays the same copy inside its commit protocol.
     */
   private def appendViaStaging(
       spark: SparkSession, df: DataFrame): Seq[String] = {
     val f = fs(spark)
-    val staging = new Path(spec.path + "_graft_ins_tmp")
-    f.delete(staging, true)
-    val w = df.write.mode(SaveMode.Overwrite)
+    val staging = new Path(
+      s"${spec.path}_graft_ins_${java.util.UUID.randomUUID()}_tmp")
+    val w = df.write.mode(SaveMode.ErrorIfExists)
     (if (spec.partitionCols.nonEmpty) w.partitionBy(spec.partitionCols: _*) else w)
       .parquet(staging.toString)
     // Sidecars retire before any file LANDS in the table (the staging
@@ -3850,95 +3868,8 @@ object KeyedTable {
     scala.collection.concurrent.TrieMap
       .empty[(Int, String), Seq[(Int, Seq[String])]]
 
-  /** Bumped by every in-process table mutation (timeline record, sidecar
-    * publish, stats publish) — the cheap freshness token the optimizer
-    * rules' decline memos key on ([[graft.plans.DeclineMemo]]): a cached
-    * "this plan node cannot be served" stays valid only while NO table
-    * in the process changed. Coarse on purpose — a false invalidation
-    * re-pays one plan-time probe; a per-table token would buy little
-    * (plans rarely straddle unrelated mutations). Serving soundness
-    * never depends on this: positive serves re-prove freshness through
-    * the commit→files delta every time.
-    */
-  private[graft] val mutationTick = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Driver-local snapshots of METADATA-sized sidecars (column stats):
-    * the serve rules probe these tiny frames several times per query
-    * (classification, walk, selection), and each probe over a
-    * parquet-backed frame pays file listing + a scan job — 100–300 ms
-    * of fixed cost per action at any data scale. Snapshotting the
-    * sidecar ONCE per (session, dir, [[mutationTick]]) into a
-    * LocalRelation turns every subsequent probe into a local job with
-    * the SAME Spark expression semantics (UTF8String ordering, decimal
-    * comparisons — nothing is re-implemented driver-side). Guarded by:
-    *   - [[mutationTick]]: any table mutation in this JVM invalidates
-    *     every snapshot (the DeclineMemo discipline — conservative,
-    *     single-JVM, same assumption every in-process memo here makes);
-    *   - a SIZE GATE (`spark.graft.meta.localize.bytes`, default 16 MiB
-    *     of on-disk sidecar): a 100 TB table's million-file stats
-    *     sidecar stays parquet-backed and streams through Spark — only
-    *     genuinely metadata-sized sidecars localize.
-    */
-  private val metaSnapCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Int, DataFrame)]()
-
-  private[graft] val MetaLocalizeBytesKey = "spark.graft.meta.localize.bytes"
-
-  /** The localized sidecar frame plus its row count, or `None` when the
-    * dir is absent/unreadable/oversize (caller falls back to the
-    * parquet-backed frame). One collect per (session, dir, tick).
-    */
-  private[graft] def localMetaFrame(
-      spark: SparkSession, dir: String): Option[(DataFrame, Int)] = {
-    val tick = mutationTick.get
-    val key = System.identityHashCode(spark).toString + "|" + dir
-    val cached = metaSnapCache.get(key)
-    if (cached != null && cached._1 == tick) return Some((cached._3, cached._2))
-    try {
-      val p = new Path(dir)
-      val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!f.exists(p)) return None
-      val cap = spark.conf.get(MetaLocalizeBytesKey, (16L << 20).toString).toLong
-      val bytes = f.listStatus(p).filter(_.isFile).map(_.getLen).sum
-      if (bytes > cap) return None
-      val src = spark.read.parquet(dir)
-      val rows = withMetaConf(spark)(src.collect())
-      val local = spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), src.schema)
-      if (metaSnapCache.size > 256) metaSnapCache.clear() // dead sessions
-      metaSnapCache.put(key, (tick, rows.length, local))
-      Some((local, rows.length))
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** Memoized HEAD row of a sidecar's constant columns (`built_at`,
-    * bloom (m, k)): the freshness/config probe every index consumer
-    * runs before its real work is one `limit(1)` job per serve —
-    * memoizing it per (session, dir, cols, tick) removes a fixed
-    * ~100 ms action from every repeated probe without collecting the
-    * (potentially key-count-sized) sidecar itself. `None` = the dir is
-    * missing; `Some(None)` = readable but empty.
-    */
-  private val headSnapCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Option[org.apache.spark.sql.Row])]()
-
-  private[graft] def sidecarHead(
-      spark: SparkSession, dir: String,
-      cols: Seq[String]): Option[Option[org.apache.spark.sql.Row]] = {
-    val tick = mutationTick.get
-    val key = System.identityHashCode(spark).toString + "|" + dir +
-      "|" + cols.mkString(",")
-    val cached = headSnapCache.get(key)
-    if (cached != null && cached._1 == tick) return Some(cached._2)
-    try {
-      val head = withMetaConf(spark)(
-        spark.read.parquet(dir).select(cols.map(col): _*).limit(1).collect())
-      val v = head.headOption
-      if (headSnapCache.size > 512) headSnapCache.clear()
-      headSnapCache.put(key, (tick, v))
-      Some(v)
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
+  /** Row cap of an in-memory sidecar snapshot (see colStatsSnapshot). */
+  private[table] val MaxSnapshotRows = 65536
 
   /** Runs a METADATA-sized query (sidecar probes, candidate-file
     * selection, stats folds) under a conf scope that matches its shape:
@@ -4175,7 +4106,6 @@ object KeyedTable {
       files: Option[(Seq[String], Seq[String])] = None): Unit = {
     require(!action.contains('.') && action.nonEmpty,
       s"timeline action must be a bare word, got '$action'")
-    mutationTick.incrementAndGet() // invalidate rule decline memos
     val dir = timelineDir(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(dir)

@@ -543,7 +543,7 @@ class IndexAdvisorSpec extends SparkTestBase {
   test("re-analyzing an unchanged table pays zero full listings and zero data jobs") {
     // The advisor's per-call filesystem budget: on a table whose state
     // has not changed, a repeated analyze() must answer entirely from
-    // the tick-memoized listing + cardinality — no recursive data-file
+    // the version-cached listing + cardinality — no recursive data-file
     // listing, no KMV scan. This is what keeps a periodic advisor loop
     // (analyze every N minutes over hundreds of registered tables)
     // metadata-cheap at 100 TB.

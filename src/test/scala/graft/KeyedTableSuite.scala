@@ -791,4 +791,57 @@ class KeyedTableSuite extends SparkTestBase {
     assert(t.read(spark).schema("n").dataType == LongType)
     assert(t.read(spark).count() == 2)
   }
+
+  test("catalog sync adds the columns a later batch widened the table with") {
+    val t = freshTable()
+    val name = s"graft_widen_${System.nanoTime()}"
+    t.upsert(spark, batch(Row("a", "2023-03-07", 2023, "v1")))
+    t.syncCatalog(spark, name)
+    assert(!spark.table(name).columns.contains("score"))
+    t.upsert(spark, batch(Row("b", "2024-03-07", 2024, "v1"))
+      .withColumn("score", lit(7L)))
+    t.syncCatalog(spark, name)
+    val got = spark.table(name)
+    assert(got.schema("score").dataType == LongType)
+    val scores = got.select("name", "score").collect()
+      .map(r => r.getString(0) -> Option(r.get(1))).toMap
+    assert(scores == Map("a" -> None, "b" -> Some(7L)),
+      "the older partition's file has no score column: it reads as null")
+    spark.sql(s"DROP TABLE $name")
+  }
+
+  test("two unlocked concurrent inserts keep every row or fail loudly") {
+    val t = freshTable()
+    t.insert(spark, batch(Row("seed", "2024-01-01", 2024, "v0")))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      (1 to 2).foreach { round =>
+        val writers = (0 until 2).map { w =>
+          val keys = (0 until 20).map(i => s"r${round}_w${w}_$i")
+          (keys, batch(keys.zipWithIndex.map { case (k, i) =>
+            Row(k, "2024-03-07", 2023 + i % 2, "v1")
+          }: _*))
+        }
+        val start = new java.util.concurrent.CountDownLatch(1)
+        val runs = writers.map { case (_, b) =>
+          pool.submit(new java.util.concurrent.Callable[scala.util.Try[Unit]] {
+            def call(): scala.util.Try[Unit] = {
+              start.await()
+              scala.util.Try(KeyedTable(t.spec).insert(spark, b))
+            }
+          })
+        }
+        start.countDown()
+        val outcomes = runs.map(_.get())
+        val stored = t.read(spark).select("name").collect().map(_.getString(0)).toSet
+        writers.zip(outcomes).foreach {
+          case ((keys, _), scala.util.Success(_)) =>
+            assert(keys.toSet.subsetOf(stored),
+              s"round $round: a successful insert lost ${keys.toSet -- stored}")
+          case (_, scala.util.Failure(_)) => () // failed loudly
+        }
+        assert(outcomes.exists(_.isSuccess))
+      }
+    } finally pool.shutdown()
+  }
 }
