@@ -1187,22 +1187,12 @@ object UpsertOps {
     val inferred = inferredSchema.getOrElseUpdate(
       master, JsonStreamSource.inferSchema(s, master))
 
-    def drain(): Unit = {
-      val q = JsonStreamSource.stream(s, src, schema = Some(inferred))
-        .writeStream
-        .queryName("graft-restart-ingest")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          if (!batch.isEmpty) {
-            val sp = batch.sparkSession
-            table.insert(sp,
-              SchemaEvolution.align(batch.toDF(), table.currentUserSchema(sp)))
-          }
-        }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", checkpoint)
-        .start()
-      q.awaitTermination()
-    }
+    def drain(): Unit =
+      MicroBatchPipeline.start(
+        JsonStreamSource.stream(s, src, schema = Some(inferred)),
+        table, checkpoint, Trigger.AvailableNow(),
+        queryName = "graft-restart-ingest",
+        write = (t, sp, b) => t.insert(sp, b)).awaitTermination()
 
     val (first, rest) = parts.splitAt(parts.length / 2)
     first.foreach(f =>

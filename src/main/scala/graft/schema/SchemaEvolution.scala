@@ -144,18 +144,43 @@ object SchemaEvolution {
     * reference's loop does — a table bootstrapped before a column existed
     * is created WITHOUT it and widens when the column first appears.
     *
-    * Cost: one bounded aggregate pass per micro-batch — O(batch), never
-    * O(table). A field explicitly `null` in every record of a batch is
-    * indistinguishable from an absent one after decode; either way the
+    * Cost: a batch whose plan is local — what
+    * [[graft.streaming.MicroBatchPipeline]] hands `prep` for a batch
+    * within its byte and row bounds — is read through [[localRows]] and runs no
+    * Spark job; any other batch pays one bounded aggregate pass —
+    * O(batch), never O(table). A field explicitly `null` in every record of a batch
+    * is indistinguishable from an absent one after decode; either way the
     * rows read back null, so the merge result is unaffected.
     */
   def dropAbsentColumns(batch: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.count
-    val counts = batch
-      .select(batch.columns.map(c => count(col(c)).as(c)).toIndexedSeq: _*)
-      .head()
-    val absent = batch.columns.zipWithIndex
-      .collect { case (c, i) if counts.getLong(i) == 0L => c }
-    if (absent.isEmpty) batch else batch.drop(absent.toIndexedSeq: _*)
+    val present: Int => Boolean = localRows(batch) match {
+      case Some(rows) => i => rows.exists(!_.isNullAt(i))
+      case None =>
+        val counts = batch
+          .select(batch.columns.map(c => count(col(c)).as(c)).toIndexedSeq: _*)
+          .head()
+        i => counts.getLong(i) > 0L
+    }
+    val absent = batch.columns.indices.filterNot(present).map(batch.columns(_))
+    if (absent.isEmpty) batch else batch.drop(absent: _*)
+  }
+
+  /** The rows of `df` when its optimized plan is a `LocalRelation` — a
+    * driver-resident batch, e.g. a micro-batch the pipeline already
+    * collected, and any projection, cast or empty-side union over it.
+    * Collecting such a plan evaluates on the driver and runs no Spark
+    * job, so per-batch bookkeeping (absent columns, partition tuples)
+    * reads the rows directly instead of planning an aggregate over them.
+    * None for any other plan: callers keep their distributed path. Only a
+    * plan whose every leaf is local is optimized here, so a distributed
+    * frame is not optimized twice (here and in the caller's own query).
+    */
+  def localRows(df: DataFrame): Option[Array[Row]] = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val qe = df.queryExecution
+    if (qe.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]) &&
+      qe.optimizedPlan.isInstanceOf[LocalRelation]) Some(df.collect())
+    else None
   }
 }

@@ -303,8 +303,9 @@ final class KeyedTable(val spec: KeyedTableSpec) {
   }
 
   /** Raw frame over an explicit table-relative file list (the commit→
-    * files index's candidate set): sidecar schema + basePath partition
-    * recovery — [[readRaw]] semantics without the directory listing.
+    * files index's candidate set, a scoped commit's pre-write listing):
+    * sidecar schema + basePath partition recovery — [[readRaw]] semantics
+    * without the directory listing.
     */
   private[graft] def readFilesRaw(
       spark: SparkSession, rel: Seq[String]): DataFrame = {
@@ -313,6 +314,17 @@ final class KeyedTable(val spec: KeyedTableSpec) {
       case Some(s) => rd.schema(s)
       case None    => rd.option("mergeSchema", "true")
     }).parquet(rel.map(r => s"${spec.path}/$r"): _*)
+  }
+
+  /** The schema a root scan resolves to under the recorded sidecar `s`:
+    * the parquet reader puts the discovered hive partition columns after
+    * the data columns, in directory order (`spec.partitionCols`).
+    */
+  private def readerSchema(
+      s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType = {
+    val parts = spec.partitionCols.toSet
+    org.apache.spark.sql.types.StructType(
+      s.filterNot(f => parts(f.name)) ++ spec.partitionCols.flatMap(c => s.find(_.name == c)))
   }
 
   /** The raw frame restricted to the files that can hold rows committed
@@ -2382,8 +2394,20 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     recordCommitRecord(spark, commitTime, "vacuum", newFiles, pre.toSeq)
   }
 
+  /** The user-facing schema [[read]] returns, or None before the first
+    * commit. On a single-layout copy-on-write table it comes from the
+    * schema sidecar in the reader's column order ([[readerSchema]]) with
+    * the system columns dropped, so asking costs one small file read and
+    * no table listing. Evolved, merge-on-read and sidecar-less tables
+    * take it from [[read]].
+    */
   def currentUserSchema(spark: SparkSession): Option[org.apache.spark.sql.types.StructType] =
-    if (exists(spark)) Some(read(spark).schema) else None
+    (if (spec.retainHistory || isEvolved(spark)) None else sidecarSchema(spark)) match {
+      case Some(s) =>
+        Some(org.apache.spark.sql.types.StructType(
+          readerSchema(s).filterNot(f => SchemaEvolution.isSystemColumn(f.name))))
+      case None => if (exists(spark)) Some(read(spark).schema) else None
+    }
 
   /** The commit timeline: the table's DATA commits, ascending — served
     * from the timeline MARKER directory (one listStatus, O(#commits) —
@@ -3105,9 +3129,10 @@ final class KeyedTable(val spec: KeyedTableSpec) {
 
   /** Catalog sync (SURVEY §2 O12): register/refresh this table in the
     * session metastore so SQL engines see new data — the reference's
-    * Hive/Glue sync after each commit (glue_job_script.py:64-73);
-    * `recoverPartitions` plays `MultiPartKeysValueExtractor` + partition
-    * registration for the hive-style layout.
+    * Hive/Glue sync after each commit (glue_job_script.py:64-73).
+    * Partition registration ([[registerPartitions]]) plays
+    * `MultiPartKeysValueExtractor` for the hive-style layout and adds only
+    * the partitions written since the previous sync.
     */
   def syncCatalog(spark: SparkSession, tableName: String): Unit = {
     // A history (merge-on-read) table cannot be registered as a plain
@@ -3149,7 +3174,52 @@ final class KeyedTable(val spec: KeyedTableSpec) {
       spark.sql(
         s"CREATE TABLE $tableName USING parquet LOCATION '${spec.path}'")
     }
-    if (spec.partitionCols.nonEmpty) spark.catalog.recoverPartitions(tableName)
+    if (spec.partitionCols.nonEmpty) registerPartitions(spark, tableName)
+  }
+
+  /** Register the hive partitions written since the catalog last synced
+    * this table — Hudi hive-sync's `last_commit_time_sync` pattern: the
+    * table's TBLPROPERTIES keep the last synced commit, and the commits
+    * after it name their partitions in their file records
+    * ([[KeyedTable.fileDeltaSince]]), so a sync adds O(new partitions)
+    * to the session catalog (existing ones are kept) instead of listing
+    * and re-registering every partition. Where the timeline can't answer
+    * — no property yet (a table just created or replayed into a fresh
+    * session), a synced commit no longer on the timeline, a commit
+    * without a file record — `recoverPartitions` lists them all.
+    * Partitions whose directories a later commit removed stay
+    * registered, as they do under `recoverPartitions`.
+    */
+  private def registerPartitions(spark: SparkSession, tableName: String): Unit = {
+    import org.apache.spark.sql.catalyst.catalog.CatalogTablePartition
+    import org.apache.spark.sql.execution.datasources.PartitioningUtils
+    val catalog = spark.sessionState.catalog
+    val ident = spark.sessionState.sqlParser.parseTableIdentifier(tableName)
+    val table = catalog.getTableMetadata(ident)
+    val synced = table.properties.get(LastSyncProperty)
+    val markers = KeyedTable.timelineMarkers(spark, spec.path)
+    synced.flatMap(KeyedTable.fileDeltaAfter(spark, spec.path, markers, _)) match {
+      case Some((added, _)) =>
+        val dirs = added.filter(_.contains('/'))
+          .map(r => r.substring(0, r.lastIndexOf('/'))).distinct
+        if (dirs.nonEmpty) {
+          // The dirs are the writer's own: parse them with Spark's
+          // partition-path parser and register each at its real location.
+          // (The table was refreshed just before; nothing has read it since.)
+          catalog.createPartitions(ident, dirs.map(d => CatalogTablePartition(
+            PartitioningUtils.parsePathFragment(d),
+            table.storage.copy(locationUri =
+              Some(new Path(new Path(table.location), d).toUri)))),
+            ignoreIfExists = true)
+        }
+      case None => spark.catalog.recoverPartitions(tableName)
+    }
+    val latest = markers.lastOption.map(KeyedTable.markerCommit)
+    if (latest != synced) latest.foreach { c =>
+      // Re-read: a recovery above updates the table's metadata.
+      val now = catalog.getTableMetadata(ident)
+      catalog.alterTable(now.copy(properties = now.properties + (LastSyncProperty -> c)))
+    }
   }
 
   // ---- catalog sidecar ------------------------------------------------
@@ -3351,29 +3421,30 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     added.result().sorted
   }
 
-  /** Predicate selecting exactly the partitions present in `batch` —
-    * collected driver-side (bounded by touched-partition count, not rows)
-    * and pushed into the parquet scan for partition pruning.
-    */
   /** Distinct partition tuples of `df`, collected driver-side under a hard
     * ceiling. Partition-count-bounded collects are the same assumption
     * Hive/Hudi make, but at 100 TB a mis-declared high-cardinality
     * partition spec (e.g. partitioning by user_id) would silently OOM the
     * driver; the `limit(cap+1)` bounds what ever leaves the executors and
     * the error says what to fix. Cap via spark.graft.partition.collect.max
-    * (default 100k tuples ≈ a few MB of driver memory).
+    * (default 100k tuples ≈ a few MB of driver memory). A driver-local
+    * frame (a pipeline micro-batch, see [[SchemaEvolution.localRows]]) is
+    * de-duplicated on the driver with no Spark job; any other frame runs
+    * one bounded distinct.
     */
   private def collectPartitionTuples(df: DataFrame): Array[org.apache.spark.sql.Row] = {
     val cap = df.sparkSession.conf
       .get("spark.graft.partition.collect.max", "100000").toInt
+    val projected = df.select(spec.partitionCols.map(col): _*)
     // Metadata-sized by contract (the cap below): the distinct's reduce
     // side holds at most `cap` tuples whatever the batch size, so the
     // probe conf (AQE off, 8 partitions) fits — one job instead of
     // AQE's 2-3 stage-materialization jobs per upsert. The map side
     // (the batch scan) keeps its own partitioning either way.
-    val tuples = KeyedTable.withMetaConf(df.sparkSession)(
-      df.select(spec.partitionCols.map(col): _*)
-        .distinct().limit(cap + 1).collect())
+    val tuples = SchemaEvolution.localRows(projected)
+      .map(_.distinct.take(cap + 1))
+      .getOrElse(KeyedTable.withMetaConf(df.sparkSession)(
+        projected.distinct().limit(cap + 1).collect()))
     if (tuples.length > cap)
       throw new IllegalStateException(
         s"table ${spec.path}: batch touches more than $cap distinct " +
@@ -3385,6 +3456,10 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     tuples
   }
 
+  /** Predicate selecting exactly the partitions present in `batch` —
+    * collected driver-side (bounded by touched-partition count, not rows)
+    * and pushed into the parquet scan for partition pruning.
+    */
   private def affectedPartitionsFilter(batch: DataFrame): Option[Column] =
     if (spec.partitionCols.isEmpty) None
     else Some(tuplesFilter(collectPartitionTuples(batch)))
@@ -3405,18 +3480,24 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     if (preds.isEmpty) lit(false) else preds.reduce(_ || _)
   }
 
-  /** Hive-escaped relative partition directory for a partition-values row —
-    * EXACTLY the path the parquet writer produced (`ExternalCatalogUtils`
-    * is the writer's own escaping), so explicit directory cleanup can
-    * never miss a partition whose value needs escaping (e.g. `"2024/03"`).
+  /** Hive-escaped relative partition directory for a
+    * [[collectPartitionTuples]] row — EXACTLY the path the parquet writer
+    * produced: the writer's own string cast of each value in the session
+    * time zone (a timestamp prints without the `.0` `Timestamp.toString`
+    * adds) and its own escaping (`ExternalCatalogUtils`), so scoped scans,
+    * listings and directory cleanup never miss a partition whose value
+    * needs escaping (e.g. `"2024/03"`).
     */
   private def partitionDirOf(row: org.apache.spark.sql.Row): String = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    val tz = Some(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
     spec.partitionCols.zipWithIndex.map { case (c, i) =>
       val v =
-        if (row.isNullAt(i)) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-        else ExternalCatalogUtils.escapePathName(row.get(i).toString)
-      s"${ExternalCatalogUtils.escapePathName(c)}=$v"
+        if (row.isNullAt(i)) null
+        else Cast(Literal.create(row.get(i), row.schema(i).dataType), StringType, tz)
+          .eval().toString
+      ExternalCatalogUtils.getPartitionPathString(c, v)
     }.mkString("/")
   }
 
@@ -3790,9 +3871,9 @@ final class KeyedTable(val spec: KeyedTableSpec) {
         // THIS commit, existing rows keep the commit that last changed
         // them — whichever row wins the precombine keeps its time.
         val alignedC = aligned.withColumn(CommitTimeCol, lit(commitTime))
-        val existing = SchemaEvolution.align(
-          readRaw(spark).drop(RecordKeyCol, PartitionPathCol),
-          alignedC.schema)
+        def alignExisting(raw: DataFrame) = SchemaEvolution.align(
+          raw.drop(RecordKeyCol, PartitionPathCol), alignedC.schema)
+        lazy val existing = alignExisting(readRaw(spark))
 
         // Non-global keys: only partitions present in the batch can change.
         // Global keys: additionally rewrite partitions holding an old copy
@@ -3804,8 +3885,9 @@ final class KeyedTable(val spec: KeyedTableSpec) {
         val fullRewrite = driftNeedsRewrite(current, incoming.schema)
         // One tuple collect serves the scan's partition pruning AND —
         // on the non-global path, where only batch partitions can change
-        // — the commit record's scoped listing: the common write path
-        // never lists the table.
+        // — the commit record's scoped listing and a scan of exactly the
+        // batch's partition dirs: the common write path never lists the
+        // table.
         val batchTuples =
           if (fullRewrite || spec.partitionCols.isEmpty) None
           else Some(collectPartitionTuples(aligned))
@@ -3815,8 +3897,13 @@ final class KeyedTable(val spec: KeyedTableSpec) {
         val pre =
           if (scopeDirs.isEmpty) preCommitFiles(spark) else None
         val preScoped = scopeDirs.map(relDataFilesUnder(spark, _))
-        val scanFilter = batchTuples.map(tuplesFilter)
-        val scoped = scanFilter.fold(existing)(existing.filter)
+        // The scoped listing doubles as the scan's file list; without a
+        // sidecar the root scan's schema merge stands in.
+        val scoped = preScoped.flatMap(files => sidecarSchema(spark).map(s =>
+            if (files.isEmpty) SchemaEvolution.emptyOf(spark, s)
+            else readFilesRaw(spark, files.toSeq.sorted)))
+          .map(alignExisting)
+          .getOrElse(batchTuples.map(tuplesFilter).fold(existing)(existing.filter))
         val toScan =
           if (fullRewrite || !spec.globalKeys || spec.partitionCols.isEmpty) scoped
           else {
@@ -3868,8 +3955,10 @@ object KeyedTable {
     scala.collection.concurrent.TrieMap
       .empty[(Int, String), Seq[(Int, Seq[String])]]
 
-  /** Row cap of an in-memory sidecar snapshot (see colStatsSnapshot). */
-  private[table] val MaxSnapshotRows = 65536
+  /** Row cap of an in-memory sidecar snapshot (see colStatsSnapshot) and
+    * of a micro-batch the pipeline keeps on the driver.
+    */
+  private[graft] val MaxSnapshotRows = 65536
 
   /** Runs a METADATA-sized query (sidecar probes, candidate-file
     * selection, stats folds) under a conf scope that matches its shape:
@@ -3926,6 +4015,10 @@ object KeyedTable {
     */
   private[graft] val specRegistry =
     new java.util.concurrent.ConcurrentHashMap[String, KeyedTableSpec]()
+  /** TBLPROPERTIES key holding the last commit [[KeyedTable.syncCatalog]]
+    * registered partitions for (Hudi's `last_commit_time_sync`).
+    */
+  private val LastSyncProperty = "graft.last_commit_time_sync"
   private val RowNumCol = "_graft_rn"
   private val SrcCol = "_graft_src"
   private val OverwriteModeKey = "spark.sql.sources.partitionOverwriteMode"
@@ -4199,8 +4292,13 @@ object KeyedTable {
     */
   def fileDeltaSince(
       spark: SparkSession, path: String,
+      sinceCommit: String): Option[(Seq[String], Seq[String])] =
+    fileDeltaAfter(spark, path, timelineMarkers(spark, path), sinceCommit)
+
+  /** [[fileDeltaSince]] over an already-listed timeline (`markers`). */
+  private[table] def fileDeltaAfter(
+      spark: SparkSession, path: String, markers: Seq[String],
       sinceCommit: String): Option[(Seq[String], Seq[String])] = {
-    val markers = timelineMarkers(spark, path)
     val i = markers.lastIndexWhere(m => markerCommit(m) == sinceCommit)
     if (i < 0) None
     else {

@@ -135,10 +135,21 @@ class KeyedTableSuite extends SparkTestBase {
       Set("name", "date", "payload", "year",
         table.KeyedTable.CommitTimeCol, table.KeyedTable.RecordKeyCol,
         table.KeyedTable.PartitionPathCol))
-    // a later commit becomes visible after re-sync
+    def partitions() = spark.sql(s"SHOW PARTITIONS $name").collect().map(_.getString(0)).toSet
+    def syncedCommit() = spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(name))
+      .properties.get("graft.last_commit_time_sync")
+    assert(partitions() == Set("year=2023", "year=2024"))
+    assert(syncedCommit() == t.latestCommit(spark))
+    // a later commit becomes visible after re-sync; its new partition is
+    // registered from the commit's file record
     t.upsert(spark, batch(Row("c", "2025-01-01", 2025, "v1")))
     t.syncCatalog(spark, name)
     assert(spark.table(name).count() == 3)
+    assert(partitions() == Set("year=2023", "year=2024", "year=2025"))
+    assert(spark.sql(s"SELECT name FROM $name WHERE year = 2025")
+      .collect().map(_.getString(0)).toSeq == Seq("c"))
+    assert(syncedCommit() == t.latestCommit(spark))
     spark.sql(s"DROP TABLE $name")
   }
 

@@ -208,6 +208,52 @@ class TimelineSpec extends SparkTestBase {
     }
   }
 
+  test("a one-partition upsert discovers only that partition's files") {
+    // The counter above sees only the engine's own full listings; the
+    // reader's file index lists through Spark. A schema probe through
+    // `read` or a root scan pruned afterwards would discover every file
+    // of the table, so count what the file indexes actually discover.
+    import org.apache.spark.metrics.source.HiveCatalogMetrics
+    val path = freshPath()
+    val t = KeyedTable(KeyedTableSpec(
+      path, keyCols = Seq("id"), precombineCol = "v",
+      partitionCols = Seq("day")))
+    val days = (0 until 40).map(d => f"d$d%02d")
+    t.upsert(spark, spark.createDataFrame(days.zipWithIndex.map { case (d, i) => (i, 1, d) })
+      .toDF("id", "v", "day"), commitTime = "c0")
+    val target = relFiles(path).filter(_.startsWith("day=d07/"))
+    assert(target.nonEmpty && relFiles(path).size >= 40)
+    val n0 = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount
+    t.upsert(spark, kv(7 -> 2, 100 -> 1).withColumn("day", lit("d07")), commitTime = "c1")
+    val discovered = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount - n0
+    assert(discovered == target.size,
+      s"upsert into one of 40 partitions discovered $discovered files; " +
+        s"the partition holds ${target.size}")
+    assert(t.read(spark).filter(col("day") === "d07").count() == 2)
+  }
+
+  test("partition dirs follow the writer's rendering: a timestamp-partitioned upsert keeps its rows") {
+    // `Timestamp.toString` prints "10:30:00.0" where the parquet writer's
+    // string cast prints "10:30:00": a directory named from the former
+    // misses the partition, so the scoped scan would drop its rows and
+    // the scoped record would miss its files.
+    val path = freshPath()
+    val t = KeyedTable(KeyedTableSpec(
+      path, keyCols = Seq("id"), precombineCol = "v",
+      partitionCols = Seq("at")))
+    def at(ids: (Int, Int)*) =
+      kv(ids: _*).withColumn("at", to_timestamp(lit("2024-03-07 10:30:00")))
+    t.upsert(spark, at(1 -> 10, 2 -> 20), commitTime = "c0")
+    val pre = relFiles(path)
+    t.upsert(spark, at(2 -> 21, 3 -> 30), commitTime = "c1")
+    assert(t.read(spark).select("id", "v").collect()
+      .map(r => r.getInt(0) -> r.getInt(1)).toSet == Set(1 -> 10, 2 -> 21, 3 -> 30))
+    val post = relFiles(path)
+    val (a, r) = lastRecord(path)
+    assert(a.nonEmpty && a.toSet == (post -- pre) && r.toSet == (pre -- post),
+      "scoped record != full diff")
+  }
+
   test("bloom file-path commit is writer-recorded: no listing, exact record") {
     def day(d: String, ids: (Int, Int)*) =
       kv(ids: _*).withColumn("day", lit(d))
