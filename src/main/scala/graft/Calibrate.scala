@@ -87,8 +87,8 @@ object Calibrate {
       s"p99=${knnHams.sorted.apply((knnHams.size * 99) / 100)}")
 
     // ── IVF probe-rank stats (shared by q44 + candidate q41/q34 path) ──
-    val ePart = Tables.embeddings(spark, sfDir).repartition(8)
-    val cents = Similarity.ivfCentroids(ePart, 16, 2)
+    val embs = Tables.embeddings(spark, sfDir)
+    val cents = Similarity.ivfCentroids(embs, 16, 2)
     val cid = Array.tabulate(n) { i =>
       cents.zipWithIndex.map { case (c, ci) => (1.0 - cos(emb(i), c), ci) }.min._2
     }
@@ -103,7 +103,7 @@ object Calibrate {
       s"p99=${knnNprobe.sorted.apply((n * 99) / 100)} (nlist=16)")
 
     // ── seed-only (iters=0) centroids: cheap variant for blocking ──────
-    val cents0 = Similarity.ivfCentroids(ePart, 16, 0)
+    val cents0 = Similarity.ivfCentroids(embs, 16, 0)
     val cid0 = Array.tabulate(n) { i =>
       cents0.zipWithIndex.map { case (c, ci) => (1.0 - cos(emb(i), c), ci) }.min._2
     }
@@ -153,7 +153,7 @@ object Calibrate {
     // nearby cells, so the symmetric probe rank needed stays far below
     // nlist while candidate pairs shrink with nlist.
     for (nl <- Seq(16, 32, 64)) {
-      val cN = Similarity.ivfCentroids(ePart, nl, 2)
+      val cN = Similarity.ivfCentroids(embs, nl, 2)
       val cidN = Array.tabulate(n) { i =>
         cN.zipWithIndex.map { case (c, ci) => (1.0 - cos(emb(i), c), ci) }.min._2
       }

@@ -1,11 +1,16 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{ArrayType, Decimal, DecimalType, FloatType}
 
-import graft.functions.VectorFunctions
+import graft.functions.{NearestCentroids, VectorFunctions}
 import graft.sources.Tables
+import graft.table.KeyedTable
 
 /** Approximate-nearest-neighbor search over the embeddings fixture
   * (`ArrayType(FloatType)`, dim 64 — FIXTURES.md). Three tiers per the
@@ -99,35 +104,159 @@ object Similarity {
     * init (every n/nlist-th vec_id — the ids are dense, so this picks the
     * same evenly-spaced seeds a rank-based pick would, with a plain pushed
     * filter instead of a global sort: no `Window.orderBy` over the whole
-    * table, no single-partition funnel) refined by `iters` Lloyd rounds.
-    * Each round is one distributed assignment pass + a per-dimension mean
-    * (posexplode → groupBy(cid, dim) → exact-decimal sum ÷ count — the
-    * same order-independent arithmetic as [[Exact]], so the centroids are
-    * bit-identical under any partitioning or core count); only the
-    * nlist×dim centroid matrix ever reaches the driver.
+    * table, no single-partition funnel) refined by `iters` Lloyd rounds
+    * over a bounded deterministic sample — min(256·nlist, n) rows by a
+    * pushed vec_id stride (dense ids ⇒ an even, seedless sample; no
+    * shuffle). Quantizer quality needs O(rows-per-centroid) evidence, not
+    * the corpus: at 100 TB, `iters+1` full passes to train a nlist×dim
+    * codebook would dominate the index build for no recall gain (standard
+    * IVF practice, e.g. FAISS's train-on-sample default).
+    *
+    * The sample holds at most nlist seeds + 2·256·nlist + 1 stride rows.
+    * When that bound is within [[KeyedTable.MaxSnapshotRows]] and its
+    * estimated bytes (the plan's input size × bound / n) fit
+    * `spark.sql.autoBroadcastJoinThreshold` — the two bounds the
+    * micro-batch pipeline keeps a batch on the driver by; −1 turns this
+    * off — one bounded collect of `e` fetches seeds and sample together
+    * and the Lloyd rounds run on the driver. Otherwise `e` is repartitioned
+    * over defaultParallelism and each round is one distributed assignment
+    * pass + a per-dimension mean (posexplode → groupBy(cid, dim)), and
+    * only the nlist×dim matrix reaches the driver. Callers pass the raw
+    * scan: the count and the driver path then run no shuffle.
+    * Both paths assign through the [[graft.functions.NearestCentroids]]
+    * kernel and take each mean as an exact-decimal sum ÷ count (each
+    * float cast to DECIMAL(28,12)) — the same order-independent arithmetic
+    * as [[Exact]] — so the centroids are bit-identical on either path and
+    * under any partitioning or core count.
     */
   private[graft] def ivfCentroids(
-      e: DataFrame, nlist: Int, iters: Int): Array[Array[Float]] = {
+      e: DataFrame, nlist: Int, iters: Int): Array[Array[Float]] =
+    ivfTrain(e, nlist, iters, None)._1
+
+  /** [[ivfCentroids]] plus the embedding of `queryId` (None when absent),
+    * read by the training collect on the driver path.
+    */
+  private[graft] def ivfTrain(
+      e: DataFrame, nlist: Int, iters: Int, queryId: Option[Long])
+      : (Array[Array[Float]], Option[Array[Float]]) = {
     val n = e.count()
     val step = math.max(1L, n / nlist)
-    var centroids: Array[Array[Float]] = e
-      .filter(col("vec_id") % step === 0 && col("vec_id") < step * nlist)
-      .orderBy(col("vec_id"))
-      .select("embedding")
-      .collect()
-      .map(_.getSeq[Float](0).toArray)
-
-    // Lloyd trains on a bounded deterministic sample — min(256·nlist, n)
-    // rows via a pushed vec_id-stride filter (dense ids ⇒ an even, seedless
-    // sample; no shuffle). Quantizer quality needs O(rows-per-centroid)
-    // evidence, not the corpus: at 100 TB, `iters+1` full passes to train
-    // a nlist×dim codebook would dominate the index build for no recall
-    // gain (standard IVF practice, e.g. FAISS's train-on-sample default).
+    val isSeed = col("vec_id") % step === 0 && col("vec_id") < step * nlist
     val stride = math.max(1L, n / math.max(1L, math.min(256L * nlist, n)))
+    val inSample =
+      if (iters == 0) lit(false)
+      else if (stride <= 1L) lit(true)
+      else col("vec_id") % stride === 0
+    val isQuery = queryId.fold(lit(false))(col("vec_id") === _)
+    val sampleRows = if (iters == 0) 0L else 2L * 256 * nlist + 1
+    val bound = math.min(n, nlist + sampleRows + queryId.size)
+    val bytes = e.queryExecution.optimizedPlan.stats.sizeInBytes * bound / math.max(1L, n)
+    val local =
+      if (bound > KeyedTable.MaxSnapshotRows ||
+          bytes > e.sparkSession.sessionState.conf.autoBroadcastJoinThreshold) None
+      else {
+        // Collected as UnsafeRows: the sample stays in its binary form
+        // (4 B a float, null bits kept) and the kernel reads it as is.
+        val qe = e
+          .filter(isSeed || isQuery || inSample)
+          .select(col("vec_id"), col("embedding"),
+            coalesce(isSeed, lit(false)), coalesce(inSample, lit(false)),
+            coalesce(isQuery, lit(false)))
+          .limit((bound + 1).toInt)
+          .queryExecution
+        val rows = SQLExecution.withNewExecutionId(qe, Some("collect"))(
+          qe.executedPlan.executeCollect())
+        // Past the bound only when ids are not dense: train distributed.
+        if (rows.length > bound) None
+        else {
+          val seeds = rows.filter(_.getBoolean(2)).sortBy(_.getLong(0))
+            .map(_.getArray(1).toFloatArray())
+          val sample = rows.filter(r => r.getBoolean(3) && !r.isNullAt(1)).map(_.getArray(1))
+          lloydLocal(seeds, sample, iters)
+            .map(_ -> rows.find(_.getBoolean(4)).map(_.getArray(1).toFloatArray()))
+        }
+      }
+    local.getOrElse {
+      // Every action reads the repartitioned frame: a scan of few splits
+      // (one small file) would otherwise run each round in as few tasks.
+      val p = e.repartition(e.sparkSession.sparkContext.defaultParallelism)
+      val seeds = p.filter(isSeed).orderBy(col("vec_id")).select("embedding")
+        .collect().map(_.getSeq[Float](0).toArray)
+      val query = queryId.flatMap(q => p.filter(col("vec_id") === q).select("embedding")
+        .collect().headOption.map(_.getSeq[Float](0).toArray))
+      (lloydDistributed(p, inSample, stride, seeds, iters), query)
+    }
+  }
+
+  /** Lloyd on the driver over the collected sample, with the arithmetic
+    * of [[lloydDistributed]]: a row's cell comes from the same kernel; a
+    * null element adds to no sum or count, as posexplode and sum/count
+    * skip it; a cell's centroid is as long as its longest member; an
+    * empty cell keeps its centroid. Each float is cast as Spark casts it
+    * to DECIMAL(28,12) when a round reads it, and summed as a long of
+    * 1e-12 units, so the driver holds no copy of the sample beyond its
+    * collected rows. None where a sum could leave a long or a distributed
+    * round would not yield a number for every mean (an element outside
+    * ±1e6 or not finite, a dimension whose values are all null in a
+    * cell): the caller then runs the distributed rounds.
+    */
+  private def lloydLocal(
+      seeds: Array[Array[Float]], sample: Array[ArrayData], iters: Int)
+      : Option[Array[Array[Float]]] = {
+    val width = if (sample.isEmpty) 0 else sample.map(_.numElements).max
+
+    def round(centroids: Array[Array[Float]]): Option[Array[Array[Float]]] = {
+      val kernel = NearestCentroids(Literal(null, ArrayType(FloatType)), centroids, 1)
+      val sums = Array.ofDim[Long](centroids.length, width)
+      val counts = Array.ofDim[Long](centroids.length, width)
+      val lens = new Array[Int](centroids.length)
+      val summed = try {
+        sample.foreach { v =>
+          val cid = kernel.select(v).getInt(0)
+          lens(cid) = math.max(lens(cid), v.numElements)
+          var j = 0
+          while (j < v.numElements) {
+            if (!v.isNullAt(j)) {
+              sums(cid)(j) = Math.addExact(sums(cid)(j), unscaled(v.getFloat(j)))
+              counts(cid)(j) += 1
+            }
+            j += 1
+          }
+        }
+        true
+      } catch { case _: ArithmeticException => false }
+      if (!summed ||
+          centroids.indices.exists(c => (0 until lens(c)).exists(counts(c)(_) == 0))) None
+      else Some(centroids.indices.map { c =>
+        if (lens(c) == 0) centroids(c) // empty cluster keeps its centroid
+        else Array.tabulate(lens(c))(j =>
+          (java.math.BigDecimal.valueOf(sums(c)(j), 12).doubleValue / counts(c)(j)).toFloat)
+      }.toArray)
+    }
+    (0 until iters).foldLeft(Option(seeds))((c, _) => c.flatMap(round))
+  }
+
+  /** `x` as Spark casts a float to DECIMAL(28,12) — the double's
+    * Double.toString digits, rounded HALF_UP to scale 12 — in 1e-12
+    * units. Throws ArithmeticException outside ±1e6 (and for NaN and
+    * the infinities), where the units may not fit a long.
+    */
+  private def unscaled(x: Float): Long = {
+    if (!(math.abs(x) < 1e6f)) throw new ArithmeticException(s"$x outside ±1e6")
+    val d = Decimal(x.toDouble); d.changePrecision(28, 12); d.toUnscaledLong
+  }
+
+  /** The distributed Lloyd rounds of [[ivfCentroids]], for samples the
+    * driver may not hold: one assignment pass + per-dimension mean per
+    * round.
+    */
+  private def lloydDistributed(
+      e: DataFrame, inSample: Column, stride: Long,
+      seeds: Array[Array[Float]], iters: Int): Array[Array[Float]] = {
     val train =
       if (stride <= 1L || iters == 0) e
-      else e.filter(col("vec_id") % stride === 0).persist()
-
+      else e.filter(inSample).persist()
+    var centroids = seeds
     (0 until iters).foreach { _ =>
       val means = withCentroidId(train, centroids)
         .select(col("cid"), posexplode(col("embedding")).as(Seq("dim", "x")))
@@ -148,6 +277,25 @@ object Similarity {
     }
     if (!(train eq e)) train.unpersist()
     centroids
+  }
+
+  /** The `nprobe` cells nearest the query vector `q` by cosine, nearest
+    * first, ties to the smaller cell id — the query-side probe of
+    * [[annIvf]] and [[graft.table.SketchedTable.annIvfIndexed]].
+    */
+  private[graft] def probeCells(
+      centroids: Array[Array[Float]], q: Array[Float], nprobe: Int): Array[Int] = {
+    def cosTo(c: Array[Float]): Double = {
+      var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
+      while (i < math.min(c.length, q.length)) {
+        dot += c(i).toDouble * q(i); nx += c(i).toDouble * c(i)
+        ny += q(i).toDouble * q(i); i += 1
+      }
+      val d = math.sqrt(nx) * math.sqrt(ny); if (d == 0) 0 else dot / d
+    }
+    centroids.zipWithIndex
+      .sortBy { case (c, i) => (-cosTo(c), i) }
+      .take(nprobe).map(_._2)
   }
 
   // ── product quantization (Jégou/Douze/Schmid, TPAMI 2011) ───────────
@@ -283,6 +431,13 @@ object Similarity {
     * equals [[annBrute]]'s. At write time `cid` becomes the
     * partition/bucket column (see [[graft.table.SketchedTable]]), so the
     * probe is a partition-pruned scan.
+    *
+    * Each call trains the quantizer ([[ivfCentroids]]): within the driver
+    * bound, a count plus one bounded collect of the raw scan that also
+    * fetches the query vector; past it, the distributed rounds plus a
+    * query-vector collect over the repartitioned frame. The rerank scores
+    * against the query vector as a literal, so the final query is one
+    * repartitioned scan.
     */
   def annIvf(
       s: SparkSession,
@@ -292,30 +447,17 @@ object Similarity {
       nlist: Int = 16,
       nprobe: Int = 8,
       iters: Int = 2): DataFrame = {
-    val e = Tables.embeddings(s, dir)
-      .repartition(s.sparkContext.defaultParallelism)
-    val centroids = ivfCentroids(e, nlist, iters)
-
-    val qVec = e.filter(col("vec_id") === queryId)
-      .select("embedding").collect().head.getSeq[Float](0).toArray
-    def cosTo(c: Array[Float]): Double = {
-      var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
-      while (i < math.min(c.length, qVec.length)) {
-        dot += c(i).toDouble * qVec(i); nx += c(i).toDouble * c(i)
-        ny += qVec(i).toDouble * qVec(i); i += 1
-      }
-      val d = math.sqrt(nx) * math.sqrt(ny); if (d == 0) 0 else dot / d
-    }
-    val probeCids = centroids.zipWithIndex
-      .sortBy { case (c, i) => (-cosTo(c), i) }
-      .take(nprobe).map(_._2)
-
-    val q = e.filter(col("vec_id") === queryId)
-      .select(col("embedding").as("q_emb"))
-    withCentroidId(e.filter(col("vec_id") =!= queryId), centroids)
-      .filter(col("cid").isin(probeCids.map(Integer.valueOf).toIndexedSeq: _*))
-      .crossJoin(broadcast(q))
-      .withColumn("cos", VectorFunctions.cosineSim(col("embedding"), col("q_emb")))
+    val raw = Tables.embeddings(s, dir)
+    val (centroids, query) = ivfTrain(raw, nlist, iters, Some(queryId))
+    val qVec = query.getOrElse(
+      throw new NoSuchElementException(s"vec_id $queryId not in $dir/embeddings"))
+    val probe = probeCells(centroids, qVec, nprobe)
+    withCentroidId(
+        raw.repartition(s.sparkContext.defaultParallelism)
+          .filter(col("vec_id") =!= queryId),
+        centroids)
+      .filter(col("cid").isin(probe.map(Integer.valueOf).toIndexedSeq: _*))
+      .withColumn("cos", VectorFunctions.cosineSim(col("embedding"), typedLit(qVec)))
       .orderBy(col("cos").desc, col("vec_id"))
       .limit(k)
       .select(col("vec_id"), col("label"))
@@ -347,9 +489,9 @@ object Similarity {
       nlist: Int = 32,
       nprobe: Int = -1): DataFrame = {
     import graft.functions.TopKByScore.topKByScore
-    val e = Tables.embeddings(s, dir)
-      .repartition(s.sparkContext.defaultParallelism)
-    val centroids = ivfCentroids(e, nlist, 0)
+    val raw = Tables.embeddings(s, dir)
+    val e = raw.repartition(s.sparkContext.defaultParallelism)
+    val centroids = ivfCentroids(raw, nlist, 0)
     val probes = if (nprobe <= 0) centroids.length else nprobe
 
     // Candidate generation is ids-only: the exploded probe side carries
@@ -413,15 +555,24 @@ object Similarity {
       nprobe: Int = 8,
       iters: Int = 2): DataFrame = {
     import graft.functions.TopKByScore.topKByScore
-    val e = Tables.embeddings(s, dir)
-      .repartition(s.sparkContext.defaultParallelism)
+    val raw = Tables.embeddings(s, dir)
+    val e = raw.repartition(s.sparkContext.defaultParallelism)
     // The codebook is INDEX-BUILD state, not query state: FAISS trains
     // the coarse quantizer once when the index is built and every search
-    // reuses it. Memoized per (session, dir, params) like SketchedTable's
-    // write-time columns; the search below runs in full per invocation.
-    val centroids = centroidCache.getOrElseUpdate(
-      (System.identityHashCode(s), dir, nlist, iters),
-      ivfCentroids(e, nlist, iters))
+    // reuses it. Memoized per (dir, params) while dir's data files are
+    // the ones it was trained on, like SketchedTable's write-time columns;
+    // the search below runs in full per invocation.
+    val centroids = dataFiles(raw) match {
+      case Some(files) =>
+        centroidCache.get((dir, nlist, iters)) match {
+          case Some((`files`, c)) => c
+          case _ =>
+            val c = ivfCentroids(raw, nlist, iters)
+            centroidCache.put((dir, nlist, iters), (files, c))
+            c
+        }
+      case None => ivfCentroids(raw, nlist, iters)
+    }
     // Probe rows CARRY the query embedding — the standard distributed
     // ANN query shape (the query vector ships to each probed shard, FAISS
     // sharded search does the same): a-side shuffle is nprobe × n × dim,
@@ -461,13 +612,28 @@ object Similarity {
   }
 
   /** Codebook memo for [[similarNeighbors]] — see the index-build note
-    * there. Values are plain float arrays (session-independent data);
-    * the session-identity key prevents reuse across sessions whose conf
-    * might differ.
+    * there — one entry per (dir, nlist, iters), holding the data files it
+    * was trained on; a rewrite of the files replaces the entry. The
+    * centroids are a function of the data alone (bit-identical under any
+    * partitioning, core count or training path), so any session reuses
+    * them.
     */
   private val centroidCache =
     scala.collection.concurrent.TrieMap
-      .empty[(Int, String, Int, Int), Array[Array[Float]]]
+      .empty[(String, Int, Int), (Seq[(String, Long, Long)], Array[Array[Float]])]
+
+  /** (path, length, modification time) of each data file of a file-source
+    * scan, from the listing its file index made — None for other plans.
+    */
+  private def dataFiles(df: DataFrame): Option[Seq[(String, Long, Long)]] =
+    df.queryExecution.analyzed.collect {
+      case l: LogicalRelation => l.relation
+    } match {
+      case Seq(h: HadoopFsRelation) => Some(
+        h.location.listFiles(Nil, Nil).flatMap(_.files)
+          .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted)
+      case _ => None
+    }
 
   /** Window-based reference implementation of [[similarNeighbors]] (same
     * result, O(n²)-row shuffle) — kept for the equivalence test.

@@ -59,9 +59,9 @@ object SketchedTable {
     */
   def ensure(s: SparkSession, dir: String): AnnIndex =
     built.getOrElseUpdate(dir, {
-      val e = Tables.embeddings(s, dir)
-        .repartition(s.sparkContext.defaultParallelism)
-      val centroids = Similarity.ivfCentroids(e, NList, Iters)
+      val raw = Tables.embeddings(s, dir)
+      val e = raw.repartition(s.sparkContext.defaultParallelism)
+      val centroids = Similarity.ivfCentroids(raw, NList, Iters)
       val codebooks = Similarity.pqTrain(e, PqM, PqK, Dim)
       val path = indexPath(dir)
       Similarity.withCentroidId(
@@ -112,29 +112,14 @@ object SketchedTable {
       k: Int = 10,
       nprobe: Int = 8): DataFrame = {
     val idx = ensure(s, dir)
-    val centroids = idx.centroids
     val e = readIndex(s, idx.path)
     val qVec = e.filter(col("vec_id") === queryId)
       .select("embedding").collect().head.getSeq[Float](0).toArray
-    def cosTo(c: Array[Float]): Double = {
-      var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
-      while (i < math.min(c.length, qVec.length)) {
-        dot += c(i).toDouble * qVec(i); nx += c(i).toDouble * c(i)
-        ny += qVec(i).toDouble * qVec(i); i += 1
-      }
-      val d = math.sqrt(nx) * math.sqrt(ny); if (d == 0) 0 else dot / d
-    }
-    val probeCids = centroids.zipWithIndex
-      .sortBy { case (c, i) => (-cosTo(c), i) }
-      .take(nprobe).map(_._2)
-
-    val q = e.filter(col("vec_id") === queryId)
-      .select(col("embedding").as("q_emb"))
+    val probe = Similarity.probeCells(idx.centroids, qVec, nprobe)
     e.filter(
-        col("cid").isin(probeCids.map(Integer.valueOf).toIndexedSeq: _*) &&
+        col("cid").isin(probe.map(Integer.valueOf).toIndexedSeq: _*) &&
         col("vec_id") =!= queryId)
-      .crossJoin(broadcast(q))
-      .withColumn("cos", VectorFunctions.cosineSim(col("embedding"), col("q_emb")))
+      .withColumn("cos", VectorFunctions.cosineSim(col("embedding"), typedLit(qVec)))
       .orderBy(col("cos").desc, col("vec_id"))
       .limit(k)
       .select(col("vec_id"), col("label"))

@@ -2,10 +2,9 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.schema.SchemaEvolution
 import graft.sources.JsonStreamSource
@@ -36,39 +35,6 @@ class MicroBatchPassSpec extends SparkTestBase {
     Files.move(tmp.toPath, new java.io.File(dir, file).toPath)
   }
 
-  /** Spark jobs the stream `q` starts while `body` runs. The listener bus
-    * is asynchronous, so a sentinel job from this thread marks the end:
-    * events arrive in order, and once its start is seen every earlier
-    * one has been.
-    */
-  private def streamJobsDuring(q: StreamingQuery)(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = q.runId.toString
-    val sentinel = s"graft-pass-${System.nanoTime()}"
-    val counted = new java.util.concurrent.atomic.AtomicInteger
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val props = Option(js.properties)
-        if (props.flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).contains(group))
-          counted.incrementAndGet()
-        if (props.flatMap(p => Option(p.getProperty("graft.test.sentinel"))).contains(sentinel))
-          drained.countDown()
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setLocalProperty("graft.test.sentinel", sentinel)
-      sc.parallelize(Seq(1), 1).count()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      counted.get
-    } finally {
-      sc.setLocalProperty("graft.test.sentinel", null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   /** Streams five 20-row batches through the pipeline and returns the
     * Spark jobs of each of the last three, after checking the table holds
     * the latest row per key. `prep` also sees each batch.
@@ -89,7 +55,7 @@ class MicroBatchPassSpec extends SparkTestBase {
       // bootstrap and one warm batch: the table and its partitions exist
       (1 to 2).foreach { b => publish(in, s"b$b.json", batch(b)); q.processAllAvailable() }
       (3 to 5).map { b =>
-        streamJobsDuring(q) { publish(in, s"b$b.json", batch(b)); q.processAllAvailable() }
+        jobsInGroup(q.runId.toString) { publish(in, s"b$b.json", batch(b)); q.processAllAvailable() }
       }
     } finally { q.stop(); q.awaitTermination() }
     val latest = (1 to 5).flatMap(b => (0 until 20).map(i =>
