@@ -625,7 +625,7 @@ object Similarity {
   /** (path, length, modification time) of each data file of a file-source
     * scan, from the listing its file index made — None for other plans.
     */
-  private def dataFiles(df: DataFrame): Option[Seq[(String, Long, Long)]] =
+  private[graft] def dataFiles(df: DataFrame): Option[Seq[(String, Long, Long)]] =
     df.queryExecution.analyzed.collect {
       case l: LogicalRelation => l.relation
     } match {

@@ -39,13 +39,6 @@ object UpsertOps {
       src
     })
 
-  /** Dev-probe hook ([[graft.StreamFloorProbe]]): q93's staged
-    * time-ordered source, so the floor attribution measures the SAME
-    * bytes the bench query replays.
-    */
-  private[graft] def q93StagedSource(s: SparkSession, dir: String): String =
-    stageOnce(dir, "ordered")(stageTimeOrderedJson(s, dir, _, slices = 4))
-
   /** Two-commit template tables, memoized per (fixture dir, table mode):
     * the table-SERVICE queries (compact/cluster/z-order/stats/restore/
     * delete/feed) all start from the identical two-commit build before

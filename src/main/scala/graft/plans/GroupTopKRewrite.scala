@@ -2,13 +2,10 @@ package graft.plans
 
 import java.util.Locale
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Window}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 
 import graft.table.{KeyedTable, TableMetaCache}
 
@@ -67,12 +64,6 @@ import graft.table.{KeyedTable, TableMetaCache}
   */
 class GroupTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
-
-  private def pfColumn(pf: PartitionConjuncts.PartFilter): String = pf match {
-    case PartitionConjuncts.PartIn(c, _, _) => c
-    case PartitionConjuncts.PartNotNull(c)  => c
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (KeyedTable.specRegistry.isEmpty) return plan
     TableMetaCache.pinVersions(plan.transformUp {
@@ -83,8 +74,7 @@ class GroupTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
   }
 
   private[plans] final case class GroupTopKMatch(
-      f: Filter, lr: LogicalRelation, fsRel: HadoopFsRelation, root: String,
-      spec: graft.table.KeyedTableSpec, groupCols: Seq[String],
+      f: Filter, scan: KeyedScan, groupCols: Seq[String],
       groupIsPart: Seq[Boolean],
       sortCol: String, n: Int, desc: Boolean, nullsFirst: Boolean,
       partFilters: Seq[PartitionConjuncts.PartFilter],
@@ -96,6 +86,7 @@ class GroupTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       */
     def dataGroupCols: Seq[String] =
       groupCols.zip(groupIsPart).collect { case (c, false) => c }
+    def spec: graft.table.KeyedTableSpec = scan.spec
     /** Every column whose stats the serve consults. */
     def statCols: Seq[String] =
       (sortCol +: (ranges.map(_.column) ++ notNull ++ inLists.map(_._1)))
@@ -114,7 +105,7 @@ class GroupTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def tryRewrite(f: Filter): Option[LogicalPlan] =
     matchShape(f).flatMap { m =>
-      TableMetaCache.declineGated(spark, this, m.root)((m.root, m.groupCols,
+      TableMetaCache.declineGated(spark, this, m.scan.root)((m.scan.root, m.groupCols,
         m.sortCol, m.n, m.desc, m.nullsFirst,
         m.partFilters.toVector, m.ranges.toVector, m.notNull.toVector,
         m.inLists.map { case (c, vs) => (c, vs.toVector) }.toVector)) {
@@ -125,19 +116,14 @@ class GroupTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
   /** The window's single rank expression over table-partition keys or
     * stats-ordered DATA columns, ordered first by `col`, or None.
     */
-  private def rankOf(
-      w: Window, spec: graft.table.KeyedTableSpec,
-      relAttrOf: Expression => Option[Attribute])
+  private def rankOf(w: Window, ks: KeyedScan)
       : Option[(Attribute, Seq[(String, Boolean)], Attribute, Boolean, Boolean)] =
     w.windowExpressions match {
       case Seq(a @ Alias(
           WindowExpression(fn, WindowSpecDefinition(ps, os, _)), _))
           if fn.isInstanceOf[RowNumber] || fn.isInstanceOf[Rank] =>
-        val partColsL =
-          spec.partitionCols.map(_.toLowerCase(Locale.ROOT)).toSet
-        val groups: Seq[(String, Boolean)] = ps.map(e => relAttrOf(e) match {
-          case Some(at) if partColsL.contains(
-            at.name.toLowerCase(Locale.ROOT)) => (at.name, true)
+        val groups: Seq[(String, Boolean)] = ps.map(e => ks.relAttrOf(e) match {
+          case Some(at) if ks.isPartitionCol(at.name) => (at.name, true)
           // A DATA group column rides the single-valued classification
           // at serve time (q180's layout test); it needs recorded
           // min/max/nn, hence a stats-ordered type.
@@ -147,7 +133,7 @@ class GroupTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         })
         os.headOption.flatMap {
           case SortOrder(child, dir, no, _) =>
-            relAttrOf(child)
+            ks.relAttrOf(child)
               .filter(at => KeyedTable.statsOrderedType(at.dataType))
               .map(at => (a.toAttribute, groups, at,
                 dir == Descending, no == NullsFirst))
@@ -156,43 +142,10 @@ class GroupTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       case _ => None
     }
 
-  private def matchShape(f: Filter): Option[GroupTopKMatch] = {
-    val conds = mutable.Buffer.empty[(Expression, Int)]
-    val windows = mutable.Buffer.empty[Window]
-    val renames = mutable.Map.empty[ExprId, Expression]
-    val rels = mutable.Buffer.empty[LogicalRelation]
-    val pairs = mutable.Buffer.empty[(Attribute, Attribute)]
-    if (!MvPlanShape.strip(f, conds, windows, renames, rels, pairs))
-      return None
-    if (pairs.nonEmpty || rels.length != 1) return None
-    val w = windows.toSeq match {
-      case Seq(one) => one
-      case _ => return None
-    }
-    val lr = rels.head
-    val fsRel = lr.relation match {
-      case h: HadoopFsRelation => h
-      case _ => return None
-    }
-    val root = fsRel.location.rootPaths match {
-      case Seq(one) => one.toString
-      case _ => return None
-    }
-    val spec = Option(KeyedTable.specRegistry.get(root)).getOrElse(return None)
-    if (spec.retainHistory) return None
-
-    val subst = MvPlanShape.substFn(renames)
-    val relIds = lr.output.map(_.exprId).toSet
-    def relAttrOf(e: Expression): Option[Attribute] = subst(e) match {
-      case a: Attribute if relIds.contains(a.exprId) &&
-        !a.name.startsWith("_graft_") => Some(a)
-      case _ => None
-    }
-    val (rk, groupPairs, sortAttr, desc, nullsFirst) =
-      rankOf(w, spec, relAttrOf).getOrElse(return None)
-    val (groupCols, groupIsPart) = groupPairs.unzip
-
-    // The rank bound: rk ≤ N / rk < N+1 / rk = N, above the window.
+  /** The rank bound N of `rk ≤ N` / `rk < N+1` / `rk = N` conjuncts
+    * above the rank window (depth 0) — the tightest, if positive.
+    */
+  private def rankBound(conds: Seq[(Expression, Int)], rk: Attribute): Option[Int] = {
     def boundOf(e: Expression): Option[Int] = e match {
       case LessThanOrEqual(a: Attribute, IntegerLiteral(n))
         if a.exprId == rk.exprId => Some(n)
@@ -204,21 +157,37 @@ class GroupTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         if a.exprId == rk.exprId => Some(n)
       case _ => None
     }
-    val splitD = conds.toSeq.flatMap { case (c, d) =>
-      MvPlanShape.splitConjunction(c).map((_, d))
-    }
-    if (splitD.exists(!_._1.deterministic)) return None
-    val partColsL = spec.partitionCols.map(_.toLowerCase(Locale.ROOT)).toSet
-    def partFilterOf(e: Expression) = PartitionConjuncts.of(
-      e,
-      x => relAttrOf(x)
-        .filter(at => partColsL.contains(at.name.toLowerCase(Locale.ROOT))))
-    val bounds = splitD.collect { case (c, 0) if boundOf(c).isDefined =>
+    val bounds = conds.collect { case (c, 0) if boundOf(c).isDefined =>
       boundOf(c).get
     }
-    if (bounds.isEmpty) return None
-    val n = bounds.min
-    if (n <= 0) return None
+    if (bounds.isEmpty) None else Some(bounds.min).filter(_ > 0)
+  }
+
+  /** The partition conjuncts that prune without shifting ranks: every
+    * one below the rank window (depth ≠ 0), and one above it only when
+    * its column is a GROUP column (see [[matchShape]]).
+    */
+  private def rankSafePartFilters(
+      ks: KeyedScan, conds: Seq[(Expression, Int)], groupCols: Seq[String])
+      : Seq[PartitionConjuncts.PartFilter] = {
+    val groupColsL = groupCols.map(_.toLowerCase(Locale.ROOT)).toSet
+    conds.flatMap { case (c, d) =>
+      ks.partFilterOf(c).filter(pf =>
+        d != 0 || groupColsL.contains(pf.column.toLowerCase(Locale.ROOT)))
+    }
+  }
+
+  private def matchShape(f: Filter): Option[GroupTopKMatch] = {
+    val ks = KeyedScan.of(f).getOrElse(return None)
+    val w = ks.windows match {
+      case Seq(one) => one
+      case _ => return None
+    }
+    if (ks.spec.retainHistory || !ks.deterministic) return None
+    val (rk, groupPairs, sortAttr, desc, nullsFirst) =
+      rankOf(w, ks).getOrElse(return None)
+    val (groupCols, groupIsPart) = groupPairs.unzip
+    val n = rankBound(ks.conjuncts, rk).getOrElse(return None)
     // Partition conjuncts compose only where pruning preserves ranks:
     // BELOW the window they are the query's own filter-before-rank
     // (dropping a partition's files drops exactly the rows the query
@@ -240,21 +209,55 @@ class GroupTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     // ranked output and stay residual (they must NOT feed the
     // classification — dropping files by an above-window predicate
     // would change surviving rows' ranks).
-    val groupColsL = groupCols.map(_.toLowerCase(Locale.ROOT)).toSet
-    val partFilters = splitD.flatMap { case (c, d) =>
-      partFilterOf(c).filter(pf =>
-        d != 0 || groupColsL.contains(pfColumn(pf).toLowerCase(Locale.ROOT)))
+    val partFilters = rankSafePartFilters(ks, ks.conjuncts, groupCols)
+    val belowConds = ks.conjuncts.collect {
+      case (c, d) if d != 0 && ks.partFilterOf(c).isEmpty => c
     }
-    val belowConds = splitD.collect {
-      case (c, d) if d != 0 && partFilterOf(c).isEmpty => c
-    }
-    val ex = RangeConjuncts.extract(
-      belowConds,
-      e => relAttrOf(e).filter(at => KeyedTable.statsOrderedType(at.dataType)))
-    if (ex.other.nonEmpty || ex.nullPreds.exists(_._2)) return None
-    Some(GroupTopKMatch(f, lr, fsRel, root, spec,
+    val sc = RangeConjuncts.statsConjuncts(ks, belowConds).getOrElse(return None)
+    Some(GroupTopKMatch(f, ks,
       groupCols, groupIsPart, sortAttr.name, n, desc, nullsFirst,
-      partFilters, ex.ranges, ex.nullPreds.map(_._1), ex.inLists))
+      partFilters, sc.ranges, sc.notNull, sc.inLists))
+  }
+
+  /** A file's group key columns in the sidecar and its classifiability. */
+  private final case class GroupKeys(
+      statCols: Seq[String], classifiable: org.apache.spark.sql.Column,
+      hasDataGroups: Boolean)
+
+  /** A file's group key: its partition tuple for hive columns, its ONE
+    * stored value (min = max) for clustered data columns. CLASSIFIABLE:
+    * single-valued (and null-free) in every data group column — such a
+    * file belongs to exactly one group, so the per-group count walk may
+    * use its rows (min = max under string truncation still forces the
+    * exact value: stored lower ≤ real ≤ stored upper, and truncation
+    * makes lower < upper strictly). Every OTHER file spans groups (or
+    * holds the NULL group): it is ALWAYS KEPT, and its rows are excluded
+    * from the walk — the cumulative counts only UNDER-count, so bounds
+    * weaken and keep more files, never fewer. Pure partition groupings
+    * classify every file. None when a group column lacks stats.
+    */
+  private def groupKeys(
+      st: org.apache.spark.sql.DataFrame, groupCols: Seq[String],
+      groupIsPart: Seq[Boolean]): Option[GroupKeys] = {
+    import org.apache.spark.sql.functions.{col, lit}
+    def statCol(prefix: String, c: String): Option[String] =
+      st.columns.find(_.equalsIgnoreCase(s"${prefix}_$c"))
+    val keyCols = groupCols.zip(groupIsPart).map {
+      case (c, true)  => statCol("p", c)
+      case (c, false) => statCol("min", c)
+    }
+    if (keyCols.exists(_.isEmpty)) return None
+    val dataClassPreds = groupCols.zip(groupIsPart).collect {
+      case (c, false) =>
+        (statCol("min", c), statCol("max", c), statCol("nn", c)) match {
+          case (Some(gmn), Some(gmx), Some(gnn)) =>
+            col(gnn) === col("cnt") && col(gmn) === col(gmx) && col("cnt") > 0
+          case _ => return None
+        }
+    }
+    Some(GroupKeys(keyCols.map(_.get),
+      dataClassPreds.reduceOption(_ && _).getOrElse(lit(true)),
+      dataClassPreds.nonEmpty))
   }
 
   /** The IO half: one metadata-sized sidecar job computes every group's
@@ -271,85 +274,21 @@ class GroupTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       val (mnS, mxS, nnS) = (statCol("min", m.sortCol),
         statCol("max", m.sortCol), statCol("nn", m.sortCol))
       if (mnS.isEmpty || mxS.isEmpty || nnS.isEmpty) return None
-      // A file's group key: its partition tuple for hive columns, its
-      // ONE stored value (min = max) for clustered data columns.
-      val groupStatCols = m.groupCols.zip(m.groupIsPart).map {
-        case (c, true)  => statCol("p", c)
-        case (c, false) => statCol("min", c)
-      }
-      if (groupStatCols.exists(_.isEmpty)) return None
-      // CLASSIFIABLE: single-valued (and null-free) in every data group
-      // column — such a file belongs to exactly one group, so the
-      // per-group count walk may use its rows (min = max under string
-      // truncation still forces the exact value: stored lower ≤ real ≤
-      // stored upper, and truncation makes lower < upper strictly).
-      // Every OTHER file spans groups (or holds the NULL group): it is
-      // ALWAYS KEPT, and its rows are excluded from the walk — the
-      // cumulative counts only UNDER-count, so bounds weaken and keep
-      // more files, never fewer. Pure partition groupings classify
-      // every file (the original rule, unchanged).
-      val dataClassPreds = m.groupCols.zip(m.groupIsPart).collect {
-        case (c, false) =>
-          (statCol("min", c), statCol("max", c), statCol("nn", c)) match {
-            case (Some(gmn), Some(gmx), Some(gnn)) =>
-              col(gnn) === col("cnt") && col(gmn) === col(gmx) &&
-                col("cnt") > 0
-            case _ => return None
-          }
-      }
-      val classifiable = dataClassPreds.reduceOption(_ && _).getOrElse(lit(true))
-      val filterStatCols = m.partFilters.map {
-        case PartitionConjuncts.PartIn(c, _, _) => statCol("p", c)
-        case PartitionConjuncts.PartNotNull(c)  => statCol("p", c)
-      }
-      if (filterStatCols.exists(_.isEmpty)) return None
-      // Eligibility-filter classification columns must be covered.
-      val classFCols =
-        (m.ranges.map(_.column) ++ m.notNull ++ m.inLists.map(_._1)).distinct
-      val nnOfF = classFCols.map(c => c -> statCol("nn", c)).toMap
-      if (nnOfF.values.exists(_.isEmpty)) return None
-      val mmOfF = (m.ranges.map(_.column) ++ m.inLists.map(_._1)).distinct
-        .map(c => c -> ((statCol("min", c), statCol("max", c)))).toMap
-      if (mmOfF.values.exists(p => p._1.isEmpty || p._2.isEmpty)) return None
+      val GroupKeys(groupStatCols, classifiable, hasDataGroups) =
+        groupKeys(st, m.groupCols, m.groupIsPart).getOrElse(return None)
+      val partSel =
+        PartitionConjuncts.statCols(st, m.partFilters).getOrElse(return None)
       // The global walk's FULL/CANDIDATE split, applied per file: FULL
       // files have every row eligible (their nn counts toward the
       // group's bound); CANDIDATE files may hold an eligible row and
       // stay prunable by the bound; everything else cannot hold a
       // row that survives the below-window filter and drops entirely.
-      val candidate = (m.ranges.map { r =>
-        val (mnC, mxC) = (mmOfF(r.column)._1.get, mmOfF(r.column)._2.get)
-        val loP = r.lo.map(v =>
-          if (r.loInclusive) col(mxC) >= lit(v) else col(mxC) > lit(v))
-        val hiP = r.hi.map(v =>
-          if (r.hiInclusive) col(mnC) <= lit(v) else col(mnC) < lit(v))
-        (loP.toSeq ++ hiP.toSeq).reduceOption(_ && _).getOrElse(lit(true))
-      } ++ m.notNull.map(c => col(nnOfF(c).get) > lit(0L))
-        ++ m.inLists.map { case (c, vs) =>
-          val (mnC, mxC) = (mmOfF(c)._1.get, mmOfF(c)._2.get)
-          vs.map(v => col(mnC) <= lit(v) && col(mxC) >= lit(v))
-            .reduce(_ || _)
-        })
-        .reduceOption(_ && _).getOrElse(lit(true))
-      val full = (m.ranges.map { r =>
-        val (mnC, mxC) = (mmOfF(r.column)._1.get, mmOfF(r.column)._2.get)
-        val loP = r.lo.map(v =>
-          if (r.loInclusive) col(mnC) >= lit(v) else col(mnC) > lit(v))
-        val hiP = r.hi.map(v =>
-          if (r.hiInclusive) col(mxC) <= lit(v) else col(mxC) < lit(v))
-        (Seq(col(nnOfF(r.column).get) === col("cnt")) ++ loP.toSeq ++
-          hiP.toSeq).reduce(_ && _)
-      } ++ m.notNull.map(c => col(nnOfF(c).get) === col("cnt"))
-        ++ m.inLists.map { case (c, vs) =>
-          val (mnC, mxC) = (mmOfF(c)._1.get, mmOfF(c)._2.get)
-          col(nnOfF(c).get) === col("cnt") && col(mnC) === col(mxC) &&
-            vs.map(v => col(mnC) === lit(v)).reduce(_ || _)
-        })
-        .reduceOption(_ && _).getOrElse(lit(true))
+      val (candidate, full) = RangeConjuncts
+        .fileClasses(st, m.ranges, m.notNull, m.inLists).getOrElse(return None)
 
-      val stSel = PartitionConjuncts.select(
-        st, m.partFilters.zip(filterStatCols.map(_.get)))
+      val stSel = PartitionConjuncts.select(st, partSel)
       val (mn, mx, nn) = (col(mnS.get), col(mxS.get), col(nnS.get))
-      val gCols = groupStatCols.map(c => col(c.get))
+      val gCols = groupStatCols.map(col)
       val walkKey = if (m.desc) mn else mx
       val w = W.partitionBy(gCols: _*).orderBy(
         if (m.desc) walkKey.desc_nulls_last else walkKey.asc_nulls_last)
@@ -380,36 +319,25 @@ class GroupTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           // NULL group).
           val joined = stSel
             .filter(classifiable && coalesce(candidate, lit(false)))
-            .join(bounds, groupStatCols.map(_.get), "left")
+            .join(bounds, groupStatCols, "left")
           val reach =
             if (m.desc) mx >= col("_graft_bound")
             else mn <= col("_graft_bound")
           val keepPred = col("_graft_bound").isNull || reach ||
             (if (m.nullsFirst) col("cnt") > nn else lit(false))
           val unclassified =
-            if (dataClassPreds.isEmpty) Array.empty[String]
+            if (!hasDataGroups) Array.empty[String]
             else stSel.filter((!classifiable || classifiable.isNull) &&
                 coalesce(candidate, lit(false)))
               .select("file").collect().map(_.getString(0))
           val files = (joined.filter(keepPred).select("file")
             .collect().map(_.getString(0)) ++ unclassified).toSeq
-          if (files.length >= total) None
-          else {
-            val paths = files.map(abs =>
-              new org.apache.hadoop.fs.Path(new java.net.URI(abs)))
-            val partSchema =
-              Option(m.fsRel.partitionSchema).filter(_.nonEmpty)
-            val pruned = new InMemoryFileIndex(
-              spark, paths, Map("basePath" -> m.root), partSchema)
-            logInfo(s"group-top-k rewrite: ${m.root} scan pruned to " +
-              s"${files.length} of $total files for rank ≤ ${m.n} per " +
+          val paths = files.map(abs =>
+            new org.apache.hadoop.fs.Path(new java.net.URI(abs)))
+          m.scan.prune(spark, m.f, paths, total = total)(
+            s"group top-k for rank ≤ ${m.n} per " +
               s"(${m.groupCols.mkString(", ")}) by ${m.sortCol} " +
               (if (m.desc) "DESC" else "ASC"))
-            Some(m.f.transformUp {
-              case l: LogicalRelation if l eq m.lr =>
-                l.copy(relation = m.fsRel.copy(location = pruned)(spark))
-            })
-          }
         } catch { case scala.util.control.NonFatal(_) => None }
       }
     }
@@ -492,67 +420,15 @@ class GroupTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     }
 
   private def matchMorShape(f: Filter): Option[MorGroupTopKMatch] = {
-    val conds = mutable.Buffer.empty[(Expression, Int)]
-    val windows = mutable.Buffer.empty[Window]
-    val renames = mutable.Map.empty[ExprId, Expression]
-    val rels = mutable.Buffer.empty[LogicalRelation]
-    val pairs = mutable.Buffer.empty[(Attribute, Attribute)]
-    if (!MvPlanShape.strip(f, conds, windows, renames, rels, pairs))
-      return None
-    if (pairs.nonEmpty || rels.length != 1) return None
-    val lr = rels.head
-    val fsRel = lr.relation match {
-      case h: HadoopFsRelation => h
-      case _ => return None
-    }
-    val root = fsRel.location.rootPaths match {
-      case Seq(one) => one.toString
-      case _ => return None
-    }
-    val spec = Option(KeyedTable.specRegistry.get(root)).getOrElse(return None)
-    if (!spec.retainHistory) return None
-    val subst = MvPlanShape.substFn(renames)
-    val relIds = lr.output.map(_.exprId).toSet
-    def relAttrOf(e: Expression): Option[Attribute] = subst(e) match {
-      case a: Attribute if relIds.contains(a.exprId) &&
-        !a.name.startsWith("_graft_") => Some(a)
-      case _ => None
-    }
+    val ks = KeyedScan.of(f).getOrElse(return None)
+    if (!ks.spec.retainHistory || !ks.deterministic) return None
     // Exactly two windows, top-down: the rank window ABOVE the table's
     // resolve window (and not itself a resolve — a second resolve shape
     // is not a leaderboard).
-    val (rankW, resolveW) = windows.toSeq match {
+    val (rankW, resolveW) = ks.windows match {
       case Seq(w0, w1) => (w0, w1)
       case _ => return None
     }
-    val rn = MvPlanShape.resolveRnOf(resolveW, spec).getOrElse(return None)
-    if (MvPlanShape.resolveRnOf(rankW, spec).isDefined) return None
-    val (rk, groupPairs, sortAttr, desc, nullsFirst) =
-      rankOf(rankW, spec, relAttrOf).getOrElse(return None)
-    if (spec.partitionCols.exists(_.equalsIgnoreCase(sortAttr.name)))
-      return None
-    val (groupCols, groupIsPart) = groupPairs.unzip
-
-    def boundOf(e: Expression): Option[Int] = e match {
-      case LessThanOrEqual(a: Attribute, IntegerLiteral(n))
-        if a.exprId == rk.exprId => Some(n)
-      case LessThan(a: Attribute, IntegerLiteral(n))
-        if a.exprId == rk.exprId => Some(n - 1)
-      case EqualTo(a: Attribute, IntegerLiteral(n))
-        if a.exprId == rk.exprId => Some(n)
-      case GreaterThanOrEqual(IntegerLiteral(n), a: Attribute)
-        if a.exprId == rk.exprId => Some(n)
-      case _ => None
-    }
-    val splitD = conds.toSeq.flatMap { case (c, d) =>
-      MvPlanShape.splitConjunction(c).map((_, d))
-    }
-    if (splitD.exists(!_._1.deterministic)) return None
-    val partColsL = spec.partitionCols.map(_.toLowerCase(Locale.ROOT)).toSet
-    def partFilterOf(e: Expression) = PartitionConjuncts.of(
-      e,
-      x => relAttrOf(x)
-        .filter(at => partColsL.contains(at.name.toLowerCase(Locale.ROOT))))
     // rn = 1 sits exactly below the rank window (depth 1) and nowhere
     // else; rank bounds at depth 0; partition conjuncts above the
     // resolve (depth ≤ 1); the eligibility filter — literal ranges /
@@ -561,41 +437,32 @@ class GroupTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     // ranking) — classifies like the COW arm. Any other conjunct —
     // including anything BELOW the resolve window, which would change
     // the winners — declines.
-    val (rnConds, rest) =
-      splitD.partition(p => MvPlanShape.isRnEqOne(p._1, rn))
-    if (rnConds.map(_._2) != Seq(1)) return None
-    val bounds = rest.collect { case (c, 0) if boundOf(c).isDefined =>
-      boundOf(c).get
-    }
-    if (bounds.isEmpty) return None
-    val n = bounds.min
-    if (n <= 0) return None
+    val rest = ks.resolveSplit(resolveW, 1).getOrElse(return None)
+    if (MvPlanShape.resolveRnOf(rankW, ks.spec).isDefined) return None
+    val (rk, groupPairs, sortAttr, desc, nullsFirst) =
+      rankOf(rankW, ks).getOrElse(return None)
+    if (ks.isPartitionCol(sortAttr.name)) return None
+    val (groupCols, groupIsPart) = groupPairs.unzip
+    val n = rankBound(rest, rk).getOrElse(return None)
     // Same rank-preservation rule as the COW arm: a depth-1 partition
     // conjunct sits between the rank window and the resolve —
     // filter-before-rank, prunes; a depth-0 (above-rank-window)
     // partition conjunct prunes only when its column is a GROUP column
     // (whole groups and their winners drop); on a non-group column it
     // is filter-after-rank and stays residual, never pruning.
-    val groupColsL = groupCols.map(_.toLowerCase(Locale.ROOT)).toSet
-    val partFilters = rest.flatMap { case (c, d) =>
-      partFilterOf(c).filter(pf =>
-        d != 0 || groupColsL.contains(pfColumn(pf).toLowerCase(Locale.ROOT)))
-    }
+    val partFilters = rankSafePartFilters(ks, rest, groupCols)
     val rangeConds = rest.collect {
-      case (c, 1) if partFilterOf(c).isEmpty => c
+      case (c, 1) if ks.partFilterOf(c).isEmpty => c
     }
-    val ex = RangeConjuncts.extract(
-      rangeConds,
-      e => relAttrOf(e).filter(at => KeyedTable.statsOrderedType(at.dataType)))
-    if (ex.other.nonEmpty || ex.nullPreds.exists(_._2)) return None
+    val sc = RangeConjuncts.statsConjuncts(ks, rangeConds).getOrElse(return None)
     // Depth-0 non-bound conjuncts (e.g. the `rk > m` of a paginated
     // leaderboard) only filter RANKED output: everything above the rank
     // window survives the surgery verbatim, so they stay residual —
     // same contract as the COW arm. They never feed the classification.
     if (rest.exists { case (_, d) => d > 1 }) return None
-    Some(MorGroupTopKMatch(f, rankW, spec, groupCols, groupIsPart,
+    Some(MorGroupTopKMatch(f, rankW, ks.spec, groupCols, groupIsPart,
       sortAttr.name, n, desc, nullsFirst, partFilters,
-      ex.ranges, ex.nullPreds.map(_._1), ex.inLists))
+      sc.ranges, sc.notNull, sc.inLists))
   }
 
   /** The IO half of the MoR arm: one metadata-sized walk computes every
@@ -613,82 +480,29 @@ class GroupTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       val (mnS, mxS, nnS) = (statCol("min", m.sortCol),
         statCol("max", m.sortCol), statCol("nn", m.sortCol))
       if (mnS.isEmpty || mxS.isEmpty || nnS.isEmpty) return None
-      val groupStatCols = m.groupCols.zip(m.groupIsPart).map {
-        case (c, true)  => statCol("p", c)
-        case (c, false) => statCol("min", c)
-      }
-      if (groupStatCols.exists(_.isEmpty)) return None
-      val dataClassPreds = m.groupCols.zip(m.groupIsPart).collect {
-        case (c, false) =>
-          (statCol("min", c), statCol("max", c), statCol("nn", c)) match {
-            case (Some(gmn), Some(gmx), Some(gnn)) =>
-              col(gnn) === col("cnt") && col(gmn) === col(gmx) &&
-                col("cnt") > 0
-            case _ => return None
-          }
-      }
-      val classifiable =
-        dataClassPreds.reduceOption(_ && _).getOrElse(lit(true))
-      val filterStatCols = m.partFilters.map {
-        case PartitionConjuncts.PartIn(c, _, _) => statCol("p", c)
-        case PartitionConjuncts.PartNotNull(c)  => statCol("p", c)
-      }
-      if (filterStatCols.exists(_.isEmpty)) return None
-      // Eligibility-filter classification columns must be covered; the
-      // FULL/CANDIDATE split mirrors the COW arm's (on a MoR file the
+      val GroupKeys(groupStatCols, classifiable, hasDataGroups) =
+        groupKeys(st, m.groupCols, m.groupIsPart).getOrElse(return None)
+      val partSel =
+        PartitionConjuncts.statCols(st, m.partFilters).getOrElse(return None)
+      // The FULL/CANDIDATE split mirrors the COW arm's (on a MoR file the
       // stats are outer bounds of its winners — FULL still proves every
       // stored row, hence every winner, eligible; CANDIDATE is a sound
       // may-contain test).
-      val classFCols =
-        (m.ranges.map(_.column) ++ m.notNull ++ m.inLists.map(_._1)).distinct
-      val nnOfF = classFCols.map(c => c -> statCol("nn", c)).toMap
-      if (nnOfF.values.exists(_.isEmpty)) return None
-      val mmOfF = (m.ranges.map(_.column) ++ m.inLists.map(_._1)).distinct
-        .map(c => c -> ((statCol("min", c), statCol("max", c)))).toMap
-      if (mmOfF.values.exists(p => p._1.isEmpty || p._2.isEmpty)) return None
-      val candidate = (m.ranges.map { r =>
-        val (mnC, mxC) = (mmOfF(r.column)._1.get, mmOfF(r.column)._2.get)
-        val loP = r.lo.map(v =>
-          if (r.loInclusive) col(mxC) >= lit(v) else col(mxC) > lit(v))
-        val hiP = r.hi.map(v =>
-          if (r.hiInclusive) col(mnC) <= lit(v) else col(mnC) < lit(v))
-        (loP.toSeq ++ hiP.toSeq).reduceOption(_ && _).getOrElse(lit(true))
-      } ++ m.notNull.map(c => col(nnOfF(c).get) > lit(0L))
-        ++ m.inLists.map { case (c, vs) =>
-          val (mnC, mxC) = (mmOfF(c)._1.get, mmOfF(c)._2.get)
-          vs.map(v => col(mnC) <= lit(v) && col(mxC) >= lit(v))
-            .reduce(_ || _)
-        })
-        .reduceOption(_ && _).getOrElse(lit(true))
-      val full = (m.ranges.map { r =>
-        val (mnC, mxC) = (mmOfF(r.column)._1.get, mmOfF(r.column)._2.get)
-        val loP = r.lo.map(v =>
-          if (r.loInclusive) col(mnC) >= lit(v) else col(mnC) > lit(v))
-        val hiP = r.hi.map(v =>
-          if (r.hiInclusive) col(mxC) <= lit(v) else col(mxC) < lit(v))
-        (Seq(col(nnOfF(r.column).get) === col("cnt")) ++ loP.toSeq ++
-          hiP.toSeq).reduce(_ && _)
-      } ++ m.notNull.map(c => col(nnOfF(c).get) === col("cnt"))
-        ++ m.inLists.map { case (c, vs) =>
-          val (mnC, mxC) = (mmOfF(c)._1.get, mmOfF(c)._2.get)
-          col(nnOfF(c).get) === col("cnt") && col(mnC) === col(mxC) &&
-            vs.map(v => col(mnC) === lit(v)).reduce(_ || _)
-        })
-        .reduceOption(_ && _).getOrElse(lit(true))
+      val (candidate, full) = RangeConjuncts
+        .fileClasses(st, m.ranges, m.notNull, m.inLists).getOrElse(return None)
       val settled = table.settledWinnerEntries(spark).getOrElse(return None)
       val stRel = st.withColumn(
         "_rfile", table.relOfFileCol(spark, col("file")))
       val MorWinnerMaps.WinnerMaps(_, cntByFile, wcU, _) =
         MorWinnerMaps.of(spark, table, settled, stRel)
           .getOrElse(return None)
-      val joined = PartitionConjuncts.select(
-          stRel, m.partFilters.zip(filterStatCols.map(_.get)))
+      val joined = PartitionConjuncts.select(stRel, partSel)
         .withColumn("wcnt", wcU(col("_rfile")))
       val live = col("wcnt").isNotNull && col("wcnt") > 0
       val pure = col("wcnt").isNotNull && col("wcnt") === col("cnt") &&
         col("cnt") > 0
       val (mn, mx, nn) = (col(mnS.get), col(mxS.get), col(nnS.get))
-      val gCols = groupStatCols.map(c => col(c.get))
+      val gCols = groupStatCols.map(col)
       val walkKey = if (m.desc) mn else mx
       val w = W.partitionBy(gCols: _*).orderBy(
         if (m.desc) walkKey.desc_nulls_last else walkKey.asc_nulls_last)
@@ -717,14 +531,14 @@ class GroupTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           val classed = joined
             .filter(coalesce(classifiable, lit(false)) && live &&
               coalesce(candidate, lit(false)))
-            .join(bounds, groupStatCols.map(_.get), "left")
+            .join(bounds, groupStatCols, "left")
           val reach =
             if (m.desc) mx >= col("_graft_bound")
             else mn <= col("_graft_bound")
           val keepPred = col("_graft_bound").isNull || reach ||
             (if (m.nullsFirst) col("cnt") > nn else lit(false))
           val unclassified =
-            if (dataClassPreds.isEmpty) Array.empty[String]
+            if (!hasDataGroups) Array.empty[String]
             else joined
               .filter(live && (!classifiable || classifiable.isNull) &&
                 coalesce(candidate, lit(false)))
@@ -737,37 +551,12 @@ class GroupTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           // subtree, so ranges/not-null/IN must re-apply here or
           // ineligible winner rows would rank (partition conjuncts are
           // defensive — they selected whole files and whole winners).
-          val residual: Seq[org.apache.spark.sql.Column] =
-            m.partFilters.map {
-              case PartitionConjuncts.PartIn(c, t, vs) =>
-                val toScala = org.apache.spark.sql.catalyst
-                  .CatalystTypeConverters.createToScalaConverter(t)
-                col(c).isin(vs.map(toScala): _*)
-              case PartitionConjuncts.PartNotNull(c) => col(c).isNotNull
-            } ++ m.ranges.map { r =>
-              val loP = r.lo.map(v =>
-                if (r.loInclusive) col(r.column) >= lit(v)
-                else col(r.column) > lit(v))
-              val hiP = r.hi.map(v =>
-                if (r.hiInclusive) col(r.column) <= lit(v)
-                else col(r.column) < lit(v))
-              (loP.toSeq ++ hiP.toSeq).reduceOption(_ && _)
-                .getOrElse(lit(true))
-            } ++ m.notNull.map(c => col(c).isNotNull) ++
-              m.inLists.map { case (c, vs) => col(c).isin(vs: _*) }
+          val residual = RangeConjuncts.rowFilters(
+            m.partFilters, m.ranges, m.notNull, m.inLists)
           val winners = residual.foldLeft(
             table.winnerRowsOf(spark, kept, settled))(_.filter(_))
-          val bplan = winners.queryExecution.analyzed
-          val byName = bplan.output
-            .map(at => at.name.toLowerCase(Locale.ROOT) -> at).toMap
-          val aliases: Seq[NamedExpression] =
-            m.rankW.child.output.map { at =>
-              val src = byName.getOrElse(
-                at.name.toLowerCase(Locale.ROOT), return None)
-              if (src.dataType != at.dataType) return None
-              Alias(src, at.name)(exprId = at.exprId)
-            }
-          val newChild = Project(aliases, bplan)
+          val newChild =
+            MorWinnerMaps.asOutput(winners, m.rankW.child.output).getOrElse(return None)
           logInfo(s"group-top-k rewrite: ${m.spec.path} RESOLVED scan " +
             s"replaced by winner rows of ${kept.length} of " +
             s"${cntByFile.size} files for rank ≤ ${m.n} per " +

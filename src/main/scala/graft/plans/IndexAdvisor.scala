@@ -297,16 +297,7 @@ object IndexAdvisor {
     // rewrite re-sizes files too.
     val scannedTables: Seq[String] = plans.flatMap(_.collect {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation match {
-          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            h.location.rootPaths match {
-              case Seq(one)
-                if KeyedTable.specRegistry.get(one.toString) != null =>
-                Seq(one.toString)
-              case _ => Nil
-            }
-          case _ => Nil
-        }
+        KeyedScan.registered(l).map(_._2)
     }.flatten)
     val clusterTables = clusterRecs.map(_._1).toSet
     // Malformed threshold confs skip the compaction arm instead of

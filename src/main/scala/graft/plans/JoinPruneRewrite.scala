@@ -1,15 +1,12 @@
 package graft.plans
 
-import scala.collection.mutable
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, Window}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.table.{KeyedTable, TableMetaCache}
@@ -120,37 +117,6 @@ class JoinPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     }.headOption
   }
 
-  /** One stripped side: its single registered relation plus the rename
-    * substitution mapping side-output attributes down to it.
-    */
-  private final case class Side(
-      lr: LogicalRelation, fsRel: HadoopFsRelation, root: String,
-      spec: graft.table.KeyedTableSpec, subst: Expression => Expression,
-      hasWindow: Boolean)
-
-  private def stripSide(p: LogicalPlan): Option[Side] = {
-    val conds = mutable.Buffer.empty[(Expression, Int)]
-    val windows = mutable.Buffer.empty[Window]
-    val renames = mutable.Map.empty[ExprId, Expression]
-    val rels = mutable.Buffer.empty[LogicalRelation]
-    val pairs = mutable.Buffer.empty[(Attribute, Attribute)]
-    if (!MvPlanShape.strip(p, conds, windows, renames, rels, pairs))
-      return None
-    if (pairs.nonEmpty || rels.length != 1) return None
-    val lr = rels.head
-    val fsRel = lr.relation match {
-      case h: HadoopFsRelation => h
-      case _ => return None
-    }
-    val root = fsRel.location.rootPaths match {
-      case Seq(one) => one.toString
-      case _ => return None
-    }
-    val spec = Option(KeyedTable.specRegistry.get(root)).getOrElse(return None)
-    Some(Side(lr, fsRel, root, spec,
-      MvPlanShape.substFn(renames), windows.nonEmpty))
-  }
-
   private def lower(s: String): String = s.toLowerCase(java.util.Locale.ROOT)
 
   /** Usable equi pairs for one orientation: fact attr on the fact
@@ -160,16 +126,9 @@ class JoinPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * shape matcher.
     */
   private def joinedPairs(
-      fact: Side, dim: Side, factPlan: LogicalPlan, dimPlan: LogicalPlan,
+      fact: KeyedScan, dim: KeyedScan, factPlan: LogicalPlan,
+      dimPlan: LogicalPlan,
       equiPairs: Seq[(Attribute, Attribute)]): Seq[(Attribute, Attribute)] = {
-    val factIds = fact.lr.output.map(_.exprId).toSet
-    val dimIds = dim.lr.output.map(_.exprId).toSet
-    def relAttr(side: Side, ids: Set[ExprId], e: Expression): Option[Attribute] =
-      side.subst(e) match {
-        case a: Attribute if ids.contains(a.exprId) &&
-          !a.name.startsWith("_graft_") => Some(a)
-        case _ => None
-      }
     val factOut = factPlan.outputSet
     val dimOut = dimPlan.outputSet
     equiPairs.flatMap { case (x, y) =>
@@ -179,8 +138,8 @@ class JoinPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         else None
       oriented.flatMap { case (fa0, da0) =>
         for {
-          fa <- relAttr(fact, factIds, fa0)
-          da <- relAttr(dim, dimIds, da0)
+          fa <- fact.relAttrOf(fa0)
+          da <- dim.relAttrOf(da0)
           if da.dataType == fa.dataType
         } yield (fa, da)
       }
@@ -228,18 +187,17 @@ class JoinPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     if (equiPairs.isEmpty) return Nil
     orientations.flatMap { case (factPlan, dimPlan) =>
       (for {
-        fact <- stripSide(factPlan)
-        if (if (fact.spec.retainHistory) morFactOk(factPlan, fact.spec)
-            else !fact.hasWindow)
-        dim <- stripSide(dimPlan)
+        fact <- KeyedScan.of(factPlan)
+        if factOk(fact)
+        dim <- KeyedScan.of(dimPlan)
         if !(dim.lr eq fact.lr)
       } yield {
         val joinedAll = joinedPairs(fact, dim, factPlan, dimPlan, equiPairs)
         val dimKeyColsL = dim.spec.keyCols.map(lower)
-        val isPoint = pointRule.probeShapes(dimPlan).exists(_.lr eq dim.lr)
+        val isPoint = pointRule.probeShapes(dimPlan).exists(_.scan.lr eq dim.lr)
         val isRange = !isPoint && !dim.spec.retainHistory &&
-          !dim.hasWindow &&
-          rangeRule.rangeShapes(dimPlan).exists(_.lr eq dim.lr)
+          dim.windows.isEmpty &&
+          rangeRule.rangeShapes(dimPlan).exists(_.scan.lr eq dim.lr)
         val joined: Seq[Attribute] =
           if (isPoint)
             joinedAll.collect {
@@ -259,35 +217,18 @@ class JoinPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  /** A history-table fact side is admissible when the plan between the
-    * join and the scan is EXACTLY the table's resolve (the shared
-    * [[MvPlanShape.resolveRnOf]] shape, `rn = 1` the only below-window
-    * conjunct) — the same admission as [[PointLookupRewrite]]'s MoR arm.
-    * Conjuncts above the resolve window stay residual over the resolved
-    * rows and are sound; anything below would filter versions before
-    * the per-key resolve and declines.
+  /** The fact side is admissible when it is plain copy-on-write with
+    * no window below the join, or a history table read through EXACTLY
+    * its resolve (the shared [[MvPlanShape.resolveRnOf]] shape, `rn = 1`
+    * the only below-window conjunct) — the same admission as
+    * [[PointLookupRewrite]]'s MoR arm. Conjuncts above the resolve
+    * window stay residual over the resolved rows and are sound;
+    * anything below would filter versions before the per-key resolve
+    * and declines.
     */
-  private def morFactOk(p: LogicalPlan, spec: graft.table.KeyedTableSpec): Boolean = {
-    val conds = mutable.Buffer.empty[(Expression, Int)]
-    val windows = mutable.Buffer.empty[Window]
-    val renames = mutable.Map.empty[ExprId, Expression]
-    val rels = mutable.Buffer.empty[LogicalRelation]
-    val pairs = mutable.Buffer.empty[(Attribute, Attribute)]
-    if (!MvPlanShape.strip(p, conds, windows, renames, rels, pairs))
-      return false
-    windows.toSeq match {
-      case Seq(w) =>
-        val rn = MvPlanShape.resolveRnOf(w, spec).getOrElse(return false)
-        val split = conds.toSeq.flatMap { case (c, d) =>
-          MvPlanShape.splitConjunction(c).map((_, d))
-        }
-        if (split.exists(!_._1.deterministic)) return false
-        val (rnConds, rest) =
-          split.partition(q => MvPlanShape.isRnEqOne(q._1, rn))
-        rnConds.map(_._2) == Seq(0) && rest.forall(_._2 == 0)
-      case _ => false
-    }
-  }
+  private def factOk(fact: KeyedScan): Boolean =
+    if (!fact.spec.retainHistory) fact.windows.isEmpty
+    else fact.deterministic && fact.resolved.exists(_.forall(_._2 == 0))
 
   private def tryOrientation(
       j: Join, factPlan: LogicalPlan, dimPlan: LogicalPlan,
@@ -295,15 +236,12 @@ class JoinPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     // FACT: a single registered rel — plain COW with no window below the
     // join, OR a history table read through its exact resolve shape
     // (served with a key guard, see swapFactScan).
-    val fact = stripSide(factPlan).getOrElse(return None)
-    if (fact.spec.retainHistory) {
-      if (!morFactOk(factPlan, fact.spec)) return None
-    } else if (fact.hasWindow) return None
+    val fact = KeyedScan.of(factPlan).filter(factOk).getOrElse(return None)
 
     // DIM: a probe shape the point rule could serve — or, failing that,
     // a range shape the range rule could — on the same single relation
     // this side strips to.
-    val dim = stripSide(dimPlan).getOrElse(return None)
+    val dim = KeyedScan.of(dimPlan).getOrElse(return None)
     // A self-join sharing the one relation OBJECT would swap both sides
     // at once (transformUp rewrites by identity) — pruning the dim side
     // to the fact candidates is unsound, so decline. (Analyzed
@@ -314,7 +252,7 @@ class JoinPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
     val joinedAll = joinedPairs(fact, dim, factPlan, dimPlan, equiPairs)
 
-    pointRule.probeShapes(dimPlan).find(_.lr eq dim.lr) match {
+    pointRule.probeShapes(dimPlan).find(_.scan.lr eq dim.lr) match {
       case Some(probe) =>
         // Point arm: keys derive from metadata alone, so every joined
         // dim attribute must be a KEY column.
@@ -334,9 +272,9 @@ class JoinPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         // (raw candidate-file rows of a resolving dim are versions; a
         // superset is still sound, but the resolve shape never reaches
         // here unstripped anyway).
-        if (dim.spec.retainHistory || dim.hasWindow) return None
+        if (dim.spec.retainHistory || dim.windows.nonEmpty) return None
         val rm = rangeRule.rangeShapes(dimPlan)
-          .find(_.lr eq dim.lr).getOrElse(return None)
+          .find(_.scan.lr eq dim.lr).getOrElse(return None)
         val joined = joinedAll.map { case (fa, da) => (fa, da.name) }
         if (joined.isEmpty) return None
         val key = (fact.root, dim.root,
@@ -353,7 +291,7 @@ class JoinPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * via the caller's gate.
     */
   private def serveOrientation(
-      j: Join, fact: Side, dim: Side,
+      j: Join, fact: KeyedScan, dim: KeyedScan,
       probe: PointLookupRewrite#ProbeMatch,
       joined: Seq[(Attribute, String)]): Option[LogicalPlan] = {
     // The dim join-key frame, WITHOUT executing the dim subplan: probe
@@ -362,21 +300,8 @@ class JoinPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     // survive the dim side's full filter — supersets only cost pruning.
     val dimTable = KeyedTable(dim.spec)
     val keysFrame: org.apache.spark.sql.DataFrame =
-      if (probe.viaKey) {
-        val converters = probe.probes.map(p =>
-          CatalystTypeConverters.createToScalaConverter(p._1.dataType))
-        val schema = StructType(dim.spec.keyCols.zip(probe.probes).map {
-          case (kc, (attr, _)) => StructField(kc, attr.dataType)
-        })
-        val tuples = probe.probes.map(_._2).foldLeft(Seq(Seq.empty[Any])) {
-          (acc, vals) => acc.flatMap(t => vals.map(v => t :+ v))
-        }
-        val rows = new java.util.ArrayList[Row](tuples.length)
-        tuples.foreach { t =>
-          rows.add(Row(t.zipWithIndex.map { case (v, i) => converters(i)(v) }: _*))
-        }
-        spark.createDataFrame(rows, schema)
-      } else {
+      if (probe.viaKey) probe.keyFrame(spark)
+      else {
         val (pAttr, values) = probe.probes.head
         if (!dimTable.hasPointIndexes(spark, Some(pAttr.name))) return None
         val toScala = CatalystTypeConverters.createToScalaConverter(pAttr.dataType)
@@ -404,7 +329,7 @@ class JoinPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * it bounded.
     */
   private def serveRangeOrientation(
-      j: Join, fact: Side, dim: Side,
+      j: Join, fact: KeyedScan, dim: KeyedScan,
       rm: RangePruneRewrite#RangeMatch,
       joined: Seq[(Attribute, String)]): Option[LogicalPlan] = {
     import org.apache.spark.sql.functions.{col, lit}
@@ -461,7 +386,7 @@ class JoinPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * so the guarded pruned resolve is exact.
     */
   private def swapFactScan(
-      j: Join, fact: Side, dimRoot: String,
+      j: Join, fact: KeyedScan, dimRoot: String,
       joined: Seq[(Attribute, String)],
       collected: Array[Row]): Option[LogicalPlan] = {
     // Fact candidates through the same chain the point rule serves.
@@ -470,28 +395,9 @@ class JoinPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     val factKeyColsL = fact.spec.keyCols.map(lower)
     val factColOf: Map[String, Attribute] =
       joined.map { case (fa, dc) => dc -> fa }.toMap
-    // The fact scan's own key attributes (guard construction).
-    def keyAttrs: Seq[Attribute] = fact.spec.keyCols.map { kc =>
-      val kcL = lower(kc)
-      fact.lr.output.find(a => lower(a.name) == kcL)
-        .getOrElse(return Seq.empty)
-    }
-    def guardOf(keyRows: Seq[Row]): Option[Expression] = {
-      val attrs = keyAttrs
-      if (attrs.length != fact.spec.keyCols.length) return None
-      if (attrs.length == 1)
-        Some(In(attrs.head,
-          keyRows.map(r => Literal.create(r.get(0), attrs.head.dataType))))
-      else
-        // Composite keys guard with the EXACT tuple set — a per-column
-        // IN would admit non-derived tuples whose superseded versions
-        // could leak.
-        Some(keyRows.map { r =>
-          attrs.zipWithIndex.map { case (at, i) =>
-            EqualTo(at, Literal.create(r.get(i), at.dataType)): Expression
-          }.reduce(And(_, _))
-        }.reduce(Or(_, _)))
-    }
+    // The guard over the fact scan's own key attributes.
+    def guardOf(keyRows: Seq[Row]): Option[Expression] =
+      fact.keyAttrs.map(KeyedScan.keyGuard(_, keyRows))
     val (files, guard): (Seq[String], Option[Expression]) =
       if (collected.isEmpty) {
         // No dim value can match: the join is empty — zero fact files
@@ -535,25 +441,12 @@ class JoinPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         (factTable.lookupCandidateFiles(spark, keys).getOrElse(return None), g)
       } else return None
 
-    val total = fact.fsRel.location.inputFiles.length
-    if (files.length >= total) return None
-    val paths = files.map(r => new Path(new Path(fact.spec.path), r))
-    val partSchema = Option(fact.fsRel.partitionSchema).filter(_.nonEmpty)
-    val pruned = new InMemoryFileIndex(
-      spark, paths, Map("basePath" -> fact.root), partSchema)
-    logInfo(s"join-prune rewrite: ${fact.root} fact scan pruned to " +
-      s"${files.length} of $total files via ${collected.length} dim join " +
-      s"keys from $dimRoot" +
-      (if (resolving) " (resolved, key-guarded)" else ""))
-    // Same relation, same output attributes — only the file set changes
-    // (plus the key guard directly above the scan on a resolving fact),
-    // so the join condition and everything above keep their exprIds.
-    Some(j.transformUp {
-      case l: LogicalRelation if l eq fact.lr =>
-        val swapped =
-          l.copy(relation = fact.fsRel.copy(location = pruned)(spark))
-        guard.fold(swapped: LogicalPlan)(Filter(_, swapped))
-    })
+    // Only the file set changes (plus the key guard directly above the
+    // scan on a resolving fact), so the join condition and everything
+    // above keep their exprIds.
+    fact.prune(spark, j, fact.relPaths(files), guard)(
+      s"join prune via ${collected.length} dim join keys from $dimRoot" +
+        (if (resolving) " (resolved, key-guarded)" else ""))
   }
 }
 

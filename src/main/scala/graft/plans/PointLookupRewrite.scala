@@ -1,14 +1,10 @@
 package graft.plans
 
-import scala.collection.mutable
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Window}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.table.{KeyedTable, TableMetaCache}
@@ -74,9 +70,9 @@ class PointLookupRewrite(spark: SparkSession)
 
   private def tryRewrite(f: Filter): Option[LogicalPlan] =
     matchProbe(f).flatMap { m =>
-      val key = (m.root, m.viaKey,
+      val key = (m.scan.root, m.viaKey,
         m.probes.map(p => (p._1.name, p._2.toVector)))
-      TableMetaCache.declineGated(spark, this, m.root)(key)(serveProbe(m))
+      TableMetaCache.declineGated(spark, this, m.scan.root)(key)(serveProbe(m))
     }
 
   /** The shape half of the match, index-IO-free — shared with
@@ -87,10 +83,30 @@ class PointLookupRewrite(spark: SparkSession)
     * tuple set); a single entry for a secondary-column probe.
     */
   private[plans] final case class ProbeMatch(
-      f: Filter, lr: LogicalRelation, fsRel: HadoopFsRelation, root: String,
-      spec: graft.table.KeyedTableSpec,
+      f: Filter, scan: KeyedScan,
       probes: Seq[(Attribute, Seq[Any])], viaKey: Boolean) {
+    def spec: graft.table.KeyedTableSpec = scan.spec
     def probeAttr: Attribute = probes.head._1
+
+    /** The key probe as a one-row-per-tuple frame: the cartesian tuple
+      * set over the per-column value sets, columns named as the spec's
+      * key columns.
+      */
+    def keyFrame(spark: SparkSession): org.apache.spark.sql.DataFrame = {
+      val converters = probes.map(p =>
+        CatalystTypeConverters.createToScalaConverter(p._1.dataType))
+      val schema = StructType(spec.keyCols.zip(probes).map {
+        case (kc, (attr, _)) => StructField(kc, attr.dataType)
+      })
+      val tuples = probes.map(_._2).foldLeft(Seq(Seq.empty[Any])) {
+        (acc, vals) => acc.flatMap(t => vals.map(v => t :+ v))
+      }
+      val rows = new java.util.ArrayList[Row](tuples.length)
+      tuples.foreach { t =>
+        rows.add(Row(t.zipWithIndex.map { case (v, i) => converters(i)(v) }: _*))
+      }
+      spark.createDataFrame(rows, schema)
+    }
   }
 
   /** Every point-probe shape in `plan` this rule would serve if the
@@ -105,61 +121,35 @@ class PointLookupRewrite(spark: SparkSession)
     }.flatten
 
   private def matchProbe(f: Filter): Option[ProbeMatch] = {
-    val conds = mutable.Buffer.empty[(Expression, Int)]
-    val windows = mutable.Buffer.empty[Window]
-    val renames = mutable.Map.empty[ExprId, Expression]
-    val rels = mutable.Buffer.empty[LogicalRelation]
-    val pairs = mutable.Buffer.empty[(Attribute, Attribute)]
-    if (!MvPlanShape.strip(f, conds, windows, renames, rels, pairs)) return None
-    if (pairs.nonEmpty || rels.length != 1) return None
-    val lr = rels.head
-    val fsRel = lr.relation match {
-      case h: HadoopFsRelation => h
-      case _ => return None
-    }
-    val root = fsRel.location.rootPaths match {
-      case Seq(one) => one.toString
-      case _ => return None
-    }
-    val spec = Option(KeyedTable.specRegistry.get(root)).getOrElse(return None)
+    val ks = KeyedScan.of(f).getOrElse(return None)
+    val spec = ks.spec
     val keyColsL = spec.keyCols.map(_.toLowerCase(java.util.Locale.ROOT))
-    val subst = MvPlanShape.substFn(renames)
-    val relIds = lr.output.map(_.exprId).toSet
 
-    // Split every filter into conjuncts, keeping its window depth, and
-    // classify: the key probe (literal =/IN/InSet on the key columns of
-    // THIS relation), the resolve's rn = 1, everything else.
-    val split = conds.toSeq.flatMap { case (c, d) =>
-      MvPlanShape.splitConjunction(c).map((_, d))
-    }
-    if (split.exists(!_._1.deterministic)) return None
+    // Every filter conjunct, with its window depth, classifies as: the
+    // key probe (literal =/IN/InSet on the key columns of THIS
+    // relation), the resolve's rn = 1, everything else.
+    val split = ks.conjuncts
+    if (!ks.deterministic) return None
 
     // (attr of THIS relation, probe values in catalyst form) for a
     // literal point conjunct on any column.
-    def relAttrOf(e: Expression): Option[Attribute] = subst(e) match {
-      case a: Attribute if relIds.contains(a.exprId) => Some(a)
-      case _ => None
-    }
     def probeOf(e: Expression): Option[(Attribute, Seq[Any])] = e match {
       case EqualTo(a: Attribute, l: Literal) if l.value != null =>
-        relAttrOf(a).map((_, Seq(l.value)))
+        ks.relAttrOf(a).map((_, Seq(l.value)))
       case EqualTo(l: Literal, a: Attribute) if l.value != null =>
-        relAttrOf(a).map((_, Seq(l.value)))
+        ks.relAttrOf(a).map((_, Seq(l.value)))
       case In(a: Attribute, vs) if vs.forall {
         case Literal(v, _) => v != null
         case _ => false
-      } => relAttrOf(a).map((_, vs.map(_.asInstanceOf[Literal].value)))
+      } => ks.relAttrOf(a).map((_, vs.map(_.asInstanceOf[Literal].value)))
       case InSet(a: Attribute, hset) if !hset.contains(null) =>
-        relAttrOf(a).map((_, hset.toSeq))
+        ks.relAttrOf(a).map((_, hset.toSeq))
       case _ => None
     }
     def nameOf(a: Attribute) = a.name.toLowerCase(java.util.Locale.ROOT)
 
     val probes = split.flatMap { case (c, d) => probeOf(c).map((_, d)) }
-      .filter { case ((a, vs), _) =>
-        vs.nonEmpty && vs.length <= MaxProbeValues &&
-          !a.name.startsWith("_graft_")
-      }
+      .filter { case ((_, vs), _) => vs.nonEmpty && vs.length <= MaxProbeValues }
     if (probes.isEmpty) return None
 
     // Key probe: EVERY key column carries a literal point conjunct — a
@@ -192,35 +182,27 @@ class PointLookupRewrite(spark: SparkSession)
     // is every conjunct that is NOT a chosen probe conjunct: other point
     // probes included — a literal equality BELOW the resolve window
     // filters versions before the per-key resolve and must not commute.
+    // (The rn = 1 conjunct is a window output, never a probe.)
     val chosenSet = chosenConds.toSet
-    val nonProbe = split.filterNot { case (c, d) =>
-      probeOf(c).exists(p => chosenSet.contains(((p, d))))
-    }
-    val resolving = spec.retainHistory
-    if (resolving) {
-      windows.toSeq match {
-        case Seq(w: Window) =>
-          val rn = MvPlanShape.resolveRnOf(w, spec).getOrElse(return None)
-          val (rnConds, rest) =
-            nonProbe.partition(p => MvPlanShape.isRnEqOne(p._1, rn))
-          if (rnConds.map(_._2) != Seq(0)) return None
-          if (rest.exists(_._2 != 0)) return None
-          // A key conjunct commutes with the per-key resolve at any
-          // depth; a secondary-column conjunct only filters the RESOLVED
-          // state — it must sit above the window.
-          if (!viaKey && chosenConds.exists(_._2 != 0)) return None
-        case _ => return None
-      }
-    } else if (windows.nonEmpty) return None
+    def chosen(c: (Expression, Int)): Boolean =
+      probeOf(c._1).exists(p => chosenSet.contains((p, c._2)))
+    if (spec.retainHistory) {
+      val rest = ks.resolved.getOrElse(return None).filterNot(chosen)
+      if (rest.exists(_._2 != 0)) return None
+      // A key conjunct commutes with the per-key resolve at any
+      // depth; a secondary-column conjunct only filters the RESOLVED
+      // state — it must sit above the window.
+      if (!viaKey && chosenConds.exists(_._2 != 0)) return None
+    } else if (ks.windows.nonEmpty) return None
     // (An evolved table's scan roots at generation dirs, never at the
     // registered path, so the non-resolving arm can't misfire there.)
-    Some(ProbeMatch(f, lr, fsRel, root, spec, chosenProbes, viaKey))
+    Some(ProbeMatch(f, ks, chosenProbes, viaKey))
   }
 
   /** The serving half: index IO + the scan swap. */
   private def serveProbe(m: ProbeMatch): Option[LogicalPlan] = {
-    val ProbeMatch(f, lr, fsRel, root, spec, probes, viaKey) = m
-    val resolving = spec.retainHistory
+    val ProbeMatch(f, ks, probes, viaKey) = m
+    val spec = ks.spec
     val table = KeyedTable(spec)
 
     // The probe-KEY frame: direct for a key probe (the cartesian tuple
@@ -228,29 +210,13 @@ class PointLookupRewrite(spark: SparkSession)
     // value→keys through the secondary-index sidecar for a non-key
     // probe. Each is one small plan-time job, like a DPP subquery.
     val keysAndGuard: Option[(org.apache.spark.sql.DataFrame, Option[Expression])] =
-      if (viaKey) {
-        val converters = probes.map(p =>
-          CatalystTypeConverters.createToScalaConverter(p._1.dataType))
-        val probeSchema = StructType(spec.keyCols.zip(probes).map {
-          case (kc, (attr, _)) => StructField(kc, attr.dataType)
-        })
-        val tuples = probes.map(_._2).foldLeft(Seq(Seq.empty[Any])) {
-          (acc, vals) => acc.flatMap(t => vals.map(v => t :+ v))
-        }
-        val probeRows: java.util.List[Row] = {
-          val l = new java.util.ArrayList[Row](tuples.length)
-          tuples.foreach { t =>
-            l.add(Row(t.zipWithIndex.map { case (v, i) => converters(i)(v) }: _*))
-          }
-          l
-        }
-        Some((spark.createDataFrame(probeRows, probeSchema), None))
-      } else {
+      if (viaKey) Some((m.keyFrame(spark), None))
+      else {
         val (probeAttr, values) = probes.head
         val toScala =
           CatalystTypeConverters.createToScalaConverter(probeAttr.dataType)
         table.siProbeKeys(spark, probeAttr.name, values.map(toScala)).flatMap { keys =>
-          if (!resolving) Some((keys, None))
+          if (!spec.retainHistory) Some((keys, None))
           else {
             // MoR: candidates hold only probe keys' winning versions —
             // a NON-probe key sharing a candidate file could resolve to
@@ -258,62 +224,26 @@ class PointLookupRewrite(spark: SparkSession)
             // to the probe keys (sound: every true result row's key is
             // in the probe by the sidecar's coverage guarantee). Needs
             // the key literals, so the key set must be point-sized too.
-            // Single key guards with IN; a composite key needs the
-            // EXACT tuple set (a per-column IN would admit non-probe
-            // tuples whose superseded versions could leak), so it
-            // guards with OR-of-AND over the collected tuples.
-            val keyAttrs = spec.keyCols.map { kc =>
-              val kcL = kc.toLowerCase(java.util.Locale.ROOT)
-              lr.output
-                .find(_.name.toLowerCase(java.util.Locale.ROOT) == kcL)
-                .getOrElse(return None)
-            }
+            val keyAttrs = ks.keyAttrs.getOrElse(return None)
             val collected = KeyedTable.withMetaConf(spark)(keys
               .select(spec.keyCols.map(org.apache.spark.sql.functions.col): _*)
               .limit(MaxProbeValues + 1).collect())
             if (collected.length > MaxProbeValues || collected.isEmpty) None
-            else if (keyAttrs.length == 1) {
-              val lits = collected.toSeq
-                .map(r => Literal.create(r.get(0), keyAttrs.head.dataType))
-              Some((keys, Some(In(keyAttrs.head, lits))))
-            } else {
-              val guard = collected.toSeq.map { r =>
-                keyAttrs.zipWithIndex.map { case (at, i) =>
-                  EqualTo(at, Literal.create(r.get(i), at.dataType)): Expression
-                }.reduce(And(_, _))
-              }.reduce(Or(_, _))
-              Some((keys, Some(guard)))
-            }
+            else Some((keys, Some(KeyedScan.keyGuard(keyAttrs, collected.toSeq))))
           }
         }
       }
 
     keysAndGuard.flatMap { case (keys, guard) =>
-      // The index-family chain: exact RLI first, bloom may-contain
-      // second (all-version files, so MoR resolution stays sound).
+      // The index-family chain: exact RLI first, bloom second (bloom
+      // may-contain is all-version files, so MoR resolution stays
+      // sound). The key guard, where the secondary path needs it, sits
+      // directly above the swapped scan.
       table.lookupCandidateFiles(spark, keys).flatMap { rel0 =>
-        val total = fsRel.location.inputFiles.length
-        if (rel0.length >= total) None
-        else {
-          val files = rel0.map(r => new Path(new Path(spec.path), r))
-          val partSchema = Option(fsRel.partitionSchema).filter(_.nonEmpty)
-          val pruned = new InMemoryFileIndex(
-            spark, files, Map("basePath" -> root), partSchema)
-          logInfo(s"point-lookup rewrite: $root scan pruned to " +
-            s"${rel0.length} of $total files via the " +
+        ks.prune(spark, f, ks.relPaths(rel0), guard)(
+          "point lookup via the " +
             (if (viaKey) "record-level index"
              else s"secondary index on ${probes.head._1.name}"))
-          // Same relation, same output attributes — only the file set
-          // changes (plus the key guard directly above the scan where
-          // the secondary path needs it), so nothing above needs exprId
-          // surgery.
-          Some(f.transformUp {
-            case l: LogicalRelation if l eq lr =>
-              val swapped =
-                l.copy(relation = fsRel.copy(location = pruned)(spark))
-              guard.fold(swapped: LogicalPlan)(Filter(_, swapped))
-          })
-        }
       }
     }
   }

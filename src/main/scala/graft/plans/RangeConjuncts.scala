@@ -156,6 +156,118 @@ private[plans] object RangeConjuncts {
       other.toSeq)
   }
 
+  /** A conjunct set the column-stats sidecar classifies completely:
+    * partition point/IN conjuncts select whole sidecar rows; literal
+    * ranges, IS NOT NULL and IN-lists on ordered-stats columns split the
+    * files into FULL (every row satisfies) and CANDIDATE (may hold a
+    * satisfying row).
+    */
+  final case class StatsConjuncts(
+      partFilters: Seq[PartitionConjuncts.PartFilter],
+      ranges: Seq[ColumnRange], notNull: Seq[String],
+      inLists: Seq[(String, Seq[Any])])
+
+  /** `conds` over `ks`'s relation as [[StatsConjuncts]], or None when
+    * any conjunct is nondeterministic, an IS NULL, or classifies neither
+    * way — a leftover predicate would falsify a full-file fold or a
+    * count-accumulation bound.
+    */
+  def statsConjuncts(ks: KeyedScan, conds: Seq[Expression])
+      : Option[StatsConjuncts] = {
+    if (conds.exists(!_.deterministic)) return None
+    val (partConds, rest) = conds.partition(c => ks.partFilterOf(c).isDefined)
+    val ex = extract(rest, e => ks.relAttrOf(e)
+      .filter(at => graft.table.KeyedTable.statsOrderedType(at.dataType)))
+    if (ex.other.nonEmpty || ex.nullPreds.exists(_._2)) None
+    else Some(StatsConjuncts(partConds.flatMap(ks.partFilterOf), ex.ranges,
+      ex.nullPreds.map(_._1), ex.inLists))
+  }
+
+  /** The FULL/CANDIDATE split of a file under literal ranges, IS NOT
+    * NULL columns and IN-lists, as predicates over the column-stats
+    * sidecar frame `st` (stat columns resolved case-insensitively):
+    *  - CANDIDATE: the file may hold a row satisfying every conjunct —
+    *    each range intersects the recorded [min, max], each IS NOT NULL
+    *    column holds a non-null, each IN-list has a value inside
+    *    [min, max];
+    *  - FULL: every row satisfies every conjunct — bounds inside each
+    *    range and zero nulls in each constrained column; for IN, the
+    *    file is single-valued in the column with that value in the list
+    *    (sound under string truncation: stored lower ≤ real min ≤ real
+    *    max ≤ stored upper, so stored min = max forces the exact value).
+    *    Multi-valued files whose [min, max] lies inside the list's value
+    *    set also satisfy, but proving it needs per-value knowledge the
+    *    stats don't carry.
+    * An all-null stats row nulls both predicates. None when a
+    * constrained column lacks recorded stats.
+    */
+  def fileClasses(
+      st: org.apache.spark.sql.DataFrame, ranges: Seq[ColumnRange],
+      notNull: Seq[String], inLists: Seq[(String, Seq[Any])])
+      : Option[(org.apache.spark.sql.Column, org.apache.spark.sql.Column)] = {
+    import org.apache.spark.sql.functions.{col, lit}
+    def statCol(prefix: String, c: String): Option[String] =
+      st.columns.find(_.equalsIgnoreCase(s"${prefix}_$c"))
+    val nnOf = (ranges.map(_.column) ++ notNull ++ inLists.map(_._1)).distinct
+      .map(c => c -> statCol("nn", c)).toMap
+    val mmOf = (ranges.map(_.column) ++ inLists.map(_._1)).distinct
+      .map(c => c -> ((statCol("min", c), statCol("max", c)))).toMap
+    if (nnOf.values.exists(_.isEmpty) ||
+        mmOf.values.exists(p => p._1.isEmpty || p._2.isEmpty)) return None
+    def nn(c: String) = col(nnOf(c).get)
+    def mn(c: String) = col(mmOf(c)._1.get)
+    def mx(c: String) = col(mmOf(c)._2.get)
+    val candidate = (ranges.map { r =>
+      val loP = r.lo.map(v =>
+        if (r.loInclusive) mx(r.column) >= lit(v) else mx(r.column) > lit(v))
+      val hiP = r.hi.map(v =>
+        if (r.hiInclusive) mn(r.column) <= lit(v) else mn(r.column) < lit(v))
+      (loP.toSeq ++ hiP.toSeq).reduceOption(_ && _).getOrElse(lit(true))
+    } ++ notNull.map(c => nn(c) > lit(0L))
+      ++ inLists.map { case (c, vs) =>
+        vs.map(v => mn(c) <= lit(v) && mx(c) >= lit(v)).reduce(_ || _)
+      })
+      .reduceOption(_ && _).getOrElse(lit(true))
+    val full = (ranges.map { r =>
+      val loP = r.lo.map(v =>
+        if (r.loInclusive) mn(r.column) >= lit(v) else mn(r.column) > lit(v))
+      val hiP = r.hi.map(v =>
+        if (r.hiInclusive) mx(r.column) <= lit(v) else mx(r.column) < lit(v))
+      (Seq(nn(r.column) === col("cnt")) ++ loP.toSeq ++ hiP.toSeq).reduce(_ && _)
+    } ++ notNull.map(c => nn(c) === col("cnt"))
+      ++ inLists.map { case (c, vs) =>
+        nn(c) === col("cnt") && mn(c) === mx(c) &&
+          vs.map(v => mn(c) === lit(v)).reduce(_ || _)
+      })
+      .reduceOption(_ && _).getOrElse(lit(true))
+    Some((candidate, full))
+  }
+
+  /** The conjuncts as row predicates over the table's own column names
+    * — the residual a serve re-applies when it replaces the filtered
+    * subtree wholesale.
+    */
+  def rowFilters(
+      partFilters: Seq[PartitionConjuncts.PartFilter], ranges: Seq[ColumnRange],
+      notNull: Seq[String], inLists: Seq[(String, Seq[Any])])
+      : Seq[org.apache.spark.sql.Column] = {
+    import org.apache.spark.sql.functions.{col, lit}
+    partFilters.map {
+      case PartitionConjuncts.PartIn(c, t, vs) =>
+        val toScala = org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToScalaConverter(t)
+        col(c).isin(vs.map(toScala): _*)
+      case PartitionConjuncts.PartNotNull(c) => col(c).isNotNull
+    } ++ ranges.map { r =>
+      val loP = r.lo.map(v =>
+        if (r.loInclusive) col(r.column) >= lit(v) else col(r.column) > lit(v))
+      val hiP = r.hi.map(v =>
+        if (r.hiInclusive) col(r.column) <= lit(v) else col(r.column) < lit(v))
+      (loP.toSeq ++ hiP.toSeq).reduceOption(_ && _).getOrElse(lit(true))
+    } ++ notNull.map(c => col(c).isNotNull) ++
+      inLists.map { case (c, vs) => col(c).isin(vs: _*) }
+  }
+
   /** Beyond this many IN values the disjunction is not point-shaped and
     * the per-value stats containment test stops paying — the same
     * contract as [[PointLookupRewrite]]'s probe cap.
@@ -175,7 +287,7 @@ private[plans] object RangeConjuncts {
   */
 private[plans] object PartitionConjuncts {
 
-  sealed trait PartFilter
+  sealed trait PartFilter { def column: String }
   final case class PartIn(
       column: String,
       t: org.apache.spark.sql.types.DataType,
@@ -201,6 +313,16 @@ private[plans] object PartitionConjuncts {
       attrOf(x).map(at => PartIn(at.name, at.dataType, hset.toSeq))
     case IsNotNull(x) => attrOf(x).map(at => PartNotNull(at.name))
     case _ => None
+  }
+
+  /** `filters` paired with their `p_<col>` partition-tuple columns in
+    * the sidecar frame `st` (resolved case-insensitively) — what
+    * [[select]] takes; None when one is missing.
+    */
+  def statCols(st: org.apache.spark.sql.DataFrame, filters: Seq[PartFilter])
+      : Option[Seq[(PartFilter, String)]] = {
+    val cols = filters.map(f => st.columns.find(_.equalsIgnoreCase(s"p_${f.column}")))
+    if (cols.exists(_.isEmpty)) None else Some(filters.zip(cols.map(_.get)))
   }
 
   /** The sidecar row selection for a classified conjunct set: filters

@@ -1,14 +1,10 @@
 package graft.plans
 
-import scala.collection.mutable
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Window}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
-import org.apache.spark.sql.types._
 
 import graft.table.{KeyedTable, TableMetaCache}
 
@@ -101,8 +97,7 @@ class RangePruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * [[PointLookupRewrite.probeShapes]] for the point family).
     */
   private[plans] final case class RangeMatch(
-      f: Filter, lr: LogicalRelation, fsRel: HadoopFsRelation, root: String,
-      spec: graft.table.KeyedTableSpec, ranges: Seq[graft.table.ColumnRange],
+      f: Filter, scan: KeyedScan, ranges: Seq[graft.table.ColumnRange],
       nullPreds: Seq[(String, Boolean)], inLists: Seq[(String, Seq[Any])],
       /** The relation's key attributes when the MoR resolve arm matched
         * (the key guard needs them); `None` selects the COW arm.
@@ -115,7 +110,9 @@ class RangePruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         * don't need them (Spark's own directory pruning serves a
         * partition conjunct on the swapped index too).
         */
-      partFilters: Seq[PartitionConjuncts.PartFilter] = Nil)
+      partFilters: Seq[PartitionConjuncts.PartFilter] = Nil) {
+    def spec: graft.table.KeyedTableSpec = scan.spec
+  }
 
   /** Every range shape in `plan` this rule would serve if column stats
     * existed (no sidecar IO, no filesystem work beyond the registry).
@@ -130,44 +127,15 @@ class RangePruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def tryRewrite(f: Filter): Option[LogicalPlan] =
     matchRange(f).flatMap { m =>
-      val key = (m.root, m.ranges.toVector, m.nullPreds.toVector,
+      val key = (m.scan.root, m.ranges.toVector, m.nullPreds.toVector,
         m.inLists.map { case (c, vs) => (c, vs.toVector) }.toVector,
         m.morKeyAttrs.isDefined, m.partFilters.toVector)
-      TableMetaCache.declineGated(spark, this, m.root)(key)(serveRange(m))
+      TableMetaCache.declineGated(spark, this, m.scan.root)(key)(serveRange(m))
     }
 
   private def matchRange(f: Filter): Option[RangeMatch] = {
-    val conds = mutable.Buffer.empty[(Expression, Int)]
-    val windows = mutable.Buffer.empty[Window]
-    val renames = mutable.Map.empty[ExprId, Expression]
-    val rels = mutable.Buffer.empty[LogicalRelation]
-    val pairs = mutable.Buffer.empty[(Attribute, Attribute)]
-    if (!MvPlanShape.strip(f, conds, windows, renames, rels, pairs)) return None
-    if (pairs.nonEmpty || rels.length != 1) return None
-    val lr = rels.head
-    val fsRel = lr.relation match {
-      case h: HadoopFsRelation => h
-      case _ => return None
-    }
-    val root = fsRel.location.rootPaths match {
-      case Seq(one) => one.toString
-      case _ => return None
-    }
-    val spec = Option(KeyedTable.specRegistry.get(root)).getOrElse(return None)
-    val subst = MvPlanShape.substFn(renames)
-    val relIds = lr.output.map(_.exprId).toSet
-
-    val splitD = conds.toSeq.flatMap { case (c, d) =>
-      MvPlanShape.splitConjunction(c).map((_, d))
-    }
-    if (splitD.exists(!_._1.deterministic)) return None
-
-    def relAttrOf(e: Expression): Option[Attribute] = subst(e) match {
-      case a: Attribute if relIds.contains(a.exprId) &&
-        graft.table.KeyedTable.statsOrderedType(a.dataType) &&
-        !a.name.startsWith("_graft_") => Some(a)
-      case _ => None
-    }
+    val ks = KeyedScan.of(f).getOrElse(return None)
+    if (!ks.deterministic) return None
 
     // Resolve-shape admissibility (MoR arm): the one window must be
     // the table's own latest-per-key resolve, its rn = 1 conjunct the
@@ -175,51 +143,22 @@ class RangePruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     // it (depth 0) — below the resolve a predicate would filter
     // VERSIONS before the per-key winner is chosen. Same bounds as
     // [[PointLookupRewrite]]'s resolving arm.
-    val morKeyAttrs: Option[Seq[Attribute]] =
-      if (!spec.retainHistory) {
-        if (windows.nonEmpty) return None
-        None
-      } else windows.toSeq match {
-        case Seq(w: Window) =>
-          val rn = MvPlanShape.resolveRnOf(w, spec).getOrElse(return None)
-          val rnConds = splitD.filter(p => MvPlanShape.isRnEqOne(p._1, rn))
-          if (rnConds.map(_._2) != Seq(0)) return None
-          if (splitD.exists(p => p._2 != 0 &&
-            !MvPlanShape.isRnEqOne(p._1, rn))) return None
-          val keyAttrs = spec.keyCols.map { kc =>
-            val kcL = kc.toLowerCase(java.util.Locale.ROOT)
-            lr.output
-              .find(_.name.toLowerCase(java.util.Locale.ROOT) == kcL)
-              .getOrElse(return None)
-          }
-          Some(keyAttrs)
-        case _ => return None
-      }
-    val partColsL =
-      spec.partitionCols.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
-    def partFilterOf(e: Expression) = PartitionConjuncts.of(
-      e,
-      x => (subst(x) match {
-        case a: Attribute if relIds.contains(a.exprId) &&
-          !a.name.startsWith("_graft_") => Some(a)
-        case _ => None
-      }).filter(at =>
-        partColsL.contains(at.name.toLowerCase(java.util.Locale.ROOT))))
-    val (split, partFilters) = morKeyAttrs match {
-      case None => (splitD.map(_._1), Seq.empty[PartitionConjuncts.PartFilter])
-      case Some(_) =>
+    val (split, morKeyAttrs, partFilters) =
+      if (!ks.spec.retainHistory) {
+        if (ks.windows.nonEmpty) return None
+        (ks.conjuncts.map(_._1), None, Seq.empty[PartitionConjuncts.PartFilter])
+      } else {
+        val rest = ks.resolved.getOrElse(return None)
+        if (rest.exists(_._2 != 0)) return None
+        val keyAttrs = ks.keyAttrs.getOrElse(return None)
         // The rn conjunct is the resolve's own, never a range; partition
         // point/IN conjuncts select sidecar rows exactly (a file's
         // partition tuple is constant) and narrow both candidates and
         // the derived key set.
-        val rn = windows.headOption.flatMap(w =>
-          MvPlanShape.resolveRnOf(w, spec))
-        val nonRn = splitD.collect {
-          case (c, 0) if !rn.exists(r => MvPlanShape.isRnEqOne(c, r)) => c
-        }
-        val (partConds, rest) = nonRn.partition(c => partFilterOf(c).isDefined)
-        (rest, partConds.flatMap(partFilterOf))
-    }
+        val (partConds, others) =
+          rest.map(_._1).partition(c => ks.partFilterOf(c).isDefined)
+        (others, Some(keyAttrs), partConds.flatMap(ks.partFilterOf))
+      }
     // Literal bounds and null predicates through the SHARED extraction
     // ([[RangeConjuncts]] — one matcher for every column-stats
     // consumer): bounds in the column's own type with per-side
@@ -236,19 +175,18 @@ class RangePruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     // low-cardinality filter (`lang IN ('en','de')`) when no index
     // sidecar exists; PointLookupRewrite runs first and takes the probe
     // whenever the exact index family can serve it.
-    val ex = RangeConjuncts.extract(split, relAttrOf)
+    val ex = RangeConjuncts.extract(
+      split, e => ks.relAttrOf(e).filter(a => KeyedTable.statsOrderedType(a.dataType)))
     if (morKeyAttrs.isDefined) {
       // MoR serves RANGES only; null/IN conjuncts stay residual above
       // the resolve (sound — nothing below the window changes), they
       // just don't contribute file selection.
       if (ex.ranges.isEmpty) return None
-      Some(RangeMatch(f, lr, fsRel, root, spec, ex.ranges, Nil, Nil,
-        morKeyAttrs, partFilters))
+      Some(RangeMatch(f, ks, ex.ranges, Nil, Nil, morKeyAttrs, partFilters))
     } else {
       if (ex.ranges.isEmpty && ex.nullPreds.isEmpty && ex.inLists.isEmpty)
         return None
-      Some(RangeMatch(
-        f, lr, fsRel, root, spec, ex.ranges, ex.nullPreds, ex.inLists))
+      Some(RangeMatch(f, ks, ex.ranges, ex.nullPreds, ex.inLists))
     }
   }
 
@@ -261,23 +199,9 @@ class RangePruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     val table = KeyedTable(m.spec)
     table.rangeCandidateFilesTyped(spark, m.ranges, m.nullPreds, m.inLists)
       .flatMap { case (files, _) =>
-      val total = m.fsRel.location.inputFiles.length
-      if (files.length >= total) None
-      else {
-        val partSchema = Option(m.fsRel.partitionSchema).filter(_.nonEmpty)
-        val pruned = new InMemoryFileIndex(
-          spark, files, Map("basePath" -> m.root), partSchema)
-        logInfo(s"range-prune rewrite: ${m.root} scan pruned to " +
-          s"${files.length} of $total files via column stats on " +
+        m.scan.prune(spark, m.f, files)("range prune via column stats on " +
           (m.ranges.map(_.column) ++ m.inLists.map(_._1)).mkString(", "))
-        // Same relation, same output attributes — only the file set
-        // changes, so nothing above needs exprId surgery.
-        Some(m.f.transformUp {
-          case l: LogicalRelation if l eq m.lr =>
-            l.copy(relation = m.fsRel.copy(location = pruned)(spark))
-        })
       }
-    }
   }
 
   /** The MoR serving half — the declarative twin of
@@ -295,13 +219,8 @@ class RangePruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       st.columns.find(_.equalsIgnoreCase(s"${prefix}_$c"))
     if (!m.ranges.forall(r => statCol("min", r.column).isDefined &&
       statCol("max", r.column).isDefined)) return None
-    val filterStatCols = m.partFilters.map {
-      case PartitionConjuncts.PartIn(c, _, _) => statCol("p", c)
-      case PartitionConjuncts.PartNotNull(c)  => statCol("p", c)
-    }
-    if (filterStatCols.exists(_.isEmpty)) return None
     val stSel = PartitionConjuncts.select(
-      st, m.partFilters.zip(filterStatCols.map(_.get)))
+      st, PartitionConjuncts.statCols(st, m.partFilters).getOrElse(return None))
     // Intersection predicate over the recorded bounds — the same
     // selection statsSelectedFilesTyped computes, over the
     // partition-narrowed sidecar rows.
@@ -328,23 +247,10 @@ class RangePruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           .collect().map(_.getString(0)).toSeq
           .map(abs => new Path(new java.net.URI(abs))))
       catch { case scala.util.control.NonFatal(_) => return None }
-    val total = m.fsRel.location.inputFiles.length
-
+    val total = m.scan.listedFiles
     def swap(files: Seq[Path], guard: Option[Expression],
-        how: String): Option[LogicalPlan] = {
-      if (files.length >= total) return None
-      val partSchema = Option(m.fsRel.partitionSchema).filter(_.nonEmpty)
-      val pruned = new InMemoryFileIndex(
-        spark, files, Map("basePath" -> m.root), partSchema)
-      logInfo(s"range-prune rewrite (resolving): ${m.root} scan pruned " +
-        s"to ${files.length} of $total files — $how")
-      Some(m.f.transformUp {
-        case l: LogicalRelation if l eq m.lr =>
-          val swapped =
-            l.copy(relation = m.fsRel.copy(location = pruned)(spark))
-          guard.fold(swapped: LogicalPlan)(Filter(_, swapped))
-      })
-    }
+        how: String): Option[LogicalPlan] =
+      m.scan.prune(spark, m.f, files, guard, total)(s"resolved range prune: $how")
 
     // No version intersects the range ⇒ no winner can (a winner is a
     // version): the resolve over an empty scan is correctly empty.
@@ -352,13 +258,7 @@ class RangePruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
     // In-range rows' distinct keys — the only keys whose winner can be
     // in range. One bounded plan-time job, like a DPP subquery.
-    val residual = m.ranges.map { r =>
-      val loP = r.lo.map(v =>
-        if (r.loInclusive) col(r.column) >= lit(v) else col(r.column) > lit(v))
-      val hiP = r.hi.map(v =>
-        if (r.hiInclusive) col(r.column) <= lit(v) else col(r.column) < lit(v))
-      (loP.toSeq ++ hiP.toSeq).reduceOption(_ && _).getOrElse(lit(true))
-    }.reduce(_ && _)
+    val residual = RangeConjuncts.rowFilters(Nil, m.ranges, Nil, Nil).reduce(_ && _)
     val rootPath = new Path(m.spec.path)
     val fsys = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val rootPrefix = fsys.makeQualified(rootPath).toUri.getPath + "/"
@@ -379,18 +279,7 @@ class RangePruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     val probe = spark.createDataFrame(
       java.util.Arrays.asList(collected: _*), keysDf.schema)
     table.lookupCandidateFiles(spark, probe).flatMap { rel0 =>
-      val files = rel0.map(r => new Path(rootPath, r))
-      val guard: Expression =
-        if (keyAttrs.length == 1) {
-          val lits = collected.toSeq.map(r =>
-            Literal.create(r.get(0), keyAttrs.head.dataType))
-          In(keyAttrs.head, lits)
-        } else collected.toSeq.map { r =>
-          keyAttrs.zipWithIndex.map { case (at, i) =>
-            EqualTo(at, Literal.create(r.get(i), at.dataType)): Expression
-          }.reduce(And(_, _))
-        }.reduce(Or(_, _))
-      swap(files, Some(guard),
+      swap(m.scan.relPaths(rel0), Some(KeyedScan.keyGuard(keyAttrs, collected.toSeq)),
         s"${collected.length} in-range keys via the record-level index")
     }
   }

@@ -5,10 +5,9 @@ import scala.collection.mutable
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Complete, Count, Max, Min, Sum}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan, Project, Union, Window}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Average, Complete, Count, Max, Min, Sum}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan, Project, Union}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 import org.apache.spark.sql.functions.{coalesce, col, count, countDistinct, lit, max, min, sum, when}
 import org.apache.spark.sql.types._
 
@@ -111,8 +110,6 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     case _ => false
   }
 
-  private def lower(s: String): String = s.toLowerCase(java.util.Locale.ROOT)
-
   private def longOf(x: Any): Option[Long] = x match {
     case b: java.lang.Byte    => Some(b.longValue())
     case s: java.lang.Short   => Some(s.longValue())
@@ -139,13 +136,13 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * sidecar, boundary files scan.
     */
   private final case class AggMatch(
-      a: Aggregate, spec: graft.table.KeyedTableSpec, needs: Seq[Need],
+      a: Aggregate, scan: KeyedScan, needs: Seq[Need],
       groupAttrs: Seq[Attribute], groupIsPart: Seq[Boolean],
       partFilters: Seq[PartFilter],
       ranges: Seq[graft.table.ColumnRange], notNull: Seq[String],
       inLists: Seq[(String, Seq[Any])],
-      lr: LogicalRelation, fsRel: HadoopFsRelation, root: String,
       casts: Map[Int, Cast] = Map.empty) {
+    def spec: graft.table.KeyedTableSpec = scan.spec
     /** Grouping columns that are DATA columns (classified per file by
       * the single-valued test), not partition columns (whole files by
       * layout). Their presence forces the hybrid serve.
@@ -264,25 +261,9 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         }
       case _ => return None
     }
-    val conds = mutable.Buffer.empty[(Expression, Int)]
-    val windows = mutable.Buffer.empty[Window]
-    val renames = mutable.Map.empty[ExprId, Expression]
-    val rels = mutable.Buffer.empty[LogicalRelation]
-    val pairs = mutable.Buffer.empty[(Attribute, Attribute)]
-    if (!MvPlanShape.strip(a.child, conds, windows, renames, rels, pairs))
-      return None
-    if (windows.nonEmpty || pairs.nonEmpty || rels.length != 1) return None
-    val lr = rels.head
-    val fsRel = lr.relation match {
-      case h: HadoopFsRelation => h
-      case _ => return None
-    }
-    val root = fsRel.location.rootPaths match {
-      case Seq(one) => one.toString
-      case _ => return None
-    }
-    val spec = Option(KeyedTable.specRegistry.get(root)).getOrElse(return None)
-    if (spec.retainHistory) return None
+    val ks = KeyedScan.of(a.child).getOrElse(return None)
+    if (ks.windows.nonEmpty || ks.spec.retainHistory) return None
+    val spec = ks.spec
     // The counted expression must be an attribute of the child's OWN
     // output (the boundary Project re-aliases exactly it) that resolves
     // to an ordered-stats DATA column of the relation.
@@ -290,15 +271,10 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       case at: Attribute => at
       case _ => return None
     }
-    val subst = MvPlanShape.substFn(renames)
-    val relIds = lr.output.map(_.exprId).toSet
-    val relAttr = subst(childAttr) match {
-      case at: Attribute if relIds.contains(at.exprId) &&
-        !at.name.startsWith("_graft_") &&
-        KeyedTable.statsOrderedType(at.dataType) => at
-      case _ => return None
-    }
-    if (spec.partitionCols.exists(_.equalsIgnoreCase(relAttr.name)))
+    val relAttr = ks.relAttrOf(childAttr)
+      .filter(at => KeyedTable.statsOrderedType(at.dataType))
+      .getOrElse(return None)
+    if (ks.isPartitionCol(relAttr.name))
       return None // the metadata-only arm's shape
     // Conjuncts below the count: partition point filters select whole
     // sidecar rows; literal ranges / IS NOT NULL / IN-lists classify
@@ -307,92 +283,30 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     // column contributes its one value; any other candidate file
     // scans WITH the original filter residual intact; non-candidates
     // drop. Anything else declines.
-    def relAttrOfE(e: Expression): Option[Attribute] = subst(e) match {
-      case at: Attribute if relIds.contains(at.exprId) &&
-        !at.name.startsWith("_graft_") => Some(at)
-      case _ => None
-    }
-    val partColsL = spec.partitionCols.map(lower).toSet
-    def partFilterOf(e: Expression): Option[PartFilter] =
-      PartitionConjuncts.of(
-        e, x => relAttrOfE(x).filter(at => partColsL.contains(lower(at.name))))
-    val splitConds = conds.toSeq.flatMap { case (c, _) =>
-      MvPlanShape.splitConjunction(c)
-    }
-    if (splitConds.exists(!_.deterministic)) return None
-    val (partConds, restConds) =
-      splitConds.partition(c => partFilterOf(c).isDefined)
-    val partFilters: Seq[PartFilter] = partConds.flatMap(partFilterOf)
-    def relAttrOrdered(e: Expression): Option[Attribute] =
-      relAttrOfE(e).filter(at => KeyedTable.statsOrderedType(at.dataType))
-    val ex = RangeConjuncts.extract(restConds, relAttrOrdered)
-    if (ex.other.nonEmpty || ex.nullPreds.exists(_._2)) return None
-    val notNull = ex.nullPreds.map(_._1)
+    val RangeConjuncts.StatsConjuncts(partFilters, ranges, notNull, inLists) =
+      RangeConjuncts.statsConjuncts(ks, ks.conjuncts.map(_._1))
+        .getOrElse(return None)
     val memoKey = ("distinctValues", spec.path, relAttr.name,
-      partFilters.toVector, ex.ranges.toVector, notNull.toVector,
-      ex.inLists.map { case (c, vs) => (c, vs.toVector) }.toVector)
+      partFilters.toVector, ranges.toVector, notNull.toVector,
+      inLists.map { case (c, vs) => (c, vs.toVector) }.toVector)
     TableMetaCache.declineGated(spark, this, spec.path)(memoKey) {
       val table = KeyedTable(spec)
       table.colStatsFrame(spark).flatMap { st =>
         def statCol(prefix: String): Option[String] =
           st.columns.find(_.equalsIgnoreCase(s"${prefix}_${relAttr.name}"))
-        def statColOf(prefix: String, c: String): Option[String] =
-          st.columns.find(_.equalsIgnoreCase(s"${prefix}_$c"))
         val (mnC, mxC, nnC) =
           (statCol("min"), statCol("max"), statCol("nn")) match {
             case (Some(a1), Some(b), Some(c)) => (a1, b, c)
             case _ => return None
           }
         if (!st.columns.contains("cnt")) return None
-        val classCols = (ex.ranges.map(_.column) ++ notNull ++
-          ex.inLists.map(_._1)).distinct
-        val nnOf = classCols.map(c => c -> statColOf("nn", c)).toMap
-        if (nnOf.values.exists(_.isEmpty)) return None
-        val mmOf = (ex.ranges.map(_.column) ++ ex.inLists.map(_._1))
-          .distinct.map(c =>
-            c -> ((statColOf("min", c), statColOf("max", c)))).toMap
-        if (mmOf.values.exists(p => p._1.isEmpty || p._2.isEmpty))
-          return None
-        val filterStatCols = partFilters.map {
-          case PartIn(c, _, _) => statColOf("p", c)
-          case PartNotNull(c)  => statColOf("p", c)
-        }
-        if (filterStatCols.exists(_.isEmpty)) return None
+        // The hybrid's classification (RangeConjuncts.fileClasses):
+        // candidate = may hold a satisfying row; fullRange = every row
+        // satisfies every conjunct.
+        val (candidate, fullRange) = RangeConjuncts
+          .fileClasses(st, ranges, notNull, inLists).getOrElse(return None)
         val stSel = PartitionConjuncts.select(
-          st, partFilters.zip(filterStatCols.map(_.get)))
-        // The hybrid's classification, verbatim (see serveHybrid's
-        // soundness notes, including truncation): candidate = may hold
-        // a satisfying row; fullRange = every row satisfies every
-        // conjunct.
-        val candidate = (ex.ranges.map { r =>
-          val (mnR, mxR) = (mmOf(r.column)._1.get, mmOf(r.column)._2.get)
-          val loP = r.lo.map(v =>
-            if (r.loInclusive) col(mxR) >= lit(v) else col(mxR) > lit(v))
-          val hiP = r.hi.map(v =>
-            if (r.hiInclusive) col(mnR) <= lit(v) else col(mnR) < lit(v))
-          (loP.toSeq ++ hiP.toSeq).reduceOption(_ && _).getOrElse(lit(true))
-        } ++ notNull.map(c => col(nnOf(c).get) > lit(0L))
-          ++ ex.inLists.map { case (c, vs) =>
-            val (mnR, mxR) = (mmOf(c)._1.get, mmOf(c)._2.get)
-            vs.map(v => col(mnR) <= lit(v) && col(mxR) >= lit(v))
-              .reduce(_ || _)
-          })
-          .reduceOption(_ && _).getOrElse(lit(true))
-        val fullRange = (ex.ranges.map { r =>
-          val (mnR, mxR) = (mmOf(r.column)._1.get, mmOf(r.column)._2.get)
-          val loP = r.lo.map(v =>
-            if (r.loInclusive) col(mnR) >= lit(v) else col(mnR) > lit(v))
-          val hiP = r.hi.map(v =>
-            if (r.hiInclusive) col(mxR) <= lit(v) else col(mxR) < lit(v))
-          (Seq(col(nnOf(r.column).get) === col("cnt")) ++ loP.toSeq ++
-            hiP.toSeq).reduce(_ && _)
-        } ++ notNull.map(c => col(nnOf(c).get) === col("cnt"))
-          ++ ex.inLists.map { case (c, vs) =>
-            val (mnR, mxR) = (mmOf(c)._1.get, mmOf(c)._2.get)
-            col(nnOf(c).get) === col("cnt") && col(mnR) === col(mxR) &&
-              vs.map(v => col(mnR) === lit(v)).reduce(_ || _)
-          })
-          .reduceOption(_ && _).getOrElse(lit(true))
+          st, PartitionConjuncts.statCols(st, partFilters).getOrElse(return None))
         val singleValued = col(nnC) === col("cnt") && col(mnC) === col(mxC) &&
           col("cnt") > 0
         val fold = fullRange && singleValued
@@ -411,15 +325,8 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           fullValues.toIndexedSeq.map(r =>
             InternalRow(conv(if (r.isNullAt(0)) null else r.get(0)))),
           false)
-        val paths = boundaryFiles.map(abs =>
-          new org.apache.hadoop.fs.Path(new java.net.URI(abs)))
-        val partSchema = Option(fsRel.partitionSchema).filter(_.nonEmpty)
-        val prunedIdx = new InMemoryFileIndex(
-          spark, paths, Map("basePath" -> root), partSchema)
-        val newChild = a.child.transformUp {
-          case l: LogicalRelation if l eq lr =>
-            l.copy(relation = fsRel.copy(location = prunedIdx)(spark))
-        }
+        val newChild = ks.swap(spark, a.child, boundaryFiles.map(abs =>
+          new org.apache.hadoop.fs.Path(new java.net.URI(abs))))
         val proj = Project(Seq(Alias(childAttr, "u")()), newChild)
         val cd = AggregateExpression(
           Count(Seq(uVal)), Complete, isDistinct = true)
@@ -452,35 +359,11 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     */
   private def serveMorCount(a: Aggregate): Option[LogicalPlan] = {
     if (a.aggregateExpressions.isEmpty) return None
-    val conds = mutable.Buffer.empty[(Expression, Int)]
-    val windows = mutable.Buffer.empty[Window]
-    val renames = mutable.Map.empty[ExprId, Expression]
-    val rels = mutable.Buffer.empty[LogicalRelation]
-    val pairs = mutable.Buffer.empty[(Attribute, Attribute)]
-    if (!MvPlanShape.strip(a.child, conds, windows, renames, rels, pairs))
-      return None
-    if (pairs.nonEmpty || rels.length != 1) return None
-    val lr = rels.head
-    val fsRel = lr.relation match {
-      case h: HadoopFsRelation => h
-      case _ => return None
-    }
-    val root = fsRel.location.rootPaths match {
-      case Seq(one) => one.toString
-      case _ => return None
-    }
-    val spec = Option(KeyedTable.specRegistry.get(root)).getOrElse(return None)
-    if (!spec.retainHistory) return None
-    val subst = MvPlanShape.substFn(renames)
-    val relIds = lr.output.map(_.exprId).toSet
-    def relAttrOf(e: Expression): Option[Attribute] = subst(e) match {
-      case at: Attribute if relIds.contains(at.exprId) &&
-        !at.name.startsWith("_graft_") => Some(at)
-      case _ => None
-    }
-    val partColsL = spec.partitionCols.map(lower).toSet
+    val ks = KeyedScan.of(a.child).getOrElse(return None)
+    if (!ks.spec.retainHistory) return None
+    val spec = ks.spec
     val groupAttrs: Seq[Attribute] = a.groupingExpressions.map { e =>
-      relAttrOf(e).filter(at => partColsL.contains(lower(at.name)))
+      ks.relAttrOf(e).filter(at => ks.isPartitionCol(at.name))
         .getOrElse(return None)
     }
     val groupIdx: Map[ExprId, Int] =
@@ -488,7 +371,7 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     // Each output: Left(slot among groupAttrs) or Right(count(*)).
     val outputs: Seq[Either[Int, Unit]] = a.aggregateExpressions.map {
       case at: Attribute =>
-        scala.Left(relAttrOf(at).flatMap(x => groupIdx.get(x.exprId))
+        scala.Left(ks.relAttrOf(at).flatMap(x => groupIdx.get(x.exprId))
           .getOrElse(return None))
       case Alias(ae: AggregateExpression, _)
           if !ae.isDistinct && ae.filter.isEmpty =>
@@ -497,26 +380,17 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           case _ => return None
         }
       case Alias(e, _) =>
-        scala.Left(relAttrOf(e).flatMap(x => groupIdx.get(x.exprId))
+        scala.Left(ks.relAttrOf(e).flatMap(x => groupIdx.get(x.exprId))
           .getOrElse(return None))
       case _ => return None
     }
     if (!outputs.exists(_.isRight)) return None // a pure DISTINCT is
     // the stats rule's shape; this arm only serves counts
-    val rn = windows.toSeq match {
-      case Seq(w) => MvPlanShape.resolveRnOf(w, spec).getOrElse(return None)
-      case _ => return None
-    }
-    val split = conds.toSeq.flatMap { case (c, d) =>
-      MvPlanShape.splitConjunction(c).map(e => (e, d))
-    }
-    val (rnConds, rest) =
-      split.partition(p => MvPlanShape.isRnEqOne(p._1, rn))
     // The rn = 1 conjunct must sit ABOVE the window (depth 0) and be
     // the ONLY predicate anywhere: any other conjunct filters the
     // resolved state (or worse, versions below the resolve) and the
     // index count would over-count.
-    if (rnConds.map(_._2) != Seq(0) || rest.nonEmpty) return None
+    if (!ks.resolved.exists(_.isEmpty)) return None
     val table = KeyedTable(spec)
     if (groupAttrs.isEmpty) {
       TableMetaCache.declineGated(spark, this, spec.path)(
@@ -646,43 +520,10 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def matchMorStats(a: Aggregate): Option[MorStatsMatch] = {
     if (a.aggregateExpressions.isEmpty) return None
-    val conds = mutable.Buffer.empty[(Expression, Int)]
-    val windows = mutable.Buffer.empty[Window]
-    val renames = mutable.Map.empty[ExprId, Expression]
-    val rels = mutable.Buffer.empty[LogicalRelation]
-    val pairs = mutable.Buffer.empty[(Attribute, Attribute)]
-    if (!MvPlanShape.strip(a.child, conds, windows, renames, rels, pairs))
-      return None
-    if (pairs.nonEmpty || rels.length != 1) return None
-    val lr = rels.head
-    val fsRel = lr.relation match {
-      case h: HadoopFsRelation => h
-      case _ => return None
-    }
-    val root = fsRel.location.rootPaths match {
-      case Seq(one) => one.toString
-      case _ => return None
-    }
-    val spec = Option(KeyedTable.specRegistry.get(root)).getOrElse(return None)
-    if (!spec.retainHistory) return None
-    val subst = MvPlanShape.substFn(renames)
-    val relIds = lr.output.map(_.exprId).toSet
-    def relAttrOf(e: Expression): Option[Attribute] = subst(e) match {
-      case at: Attribute if relIds.contains(at.exprId) &&
-        !at.name.startsWith("_graft_") => Some(at)
-      case _ => None
-    }
-    val rn = windows.toSeq match {
-      case Seq(w) => MvPlanShape.resolveRnOf(w, spec).getOrElse(return None)
-      case _ => return None
-    }
-    val split = conds.toSeq.flatMap { case (c, d) =>
-      MvPlanShape.splitConjunction(c).map(e => (e, d))
-    }
-    val (rnConds, rest) =
-      split.partition(p => MvPlanShape.isRnEqOne(p._1, rn))
-    if (rnConds.map(_._2) != Seq(0)) return None
-    val partColsL = spec.partitionCols.map(lower).toSet
+    val ks = KeyedScan.of(a.child).getOrElse(return None)
+    if (!ks.spec.retainHistory) return None
+    val spec = ks.spec
+    val rest = ks.resolved.getOrElse(return None)
     // Beside rn = 1, conjuncts ABOVE the window (on the RESOLVED state)
     // compose two ways. Partition POINT conjuncts select whole files
     // and whole winners (a winner row of partition p lives in a file
@@ -695,19 +536,9 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     // may-contain test), and the scan side re-applies the conjuncts as
     // the residual. Anything else — or anything BELOW the window —
     // filters rows the winner counts assumed present, so it declines.
-    def partFilterOf(e: Expression): Option[PartFilter] =
-      PartitionConjuncts.of(
-        e, x => relAttrOf(x).filter(at => partColsL.contains(lower(at.name))))
     if (rest.exists(_._2 != 0)) return None
-    val (partConds, rangeConds) =
-      rest.map(_._1).partition(c => partFilterOf(c).isDefined)
-    if (rangeConds.exists(!_.deterministic)) return None
-    val partFilters: Seq[PartFilter] = partConds.flatMap(partFilterOf)
-    def relAttrOrdered(e: Expression): Option[Attribute] =
-      relAttrOf(e).filter(at => KeyedTable.statsOrderedType(at.dataType))
-    val ex = RangeConjuncts.extract(rangeConds, relAttrOrdered)
-    if (ex.other.nonEmpty || ex.nullPreds.exists(_._2)) return None
-    val notNull = ex.nullPreds.map(_._1)
+    val RangeConjuncts.StatsConjuncts(partFilters, ranges, notNull, inLists) =
+      RangeConjuncts.statsConjuncts(ks, rest.map(_._1)).getOrElse(return None)
     // Grouping: PARTITION columns (a pure file lives in one hive
     // directory — its stats row folds into exactly one group) or
     // ordered-stats DATA columns (the q192 composition: a file folds
@@ -715,15 +546,14 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     // everything else with winners scans, carrying its group values
     // into the residual).
     val groupAttrs: Seq[Attribute] = a.groupingExpressions.map { e =>
-      relAttrOf(e).filter(at => partColsL.contains(lower(at.name)) ||
+      ks.relAttrOf(e).filter(at => ks.isPartitionCol(at.name) ||
           KeyedTable.statsOrderedType(at.dataType))
         .getOrElse(return None)
     }
-    val groupIsPart: Seq[Boolean] =
-      groupAttrs.map(at => partColsL.contains(lower(at.name)))
+    val groupIsPart: Seq[Boolean] = groupAttrs.map(at => ks.isPartitionCol(at.name))
     val groupIdx: Map[ExprId, Int] =
       groupAttrs.zipWithIndex.map { case (at, i) => at.exprId -> i }.toMap
-    def groupNeedOf(e: Expression): Option[GroupOf] = subst(e) match {
+    def groupNeedOf(e: Expression): Option[GroupOf] = ks.subst(e) match {
       case at: Attribute => groupIdx.get(at.exprId)
         .map(i => GroupOf(at.name, at.dataType, i))
       case _ => None
@@ -732,28 +562,7 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       case at: Attribute => groupNeedOf(at).getOrElse(return None)
       case Alias(ae: AggregateExpression, _)
           if !ae.isDistinct && ae.filter.isEmpty =>
-        ae.aggregateFunction match {
-          case Min(e) =>
-            relAttrOf(e)
-              .filter(at => KeyedTable.statsOrderedType(at.dataType))
-              .map(at => MinOf(at.name, at.dataType)).getOrElse(return None)
-          case Max(e) =>
-            relAttrOf(e)
-              .filter(at => KeyedTable.statsOrderedType(at.dataType))
-              .map(at => MaxOf(at.name, at.dataType)).getOrElse(return None)
-          case s: Sum =>
-            relAttrOf(s.child).filter(at => integral(at.dataType) ||
-                at.dataType.isInstanceOf[DecimalType])
-              .map(at => SumOf(at.name, at.dataType)).getOrElse(return None)
-          case av: Average =>
-            relAttrOf(av.child).filter(at => integral(at.dataType) ||
-                at.dataType.isInstanceOf[DecimalType])
-              .map(at => AvgOf(at.name, at.dataType)).getOrElse(return None)
-          case Count(Seq(Literal(v, _))) if v != null => CountAll
-          case Count(Seq(e)) =>
-            relAttrOf(e).map(at => CountCol(at.name)).getOrElse(return None)
-          case _ => return None
-        }
+        valueNeedOf(ks, ae.aggregateFunction).getOrElse(return None)
       case Alias(e, _) => groupNeedOf(e).getOrElse(return None)
       case _ => return None
     }
@@ -769,8 +578,8 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     val projectedGis = needs.collect { case GroupOf(_, _, gi) => gi }.toSet
     if (!groupAttrs.indices.forall(projectedGis.contains)) return None
     Some(MorStatsMatch(
-      spec, needs, groupAttrs, groupIsPart, partFilters, ex.ranges,
-      notNull, ex.inLists))
+      spec, needs, groupAttrs, groupIsPart, partFilters, ranges,
+      notNull, inLists))
   }
 
 
@@ -794,59 +603,13 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       // classification — both the fold and the scan sides then see
       // only the matching partitions' files (the winner counts stay
       // global: purity of a file is partition-independent).
-      val filterStatCols = partFilters.map {
-        case PartIn(c, _, _) => statCol("p", c)
-        case PartNotNull(c)  => statCol("p", c)
-      }
-      if (filterStatCols.exists(_.isEmpty)) return None
-      // Range/IS NOT NULL/IN classification columns must be covered —
-      // and DATA group columns, whose single-valued test reads the same
-      // nn/min/max stats.
-      val classCols = (ranges.map(_.column) ++ notNull ++
-        inLists.map(_._1) ++ dataGroups).distinct
-      val nnOf = classCols.map(c => c -> statCol("nn", c)).toMap
-      if (nnOf.values.exists(_.isEmpty)) return None
-      val mmOf = (ranges.map(_.column) ++ inLists.map(_._1) ++ dataGroups)
-        .distinct.map(c =>
-          c -> ((statCol("min", c), statCol("max", c)))).toMap
-      if (mmOf.values.exists(p => p._1.isEmpty || p._2.isEmpty)) return None
-      val joined = PartitionConjuncts.select(
-          stRel, partFilters.zip(filterStatCols.map(_.get)))
-        .withColumn("wcnt", wcU(col("_rfile")))
+      val partSel =
+        PartitionConjuncts.statCols(st, partFilters).getOrElse(return None)
       // Winner purity × range containment (the hybrid's predicates; on
       // a PURE file the stats describe exactly its winners, on a MIXED
       // file they are outer bounds — sound as a may-contain test).
-      val candidate = (ranges.map { r =>
-        val (mnR, mxR) = (mmOf(r.column)._1.get, mmOf(r.column)._2.get)
-        val loP = r.lo.map(v =>
-          if (r.loInclusive) col(mxR) >= lit(v) else col(mxR) > lit(v))
-        val hiP = r.hi.map(v =>
-          if (r.hiInclusive) col(mnR) <= lit(v) else col(mnR) < lit(v))
-        (loP.toSeq ++ hiP.toSeq).reduceOption(_ && _).getOrElse(lit(true))
-      } ++ notNull.map(c => col(nnOf(c).get) > lit(0L))
-        ++ inLists.map { case (c, vs) =>
-          val (mnR, mxR) = (mmOf(c)._1.get, mmOf(c)._2.get)
-          vs.map(v => col(mnR) <= lit(v) && col(mxR) >= lit(v))
-            .reduce(_ || _)
-        })
-        .reduceOption(_ && _).getOrElse(lit(true))
-      val fullRange = (ranges.map { r =>
-        val (mnR, mxR) = (mmOf(r.column)._1.get, mmOf(r.column)._2.get)
-        val loP = r.lo.map(v =>
-          if (r.loInclusive) col(mnR) >= lit(v) else col(mnR) > lit(v))
-        val hiP = r.hi.map(v =>
-          if (r.hiInclusive) col(mxR) <= lit(v) else col(mxR) < lit(v))
-        (Seq(col(nnOf(r.column).get) === col("cnt")) ++ loP.toSeq ++
-          hiP.toSeq).reduce(_ && _)
-      } ++ notNull.map(c => col(nnOf(c).get) === col("cnt"))
-        ++ inLists.map { case (c, vs) =>
-          val (mnR, mxR) = (mmOf(c)._1.get, mmOf(c)._2.get)
-          col(nnOf(c).get) === col("cnt") && col(mnR) === col(mxR) &&
-            vs.map(v => col(mnR) === lit(v)).reduce(_ || _)
-        })
-        .reduceOption(_ && _).getOrElse(lit(true))
-      val allWinners = col("wcnt").isNotNull && col("wcnt") === col("cnt") &&
-        col("cnt") > 0
+      val (candidate, fullRange) = RangeConjuncts
+        .fileClasses(st, ranges, notNull, inLists).getOrElse(return None)
       // A file folds into a DATA group only when SINGLE-VALUED in the
       // column (min = max ∧ nn = cnt — sound under string truncation:
       // stored-lower ≤ real-min ≤ real-max ≤ stored-upper forces the
@@ -854,9 +617,16 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       // null-carrying files fail the conjunct and scan as boundaries
       // (winner rows carry their group values into the residual).
       val dataSingle = dataGroups.map { c =>
-        val (mnC, mxC) = (mmOf(c)._1.get, mmOf(c)._2.get)
-        col(nnOf(c).get) === col("cnt") && col(mnC) === col(mxC)
+        (statCol("nn", c), statCol("min", c), statCol("max", c)) match {
+          case (Some(nnC), Some(mnC), Some(mxC)) =>
+            col(nnC) === col("cnt") && col(mnC) === col(mxC)
+          case _ => return None
+        }
       }.reduceOption(_ && _).getOrElse(lit(true))
+      val joined = PartitionConjuncts.select(stRel, partSel)
+        .withColumn("wcnt", wcU(col("_rfile")))
+      val allWinners = col("wcnt").isNotNull && col("wcnt") === col("cnt") &&
+        col("cnt") > 0
       // FOLD: every stored row is a live winner AND every row satisfies
       // every conjunct AND (for data groups) the file is single-valued.
       // SCAN: the file holds ≥1 winner and may hold a satisfying row,
@@ -877,58 +647,17 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         case (at, false) => statCol("min", at.name)
       }
       if (groupStatCols.exists(_.isEmpty)) return None
-      val folds: Seq[Option[Seq[org.apache.spark.sql.Column]]] = needs.map {
-        case _: GroupOf  => Some(Seq.empty)
-        case MinOf(c, _) => statCol("min", c).map(s => Seq(min(col(s))))
-        case MaxOf(c, _) => statCol("max", c).map(s => Seq(max(col(s))))
-        case SumOf(c, t) =>
-          statCol("sum", c).map(s => Seq(sum(col(s).cast(partialDecimal(t)))))
-        case AvgOf(c, t) =>
-          for { s <- statCol("sum", c); n <- statCol("nn", c) }
-            yield Seq(sum(col(s).cast(partialDecimal(t))), sum(col(n)))
-        case CountAll    => Some(Seq(sum(col("cnt"))))
-        case CountCol(c) => statCol("nn", c).map(s => Seq(sum(col(s))))
-        case _ => None
-      }
-      val guardCols: Seq[Option[String]] = needs.collect {
-        case MinOf(c, StringType) => statCol("trunc", c)
-        case MaxOf(c, StringType) => statCol("trunc", c)
-      }.distinct
-      if (folds.exists(_.isEmpty) || guardCols.exists(_.isEmpty)) return None
+      val (slices, guardCols) = unionFolds(st, needs).getOrElse(return None)
       // Integral-avg exactness: proven from the WHOLE-VERSION stats —
       // the winner rows are a subset of all versions, so same-sign and
       // the |total| < 2^53 bound cover every partial sum the boundary
       // scan or combine performs.
-      val avgIntCols = needs.collect {
-        case AvgOf(c, t) if !t.isInstanceOf[DecimalType] => c
-      }.distinct
-      if (avgIntCols.nonEmpty) {
-        if (avgIntCols.exists(c => statCol("min", c).isEmpty ||
-            statCol("max", c).isEmpty || statCol("sum", c).isEmpty))
-          return None
-        val gAggs = avgIntCols.flatMap(c => Seq(
-          min(col(statCol("min", c).get)),
-          max(col(statCol("max", c).get)),
-          sum(col(statCol("sum", c).get).cast(DecimalType(38, 0)))))
-        val g = KeyedTable.withMetaConf(spark)(
-          st.agg(gAggs.head, gAggs.tail: _*).collect())(0)
-        avgIntCols.indices.foreach { k =>
-          val mnV = if (g.isNullAt(3 * k)) null else g.get(3 * k)
-          val mxV = if (g.isNullAt(3 * k + 1)) null else g.get(3 * k + 1)
-          val sv = if (g.isNullAt(3 * k + 2)) null else g.get(3 * k + 2)
-          val sameSign = longOf(mnV).exists(_ >= 0L) ||
-            longOf(mxV).exists(_ <= 0L)
-          val fits = sv == null || sv.asInstanceOf[java.math.BigDecimal]
-            .toBigInteger.abs.bitLength <= 53
-          if (!(mnV == null || (sameSign && fits))) return None
-        }
-      }
-      val slices = folds.map(_.get)
+      if (!avgIntExact(st, needs)) return None
       val offsets = slices.scanLeft(0)(_ + _.length)
       val nGroups = groupAttrs.length
       val valueExprs = slices.flatten.zipWithIndex
         .map { case (c, i) => c.as(s"v$i") }
-      val guardExprs = guardCols.flatten.zipWithIndex
+      val guardExprs = guardCols.zipWithIndex
         .map { case (g, i) => max(col(g)).as(s"g$i") }
       val exprs = (valueExprs ++ guardExprs) :+ count(lit(1)).as("nfull")
       val pureSel = joined.filter(pure)
@@ -1030,18 +759,7 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           // The winner rows of the scan side, with the range/IS NOT
           // NULL/IN conjuncts RE-APPLIED as the residual (the original
           // child is replaced wholesale, so the filter must ride here).
-          val residual: Seq[org.apache.spark.sql.Column] =
-            ranges.map { r =>
-              val loP = r.lo.map(v =>
-                if (r.loInclusive) col(r.column) >= lit(v)
-                else col(r.column) > lit(v))
-              val hiP = r.hi.map(v =>
-                if (r.hiInclusive) col(r.column) <= lit(v)
-                else col(r.column) < lit(v))
-              (loP.toSeq ++ hiP.toSeq).reduceOption(_ && _)
-                .getOrElse(lit(true))
-            } ++ notNull.map(c => col(c).isNotNull) ++
-              inLists.map { case (c, vs) => col(c).isin(vs: _*) }
+          val residual = RangeConjuncts.rowFilters(Nil, ranges, notNull, inLists)
           val bdf0 = table.winnerRowsOf(spark, boundaryRel, settled)
           val bdf = residual.foldLeft(bdf0)(_.filter(_))
           val aggCols: Seq[org.apache.spark.sql.Column] =
@@ -1165,70 +883,23 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           (at: Expression, at: NamedExpression, false)
         case _ => return None
       }
-    val conds = mutable.Buffer.empty[(Expression, Int)]
-    val windows = mutable.Buffer.empty[Window]
-    val renames = mutable.Map.empty[ExprId, Expression]
-    val rels = mutable.Buffer.empty[LogicalRelation]
-    val pairs = mutable.Buffer.empty[(Attribute, Attribute)]
-    if (!MvPlanShape.strip(a.child, conds, windows, renames, rels, pairs))
-      return None
-    if (pairs.nonEmpty || rels.length != 1) return None
-    val lr = rels.head
-    val fsRel = lr.relation match {
-      case h: HadoopFsRelation => h
-      case _ => return None
-    }
-    val root = fsRel.location.rootPaths match {
-      case Seq(one) => one.toString
-      case _ => return None
-    }
-    val spec = Option(KeyedTable.specRegistry.get(root)).getOrElse(return None)
-    if (!spec.retainHistory) return None
-    val subst = MvPlanShape.substFn(renames)
-    val relIds = lr.output.map(_.exprId).toSet
-    val rn = windows.toSeq match {
-      case Seq(w) => MvPlanShape.resolveRnOf(w, spec).getOrElse(return None)
-      case _ => return None
-    }
-    val split = conds.toSeq.flatMap { case (c, d) =>
-      MvPlanShape.splitConjunction(c).map(e => (e, d))
-    }
-    val (rnConds, rest) =
-      split.partition(p => MvPlanShape.isRnEqOne(p._1, rn))
-    if (rnConds.map(_._2) != Seq(0)) return None
+    val ks = KeyedScan.of(a.child).getOrElse(return None)
+    if (!ks.spec.retainHistory) return None
+    val spec = ks.spec
+    val rest = ks.resolved.getOrElse(return None)
     if (rest.exists(_._2 != 0)) return None // conjuncts above the window only
-    val relAttr = subst(child0) match {
-      case at: Attribute if relIds.contains(at.exprId) &&
-        !at.name.startsWith("_graft_") &&
-        KeyedTable.statsOrderedType(at.dataType) &&
-        !spec.partitionCols.exists(_.equalsIgnoreCase(at.name)) => at
-      case _ => return None
-    }
+    val relAttr = ks.relAttrOf(child0)
+      .filter(at => KeyedTable.statsOrderedType(at.dataType) &&
+        !ks.isPartitionCol(at.name))
+      .getOrElse(return None)
     // Conjunct classification — the q194 split, verbatim.
-    def relAttrOfE(e: Expression): Option[Attribute] = subst(e) match {
-      case at: Attribute if relIds.contains(at.exprId) &&
-        !at.name.startsWith("_graft_") => Some(at)
-      case _ => None
-    }
-    val partColsL = spec.partitionCols.map(lower).toSet
-    def partFilterOf(e: Expression): Option[PartFilter] =
-      PartitionConjuncts.of(
-        e, x => relAttrOfE(x).filter(at => partColsL.contains(lower(at.name))))
-    val restConds = rest.map(_._1)
-    if (restConds.exists(!_.deterministic)) return None
-    val (partConds, rangeConds) =
-      restConds.partition(c => partFilterOf(c).isDefined)
-    val partFilters: Seq[PartFilter] = partConds.flatMap(partFilterOf)
-    def relAttrOrdered(e: Expression): Option[Attribute] =
-      relAttrOfE(e).filter(at => KeyedTable.statsOrderedType(at.dataType))
-    val ex = RangeConjuncts.extract(rangeConds, relAttrOrdered)
-    if (ex.other.nonEmpty || ex.nullPreds.exists(_._2)) return None
-    val notNull = ex.nullPreds.map(_._1)
+    val RangeConjuncts.StatsConjuncts(partFilters, ranges, notNull, inLists) =
+      RangeConjuncts.statsConjuncts(ks, rest.map(_._1)).getOrElse(return None)
     val table = KeyedTable(spec)
     TableMetaCache.declineGated(spark, this, spec.path)((
         "morDistinct", spec.path, relAttr.name,
-      partFilters.toVector, ex.ranges.toVector, notNull.toVector,
-      ex.inLists.map { case (c, vs) => (c, vs.toVector) }.toVector)) {
+      partFilters.toVector, ranges.toVector, notNull.toVector,
+      inLists.map { case (c, vs) => (c, vs.toVector) }.toVector)) {
       table.colStatsFrame(spark).flatMap { st =>
         def statCol(prefix: String): Option[String] =
           st.columns.find(_.equalsIgnoreCase(s"${prefix}_${relAttr.name}"))
@@ -1238,61 +909,19 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
             case (Some(a1), Some(b), Some(c)) => (a1, b, c)
             case _ => return None
           }
-        def statColOf(prefix: String, c: String): Option[String] =
-          st.columns.find(_.equalsIgnoreCase(s"${prefix}_$c"))
-        val classCols = (ex.ranges.map(_.column) ++ notNull ++
-          ex.inLists.map(_._1)).distinct
-        val nnOf = classCols.map(c => c -> statColOf("nn", c)).toMap
-        if (nnOf.values.exists(_.isEmpty)) return None
-        val mmOf = (ex.ranges.map(_.column) ++ ex.inLists.map(_._1))
-          .distinct.map(c =>
-            c -> ((statColOf("min", c), statColOf("max", c)))).toMap
-        if (mmOf.values.exists(p => p._1.isEmpty || p._2.isEmpty))
-          return None
-        val filterStatCols = partFilters.map {
-          case PartIn(c, _, _) => statColOf("p", c)
-          case PartNotNull(c)  => statColOf("p", c)
-        }
-        if (filterStatCols.exists(_.isEmpty)) return None
+        // The hybrid's candidate/full classification (see serveHybrid's
+        // soundness notes) composed with winner purity.
+        val (candidate, fullRange) = RangeConjuncts
+          .fileClasses(st, ranges, notNull, inLists).getOrElse(return None)
+        val partSel =
+          PartitionConjuncts.statCols(st, partFilters).getOrElse(return None)
         val settled = table.settledWinnerEntries(spark).getOrElse(return None)
         val stRel = st.withColumn(
           "_rfile", table.relOfFileCol(spark, col("file")))
         val wcU = MorWinnerMaps.of(spark, table, settled, stRel)
           .getOrElse(return None).wcU
-        val joined = PartitionConjuncts.select(
-            stRel, partFilters.zip(filterStatCols.map(_.get)))
+        val joined = PartitionConjuncts.select(stRel, partSel)
           .withColumn("wcnt", wcU(col("_rfile")))
-        // The hybrid's candidate/full classification (see serveHybrid's
-        // soundness notes) composed with winner purity.
-        val candidate = (ex.ranges.map { r =>
-          val (mnR, mxR) = (mmOf(r.column)._1.get, mmOf(r.column)._2.get)
-          val loP = r.lo.map(v =>
-            if (r.loInclusive) col(mxR) >= lit(v) else col(mxR) > lit(v))
-          val hiP = r.hi.map(v =>
-            if (r.hiInclusive) col(mnR) <= lit(v) else col(mnR) < lit(v))
-          (loP.toSeq ++ hiP.toSeq).reduceOption(_ && _).getOrElse(lit(true))
-        } ++ notNull.map(c => col(nnOf(c).get) > lit(0L))
-          ++ ex.inLists.map { case (c, vs) =>
-            val (mnR, mxR) = (mmOf(c)._1.get, mmOf(c)._2.get)
-            vs.map(v => col(mnR) <= lit(v) && col(mxR) >= lit(v))
-              .reduce(_ || _)
-          })
-          .reduceOption(_ && _).getOrElse(lit(true))
-        val fullRange = (ex.ranges.map { r =>
-          val (mnR, mxR) = (mmOf(r.column)._1.get, mmOf(r.column)._2.get)
-          val loP = r.lo.map(v =>
-            if (r.loInclusive) col(mnR) >= lit(v) else col(mnR) > lit(v))
-          val hiP = r.hi.map(v =>
-            if (r.hiInclusive) col(mxR) <= lit(v) else col(mxR) < lit(v))
-          (Seq(col(nnOf(r.column).get) === col("cnt")) ++ loP.toSeq ++
-            hiP.toSeq).reduce(_ && _)
-        } ++ notNull.map(c => col(nnOf(c).get) === col("cnt"))
-          ++ ex.inLists.map { case (c, vs) =>
-            val (mnR, mxR) = (mmOf(c)._1.get, mmOf(c)._2.get)
-            col(nnOf(c).get) === col("cnt") && col(mnR) === col(mxR) &&
-              vs.map(v => col(mnR) === lit(v)).reduce(_ || _)
-          })
-          .reduceOption(_ && _).getOrElse(lit(true))
         val allWinners = col("wcnt").isNotNull &&
           col("wcnt") === col("cnt") && col("cnt") > 0
         val singleValued = col(nnC) === col("cnt") && col(mnC) === col(mxC)
@@ -1322,18 +951,7 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           else {
             // Residual: the range/IS NOT NULL/IN conjuncts re-applied on
             // the winner rows (the original child is replaced wholesale).
-            val residual: Seq[org.apache.spark.sql.Column] =
-              ex.ranges.map { r =>
-                val loP = r.lo.map(v =>
-                  if (r.loInclusive) col(r.column) >= lit(v)
-                  else col(r.column) > lit(v))
-                val hiP = r.hi.map(v =>
-                  if (r.hiInclusive) col(r.column) <= lit(v)
-                  else col(r.column) < lit(v))
-                (loP.toSeq ++ hiP.toSeq).reduceOption(_ && _)
-                  .getOrElse(lit(true))
-              } ++ notNull.map(c => col(c).isNotNull) ++
-                ex.inLists.map { case (c, vs) => col(c).isin(vs: _*) }
+            val residual = RangeConjuncts.rowFilters(Nil, ranges, notNull, inLists)
             val bdf = residual
               .foldLeft(table.winnerRowsOf(spark, scanRel, settled))(
                 _.filter(_))
@@ -1360,35 +978,63 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  private def matchAgg(a: Aggregate): Option[AggMatch] = {
-    if (a.aggregateExpressions.isEmpty) return None
-    val conds = mutable.Buffer.empty[(Expression, Int)]
-    val windows = mutable.Buffer.empty[Window]
-    val renames = mutable.Map.empty[ExprId, Expression]
-    val rels = mutable.Buffer.empty[LogicalRelation]
-    val pairs = mutable.Buffer.empty[(Attribute, Attribute)]
-    if (!MvPlanShape.strip(a.child, conds, windows, renames, rels, pairs))
-      return None
-    if (windows.nonEmpty || pairs.nonEmpty || rels.length != 1) return None
-    val lr = rels.head
-    val fsRel = lr.relation match {
-      case h: HadoopFsRelation => h
-      case _ => return None
-    }
-    val root = fsRel.location.rootPaths match {
-      case Seq(one) => one.toString
-      case _ => return None
-    }
-    val spec = Option(KeyedTable.specRegistry.get(root)).getOrElse(return None)
-    if (spec.retainHistory) return None
-    val subst = MvPlanShape.substFn(renames)
-    val relIds = lr.output.map(_.exprId).toSet
-
-    def relAttrOf(e: Expression): Option[Attribute] = subst(e) match {
-      case at: Attribute if relIds.contains(at.exprId) &&
-        !at.name.startsWith("_graft_") => Some(at)
+  /** The sidecar fold one non-distinct, unfiltered aggregate function
+    * needs, or None when it does not fold exactly.
+    */
+  private def valueNeedOf(ks: KeyedScan, fn: AggregateFunction): Option[Need] =
+    fn match {
+      // Min/Max fold exactly for every ORDERED stats type: min over
+      // per-file minima equals min over rows (same interpreted
+      // ordering at both levels, nulls ignored at both levels).
+      // Strings additionally require the stored bounds untruncated —
+      // checked at serve time via the sidecar's `trunc_<col>` flags.
+      case Min(e) =>
+        ks.relAttrOf(e)
+          .filter(at => KeyedTable.statsOrderedType(at.dataType))
+          .map(at => MinOf(at.name, at.dataType))
+      case Max(e) =>
+        ks.relAttrOf(e)
+          .filter(at => KeyedTable.statsOrderedType(at.dataType))
+          .map(at => MaxOf(at.name, at.dataType))
+      // Sum(integral) ONLY folds exactly: the sidecar stores exact
+      // DECIMAL(38,0) per-file partials (associative, no overflow),
+      // narrowed back to Sum's LongType at serve time — totals
+      // outside long range decline to the scan, where Spark's own
+      // ANSI Sum raises. FP sums are order-sensitive and
+      // native-decimal sums change precision per fold level — a sum
+      // over any non-integral column declines the whole node.
+      case s: Sum =>
+        ks.relAttrOf(s.child).filter(at => integral(at.dataType) ||
+            at.dataType.isInstanceOf[DecimalType])
+          .map(at => SumOf(at.name, at.dataType))
+      // Average serves from the SAME exact partials as Sum plus the
+      // per-file counts, with the final division evaluated through
+      // Spark's own Average.evaluateExpression (bound to the folded
+      // totals) so result type and rounding match the scan
+      // bit-for-bit. Exactness guards live at serve time: decimal
+      // totals must fit Average's own sum-buffer type, integral
+      // totals must be same-sign and < 2^53 so Spark's
+      // order-sensitive DOUBLE accumulation was provably exact
+      // (every partial is a subset sum bounded by the total — for
+      // the hybrid the guard is proven from the WHOLE table's
+      // stats, covering whatever subset the boundary scan sums).
+      // Through the hybrid union avg owns a sum + count slice per
+      // side and the combine re-binds Average's evaluate expression.
+      case av: Average =>
+        ks.relAttrOf(av.child).filter(at => integral(at.dataType) ||
+            at.dataType.isInstanceOf[DecimalType])
+          .map(at => AvgOf(at.name, at.dataType))
+      case Count(Seq(Literal(v, _))) if v != null => Some(CountAll)
+      case Count(Seq(e)) =>
+        ks.relAttrOf(e).map(at => CountCol(at.name))
       case _ => None
     }
+
+  private def matchAgg(a: Aggregate): Option[AggMatch] = {
+    if (a.aggregateExpressions.isEmpty) return None
+    val ks = KeyedScan.of(a.child).getOrElse(return None)
+    if (ks.windows.nonEmpty || ks.spec.retainHistory) return None
+    val spec = ks.spec
 
     // Grouping: every expression must be an attribute that is either a
     // PARTITION column (whole files carry one tuple — the sidecar's
@@ -1398,46 +1044,29 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     // files scan as boundaries, which forces the hybrid serve). The
     // clustered-rollup shape: `GROUP BY lang` over a lang-clustered
     // corpus folds every interior run file from metadata.
-    val partCols = spec.partitionCols.map(lower).toSet
     val groupAttrs: Seq[Attribute] = a.groupingExpressions.map { e =>
-      relAttrOf(e).filter(at => partCols.contains(lower(at.name)) ||
+      ks.relAttrOf(e).filter(at => ks.isPartitionCol(at.name) ||
           KeyedTable.statsOrderedType(at.dataType))
         .getOrElse(return None)
     }
-    val groupIsPart: Seq[Boolean] =
-      groupAttrs.map(at => partCols.contains(lower(at.name)))
+    val groupIsPart: Seq[Boolean] = groupAttrs.map(at => ks.isPartitionCol(at.name))
 
-    // Filters: every conjunct must be a literal point predicate (or the
-    // optimizer's inferred isnotnull) on a PARTITION column — partition
-    // conjuncts select whole files exactly (the sidecar's per-file
+    // Filters: partition point conjuncts (or the optimizer's inferred
+    // isnotnull) select whole files exactly (the sidecar's per-file
     // partition tuple is a constant), so the fold over the selected
-    // sidecar rows IS the aggregate over the filtered table; nothing
-    // residual remains. Any other predicate declines.
-    def partFilterOf(e: Expression): Option[PartFilter] =
-      PartitionConjuncts.of(
-        e, x => relAttrOf(x).filter(at => partCols.contains(lower(at.name))))
-    val splitConds = conds.toSeq.flatMap { case (c, _) =>
-      MvPlanShape.splitConjunction(c)
-    }
-    if (splitConds.exists(!_.deterministic)) return None
-    // Partition point conjuncts select whole files (the original
-    // metadata-only path). Everything else goes through the SHARED
-    // range extraction ([[RangeConjuncts]]): literal ranges and
+    // sidecar rows IS the aggregate over the filtered table (the
+    // original metadata-only path). Everything else goes through the
+    // SHARED range extraction ([[RangeConjuncts]]): literal ranges and
     // IS NOT NULL on ordered stats columns select the HYBRID serve —
     // FULLY-contained files fold from the sidecar, boundary files scan
     // with the filter residual. Any conjunct neither classifies
-    // (`other`) declines: a leftover predicate would falsify the
-    // full-file fold. IS NULL declines too (a fold over all-null files
-    // would need the complement matrix; the audit shape belongs in
+    // declines: a leftover predicate would falsify the full-file fold.
+    // IS NULL declines too (a fold over all-null files would need the
+    // complement matrix; the audit shape belongs in
     // [[RangePruneRewrite]]'s pruned scan).
-    val (partConds, restConds) =
-      splitConds.partition(c => partFilterOf(c).isDefined)
-    val partFilters: Seq[PartFilter] = partConds.flatMap(partFilterOf)
-    def relAttrOrdered(e: Expression): Option[Attribute] =
-      relAttrOf(e).filter(at => KeyedTable.statsOrderedType(at.dataType))
-    val ex = RangeConjuncts.extract(restConds, relAttrOrdered)
-    if (ex.other.nonEmpty || ex.nullPreds.exists(_._2)) return None
-    val notNull = ex.nullPreds.map(_._1)
+    val RangeConjuncts.StatsConjuncts(partFilters, ranges, notNull, inLists) =
+      RangeConjuncts.statsConjuncts(ks, ks.conjuncts.map(_._1))
+        .getOrElse(return None)
     // Grouped hybrid rides the same machinery: partition groups fold by
     // the sidecar's per-file partition tuple, data-column groups by the
     // file's single value (FULL ⇒ min = max), and the boundary
@@ -1445,7 +1074,7 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     val groupIdx: Map[ExprId, Int] =
       groupAttrs.zipWithIndex.map { case (at, i) => at.exprId -> i }.toMap
 
-    def groupNeedOf(e: Expression): Option[GroupOf] = subst(e) match {
+    def groupNeedOf(e: Expression): Option[GroupOf] = ks.subst(e) match {
       case at: Attribute => groupIdx.get(at.exprId)
         .map(i => GroupOf(at.name, at.dataType, i))
       case _ => None
@@ -1480,59 +1109,13 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           if ae.isDistinct && ae.filter.isEmpty =>
         ae.aggregateFunction match {
           case Count(Seq(e)) =>
-            relAttrOf(e).filter(at => partCols.contains(lower(at.name)))
+            ks.relAttrOf(e).filter(at => ks.isPartitionCol(at.name))
               .map(at => DistinctPartOf(at.name)).getOrElse(return None)
           case _ => return None
         }
       case Alias(ae: AggregateExpression, _)
           if !ae.isDistinct && ae.filter.isEmpty =>
-        ae.aggregateFunction match {
-          // Min/Max fold exactly for every ORDERED stats type: min over
-          // per-file minima equals min over rows (same interpreted
-          // ordering at both levels, nulls ignored at both levels).
-          // Strings additionally require the stored bounds untruncated —
-          // checked at serve time via the sidecar's `trunc_<col>` flags.
-          case Min(e) =>
-            relAttrOf(e)
-              .filter(at => KeyedTable.statsOrderedType(at.dataType))
-              .map(at => MinOf(at.name, at.dataType)).getOrElse(return None)
-          case Max(e) =>
-            relAttrOf(e)
-              .filter(at => KeyedTable.statsOrderedType(at.dataType))
-              .map(at => MaxOf(at.name, at.dataType)).getOrElse(return None)
-          // Sum(integral) ONLY folds exactly: the sidecar stores exact
-          // DECIMAL(38,0) per-file partials (associative, no overflow),
-          // narrowed back to Sum's LongType at serve time — totals
-          // outside long range decline to the scan, where Spark's own
-          // ANSI Sum raises. FP sums are order-sensitive and
-          // native-decimal sums change precision per fold level — a sum
-          // over any non-integral column declines the whole node.
-          case s: Sum =>
-            relAttrOf(s.child).filter(at => integral(at.dataType) ||
-                at.dataType.isInstanceOf[DecimalType])
-              .map(at => SumOf(at.name, at.dataType)).getOrElse(return None)
-          // Average serves from the SAME exact partials as Sum plus the
-          // per-file counts, with the final division evaluated through
-          // Spark's own Average.evaluateExpression (bound to the folded
-          // totals) so result type and rounding match the scan
-          // bit-for-bit. Exactness guards live at serve time: decimal
-          // totals must fit Average's own sum-buffer type, integral
-          // totals must be same-sign and < 2^53 so Spark's
-          // order-sensitive DOUBLE accumulation was provably exact
-          // (every partial is a subset sum bounded by the total — for
-          // the hybrid the guard is proven from the WHOLE table's
-          // stats, covering whatever subset the boundary scan sums).
-          // Through the hybrid union avg owns a sum + count slice per
-          // side and the combine re-binds Average's evaluate expression.
-          case av: Average =>
-            relAttrOf(av.child).filter(at => integral(at.dataType) ||
-                at.dataType.isInstanceOf[DecimalType])
-              .map(at => AvgOf(at.name, at.dataType)).getOrElse(return None)
-          case Count(Seq(Literal(v, _))) if v != null => CountAll
-          case Count(Seq(e)) =>
-            relAttrOf(e).map(at => CountCol(at.name)).getOrElse(return None)
-          case _ => return None
-        }
+        valueNeedOf(ks, ae.aggregateFunction).getOrElse(return None)
       case Alias(e, _) => groupNeedOf(e).getOrElse(return None)
       case _ => return None
     }
@@ -1542,8 +1125,8 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     val projectedGis = needs.collect { case GroupOf(_, _, gi) => gi }.toSet
     if (!groupAttrs.indices.forall(projectedGis.contains)) return None
     Some(AggMatch(
-      a, spec, needs, groupAttrs, groupIsPart, partFilters, ex.ranges,
-      notNull, ex.inLists, lr, fsRel, root, castAt.toMap))
+      a, ks, needs, groupAttrs, groupIsPart, partFilters, ranges,
+      notNull, inLists, castAt.toMap))
   }
 
   private def serveAgg(m: AggMatch): Option[LogicalPlan] =
@@ -1558,8 +1141,8 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * contributes all its rows).
     */
   private def serveWhole(m: AggMatch): Option[LogicalPlan] = {
-    val AggMatch(a, spec, needs, groupAttrs, _, partFilters,
-      _, _, _, _, _, _, _) = m
+    val AggMatch(a, _, needs, groupAttrs, _, partFilters, _, _, _, _) = m
+    val spec = m.spec
     if (m.dataGroupCols.nonEmpty) return None // hybrid's shape (routing)
     val table = KeyedTable(spec)
     table.colStatsFrame(spark).flatMap { st =>
@@ -1570,13 +1153,8 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         st.columns.find(_.equalsIgnoreCase(s"${prefix}_$c"))
       val groupStatCols = groupAttrs.map(at => statCol("p", at.name))
       // Partition filters select sidecar rows (whole files) exactly.
-      val filterStatCols = partFilters.map {
-        case PartIn(c, _, _)  => statCol("p", c)
-        case PartNotNull(c) => statCol("p", c)
-      }
-      if (filterStatCols.exists(_.isEmpty)) return None
       val stSel = PartitionConjuncts.select(
-        st, partFilters.zip(filterStatCols.map(_.get)))
+        st, PartitionConjuncts.statCols(st, partFilters).getOrElse(return None))
       // Per-need fold columns; arity varies (avg folds FOUR: the exact
       // sum, the non-null count, and the min/max its integral-exactness
       // guard reads), so each need owns a SLICE of the fold row.
@@ -1608,25 +1186,18 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           else statCol("p", c).map(s =>
             Seq(countDistinct(when(col("cnt") > 0, col(s)))))
       }
-      // String min/max serve only from EXACT stored bounds: any selected
-      // file whose bounds were truncated (`trunc_<col>` — the Iceberg
-      // prefix convention) makes the stored value a bound, not the
-      // answer, so the whole node declines to a scan. One guard fold per
-      // string column, appended after the value folds; a sidecar missing
-      // the flag column predates the convention and declines too.
-      val guardCols: Seq[Option[String]] = needs.collect {
-        case MinOf(c, StringType) => statCol("trunc", c)
-        case MaxOf(c, StringType) => statCol("trunc", c)
-      }.distinct
-      if (folds.exists(_.isEmpty) || groupStatCols.exists(_.isEmpty) ||
-          guardCols.exists(_.isEmpty)) None
+      // String min/max: any selected truncated file declines the whole
+      // node to a scan. One guard fold per string column, appended after
+      // the value folds.
+      val guardCols = truncGuardCols(st, needs).getOrElse(return None)
+      if (folds.exists(_.isEmpty) || groupStatCols.exists(_.isEmpty)) None
       else {
         val slices = folds.map(_.get)
         // Need i's fold slice starts at nGroups + offsets(i).
         val offsets = slices.scanLeft(0)(_ + _.length)
         val valueExprs = slices.flatten.zipWithIndex
           .map { case (c, i) => c.as(s"v$i") }
-        val guardExprs = guardCols.flatten.zipWithIndex
+        val guardExprs = guardCols.zipWithIndex
           .map { case (g, i) => max(col(g)).as(s"g$i") }
         val exprs = valueExprs ++ guardExprs
         val folded =
@@ -1747,8 +1318,9 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * beyond an empty scan.
     */
   private def serveHybrid(m: AggMatch): Option[LogicalPlan] = {
-    val AggMatch(a, spec, needs, groupAttrs, groupIsPart, partFilters,
-      ranges, notNull, inLists, lr, fsRel, root, _) = m
+    val AggMatch(a, ks, needs, groupAttrs, groupIsPart, partFilters,
+      ranges, notNull, inLists, _) = m
+    val spec = ks.spec
     val dataGroups = m.dataGroupCols
     // A distinct count would need VALUES as partials through the union
     // — metadata-only serve. (avg DOES ride the hybrid: it owns a
@@ -1759,146 +1331,47 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       def statCol(prefix: String, c: String): Option[String] =
         st.columns.find(_.equalsIgnoreCase(s"${prefix}_$c"))
       if (!st.columns.contains("cnt")) return None
-      val classCols =
-        (ranges.map(_.column) ++ notNull ++ inLists.map(_._1) ++
-          dataGroups).distinct
-      val nnOf = classCols.map(c => c -> statCol("nn", c)).toMap
-      if (nnOf.values.exists(_.isEmpty)) return None
-      val mmOf = (ranges.map(_.column) ++ inLists.map(_._1) ++ dataGroups)
-        .distinct.map(c =>
-          c -> ((statCol("min", c), statCol("max", c)))).toMap
-      if (mmOf.values.exists(p => p._1.isEmpty || p._2.isEmpty)) return None
+      // Candidate: the file can hold a satisfying row; full: every row
+      // satisfies every conjunct ([[RangeConjuncts.fileClasses]], with
+      // the soundness notes on truncation and IN-lists). An all-null
+      // stats row nulls both predicates — filtered out on both sides,
+      // rightly: no row of such a file satisfies a range conjunct. DATA
+      // grouping restricts nothing on the candidate side: every file can
+      // hold rows of some group, so with no other conjunct every
+      // non-full file is a boundary (routing guarantees at least one
+      // classifying dimension exists whenever hybrid runs).
+      val (candidate, fullFilter) = RangeConjuncts
+        .fileClasses(st, ranges, notNull, inLists).getOrElse(return None)
+      // A file folds into a DATA group only when SINGLE-VALUED in the
+      // column (min = max ∧ nn = cnt — every row carries exactly that
+      // value; sound under string truncation, because stored-lower ≤
+      // real-min ≤ real-max ≤ stored-upper forces the exact value
+      // when the stored bounds coincide). Multi-valued files span
+      // groups and null-carrying files hold rows of the NULL group —
+      // both fail the conjunct (nn = cnt is false once any null
+      // exists) and scan as boundaries, where the residual Aggregate
+      // groups them exactly. A zero-row file nulls min = max, which
+      // excludes it from BOTH sides — rightly, it holds no rows.
+      val full = dataGroups.foldLeft(fullFilter) { (acc, c) =>
+        (statCol("nn", c), statCol("min", c), statCol("max", c)) match {
+          case (Some(nnC), Some(mnC), Some(mxC)) =>
+            acc && col(nnC) === col("cnt") && col(mnC) === col(mxC)
+          case _ => return None
+        }
+      }
 
       // Partition conjuncts select whole sidecar rows first, exactly as
       // the metadata-only serve does.
-      val filterStatCols = partFilters.map {
-        case PartIn(c, _, _) => statCol("p", c)
-        case PartNotNull(c)  => statCol("p", c)
-      }
-      if (filterStatCols.exists(_.isEmpty)) return None
       val stSel = PartitionConjuncts.select(
-        st, partFilters.zip(filterStatCols.map(_.get)))
-
-      // Candidate: the file can hold a satisfying row (the range-prune
-      // intersection + at least one non-null in each IS NOT NULL
-      // column). Full: every row satisfies every conjunct. An all-null
-      // stats row nulls both predicates — filtered out on both sides,
-      // rightly: no row of such a file satisfies a range conjunct.
-      // IN-list classification: a file can hold v only when its stored
-      // [min, max] contains v (candidate: OR per value); it is FULL when
-      // SINGLE-VALUED in the column with that value in the list
-      // (min = max ∈ values ∧ nn = cnt) — sound even under string
-      // truncation (stored lower ≤ real min ≤ real max ≤ stored upper,
-      // so stored min = max forces every row to that exact value).
-      // Multi-valued files whose whole [min, max] is inside the list's
-      // value set also fully satisfy, but proving it needs per-value
-      // knowledge stats don't carry — they stay boundary (scan).
-      val candidate = (ranges.map { r =>
-        val (mnC, mxC) = (mmOf(r.column)._1.get, mmOf(r.column)._2.get)
-        val loP = r.lo.map(v =>
-          if (r.loInclusive) col(mxC) >= lit(v) else col(mxC) > lit(v))
-        val hiP = r.hi.map(v =>
-          if (r.hiInclusive) col(mnC) <= lit(v) else col(mnC) < lit(v))
-        (loP.toSeq ++ hiP.toSeq).reduceOption(_ && _).getOrElse(lit(true))
-      } ++ notNull.map(c => col(nnOf(c).get) > lit(0L))
-        ++ inLists.map { case (c, vs) =>
-          val (mnC, mxC) = (mmOf(c)._1.get, mmOf(c)._2.get)
-          vs.map(v => col(mnC) <= lit(v) && col(mxC) >= lit(v))
-            .reduce(_ || _)
-        })
-        // DATA-column grouping restricts nothing here: every file can
-        // hold rows of some group, so with no other conjunct every
-        // non-full file is a boundary (routing guarantees at least one
-        // classifying dimension exists whenever hybrid runs).
-        .reduceOption(_ && _).getOrElse(lit(true))
-      val full = (ranges.map { r =>
-        val (mnC, mxC) = (mmOf(r.column)._1.get, mmOf(r.column)._2.get)
-        val loP = r.lo.map(v =>
-          if (r.loInclusive) col(mnC) >= lit(v) else col(mnC) > lit(v))
-        val hiP = r.hi.map(v =>
-          if (r.hiInclusive) col(mxC) <= lit(v) else col(mxC) < lit(v))
-        (Seq(col(nnOf(r.column).get) === col("cnt")) ++ loP.toSeq ++ hiP.toSeq)
-          .reduce(_ && _)
-      } ++ notNull.map(c => col(nnOf(c).get) === col("cnt"))
-        ++ inLists.map { case (c, vs) =>
-          val (mnC, mxC) = (mmOf(c)._1.get, mmOf(c)._2.get)
-          col(nnOf(c).get) === col("cnt") && col(mnC) === col(mxC) &&
-            vs.map(v => col(mnC) === lit(v)).reduce(_ || _)
-        }
-        // A file folds into a DATA group only when SINGLE-VALUED in the
-        // column (min = max ∧ nn = cnt — every row carries exactly that
-        // value; sound under string truncation, because stored-lower ≤
-        // real-min ≤ real-max ≤ stored-upper forces the exact value
-        // when the stored bounds coincide). Multi-valued files span
-        // groups and null-carrying files hold rows of the NULL group —
-        // both fail the conjunct (nn = cnt is false once any null
-        // exists) and scan as boundaries, where the residual Aggregate
-        // groups them exactly. A zero-row file nulls min = max, which
-        // excludes it from BOTH sides — rightly, it holds no rows.
-        ++ dataGroups.map { c =>
-          val (mnC, mxC) = (mmOf(c)._1.get, mmOf(c)._2.get)
-          col(nnOf(c).get) === col("cnt") && col(mnC) === col(mxC)
-        })
-        .reduce(_ && _)
+        st, PartitionConjuncts.statCols(st, partFilters).getOrElse(return None))
 
       // Value folds over the FULL subset — same folds as the
       // metadata-only serve — plus the string-truncation guards and the
-      // full-file count. Arity varies per need: avg rides the union as
-      // SUM + COUNT partials (a final value cannot combine), so it owns
-      // a two-column slice on the fold, the union row and the partial.
-      val folds: Seq[Option[Seq[org.apache.spark.sql.Column]]] = needs.map {
-        case _: GroupOf  => Some(Seq.empty)
-        case MinOf(c, _) => statCol("min", c).map(s => Seq(min(col(s))))
-        case MaxOf(c, _) => statCol("max", c).map(s => Seq(max(col(s))))
-        case SumOf(c, t) =>
-          statCol("sum", c).map(s => Seq(sum(col(s).cast(partialDecimal(t)))))
-        case AvgOf(c, t) =>
-          for { s <- statCol("sum", c); n <- statCol("nn", c) }
-            yield Seq(sum(col(s).cast(partialDecimal(t))), sum(col(n)))
-        case CountAll    => Some(Seq(sum(col("cnt"))))
-        case CountCol(c) => statCol("nn", c).map(s => Seq(sum(col(s))))
-        case _: DistinctPartOf => None // unreachable: declined above
-      }
-      val guardCols: Seq[Option[String]] = needs.collect {
-        case MinOf(c, StringType) => statCol("trunc", c)
-        case MaxOf(c, StringType) => statCol("trunc", c)
-      }.distinct
-      if (folds.exists(_.isEmpty) || guardCols.exists(_.isEmpty)) return None
-      val slices = folds.map(_.get)
+      // full-file count.
+      val (slices, guardCols) = unionFolds(st, needs).getOrElse(return None)
       // Need i's fold slice starts at nGroups + offsets(i).
       val offsets = slices.scanLeft(0)(_ + _.length)
-      // INTEGRAL avg exactness must hold for whatever subset the
-      // boundary scan sums in DOUBLE — provable only from the WHOLE
-      // table's stats: all values same sign and the all-rows exact
-      // total < 2^53 bound every subset's partial sums (each is a
-      // subset sum ≤ the total, exactly representable). An all-null
-      // column is trivially exact. Decimal avg needs no guard here —
-      // partials are exact and the combine narrows through Average's
-      // own sum-buffer type. Declines fall to the plain scan.
-      val avgIntCols = needs.collect {
-        case AvgOf(c, t) if !t.isInstanceOf[DecimalType] => c
-      }.distinct
-      if (avgIntCols.nonEmpty) {
-        if (avgIntCols.exists(c => statCol("min", c).isEmpty ||
-            statCol("max", c).isEmpty || statCol("sum", c).isEmpty))
-          return None
-        val gAggs = avgIntCols.flatMap(c => Seq(
-          min(col(statCol("min", c).get)),
-          max(col(statCol("max", c).get)),
-          sum(col(statCol("sum", c).get).cast(DecimalType(38, 0)))))
-        val g = KeyedTable.withMetaConf(spark)(
-          st.agg(gAggs.head, gAggs.tail: _*).collect())(0)
-        avgIntCols.indices.foreach { k =>
-          val mnV = if (g.isNullAt(3 * k)) null else g.get(3 * k)
-          val mxV = if (g.isNullAt(3 * k + 1)) null else g.get(3 * k + 1)
-          val sv = if (g.isNullAt(3 * k + 2)) null else g.get(3 * k + 2)
-          val sameSign = longOf(mnV).exists(_ >= 0L) ||
-            longOf(mxV).exists(_ <= 0L)
-          val fits = sv == null || sv.asInstanceOf[java.math.BigDecimal]
-            .toBigInteger.abs.bitLength <= 53
-          if (!(mnV == null || (sameSign && fits))) return None
-        }
-      }
+      if (!avgIntExact(st, needs)) return None
       // Grouped serve: partition groups fold by the sidecar's per-file
       // partition tuple (each file lives in exactly one partition dir);
       // data groups fold by the file's single value — its recorded min
@@ -1910,7 +1383,7 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       if (groupStatCols.exists(_.isEmpty)) return None
       val valueExprs = slices.flatten.zipWithIndex
         .map { case (c, i) => c.as(s"v$i") }
-      val guardExprs = guardCols.flatten.zipWithIndex
+      val guardExprs = guardCols.zipWithIndex
         .map { case (g, i) => max(col(g)).as(s"g$i") }
       val exprs = (valueExprs ++ guardExprs) :+ count(lit(1)).as("nfull")
       // cnt > 0 beside the classification: a zero-row sidecar row passes
@@ -2003,15 +1476,8 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       // Boundary side: the original child subtree (filters, projects,
       // renames intact) with the scan swapped onto the partial files,
       // aggregated with the ORIGINAL functions.
-      val paths = partialFiles.map(abs =>
-        new org.apache.hadoop.fs.Path(new java.net.URI(abs)))
-      val partSchema = Option(fsRel.partitionSchema).filter(_.nonEmpty)
-      val prunedIdx = new InMemoryFileIndex(
-        spark, paths, Map("basePath" -> root), partSchema)
-      val newChild = a.child.transformUp {
-        case l: LogicalRelation if l eq lr =>
-          l.copy(relation = fsRel.copy(location = prunedIdx)(spark))
-      }
+      val newChild = ks.swap(spark, a.child, partialFiles.map(abs =>
+        new org.apache.hadoop.fs.Path(new java.net.URI(abs))))
       // The Average instance of output i (admission guarantees shape).
       def avgOfOutput(i: Int): Average = a.aggregateExpressions(i) match {
         case Alias(ae: AggregateExpression, _) =>
@@ -2081,6 +1547,87 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         s"the sidecar (${rows.length} group rows), scanning " +
         s"${partialFiles.length} boundary files")
       Some(Aggregate(finalGroups, finalExprs, Union(Seq(local, partial))))
+    }
+  }
+
+  /** The string-truncation guard columns of `needs`: string min/max
+    * serve only from EXACT stored bounds — a file whose bounds were
+    * truncated (`trunc_<col>`, the Iceberg prefix convention) holds a
+    * bound, not the answer. None when a flag column is missing (the
+    * sidecar predates the convention).
+    */
+  private def truncGuardCols(
+      st: org.apache.spark.sql.DataFrame, needs: Seq[Need]): Option[Seq[String]] = {
+    val cols = needs.collect {
+      case MinOf(c, StringType) => c
+      case MaxOf(c, StringType) => c
+    }.distinct.map(c => st.columns.find(_.equalsIgnoreCase(s"trunc_$c")))
+    if (cols.exists(_.isEmpty)) None else Some(cols.map(_.get))
+  }
+
+  /** The per-need partial folds of the UNION serves (hybrid and
+    * winner-file) plus their truncation guard columns. Arity varies per
+    * need: avg rides the union as SUM + COUNT partials (a final value
+    * cannot combine), so it owns a two-column slice on the fold, the
+    * union row and the partial. None when a stats column is missing.
+    */
+  private def unionFolds(st: org.apache.spark.sql.DataFrame, needs: Seq[Need])
+      : Option[(Seq[Seq[org.apache.spark.sql.Column]], Seq[String])] = {
+    def statCol(prefix: String, c: String): Option[String] =
+      st.columns.find(_.equalsIgnoreCase(s"${prefix}_$c"))
+    val folds: Seq[Option[Seq[org.apache.spark.sql.Column]]] = needs.map {
+      case _: GroupOf  => Some(Seq.empty)
+      case MinOf(c, _) => statCol("min", c).map(s => Seq(min(col(s))))
+      case MaxOf(c, _) => statCol("max", c).map(s => Seq(max(col(s))))
+      case SumOf(c, t) =>
+        statCol("sum", c).map(s => Seq(sum(col(s).cast(partialDecimal(t)))))
+      case AvgOf(c, t) =>
+        for { s <- statCol("sum", c); n <- statCol("nn", c) }
+          yield Seq(sum(col(s).cast(partialDecimal(t))), sum(col(n)))
+      case CountAll    => Some(Seq(sum(col("cnt"))))
+      case CountCol(c) => statCol("nn", c).map(s => Seq(sum(col(s))))
+      case _: DistinctPartOf => None // the metadata-only serve's need
+    }
+    if (folds.exists(_.isEmpty)) None
+    else truncGuardCols(st, needs).map(g => (folds.map(_.get), g))
+  }
+
+  /** INTEGRAL avg exactness for whatever subset a union serve sums in
+    * DOUBLE — provable only from the WHOLE stats frame `st`: all values
+    * same sign and the all-rows exact total < 2^53 bound every subset's
+    * partial sums (each is a subset sum ≤ the total, exactly
+    * representable). On a history table the whole-VERSION stats bound
+    * every winner subset the same way. An all-null column is trivially
+    * exact. Decimal avg needs no guard — partials are exact and the
+    * combine narrows through Average's own sum-buffer type. False
+    * declines to the plain scan.
+    */
+  private def avgIntExact(
+      st: org.apache.spark.sql.DataFrame, needs: Seq[Need]): Boolean = {
+    def statCol(prefix: String, c: String): Option[String] =
+      st.columns.find(_.equalsIgnoreCase(s"${prefix}_$c"))
+    val avgIntCols = needs.collect {
+      case AvgOf(c, t) if !t.isInstanceOf[DecimalType] => c
+    }.distinct
+    if (avgIntCols.isEmpty) return true
+    if (avgIntCols.exists(c => statCol("min", c).isEmpty ||
+        statCol("max", c).isEmpty || statCol("sum", c).isEmpty))
+      return false
+    val gAggs = avgIntCols.flatMap(c => Seq(
+      min(col(statCol("min", c).get)),
+      max(col(statCol("max", c).get)),
+      sum(col(statCol("sum", c).get).cast(DecimalType(38, 0)))))
+    val g = KeyedTable.withMetaConf(spark)(
+      st.agg(gAggs.head, gAggs.tail: _*).collect())(0)
+    avgIntCols.indices.forall { k =>
+      val mnV = if (g.isNullAt(3 * k)) null else g.get(3 * k)
+      val mxV = if (g.isNullAt(3 * k + 1)) null else g.get(3 * k + 1)
+      val sv = if (g.isNullAt(3 * k + 2)) null else g.get(3 * k + 2)
+      val sameSign = longOf(mnV).exists(_ >= 0L) ||
+        longOf(mxV).exists(_ <= 0L)
+      val fits = sv == null || sv.asInstanceOf[java.math.BigDecimal]
+        .toBigInteger.abs.bitLength <= 53
+      mnV == null || (sameSign && fits)
     }
   }
 
@@ -2230,6 +1777,23 @@ object StatsAggregateRewrite {
   * re-aggregating the index per query.
   */
 private[plans] object MorWinnerMaps {
+
+  /** `winners` re-aliased to `output`'s names and exprIds, so it can
+    * replace the subtree that produced `output` with everything above
+    * untouched; None when a column is missing or its type differs.
+    */
+  def asOutput(
+      winners: org.apache.spark.sql.DataFrame,
+      output: Seq[Attribute]): Option[LogicalPlan] = {
+    val bplan = winners.queryExecution.analyzed
+    val byName = bplan.output.map(at => KeyedScan.lower(at.name) -> at).toMap
+    val aliases = output.map { at =>
+      byName.get(KeyedScan.lower(at.name)).filter(_.dataType == at.dataType)
+        .map(src => Alias(src, at.name)(exprId = at.exprId))
+        .getOrElse(return None)
+    }
+    Some(Project(aliases, bplan))
+  }
 
   /** The per-version winner artifacts: the in-memory maps (plan-time
     * walks, prune accounting) plus the winner-count lookup UDF, which

@@ -1,14 +1,9 @@
 package graft.plans
 
-import java.util.Locale
-
-import scala.collection.mutable
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 
 import graft.table.{KeyedTable, TableMetaCache}
 
@@ -87,12 +82,12 @@ class TopKPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * point/range/aggregate families follow).
     */
   private[plans] final case class TopKMatch(
-      lim: GlobalLimit, lr: LogicalRelation, fsRel: HadoopFsRelation,
-      root: String, spec: graft.table.KeyedTableSpec,
+      lim: GlobalLimit, scan: KeyedScan,
       sortCol: String, k: Int, desc: Boolean, nullsFirst: Boolean,
       partFilters: Seq[PartitionConjuncts.PartFilter],
       ranges: Seq[graft.table.ColumnRange],
       notNull: Seq[String], inLists: Seq[(String, Seq[Any])]) {
+    def spec: graft.table.KeyedTableSpec = scan.spec
     /** Every column whose stats the serve consults. */
     def statCols: Seq[String] =
       (sortCol +: (ranges.map(_.column) ++ notNull ++ inLists.map(_._1)))
@@ -112,7 +107,7 @@ class TopKPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def tryRewrite(lim: GlobalLimit): Option[LogicalPlan] =
     matchTopK(lim).flatMap { m =>
-      TableMetaCache.declineGated(spark, this, m.root)((m.root, m.sortCol,
+      TableMetaCache.declineGated(spark, this, m.scan.root)((m.scan.root, m.sortCol,
         m.k, m.desc, m.nullsFirst,
         m.partFilters.toVector, m.ranges.toVector, m.notNull.toVector,
         m.inLists.map { case (c, vs) => (c, vs.toVector) }.toVector)) {
@@ -148,70 +143,28 @@ class TopKPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def matchTopK(lim: GlobalLimit): Option[TopKMatch] = {
     val (k, sort) = limitSort(lim).getOrElse(return None)
-
-    val conds = mutable.Buffer.empty[(Expression, Int)]
-    val windows = mutable.Buffer.empty[Window]
-    val renames = mutable.Map.empty[ExprId, Expression]
-    val rels = mutable.Buffer.empty[LogicalRelation]
-    val pairs = mutable.Buffer.empty[(Attribute, Attribute)]
-    if (!MvPlanShape.strip(sort.child, conds, windows, renames, rels, pairs))
-      return None
-    if (windows.nonEmpty || pairs.nonEmpty || rels.length != 1) return None
-    val lr = rels.head
-    val fsRel = lr.relation match {
-      case h: HadoopFsRelation => h
-      case _ => return None
-    }
-    val root = fsRel.location.rootPaths match {
-      case Seq(one) => one.toString
-      case _ => return None
-    }
-    val spec = Option(KeyedTable.specRegistry.get(root)).getOrElse(return None)
-    if (spec.retainHistory) return None
-
-    val subst = MvPlanShape.substFn(renames)
-    val relIds = lr.output.map(_.exprId).toSet
-    def relAttrOf(e: Expression): Option[Attribute] = subst(e) match {
-      case a: Attribute if relIds.contains(a.exprId) &&
-        !a.name.startsWith("_graft_") => Some(a)
-      case _ => None
-    }
+    val ks = KeyedScan.of(sort.child).getOrElse(return None)
+    if (ks.windows.nonEmpty || ks.spec.retainHistory) return None
 
     // Classify every filter conjunct below the sort: partition
     // point/IN conjuncts select whole sidecar rows, range / IS NOT
     // NULL / IN conjuncts on stats-covered ordered columns drive the
     // FULL / CANDIDATE split. Anything else declines — a leftover
     // predicate would break the count-accumulation bound.
-    val partCols = spec.partitionCols.map(_.toLowerCase(Locale.ROOT)).toSet
-    val splitConds = conds.toSeq.flatMap { case (c, _) =>
-      MvPlanShape.splitConjunction(c)
-    }
-    if (splitConds.exists(!_.deterministic)) return None
-    def partFilterOf(e: Expression) = PartitionConjuncts.of(
-      e,
-      x => relAttrOf(x)
-        .filter(at => partCols.contains(at.name.toLowerCase(Locale.ROOT))))
-    val (partConds, restConds) =
-      splitConds.partition(c => partFilterOf(c).isDefined)
-    val partFilters = partConds.flatMap(partFilterOf)
-    val ex = RangeConjuncts.extract(
-      restConds,
-      e => relAttrOf(e).filter(at => KeyedTable.statsOrderedType(at.dataType)))
-    if (ex.other.nonEmpty || ex.nullPreds.exists(_._2)) return None
-    val notNull = ex.nullPreds.map(_._1)
-
+    val sc = RangeConjuncts.statsConjuncts(ks, ks.conjuncts.map(_._1))
+      .getOrElse(return None)
+    val attr = sortAttr(ks, sort).getOrElse(return None)
     val head = sort.order.head
-    val attr = subst(head.child) match {
-      case a: Attribute if relIds.contains(a.exprId) &&
-        KeyedTable.statsOrderedType(a.dataType) &&
-        !a.name.startsWith("_graft_") => a
-      case _ => return None
-    }
     Some(TopKMatch(
-      lim, lr, fsRel, root, spec, attr.name, k,
+      lim, ks, attr.name, k,
       head.direction == Descending, head.nullOrdering == NullsFirst,
-      partFilters, ex.ranges, notNull, ex.inLists))
+      sc.partFilters, sc.ranges, sc.notNull, sc.inLists))
   }
+
+  /** The leading sort key as an ordered-stats column of the relation. */
+  private def sortAttr(ks: KeyedScan, sort: Sort): Option[Attribute] =
+    ks.relAttrOf(sort.order.head.child)
+      .filter(at => KeyedTable.statsOrderedType(at.dataType))
 
   /** The IO half: walk the sidecar, swap the scan. */
   private def serveTopK(m: TopKMatch): Option[LogicalPlan] = {
@@ -226,21 +179,9 @@ class TopKPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         table, m.sortCol, m.k.toLong, m.desc, m.nullsFirst,
         m.partFilters, m.ranges, m.notNull, m.inLists)
     cand.flatMap { case (files, _) =>
-      val total = m.fsRel.location.inputFiles.length
-      if (files.length >= total) None
-      else {
-        val partSchema = Option(m.fsRel.partitionSchema).filter(_.nonEmpty)
-        val pruned = new InMemoryFileIndex(
-          spark, files, Map("basePath" -> m.root), partSchema)
-        logInfo(s"top-k rewrite: ${m.root} scan pruned to ${files.length} " +
-          s"of $total files for ORDER BY ${m.sortCol} " +
-          (if (m.desc) "DESC" else "ASC") + s" LIMIT ${m.k}" +
-          (if (nConds > 0) s" under $nConds filter conjunct(s)" else ""))
-        Some(m.lim.transformUp {
-          case l: LogicalRelation if l eq m.lr =>
-            l.copy(relation = m.fsRel.copy(location = pruned)(spark))
-        })
-      }
+      m.scan.prune(spark, m.lim, files)(s"top-k for ORDER BY ${m.sortCol} " +
+        (if (m.desc) "DESC" else "ASC") + s" LIMIT ${m.k}" +
+        (if (nConds > 0) s" under $nConds filter conjunct(s)" else ""))
     }
   }
 
@@ -274,53 +215,12 @@ class TopKPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       val (mnS, mxS, nnS) =
         (statCol("min", column), statCol("max", column), statCol("nn", column))
       if (mnS.isEmpty || mxS.isEmpty || nnS.isEmpty) return None
-      val filterStatCols = partFilters.map {
-        case PartitionConjuncts.PartIn(c, _, _) => statCol("p", c)
-        case PartitionConjuncts.PartNotNull(c)  => statCol("p", c)
-      }
-      if (filterStatCols.exists(_.isEmpty)) return None
-      val classCols =
-        (ranges.map(_.column) ++ notNull ++ inLists.map(_._1)).distinct
-      val nnOf = classCols.map(c => c -> statCol("nn", c)).toMap
-      if (nnOf.values.exists(_.isEmpty)) return None
-      val mmOf = (ranges.map(_.column) ++ inLists.map(_._1)).distinct.map(c =>
-        c -> ((statCol("min", c), statCol("max", c)))).toMap
-      if (mmOf.values.exists(p => p._1.isEmpty || p._2.isEmpty)) return None
-
-      val stSel = PartitionConjuncts.select(
-        st, partFilters.zip(filterStatCols.map(_.get)))
-      // Same candidate/full split as the hybrid aggregate serve —
-      // including its IN classification (single-valued file with the
-      // value in the list is FULL; containment only is CANDIDATE).
-      val candidate = (ranges.map { r =>
-        val (mnC, mxC) = (mmOf(r.column)._1.get, mmOf(r.column)._2.get)
-        val loP = r.lo.map(v =>
-          if (r.loInclusive) col(mxC) >= lit(v) else col(mxC) > lit(v))
-        val hiP = r.hi.map(v =>
-          if (r.hiInclusive) col(mnC) <= lit(v) else col(mnC) < lit(v))
-        (loP.toSeq ++ hiP.toSeq).reduceOption(_ && _).getOrElse(lit(true))
-      } ++ notNull.map(c => col(nnOf(c).get) > lit(0L))
-        ++ inLists.map { case (c, vs) =>
-          val (mnC, mxC) = (mmOf(c)._1.get, mmOf(c)._2.get)
-          vs.map(v => col(mnC) <= lit(v) && col(mxC) >= lit(v))
-            .reduce(_ || _)
-        })
-        .reduceOption(_ && _).getOrElse(lit(true))
-      val full = (ranges.map { r =>
-        val (mnC, mxC) = (mmOf(r.column)._1.get, mmOf(r.column)._2.get)
-        val loP = r.lo.map(v =>
-          if (r.loInclusive) col(mnC) >= lit(v) else col(mnC) > lit(v))
-        val hiP = r.hi.map(v =>
-          if (r.hiInclusive) col(mxC) <= lit(v) else col(mxC) < lit(v))
-        (Seq(col(nnOf(r.column).get) === col("cnt")) ++ loP.toSeq ++ hiP.toSeq)
-          .reduce(_ && _)
-      } ++ notNull.map(c => col(nnOf(c).get) === col("cnt"))
-        ++ inLists.map { case (c, vs) =>
-          val (mnC, mxC) = (mmOf(c)._1.get, mmOf(c)._2.get)
-          col(nnOf(c).get) === col("cnt") && col(mnC) === col(mxC) &&
-            vs.map(v => col(mnC) === lit(v)).reduce(_ || _)
-        })
-        .reduceOption(_ && _).getOrElse(lit(true))
+      val partSel =
+        PartitionConjuncts.statCols(st, partFilters).getOrElse(return None)
+      // Same candidate/full split as the hybrid aggregate serve.
+      val (candidate, full) = RangeConjuncts
+        .fileClasses(st, ranges, notNull, inLists).getOrElse(return None)
+      val stSel = PartitionConjuncts.select(st, partSel)
 
       val (mn, mx, nn) = (col(mnS.get), col(mxS.get), col(nnS.get))
       KeyedTable.withMetaConf(spark) {
@@ -401,74 +301,25 @@ class TopKPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def matchMorTopK(lim: GlobalLimit): Option[MorTopKMatch] = {
     val (k, sort) = limitSort(lim).getOrElse(return None)
-    val conds = mutable.Buffer.empty[(Expression, Int)]
-    val windows = mutable.Buffer.empty[Window]
-    val renames = mutable.Map.empty[ExprId, Expression]
-    val rels = mutable.Buffer.empty[LogicalRelation]
-    val pairs = mutable.Buffer.empty[(Attribute, Attribute)]
-    if (!MvPlanShape.strip(sort.child, conds, windows, renames, rels, pairs))
-      return None
-    if (pairs.nonEmpty || rels.length != 1) return None
-    val lr = rels.head
-    val fsRel = lr.relation match {
-      case h: HadoopFsRelation => h
-      case _ => return None
-    }
-    val root = fsRel.location.rootPaths match {
-      case Seq(one) => one.toString
-      case _ => return None
-    }
-    val spec = Option(KeyedTable.specRegistry.get(root)).getOrElse(return None)
-    if (!spec.retainHistory) return None
-    val subst = MvPlanShape.substFn(renames)
-    val relIds = lr.output.map(_.exprId).toSet
-    def relAttrOf(e: Expression): Option[Attribute] = subst(e) match {
-      case a: Attribute if relIds.contains(a.exprId) &&
-        !a.name.startsWith("_graft_") => Some(a)
-      case _ => None
-    }
-    val rn = windows.toSeq match {
-      case Seq(w) => MvPlanShape.resolveRnOf(w, spec).getOrElse(return None)
-      case _ => return None
-    }
-    val split = conds.toSeq.flatMap { case (c, d) =>
-      MvPlanShape.splitConjunction(c).map(e => (e, d))
-    }
-    val (rnConds, rest) =
-      split.partition(p => MvPlanShape.isRnEqOne(p._1, rn))
-    if (rnConds.map(_._2) != Seq(0)) return None
-    // Beside rn = 1: partition point conjuncts ABOVE the window only.
+    val ks = KeyedScan.of(sort.child).getOrElse(return None)
+    if (!ks.spec.retainHistory) return None
+    val rest = ks.resolved.getOrElse(return None)
+    // Beside rn = 1: conjuncts ABOVE the window only. Partition point
+    // conjuncts select whole files; literal ranges / IS NOT NULL /
+    // IN-lists on stats-covered columns ride the COW walk's
+    // full/candidate classification composed with winner purity (see
+    // serveMorTopK); anything else declines. A partition column never
+    // leads the sort.
     if (rest.exists(_._2 != 0)) return None
-    val partColsL =
-      spec.partitionCols.map(_.toLowerCase(Locale.ROOT)).toSet
-    def partFilterOf(e: Expression) = PartitionConjuncts.of(
-      e, x => relAttrOf(x)
-        .filter(at => partColsL.contains(at.name.toLowerCase(Locale.ROOT))))
-    val restConds = rest.map(_._1)
-    if (restConds.exists(!_.deterministic)) return None
-    val (partConds, rangeConds) =
-      restConds.partition(c => partFilterOf(c).isDefined)
-    val partFilters = partConds.flatMap(partFilterOf)
-    // Literal ranges / IS NOT NULL / IN-lists on stats-covered columns
-    // ride the COW walk's full/candidate classification composed with
-    // winner purity (see serveMorTopK); anything else declines.
-    val ex = RangeConjuncts.extract(
-      rangeConds,
-      e => relAttrOf(e).filter(at => KeyedTable.statsOrderedType(at.dataType)))
-    if (ex.other.nonEmpty || ex.nullPreds.exists(_._2)) return None
-    val notNull = ex.nullPreds.map(_._1)
+    val sc = RangeConjuncts.statsConjuncts(ks, rest.map(_._1))
+      .getOrElse(return None)
+    val attr = sortAttr(ks, sort).filterNot(at => ks.isPartitionCol(at.name))
+      .getOrElse(return None)
     val head = sort.order.head
-    val attr = subst(head.child) match {
-      case a: Attribute if relIds.contains(a.exprId) &&
-        KeyedTable.statsOrderedType(a.dataType) &&
-        !a.name.startsWith("_graft_") &&
-        !spec.partitionCols.exists(_.equalsIgnoreCase(a.name)) => a
-      case _ => return None
-    }
     Some(MorTopKMatch(
-      lim, sort, spec, attr.name, k,
+      lim, sort, ks.spec, attr.name, k,
       head.direction == Descending, head.nullOrdering == NullsFirst,
-      partFilters, ex.ranges, notNull, ex.inLists))
+      sc.partFilters, sc.ranges, sc.notNull, sc.inLists))
   }
 
   /** Every resolved top-k shape in `plan` the MoR arm would serve if
@@ -511,66 +362,27 @@ class TopKPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       // Partition point conjuncts select whole sidecar rows (and whole
       // winners) BEFORE the walk — both the accumulation and the kept
       // set then see only the matching partitions' files.
-      val filterStatCols = partFilters.map {
-        case PartitionConjuncts.PartIn(c, _, _)  => statCol("p", c)
-        case PartitionConjuncts.PartNotNull(c)   => statCol("p", c)
-      }
-      if (filterStatCols.exists(_.isEmpty)) return None
-      // Range/IS NOT NULL/IN classification columns must be covered.
-      val classCols =
-        (ranges.map(_.column) ++ notNull ++ inLists.map(_._1)).distinct
-      val nnOf = classCols.map(c => c -> statCol("nn", c)).toMap
-      if (nnOf.values.exists(_.isEmpty)) return None
-      val mmOf = (ranges.map(_.column) ++ inLists.map(_._1)).distinct
-        .map(c => c -> ((statCol("min", c), statCol("max", c)))).toMap
-      if (mmOf.values.exists(p => p._1.isEmpty || p._2.isEmpty)) return None
-      val settled = table.settledWinnerEntries(spark).getOrElse(return None)
-      val stRel = st.withColumn(
-        "_rfile", table.relOfFileCol(spark, col("file")))
-      val MorWinnerMaps.WinnerMaps(_, cntByFile, wcU, _) =
-        MorWinnerMaps.of(spark, table, settled, stRel)
-          .getOrElse(return None)
-      val joined = PartitionConjuncts.select(
-          stRel, partFilters.zip(filterStatCols.map(_.get)))
-        .withColumn("wcnt", wcU(col("_rfile")))
-      val (mn, mx, nn) = (col(mnS.get), col(mxS.get), col(nnS.get))
-      val pure = col("wcnt").isNotNull && col("wcnt") === col("cnt") &&
-        col("cnt") > 0
+      val partSel =
+        PartitionConjuncts.statCols(st, partFilters).getOrElse(return None)
       // The COW walk's full/candidate classification composed with
       // winner purity: a PURE file FULL under every conjunct has all
       // its (winner) rows matching, so its nn drives the accumulation;
       // any file with winners that MAY hold a matching row is kept when
       // its bounds reach the walk bound (all-version bounds are outer
       // bounds of winners).
-      val candidate = (ranges.map { r =>
-        val (mnC, mxC) = (mmOf(r.column)._1.get, mmOf(r.column)._2.get)
-        val loP = r.lo.map(v =>
-          if (r.loInclusive) col(mxC) >= lit(v) else col(mxC) > lit(v))
-        val hiP = r.hi.map(v =>
-          if (r.hiInclusive) col(mnC) <= lit(v) else col(mnC) < lit(v))
-        (loP.toSeq ++ hiP.toSeq).reduceOption(_ && _).getOrElse(lit(true))
-      } ++ notNull.map(c => col(nnOf(c).get) > lit(0L))
-        ++ inLists.map { case (c, vs) =>
-          val (mnC, mxC) = (mmOf(c)._1.get, mmOf(c)._2.get)
-          vs.map(v => col(mnC) <= lit(v) && col(mxC) >= lit(v))
-            .reduce(_ || _)
-        })
-        .reduceOption(_ && _).getOrElse(lit(true))
-      val full = (ranges.map { r =>
-        val (mnC, mxC) = (mmOf(r.column)._1.get, mmOf(r.column)._2.get)
-        val loP = r.lo.map(v =>
-          if (r.loInclusive) col(mnC) >= lit(v) else col(mnC) > lit(v))
-        val hiP = r.hi.map(v =>
-          if (r.hiInclusive) col(mxC) <= lit(v) else col(mxC) < lit(v))
-        (Seq(col(nnOf(r.column).get) === col("cnt")) ++ loP.toSeq ++
-          hiP.toSeq).reduce(_ && _)
-      } ++ notNull.map(c => col(nnOf(c).get) === col("cnt"))
-        ++ inLists.map { case (c, vs) =>
-          val (mnC, mxC) = (mmOf(c)._1.get, mmOf(c)._2.get)
-          col(nnOf(c).get) === col("cnt") && col(mnC) === col(mxC) &&
-            vs.map(v => col(mnC) === lit(v)).reduce(_ || _)
-        })
-        .reduceOption(_ && _).getOrElse(lit(true))
+      val (candidate, full) = RangeConjuncts
+        .fileClasses(st, ranges, notNull, inLists).getOrElse(return None)
+      val settled = table.settledWinnerEntries(spark).getOrElse(return None)
+      val stRel = st.withColumn(
+        "_rfile", table.relOfFileCol(spark, col("file")))
+      val MorWinnerMaps.WinnerMaps(_, cntByFile, wcU, _) =
+        MorWinnerMaps.of(spark, table, settled, stRel)
+          .getOrElse(return None)
+      val joined = PartitionConjuncts.select(stRel, partSel)
+        .withColumn("wcnt", wcU(col("_rfile")))
+      val (mn, mx, nn) = (col(mnS.get), col(mxS.get), col(nnS.get))
+      val pure = col("wcnt").isNotNull && col("wcnt") === col("cnt") &&
+        col("cnt") > 0
       KeyedTable.withMetaConf(spark) {
         try {
           val walkKey = if (desc) mn else mx
@@ -600,35 +412,12 @@ class TopKPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           // Residual: every conjunct re-applied on the winner rows (the
           // original child is replaced wholesale; for partition filters
           // this is defensive — they selected whole files).
-          val residual: Seq[org.apache.spark.sql.Column] = partFilters.map {
-            case PartitionConjuncts.PartIn(c, t, vs) =>
-              val toScala = org.apache.spark.sql.catalyst
-                .CatalystTypeConverters.createToScalaConverter(t)
-              col(c).isin(vs.map(toScala): _*)
-            case PartitionConjuncts.PartNotNull(c) => col(c).isNotNull
-          } ++ ranges.map { r =>
-            val loP = r.lo.map(v =>
-              if (r.loInclusive) col(r.column) >= lit(v)
-              else col(r.column) > lit(v))
-            val hiP = r.hi.map(v =>
-              if (r.hiInclusive) col(r.column) <= lit(v)
-              else col(r.column) < lit(v))
-            (loP.toSeq ++ hiP.toSeq).reduceOption(_ && _)
-              .getOrElse(lit(true))
-          } ++ notNull.map(c => col(c).isNotNull) ++
-            inLists.map { case (c, vs) => col(c).isin(vs: _*) }
+          val residual =
+            RangeConjuncts.rowFilters(partFilters, ranges, notNull, inLists)
           val winners = residual.foldLeft(
             table.winnerRowsOf(spark, kept, settled))(_.filter(_))
-          val bplan = winners.queryExecution.analyzed
-          val byName = bplan.output
-            .map(at => at.name.toLowerCase(Locale.ROOT) -> at).toMap
-          val aliases: Seq[NamedExpression] = sort.child.output.map { at =>
-            val src = byName.getOrElse(
-              at.name.toLowerCase(Locale.ROOT), return None)
-            if (src.dataType != at.dataType) return None
-            Alias(src, at.name)(exprId = at.exprId)
-          }
-          val newChild = Project(aliases, bplan)
+          val newChild =
+            MorWinnerMaps.asOutput(winners, sort.child.output).getOrElse(return None)
           logInfo(s"top-k rewrite: ${table.spec.path} RESOLVED scan " +
             s"replaced by winner rows of ${kept.length} of " +
             s"${cntByFile.size} files for ORDER BY $column " +

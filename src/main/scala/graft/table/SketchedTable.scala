@@ -22,9 +22,10 @@ import graft.sources.Tables
   * pipeline (a `KeyedTable`-style managed write; `nlist` sized so each
   * cell is a few files), queries prune to their probe cells, and the
   * centroid matrix — nlist×dim floats, kilobytes — travels beside the
-  * data. Here the index is built lazily per (session JVM, source dir)
-  * into a scratch path, which keeps the driver contract (queries take
-  * the raw fixture dir) while the scan-side plans are the indexed ones.
+  * data. Here the index is built lazily per (session JVM, source dir,
+  * its data files) into a scratch path, which keeps the driver contract
+  * (queries take the raw fixture dir) while the scan-side plans are the
+  * indexed ones.
   */
 object SketchedTable {
   val Bits = 48
@@ -42,9 +43,12 @@ object SketchedTable {
       centroids: Array[Array[Float]],
       codebooks: Array[Array[Array[Float]]])
 
-  // (source dir) -> index; per-JVM so every fresh run rebuilds from the
-  // current fixture files (no cross-run staleness).
-  private val built = TrieMap.empty[String, AnnIndex]
+  // (source dir) -> (the data files it was built from, index): a rewrite
+  // of the files under the dir replaces the entry — the same memo rule as
+  // Similarity's centroid cache — so a query never serves an index of
+  // embeddings that are gone.
+  private val built =
+    TrieMap.empty[String, (Seq[(String, Long, Long)], AnnIndex)]
 
   private def indexPath(dir: String): String = {
     val key = java.security.MessageDigest.getInstance("MD5")
@@ -52,26 +56,32 @@ object SketchedTable {
     s"${sys.props("java.io.tmpdir")}/graft_ann_index/$key"
   }
 
-  /** Build (once per JVM per source dir) and return the indexed layout:
-    * parquet partitioned by `cid` with materialized `sketch` (hyperplane
-    * LSH) and `pq` (packed product-quantization code) columns, plus the
-    * IVF centroid matrix and PQ codebooks.
+  /** Build (once per JVM per source dir and data-file set) and return
+    * the indexed layout: parquet partitioned by `cid` with materialized
+    * `sketch` (hyperplane LSH) and `pq` (packed product-quantization
+    * code) columns, plus the IVF centroid matrix and PQ codebooks.
     */
-  def ensure(s: SparkSession, dir: String): AnnIndex =
-    built.getOrElseUpdate(dir, {
-      val raw = Tables.embeddings(s, dir)
-      val e = raw.repartition(s.sparkContext.defaultParallelism)
-      val centroids = Similarity.ivfCentroids(raw, NList, Iters)
-      val codebooks = Similarity.pqTrain(e, PqM, PqK, Dim)
-      val path = indexPath(dir)
-      Similarity.withCentroidId(
-          e.withColumn("sketch",
-            VectorFunctions.hyperplaneSketch(col("embedding"), Bits, Dim))
-           .withColumn("pq", Similarity.pqCodeExpr(col("embedding"), codebooks)),
-          centroids)
-        .write.mode("overwrite").partitionBy("cid").parquet(path)
-      AnnIndex(path, centroids, codebooks)
-    })
+  def ensure(s: SparkSession, dir: String): AnnIndex = built.synchronized {
+    val raw = Tables.embeddings(s, dir)
+    val files = Similarity.dataFiles(raw)
+    built.get(dir) match {
+      case Some((f, idx)) if files.contains(f) => idx
+      case _ =>
+        val e = raw.repartition(s.sparkContext.defaultParallelism)
+        val centroids = Similarity.ivfCentroids(raw, NList, Iters)
+        val codebooks = Similarity.pqTrain(e, PqM, PqK, Dim)
+        val path = indexPath(dir)
+        Similarity.withCentroidId(
+            e.withColumn("sketch",
+              VectorFunctions.hyperplaneSketch(col("embedding"), Bits, Dim))
+             .withColumn("pq", Similarity.pqCodeExpr(col("embedding"), codebooks)),
+            centroids)
+          .write.mode("overwrite").partitionBy("cid").parquet(path)
+        val idx = AnnIndex(path, centroids, codebooks)
+        files.foreach(f => built.put(dir, (f, idx)))
+        idx
+    }
+  }
 
   private def readIndex(s: SparkSession, path: String): DataFrame =
     s.read.parquet(path)

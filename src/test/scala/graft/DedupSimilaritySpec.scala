@@ -259,6 +259,26 @@ class DedupSimilaritySpec extends SparkTestBase {
       "cid probe should prune partitions at the file scan")
   }
 
+  test("indexed ANN follows a rewrite of the embeddings under the same dir") {
+    import graft.table.SketchedTable
+    val dir = java.nio.file.Files.createTempDirectory("graft_ann_rewrite_").toString
+    def writeFrom(src: String): Unit =
+      spark.read.parquet(s"$src/embeddings.parquet")
+        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.select("vec_id").as[Long].collect().toSeq
+    writeFrom(sf0001)
+    ids(SketchedTable.annIvfIndexed(spark, dir)) // builds the index
+    writeFrom(sf001)
+    val brute = ids(Similarity.annBrute(spark, dir))
+    assert(ids(SketchedTable.annIvfIndexed(spark, dir)) == brute,
+      "indexed IVF must serve the rewritten embeddings")
+    assert(ids(SketchedTable.annLshIndexed(spark, dir)) == brute,
+      "indexed LSH must serve the rewritten embeddings")
+    assert(ids(SketchedTable.annPqIndexed(spark, dir)) == brute,
+      "indexed PQ must serve the rewritten embeddings")
+  }
+
   test("IVF centroids: nlist rows of full dimension, stable across calls") {
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val c1 = Similarity.ivfCentroids(e, nlist = 8, iters = 1)
