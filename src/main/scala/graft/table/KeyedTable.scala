@@ -1,6 +1,6 @@
 package graft.table
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -198,7 +198,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
 
   /** Merge `written` into the recorded table schema (field union; drifted
     * common fields take [[SchemaEvolution.widenType]]; everything nullable —
-    * evolution null-fills) and persist it via write-tmp + rename.
+    * evolution null-fills) and persist it via [[Staging.replaceFile]].
     */
   private def recordSchema(spark: SparkSession, written: org.apache.spark.sql.types.StructType): Unit = {
     import org.apache.spark.sql.types.{StructField, StructType}
@@ -224,13 +224,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
         val oldNames = old.fieldNames.toSet
         StructType(kept ++ written.fields.filterNot(f => oldNames(f.name)).map(_.copy(nullable = true)))
     }
-    val f = fs(spark)
-    val tmp = new Path(spec.path, "._graft_schema.json.tmp")
-    val out = f.create(tmp, true)
-    try out.write(merged.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    f.delete(sidecarPath, false)
-    f.rename(tmp, sidecarPath)
+    Staging.replaceFile(fs(spark), sidecarPath, merged.json)
   }
 
   /** Can existing parquet files recorded as `from` be read under a schema
@@ -524,7 +518,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
         .repartitionByRange(parts, order: _*)
         .sortWithinPartitions(order: _*)
         .drop(zc),
-      "_graft_zorder_tmp")
+      "zorder")
     recordCommit(spark, defaultCommitTime(), "zorder", pre)
   }
 
@@ -532,36 +526,14 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     * target file size (the clustering plan's small-file sizing).
     */
   private def filePartsFor(spark: SparkSession, targetFileBytes: Long): Int = {
-    val n = listDataFiles(spark).map(_._2).sum
+    val n = listDataFiles(spark).map(_._2.getLen).sum
     math.max(1, math.ceil(n.toDouble / targetFileBytes).toInt)
   }
 
-  /** Recursive (qualified path, length) listing of the table's DATA
-    * files. The root is qualified so the prefix strip always matches the
-    * fully qualified paths listFiles returns (a relative spec.path would
-    * otherwise no-op the strip and ancestor segments like ".work" would
-    * misclassify every data file as metadata); any path component under
-    * the root starting with '_' or '.' is metadata (Spark's own
-    * data-file listing rule) — e.g. the _graft_colstats / _graft_bloom /
-    * _graft_manifest sidecars keep parquet of their own. ONE shared
-    * helper for file sizing, the bloom index, and manifests, so the
-    * classification can never diverge between consumers.
-    */
-  private def listDataFiles(spark: SparkSession): Seq[(String, Long)] = {
+  /** [[KeyedTable.dataFilesUnder]] over the whole table. */
+  private def listDataFiles(spark: SparkSession): Seq[(String, FileStatus)] = {
     KeyedTable.fullListings.incrementAndGet() // test-pinned: hot write paths must not call this
-    val f = fs(spark)
-    val root = f.makeQualified(new Path(spec.path))
-    val rootPrefix = root.toUri.getPath
-    val it = f.listFiles(root, true)
-    val b = Seq.newBuilder[(String, Long)]
-    while (it.hasNext) {
-      val s = it.next()
-      val p = s.getPath
-      val rel = p.toUri.getPath.stripPrefix(rootPrefix).split('/')
-      val isMeta = rel.exists(seg => seg.startsWith("_") || seg.startsWith("."))
-      if (!isMeta && p.getName.endsWith(".parquet")) b += (p.toString -> s.getLen)
-    }
-    b.result()
+    KeyedTable.dataFilesUnder(fs(spark), new Path(spec.path))
   }
 
   // Column-stats index sidecar (Hudi metadata-table `column_stats`): one
@@ -736,27 +708,19 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     (sel, total)
   }
 
-  /** All current data-file paths (FS-qualified), metadata excluded. */
-  private def dataFiles(spark: SparkSession): Set[String] =
-    listDataFiles(spark).map(_._1).toSet
-
   /** Current data-file SIZES in bytes — advisor context only (one full
     * listing; hot write paths must not call this, see the
     * [[KeyedTable.fullListings]] pin).
     */
   private[graft] def dataFileSizes(spark: SparkSession): Seq[Long] =
-    listDataFiles(spark).map(_._2)
+    listDataFiles(spark).map(_._2.getLen)
 
   /** Current data files, TABLE-RELATIVE — the rendering commit markers
     * record (portable across schemes and across a table move).
     */
   private def relDataFiles(spark: SparkSession): Set[String] = {
     if (!fs(spark).exists(new Path(spec.path))) return Set.empty // bootstrap
-    val rootPrefix =
-      fs(spark).makeQualified(new Path(spec.path)).toUri.getPath + "/"
-    listDataFiles(spark).map { case (p, _) =>
-      new Path(p).toUri.getPath.stripPrefix(rootPrefix)
-    }.toSet
+    listDataFiles(spark).map(_._1).toSet
   }
 
   /** [[relDataFiles]] restricted to the given table-relative partition
@@ -769,24 +733,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
       spark: SparkSession, dirs: Set[String]): Set[String] = {
     val f = fs(spark)
     if (!f.exists(new Path(spec.path))) return Set.empty
-    val rootPrefix =
-      f.makeQualified(new Path(spec.path)).toUri.getPath + "/"
-    dirs.flatMap { d =>
-      val p = new Path(s"${spec.path}/$d")
-      if (!f.exists(p)) Set.empty[String]
-      else {
-        val it = f.listFiles(f.makeQualified(p), true)
-        val b = Set.newBuilder[String]
-        while (it.hasNext) {
-          val s = it.next()
-          val rel = s.getPath.toUri.getPath.stripPrefix(rootPrefix)
-          if (!rel.split('/').exists(seg =>
-              seg.startsWith("_") || seg.startsWith(".")) &&
-            s.getPath.getName.endsWith(".parquet")) b += rel
-        }
-        b.result()
-      }
-    }
+    KeyedTable.dataFilesUnder(f, new Path(spec.path), dirs).map(_._1).toSet
   }
 
   /** Pre-write file snapshot, captured at mutator ENTRY so
@@ -885,8 +832,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
         val (m, k) =
           if (head.isEmpty) bloomConf(spark)
           else (head(0).getInt(0), head(0).getInt(1))
-        val tmpIdx = new Path(spec.path, "._graft_bloom_tmp")
-        f.delete(tmpIdx, true)
+        val tmpIdx = Staging.dir(new Path(spec.path), "bloom")
         spark.read.parquet(bloomDir)
           .filter(!col("file").isInCollection(candRel))
           .write.mode(SaveMode.Overwrite).parquet(tmpIdx.toString)
@@ -1019,28 +965,22 @@ final class KeyedTable(val spec: KeyedTableSpec) {
   }
 
   /** Every index-sidecar publish — build and refresh, RLI and secondary —
-    * goes through a sibling tmp dir (built from Path parts, never string
-    * concat: a trailing slash in the table path must not turn the
-    * sibling into a child of the table) and renames into place: a crash
-    * leaves either the old index or none at all (lookups fall back to
-    * the full read), never a partially-committed one whose surviving
-    * rows would claim the new `built_at` and silently drop keys.
-    * `dist` is the probe column the entries hash-distribute on.
+    * goes through a [[Staging.replaceDir]] stage: a crash leaves either
+    * the old index or none at all (lookups fall back to the full read),
+    * never a partially-committed one whose surviving rows would claim the
+    * new `built_at` and silently drop keys. `dist` is the probe column
+    * the entries hash-distribute on.
     */
   private def publishSidecar(
       spark: SparkSession, dirName: String, entries: DataFrame,
       dist: Column): Unit = {
-    val f = fs(spark)
-    val p = new Path(spec.path)
-    val tmp = new Path(p.getParent, p.getName + dirName + "_tmp")
-    val dst = new Path(p, dirName)
-    f.delete(tmp, true)
-    entries
-      .repartition(4, dist)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    f.delete(dst, true)
-    if (!f.rename(tmp, dst))
-      throw new java.io.IOException(s"rename $tmp -> $dst failed")
+    val root = new Path(spec.path)
+    Staging.replaceDir(fs(spark), root, new Path(root, dirName),
+      dirName.stripPrefix("_graft_")) { tmp =>
+      entries
+        .repartition(4, dist)
+        .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    }
   }
 
   private def publishRli(spark: SparkSession, entries: DataFrame): Unit =
@@ -1859,7 +1799,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     def relOf(abs: String): String =
       new Path(abs).toUri.getPath.stripPrefix(rootPrefix)
     val lenByRel: Map[String, Long] =
-      listDataFiles(spark).map { case (p, l) => relOf(p) -> l }.toMap
+      listDataFiles(spark).map { case (r, st) => r -> st.getLen }.toMap
     def carriedPlusNew(): Option[DataFrame] = {
       if (!f.exists(new Path(staleStatsDir))) return None
       try {
@@ -1996,18 +1936,10 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     * only (same argument as [[readPruned]]): dropped files hold no row
     * inside EVERY range (stats admit false positives, never false
     * negatives), and on a copy-on-write table rows are independent, so
-    * removing them cannot change any other row's visibility.
-    */
-  private[graft] def rangeCandidateFiles(
-      spark: SparkSession,
-      ranges: Seq[(String, Long, Long)]): Option[(Seq[Path], Int)] =
-    rangeCandidateFilesTyped(
-      spark, ranges.map { case (c, lo, hi) => ColumnRange.inclusive(c, lo, hi) })
-
-  /** Typed form of [[rangeCandidateFiles]]: bounds in the columns' own
-    * types with per-side inclusivity — the shape
-    * [[graft.plans.RangePruneRewrite]] extracts from declarative plans
-    * over dates, timestamps, decimals and strings as well as integers.
+    * removing them cannot change any other row's visibility. Bounds are
+    * in the columns' own types with per-side inclusivity — the shape
+    * the rule extracts over dates, timestamps, decimals and strings as
+    * well as integers.
     */
   private[graft] def rangeCandidateFilesTyped(
       spark: SparkSession,
@@ -2328,7 +2260,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     rewriteViaTmp(
       spark,
       readRaw(spark).filter(col(CommitTimeCol) <= commit),
-      "_graft_restore_tmp")
+      "restore")
     recordCommit(spark, defaultCommitTime(), "restore", pre)
   }
 
@@ -2342,7 +2274,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     require(spec.retainHistory, "vacuum applies to retainHistory tables")
     if (!exists(spark)) return
     val pre = preCommitFiles(spark)
-    rewriteViaTmp(spark, resolveLatest(readRaw(spark)), "_graft_vacuum_tmp")
+    rewriteViaTmp(spark, resolveLatest(readRaw(spark)), "vacuum")
     recordCommit(spark, defaultCommitTime(), "vacuum", pre)
   }
 
@@ -2465,7 +2397,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
         all.repartition(spec.partitionCols.map(col): _*)
       else all.coalesce(1)
     val pre = preCommitFiles(spark)
-    rewriteViaTmp(spark, clustered, "_graft_compact_tmp")
+    rewriteViaTmp(spark, clustered, "compact")
     recordCommit(spark, defaultCommitTime(), "compact", pre)
   }
 
@@ -2539,13 +2471,10 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     require(spec.partitionCols.nonEmpty,
       "partition compaction needs a partitioned table; use compact()")
     if (!exists(spark)) return Nil
-    val rootPrefix =
-      fs(spark).makeQualified(new Path(spec.path)).toUri.getPath + "/"
     val byDir = listDataFiles(spark)
-      .map { case (abs, len) =>
-        val rel = new Path(abs).toUri.getPath.stripPrefix(rootPrefix)
+      .map { case (rel, st) =>
         val i = rel.lastIndexOf('/')
-        (if (i < 0) "" else rel.substring(0, i), len)
+        (if (i < 0) "" else rel.substring(0, i), st.getLen)
       }
       .groupBy(_._1)
     val frag = byDir.collect {
@@ -2560,38 +2489,12 @@ final class KeyedTable(val spec: KeyedTableSpec) {
   }
 
   /** Rollback of failed table-service actions — Hudi's rollback/cleaner
-    * for crashed compactions and clusterings. Every rewrite goes through
-    * a SIBLING scratch dir (`<table>_graft_<service>_tmp`,
-    * [[rewriteViaTmp]]) so a crash never corrupts the live path — but it
-    * leaves the scratch behind, and a crashed Spark committer leaves
-    * `_temporary` / `.spark-staging-*` inside the table dir. None of it
-    * is consulted by any read path (scratch is outside the table path;
-    * committer dirs are `_`/`.`-hidden from scans), yet at production
-    * scale the debris holds real bytes and inflates every file listing,
-    * so the cleaner removes exactly that set and nothing else: data
-    * files, sidecar indexes, and the lock file are never touched —
-    * observable table state is IDENTICAL before and after.
+    * for crashed compactions and clusterings: removes the orphaned
+    * write-asides a crash leaves behind ([[Staging.sweepOrphans]]) and
+    * nothing else, so observable table state is IDENTICAL before and after.
     */
-  def rollbackDebris(spark: SparkSession): Unit = {
-    val f = fs(spark)
-    val root = new Path(spec.path)
-    Option(root.getParent).filter(f.exists).foreach { parent =>
-      f.listStatus(parent)
-        .filter { st =>
-          val n = st.getPath.getName
-          n != root.getName &&
-            n.startsWith(root.getName + "_graft_") && n.endsWith("_tmp")
-        }
-        .foreach(st => f.delete(st.getPath, true))
-    }
-    if (f.exists(root))
-      f.listStatus(root)
-        .filter { st =>
-          val n = st.getPath.getName
-          n == "_temporary" || n.startsWith(".spark-staging")
-        }
-        .foreach(st => f.delete(st.getPath, true))
-  }
+  def rollbackDebris(spark: SparkSession): Unit =
+    Staging.sweepOrphans(fs(spark), new Path(spec.path), KeyedTable.timelineDir(spec.path))
 
   /** Sort-order clustering — Hudi's clustering service with a sort
     * strategy (`hoodie.clustering.plan.strategy.sort.columns`): rewrite
@@ -2624,7 +2527,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     rewriteViaTmp(
       spark,
       all.repartitionByRange(parts, order: _*).sortWithinPartitions(order: _*),
-      "_graft_cluster_tmp")
+      "cluster")
     recordCommit(spark, defaultCommitTime(), "cluster", pre)
   }
 
@@ -2778,9 +2681,6 @@ final class KeyedTable(val spec: KeyedTableSpec) {
   // DISCOVERED as a partition column by root scans and break them.
   private def genDirStr(n: Int) = s"${spec.path}/_graft_gen_$n"
 
-  private def currentLayout(spark: SparkSession): Seq[String] =
-    layoutGens(spark).lastOption.map(_._2).getOrElse(spec.partitionCols)
-
   /** Open a new layout generation: future writes partition by `newCols`;
     * nothing already written moves. See the section comment for read
     * semantics and the `globalKeys` requirement. The table services that
@@ -2812,18 +2712,11 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     val prior = layoutVersionFiles(spark)
     val version = prior.lastOption
       .map(_.getName.stripPrefix("_graft_layout_").toInt + 1).getOrElse(1)
-    val tmp = new Path(spec.path, "._graft_layout.tmp")
-    val out = f.create(tmp, true)
-    try out.write((gens :+ (next, newCols))
-      .map { case (g, cs) => s"$g:${cs.mkString(",")}" }
-      .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    // Rename to a NEW versioned name (atomic — destination never
+    // Publish to a NEW versioned name (atomic — destination never
     // pre-exists), THEN retire older versions: a crash anywhere leaves
     // the previous sidecar readable, never an absence window.
-    val dest = new Path(spec.path, s"_graft_layout_$version")
-    if (!f.rename(tmp, dest))
-      throw new java.io.IOException(s"failed to publish layout sidecar $dest")
+    Staging.createFile(f, new Path(spec.path, s"_graft_layout_$version"),
+      (gens :+ (next, newCols)).map { case (g, cs) => s"$g:${cs.mkString(",")}" }.mkString("\n"))
     prior.foreach(p => f.delete(p, false))
     invalidateLayoutCache(spark)
     // Evolution moves no data files — the diff against the current
@@ -2886,7 +2779,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     // a dangling candidate. Recording the fold's own file set re-enables
     // O(delta-files) reads for every boundary at or after the fold.
     val pre = Some(relDataFiles(spark))
-    rewriteViaTmp(spark, folded, "_graft_fold_tmp")
+    rewriteViaTmp(spark, folded, "fold")
     invalidateLayoutCache(spark)
     recordCommit(spark, defaultCommitTime(), "fold", pre)
   }
@@ -2959,7 +2852,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     // column scan of the table it is trying not to read.
     val snapshotId = s"s${defaultCommitTime()}-${
       fs(spark).listStatus(new Path(manifestDirSafe(spark))).length}"
-    dataFiles(spark).toSeq.sorted.toDF("file")
+    listDataFiles(spark).map(_._2.getPath.toString).sorted.toDF("file")
       .coalesce(1)
       .write.mode(SaveMode.ErrorIfExists).parquet(s"$manifestDir/$snapshotId")
     snapshotId
@@ -3251,18 +3144,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
 
   private def writeSyncedNames(spark: SparkSession, names: Seq[String]): Unit = {
     if (names.isEmpty) return
-    val f = fs(spark)
-    val tmp = new Path(spec.path, "._graft_catalog.tmp")
-    val out = f.create(tmp, true)
-    try out.write(names.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    f.delete(catalogSidecarPath, false)
-    // A failed rename here would silently lose every recorded
-    // registration (refusal-safe — tables just stop replaying — but the
-    // caller deserves to know the sync did not persist).
-    if (!f.rename(tmp, catalogSidecarPath))
-      throw new java.io.IOException(
-        s"failed to publish catalog sidecar $catalogSidecarPath (rename returned false)")
+    Staging.replaceFile(fs(spark), catalogSidecarPath, names.mkString("\n"))
   }
 
   /** Replay the sidecar's registrations into this (possibly fresh)
@@ -3364,7 +3246,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
 
   /** Partition-scoped APPEND through a sibling staging directory: the
     * batch is written once (partitioned, the same write job a direct
-    * append runs) into `<path>_graft_ins_<unique>_tmp`, each produced
+    * append runs) into a fresh [[Staging.dir]] stage, each produced
     * part file is MOVED (rename) into its table partition dir, and the
     * moved table-relative names are returned — the commit's EXACT file
     * record. Replaces the direct-append sequence [batch-scan
@@ -3381,44 +3263,36 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     * exactly as a torn append's); rename collisions are impossible in
     * practice (part names embed the write job's UUID) and checked
     * loudly. The staging dir is the writer's own, and only it is
-    * deleted: two unlocked concurrent appends never remove each other's
-    * staged files (the `_tmp` suffix leaves a crashed writer's dir to
-    * [[rollbackDebris]]). Local/HDFS-style rename is O(1); an
+    * deleted, also when the write fails: two unlocked concurrent appends
+    * never remove each other's staged files (a crashed writer's dir is
+    * left to [[rollbackDebris]]). Local/HDFS-style rename is O(1); an
     * object-store backend would pay a copy per file — the direct-append
     * path there pays the same copy inside its commit protocol.
     */
   private def appendViaStaging(
       spark: SparkSession, df: DataFrame): Seq[String] = {
     val f = fs(spark)
-    val staging = new Path(
-      s"${spec.path}_graft_ins_${java.util.UUID.randomUUID()}_tmp")
-    val w = df.write.mode(SaveMode.ErrorIfExists)
-    (if (spec.partitionCols.nonEmpty) w.partitionBy(spec.partitionCols: _*) else w)
-      .parquet(staging.toString)
-    // Sidecars retire before any file LANDS in the table (the staging
-    // write is invisible to readers) — writeOut's stale-absent order.
-    retireColumnStats(f)
-    f.delete(new Path(bloomDir), true)
-    val stagingPrefix = f.makeQualified(staging).toUri.getPath + "/"
-    val added = Seq.newBuilder[String]
-    val it = f.listFiles(f.makeQualified(staging), true)
-    while (it.hasNext) {
-      val s = it.next()
-      val rel = s.getPath.toUri.getPath.stripPrefix(stagingPrefix)
-      val segs = rel.split('/')
-      if (s.getPath.getName.endsWith(".parquet") &&
-        !segs.exists(seg => seg.startsWith("_") || seg.startsWith("."))) {
+    val added = Staging.staged(f, Staging.dir(new Path(spec.path), "ins")) { staging =>
+      val w = df.write.mode(SaveMode.ErrorIfExists)
+      (if (spec.partitionCols.nonEmpty) w.partitionBy(spec.partitionCols: _*) else w)
+        .parquet(staging.toString)
+      // Sidecars retire before any file LANDS in the table (the staging
+      // write is invisible to readers) — writeOut's stale-absent order.
+      retireColumnStats(f)
+      f.delete(new Path(bloomDir), true)
+      val moved = KeyedTable.dataFilesUnder(f, staging).map { case (rel, st) =>
         val dst = new Path(s"${spec.path}/$rel")
         f.mkdirs(dst.getParent)
         require(!f.exists(dst), s"staged append collision: $dst exists")
-        require(f.rename(s.getPath, dst),
-          s"staged append could not move ${s.getPath} to $dst")
-        added += rel
+        require(f.rename(st.getPath, dst),
+          s"staged append could not move ${st.getPath} to $dst")
+        rel
       }
+      f.delete(staging, true)
+      moved
     }
-    f.delete(staging, true)
     recordSchema(spark, df.schema)
-    added.result().sorted
+    added.sorted
   }
 
   /** Distinct partition tuples of `df`, collected driver-side under a hard
@@ -3520,39 +3394,41 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     }
   }
 
-  /** Full-table rewrite through a temp directory + rename — a static
-    * overwrite would delete the very files the lazy plan is reading —
-    * then re-record the schema (the sidecar died with the old directory).
+  /** Full-table rewrite through a [[Staging.replaceDir]] stage of `kind`
+    * — a static overwrite would delete the very files the lazy plan is
+    * reading — then re-record the schema (the sidecar died with the old
+    * directory).
     */
-  private def rewriteViaTmp(spark: SparkSession, df: DataFrame, tmpSuffix: String): Unit = {
+  private def rewriteViaTmp(spark: SparkSession, df: DataFrame, kind: String): Unit = {
     val f = fs(spark)
-    val tmp = new Path(spec.path + tmpSuffix)
-    f.delete(tmp, true)
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (spec.partitionCols.nonEmpty) w.partitionBy(spec.partitionCols: _*) else w)
-      .parquet(tmp.toString)
-    val schema = df.schema
-    // The catalog sidecar must outlive the rewrite (registration is a
-    // property of the table, not of one directory generation).
-    val synced = syncedNames(spark)
-    // So must the key-mapping indexes (record-level + secondary): unlike
-    // the per-file sidecars (colstats/bloom, whose entries die with the
-    // files and follow the stale-absent rule), these reconcile staleness
-    // through the commit→files delta — every file this rewrite replaces
-    // lands on the marker's removed side, so the carried-over entries
-    // are subtracted and the rewritten files settle in via the delta.
-    // Dropping them here would instead force full-table rebuilds after
-    // every compaction.
-    val carried = (new Path(rliDir) +: {
-      val root = new Path(spec.path)
-      if (!f.exists(root)) Seq.empty
-      else f.listStatus(root).toSeq.map(_.getPath)
-        .filter(_.getName.startsWith("_graft_si_"))
-    }).filter(f.exists)
-    carried.foreach(p => f.rename(p, new Path(tmp, p.getName)))
-    f.delete(new Path(spec.path), true)
-    f.rename(tmp, new Path(spec.path))
-    recordSchema(spark, schema)
+    val root = new Path(spec.path)
+    val synced = Staging.replaceDir(f, root, root, kind) { tmp =>
+      val w = df.write.mode(SaveMode.Overwrite)
+      (if (spec.partitionCols.nonEmpty) w.partitionBy(spec.partitionCols: _*) else w)
+        .parquet(tmp.toString)
+      // The catalog sidecar must outlive the rewrite (registration is a
+      // property of the table, not of one directory generation).
+      val synced = syncedNames(spark)
+      // So must the key-mapping indexes (record-level + secondary): unlike
+      // the per-file sidecars (colstats/bloom, whose entries die with the
+      // files and follow the stale-absent rule), these reconcile staleness
+      // through the commit→files delta — every file this rewrite replaces
+      // lands on the marker's removed side, so the carried-over entries
+      // are subtracted and the rewritten files settle in via the delta.
+      // Dropping them here would instead force full-table rebuilds after
+      // every compaction.
+      val carried = (new Path(rliDir) +: {
+        if (!f.exists(root)) Seq.empty
+        else f.listStatus(root).toSeq.map(_.getPath)
+          .filter(_.getName.startsWith("_graft_si_"))
+      }).filter(f.exists)
+      carried.foreach { p =>
+        if (!f.rename(p, new Path(tmp, p.getName)))
+          throw new java.io.IOException(s"could not carry $p into $tmp")
+      }
+      synced
+    }
+    recordSchema(spark, df.schema)
     writeSyncedNames(spark, synced)
   }
 
@@ -3605,7 +3481,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
           readRaw(spark).drop(RecordKeyCol, PartitionPathCol), alignedC.schema)
         val combined = withMeta(
           existing.unionByName(alignedC, allowMissingColumns = true), commitTime)
-        rewriteViaTmp(spark, combined, "_graft_rewrite_tmp")
+        rewriteViaTmp(spark, combined, "rewrite")
         recordCommit(spark, commitTime, "insert", pre)
     }
   }
@@ -3700,7 +3576,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     if (spec.partitionCols.isEmpty) {
       val pre = preCommitFiles(spark) // unpartitioned: root IS the scope
       rewriteViaTmp(spark, affected.join(delKeys, joinCols, "left_anti"),
-        "_graft_delete_tmp")
+        "delete")
       recordCommit(spark, defaultCommitTime(), "delete", pre)
     } else {
       // `affected` is the expensive frame (table scan + doomed-key probe
@@ -4005,6 +3881,34 @@ object KeyedTable {
     * exists to avoid.
     */
   private[graft] val fullListings = new java.util.concurrent.atomic.AtomicLong
+
+  /** The table layer's one DATA-file listing: the `*.parquet` files under
+    * `dirs` (relative to `root`; "" is `root`), recursively, as
+    * (root-relative path, status). A path segment under `root` starting
+    * with '_' or '.' is metadata (Spark's own rule; the _graft_colstats /
+    * _graft_bloom sidecars keep parquet of their own). The root is
+    * qualified so the prefix strip matches listFiles' qualified paths — a
+    * relative root would classify data under an ancestor like ".work" as
+    * metadata. A missing sub-dir contributes nothing; `root` must exist.
+    */
+  private[graft] def dataFilesUnder(
+      fs: FileSystem, root: Path,
+      dirs: Iterable[String] = Seq("")): Seq[(String, FileStatus)] = {
+    val qroot = fs.makeQualified(root)
+    val prefix = qroot.toUri.getPath + "/"
+    dirs.toSeq.flatMap { d =>
+      val p = if (d.isEmpty) qroot else new Path(qroot, d)
+      if (d.nonEmpty && !fs.exists(p)) Nil
+      else {
+        val it = fs.listFiles(p, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+          .map(st => st.getPath.toUri.getPath.stripPrefix(prefix) -> st)
+          .filter { case (rel, st) => st.getPath.getName.endsWith(".parquet") &&
+            !rel.split('/').exists(seg => seg.startsWith("_") || seg.startsWith(".")) }
+          .toSeq
+      }
+    }
+  }
 
   /** Qualified table path → spec, registered by [[KeyedTable.read]] — the
     * point-lookup rewrite rule consults ONLY this in-memory map (zero

@@ -1007,26 +1007,25 @@ object MaterializedView {
   }
 
   /** Land a refreshed rollup (or just the re-armed sidecar): stage the
-    * new rollup WITH its sidecar, then swap. A crash after the delete
-    * leaves a complete staged copy one rename away; a crash after the
-    * rename leaves a complete rollup + sidecar (no window where the data
-    * exists but attach() cannot read it). Single-writer dev flow;
-    * multi-writer would ride KeyedTable's FS lock.
+    * new rollup WITH its sidecar, then swap ([[Staging.replaceDir]]). A
+    * crash after the delete leaves a complete staged copy one rename
+    * away; a crash after the rename leaves a complete rollup + sidecar
+    * (no window where the data exists but attach() cannot read it).
+    * Single-writer dev flow; multi-writer would ride KeyedTable's FS lock.
     */
   private def publish(
       spark: SparkSession, d2: MvDef, merged: Option[DataFrame]): Unit = {
     val mvPath = d2.mvPath
     val d3 = merged match {
       case Some(m) =>
-        val staged = mvPath + "_refresh_tmp"
-        writeRollup(m, d2, staged)
-        val dOut = d2.copy(rollupBytes = dataBytes(spark, staged))
-        writeSidecar(spark, dOut.copy(mvPath = staged))
         val p = new Path(mvPath)
         val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        fs.delete(p, true)
-        fs.rename(new Path(staged), p)
-        dOut
+        Staging.replaceDir(fs, p, p, "refresh") { stage =>
+          writeRollup(m, d2, stage.toString)
+          val dOut = d2.copy(rollupBytes = dataBytes(spark, stage.toString))
+          writeSidecar(spark, dOut.copy(mvPath = stage.toString))
+          dOut
+        }
       case None =>
         writeSidecar(spark, d2) // metadata-only re-arm
         d2
@@ -1041,16 +1040,7 @@ object MaterializedView {
   private def dataBytes(spark: SparkSession, path: String): Long = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val rootPrefix = fs.makeQualified(p).toUri.getPath
-    val it = fs.listFiles(p, true)
-    var sum = 0L
-    while (it.hasNext) {
-      val s = it.next()
-      val rel = s.getPath.toUri.getPath.stripPrefix(rootPrefix).split('/')
-      if (!rel.exists(seg => seg.startsWith("_") || seg.startsWith(".")))
-        sum += s.getLen
-    }
-    sum
+    KeyedTable.dataFilesUnder(fs, p).map(_._2.getLen).sum
   }
 
   // -------------------------------------------------------------------
@@ -1104,19 +1094,9 @@ object MaterializedView {
           }
       }
     val p = sidecarPath(d.mvPath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    // tmp + rename, NEVER create-over-existing: an in-place overwrite
-    // truncates the existing inode, which would write through a
-    // hard-linked staged-clone sidecar into its template (and leaves a
-    // torn sidecar on crash). The rename replaces the directory entry
-    // with a fresh inode.
-    val tmp = new Path(p.getParent, "." + p.getName + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"rename $tmp -> $p failed")
+    // Never create-over-existing: a staged clone hard-links this sidecar.
+    Staging.replaceFile(p.getFileSystem(spark.sessionState.newHadoopConf()), p,
+      lines.mkString("\n") + "\n")
   }
 
   /** Re-home a template MV definition onto a byte-identical CLONE of
