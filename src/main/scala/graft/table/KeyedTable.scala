@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructType, TimestampNTZType, TimestampType}
 
 import graft.schema.SchemaEvolution
 
@@ -108,62 +108,47 @@ final class KeyedTable(val spec: KeyedTableSpec) {
   private def fs(spark: SparkSession) =
     new Path(spec.path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Drop this commit's timeline marker (see the companion's timeline
-    * section) — called by every mutator AFTER its write succeeds, so a
-    * marker always denotes a durable commit (a crashed write leaves no
-    * marker; derived state then sees no change, which is the correct
-    * reading of a write that never happened).
+  /** The one commit protocol every mutator runs — a keyed Hudi
+    * copy-on-write commit on the timeline, reduced to four steps:
+    *   1. refuse a commit id already on the timeline, BEFORE any data is
+    *      written (recordTimeline re-checks post-write, but failing there
+    *      would leave data without a marker);
+    *   2. take the pre-write snapshot of `scope` (see [[CommitScope]]),
+    *      handed to `write` as (table-relative file → bytes);
+    *   3. run `write`, which lands the data through one of the four write
+    *      shapes ([[appendViaStaging]], [[overwritePartitions]],
+    *      [[replaceFiles]], [[rewriteViaTmp]]) and retires the per-file
+    *      sidecars ([[retireFileSidecars]]) before its files land;
+    *   4. after it succeeds, record the written schema and drop the
+    *      timeline marker with the commit's file record — LAST, so a
+    *      marker always denotes a durable commit (a crashed write leaves
+    *      no marker; derived state then sees no change, which is the
+    *      correct reading of a write that never happened).
     */
-  private def recordCommit(
+  private def commit(
       spark: SparkSession, commitTime: String, action: String,
-      before: Option[Set[String]]): Unit = {
-    // Diff the entry snapshot against the post-write listing into the
-    // marker's (added, removed) file record; a None snapshot (evolved
-    // layout) records a legacy marker and consumers full-scan.
-    val rec = before.map { b =>
-      val after = relDataFiles(spark)
-      ((after -- b).toSeq.sorted, (b -- after).toSeq.sorted)
-    }
-    KeyedTable.recordTimeline(spark, spec.path, commitTime, action, rec)
-  }
-
-  /** [[recordCommit]] for a PARTITION-SCOPED write: both snapshot sides
-    * are listings of only the touched partition dirs, so the diff costs
-    * O(touched dirs' files) instead of two O(table-files) recursive
-    * listings per commit — at 100 TB file counts, the difference between
-    * commit bookkeeping that scales with the batch and bookkeeping that
-    * scales with the table. Sound because the caller guarantees the
-    * write created/removed data files ONLY under `dirs`: untouched dirs
-    * contribute nothing to either side, so the scoped diff equals the
-    * full one.
-    */
-  private def recordCommitScoped(
-      spark: SparkSession, commitTime: String, action: String,
-      preScoped: Set[String], dirs: Set[String]): Unit = {
-    val after = relDataFilesUnder(spark, dirs)
-    KeyedTable.recordTimeline(spark, spec.path, commitTime, action,
-      Some(((after -- preScoped).toSeq.sorted, (preScoped -- after).toSeq.sorted)))
-  }
-
-  /** [[recordCommit]] with the file record supplied by the WRITER (the
-    * file-granular bloom path knows exactly which files it appended and
-    * which it replaced) — no listing at all.
-    */
-  private def recordCommitRecord(
-      spark: SparkSession, commitTime: String, action: String,
-      added: Seq[String], removed: Seq[String]): Unit =
-    KeyedTable.recordTimeline(spark, spec.path, commitTime, action,
-      Some((added.sorted, removed.sorted)))
-
-  /** Refuse a commit id already on the timeline BEFORE any data is
-    * written — recordTimeline re-checks post-write, but failing there
-    * would leave data without a marker.
-    */
-  private def requireFreshCommitId(spark: SparkSession, commitTime: String): Unit =
+      scope: CommitScope)(write: Map[String, Long] => Landed): Unit = {
     require(!KeyedTable.timelineMarkers(spark, spec.path)
       .exists(m => KeyedTable.markerCommit(m) == commitTime),
       s"commit id '$commitTime' is already on the timeline of " +
         s"${spec.path}; every commit needs a distinct id")
+    def listed(): Option[Map[String, Long]] = scope match {
+      case WholeTable          => Some(relDataFiles(spark))
+      case PartitionDirs(dirs) => Some(relDataFilesUnder(spark, dirs))
+      case _                   => None
+    }
+    val before = listed()
+    val landed = write(before.getOrElse(Map.empty))
+    landed.schema.foreach(recordSchema(spark, _))
+    val record = scope match {
+      case WriterRecord => Some(landed.record)
+      case Unrecorded   => None
+      case _ =>
+        val (b, a) = (before.get.keySet, listed().get.keySet)
+        Some(((a -- b).toSeq, (b -- a).toSeq))
+    }
+    KeyedTable.recordTimeline(spark, spec.path, commitTime, action, record)
+  }
 
   def exists(spark: SparkSession): Boolean = {
     val p = new Path(spec.path)
@@ -198,14 +183,19 @@ final class KeyedTable(val spec: KeyedTableSpec) {
 
   /** Merge `written` into the recorded table schema (field union; drifted
     * common fields take [[SchemaEvolution.widenType]]; everything nullable —
-    * evolution null-fills) and persist it via [[Staging.replaceFile]].
+    * evolution null-fills) and persist it via [[Staging.replaceFile]] —
+    * unless the sidecar FILE already holds exactly that schema, the common
+    * case of a batch that adds no column. A schema seeded from the parquet
+    * footers never counts as a match: the sidecar is absent then (a static
+    * overwrite or a rewrite deleted it) and must be written.
     */
   private def recordSchema(spark: SparkSession, written: org.apache.spark.sql.types.StructType): Unit = {
-    import org.apache.spark.sql.types.{StructField, StructType}
+    import org.apache.spark.sql.types.StructField
+    val recorded = sidecarSchema(spark)
     // Legacy table written before the sidecar existed: seed the merge from
     // the on-disk footers (one-time cost), so recording a NARROW batch's
     // schema can't shrink the table schema and silently hide columns.
-    val prior = sidecarSchema(spark).orElse(
+    val prior = recorded.orElse(
       if (exists(spark))
         scala.util.Try(
           spark.read.option("mergeSchema", "true").parquet(spec.path).schema).toOption
@@ -224,7 +214,8 @@ final class KeyedTable(val spec: KeyedTableSpec) {
         val oldNames = old.fieldNames.toSet
         StructType(kept ++ written.fields.filterNot(f => oldNames(f.name)).map(_.copy(nullable = true)))
     }
-    Staging.replaceFile(fs(spark), sidecarPath, merged.json)
+    if (!recorded.contains(merged))
+      Staging.replaceFile(fs(spark), sidecarPath, merged.json)
   }
 
   /** Can existing parquet files recorded as `from` be read under a schema
@@ -508,27 +499,22 @@ final class KeyedTable(val spec: KeyedTableSpec) {
       else
         ranks.zipWithIndex.map { case (r, i) => spreadN(r, i) }
           .reduce(_ bitwiseOR _)
-    val parts = filePartsFor(spark, targetFileBytes)
     val zc = "_graft_zkey"
     val order = spec.partitionCols.map(col) :+ col(zc)
-    val pre = preCommitFiles(spark)
-    rewriteViaTmp(
-      spark,
+    rewriteViaTmp(spark, "zorder") { files =>
       all.withColumn(zc, z)
-        .repartitionByRange(parts, order: _*)
+        .repartitionByRange(filePartsFor(files, targetFileBytes), order: _*)
         .sortWithinPartitions(order: _*)
-        .drop(zc),
-      "zorder")
-    recordCommit(spark, defaultCommitTime(), "zorder", pre)
+        .drop(zc)
+    }
   }
 
-  /** Output file count for a layout rewrite: current data volume over the
-    * target file size (the clustering plan's small-file sizing).
+  /** Output file count for a layout rewrite of `files` (file → bytes):
+    * their data volume over the target file size (the clustering plan's
+    * small-file sizing).
     */
-  private def filePartsFor(spark: SparkSession, targetFileBytes: Long): Int = {
-    val n = listDataFiles(spark).map(_._2.getLen).sum
-    math.max(1, math.ceil(n.toDouble / targetFileBytes).toInt)
-  }
+  private def filePartsFor(files: Map[String, Long], targetFileBytes: Long): Int =
+    math.max(1, math.ceil(files.values.sum.toDouble / targetFileBytes).toInt)
 
   /** [[KeyedTable.dataFilesUnder]] over the whole table. */
   private def listDataFiles(spark: SparkSession): Seq[(String, FileStatus)] = {
@@ -539,7 +525,8 @@ final class KeyedTable(val spec: KeyedTableSpec) {
   // Column-stats index sidecar (Hudi metadata-table `column_stats`): one
   // row per data file with min/max of the indexed columns. The leading
   // underscore keeps data scans from listing it as table data.
-  private def colStatsDir = s"${spec.path}/_graft_colstats"
+  private val ColStatsDirName = "_graft_colstats"
+  private def colStatsDir = s"${spec.path}/$ColStatsDirName"
 
   // Retired column-stats cache: the previous sidecar, moved aside (not
   // deleted) by the file-set-changing write paths so the NEXT
@@ -570,6 +557,23 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     }
   }
 
+  /** Every file-set change invalidates the per-file sidecars: appended
+    * files would be invisible to the column-stats prune and the bloom
+    * probe (silent false negatives, missed merges), replaced files would
+    * dangle as candidates. Each write shape calls this once, BEFORE any
+    * of its files lands in the table (after staging them, where it
+    * stages), so a crash between the two leaves them stale-absent
+    * (readers full-scan, the next indexed upsert rebuilds — correct) and
+    * never stale-present (the one wrong state). Column stats are retired to a cache
+    * ([[retireColumnStats]]) so the next build scans only the new files;
+    * the bloom index is deleted. A full rewrite ([[rewriteViaTmp]])
+    * drops both with the old directory instead.
+    */
+  private def retireFileSidecars(f: FileSystem): Unit = {
+    retireColumnStats(f)
+    f.delete(new Path(bloomDir), true)
+  }
+
   // ---- bloom record-key index (Hudi BLOOM index) -----------------------
   // One row per data file: the SET BIT POSITIONS of a bloom filter over the
   // file's record keys, stored as a sorted int array — a bloom filter
@@ -579,7 +583,8 @@ final class KeyedTable(val spec: KeyedTableSpec) {
   // footers / its metadata table `bloom_filters` partition; the point is
   // identical: an upsert's index lookup touches metadata (file count ×
   // ~k·keys ints), never table data.
-  private def bloomDir = s"${spec.path}/_graft_bloom"
+  private val BloomDirName = "_graft_bloom"
+  private def bloomDir = s"${spec.path}/$BloomDirName"
 
   /** (bits m, hashes k). Defaults suit ~10⁴ keys/file (fpp ≈ 1e-4 at
     * 5·10⁴ set bits of 2¹⁸); size m ≈ 1.44·k·keys-per-file upward for
@@ -624,8 +629,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
   def recordBloomIndex(spark: SparkSession): Unit = {
     if (!exists(spark)) return
     val (m, k) = bloomConf(spark)
-    bloomRowsFor(readRaw(spark), m, k)
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(bloomDir)
+    publishSidecar(spark, BloomDirName, bloomRowsFor(readRaw(spark), m, k).coalesce(1))
   }
 
   /** The index's candidate files for `batch`'s record keys,
@@ -715,12 +719,13 @@ final class KeyedTable(val spec: KeyedTableSpec) {
   private[graft] def dataFileSizes(spark: SparkSession): Seq[Long] =
     listDataFiles(spark).map(_._2.getLen)
 
-  /** Current data files, TABLE-RELATIVE — the rendering commit markers
-    * record (portable across schemes and across a table move).
+  /** Current data files, TABLE-RELATIVE (the rendering commit markers
+    * record — portable across schemes and across a table move), with
+    * their sizes in bytes.
     */
-  private def relDataFiles(spark: SparkSession): Set[String] = {
-    if (!fs(spark).exists(new Path(spec.path))) return Set.empty // bootstrap
-    listDataFiles(spark).map(_._1).toSet
+  private def relDataFiles(spark: SparkSession): Map[String, Long] = {
+    if (!fs(spark).exists(new Path(spec.path))) return Map.empty // bootstrap
+    listDataFiles(spark).map { case (rel, st) => rel -> st.getLen }.toMap
   }
 
   /** [[relDataFiles]] restricted to the given table-relative partition
@@ -730,26 +735,12 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     * nothing.
     */
   private def relDataFilesUnder(
-      spark: SparkSession, dirs: Set[String]): Set[String] = {
+      spark: SparkSession, dirs: Set[String]): Map[String, Long] = {
     val f = fs(spark)
-    if (!f.exists(new Path(spec.path))) return Set.empty
-    KeyedTable.dataFilesUnder(f, new Path(spec.path), dirs).map(_._1).toSet
+    if (!f.exists(new Path(spec.path))) return Map.empty
+    KeyedTable.dataFilesUnder(f, new Path(spec.path), dirs)
+      .map { case (rel, st) => rel -> st.getLen }.toMap
   }
-
-  /** Pre-write file snapshot, captured at mutator ENTRY so
-    * [[recordCommit]] can diff it against the post-write listing and
-    * store the commit's file record in its timeline marker. Used by the
-    * table-shaped mutators (bootstrap, full rewrites, layout services,
-    * global-key paths), where a full listing is honest — the write
-    * itself is O(table). The partition-scoped write paths use
-    * [[recordCommitScoped]] instead and never pay it.
-    * Evolved tables snapshot None: generation dirs are metadata-prefixed
-    * (invisible to the data listing), so a diff would silently
-    * under-record — the legacy marker makes consumers fall back to the
-    * full scan, the safe reading.
-    */
-  private def preCommitFiles(spark: SparkSession): Option[Set[String]] =
-    if (isEvolved(spark)) None else Some(relDataFiles(spark))
 
   /** Upsert through the bloom index at FILE granularity — Hudi's actual
     * copy-on-write write path (index probe → file groups → rewrite only
@@ -779,7 +770,6 @@ final class KeyedTable(val spec: KeyedTableSpec) {
   def upsertBloomIndexed(
       spark: SparkSession, batch: DataFrame,
       commitTime: String = defaultCommitTime()): Unit = {
-    requireFreshCommitId(spark, commitTime)
     require(!spec.retainHistory,
       "bloom-indexed upsert is a copy-on-write path; retainHistory tables append")
     require(!spec.globalKeys,
@@ -788,10 +778,10 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     val incoming = SchemaEvolution.dropSystemColumns(batch)
     currentUserSchema(spark) match {
       case None =>
-        val pre = preCommitFiles(spark) // bootstrap: the table is empty
-        writeOut(withMeta(dedupLatest(incoming), commitTime), SaveMode.Overwrite)
+        commit(spark, commitTime, "upsert", WholeTable) { _ =>
+          writeOut(withMeta(dedupLatest(incoming), commitTime), SaveMode.Overwrite)
+        }
         recordBloomIndex(spark)
-        recordCommit(spark, commitTime, "upsert", pre)
       case Some(current) if driftNeedsRewrite(current, incoming.schema) =>
         // Non-widen-readable drift forces the one-off full rewrite anyway;
         // take the partition path (which records its own commit) and
@@ -804,14 +794,9 @@ final class KeyedTable(val spec: KeyedTableSpec) {
         val aligned = SchemaEvolution.align(incoming, current)
         val alignedC = aligned.withColumn(CommitTimeCol, lit(commitTime))
         val (candRel, _) = bloomCandidateFiles(spark, aligned)
-        val cands = candRel.map(r => s"${spec.path}/$r")
-        val rd = spark.read.option("basePath", spec.path)
         val candRows =
-          if (cands.isEmpty) readRaw(spark).filter(lit(false))
-          else (sidecarSchema(spark) match {
-            case Some(sch) => rd.schema(sch)
-            case None      => rd.option("mergeSchema", "true")
-          }).parquet(cands: _*)
+          if (candRel.isEmpty) readRaw(spark).filter(lit(false))
+          else readFilesRaw(spark, candRel)
         val existing = SchemaEvolution.align(
           candRows.drop(RecordKeyCol, PartitionPathCol), alignedC.schema)
         val combined = existing.withColumn(SrcCol, lit(0))
@@ -819,65 +804,38 @@ final class KeyedTable(val spec: KeyedTableSpec) {
         val merged = withMeta(
           dedupLatest(combined, extraOrder = Seq(col(SrcCol).desc)).drop(SrcCol),
           commitTime)
+        val order = (spec.partitionCols :+ RecordKeyCol).map(col)
 
-        // Stage the surviving files' index rows, then go stale-absent:
-        // from here to the final index write, a crash leaves NO index
-        // (full-scan rebuild on next use) rather than one that is
-        // blind to the appended files. New-file rows are built with the
-        // INDEX's own (m, k), not the session conf — a mixed-parameter
-        // index would turn probe mismatches into bloom false negatives;
-        // to change parameters, rebuild via recordBloomIndex.
+        // New-file rows are built with the INDEX's own (m, k), not the
+        // session conf — a mixed-parameter index would turn probe
+        // mismatches into bloom false negatives; to change parameters,
+        // rebuild via recordBloomIndex.
         val head = spark.read.parquet(bloomDir)
           .select(col("m"), col("k")).limit(1).collect()
         val (m, k) =
           if (head.isEmpty) bloomConf(spark)
           else (head(0).getInt(0), head(0).getInt(1))
-        val tmpIdx = Staging.dir(new Path(spec.path), "bloom")
-        spark.read.parquet(bloomDir)
-          .filter(!col("file").isInCollection(candRel))
-          .write.mode(SaveMode.Overwrite).parquet(tmpIdx.toString)
-        f.delete(new Path(bloomDir), true)
-        retireColumnStats(f) // appended files: see writeOut
-
-        // The file-granular path KNOWS its file delta: the append can
-        // only create files under the batch's partition dirs plus the
-        // candidate files' dirs (non-global — rows never relocate), so
-        // the appended files are discovered by a listing scoped to those
-        // dirs and the commit record is written as (appended, replaced)
-        // directly. No full-table listing anywhere on this path — at
-        // production file counts that is what keeps the per-commit cost
-        // proportional to the batch, not the table.
-        val candDirs = candRel.map { r =>
-          val i = r.lastIndexOf('/'); if (i < 0) "" else r.substring(0, i)
-        }.toSet
-        val batchDirs: Set[String] =
-          if (spec.partitionCols.isEmpty) Set("")
-          else collectPartitionTuples(aligned).map(partitionDirOf).toSet
-        val scopeDirs = candDirs ++ batchDirs
-        val before = relDataFilesUnder(spark, scopeDirs)
-        val order = (spec.partitionCols :+ RecordKeyCol).map(col)
-        val w = merged
-          .repartitionByRange(math.max(1, cands.size), order: _*)
-          .write.mode(SaveMode.Append)
-        (if (spec.partitionCols.nonEmpty) w.partitionBy(spec.partitionCols: _*) else w)
-          .parquet(spec.path)
-        recordSchema(spark, merged.schema)
-        candRel.foreach(r => f.delete(new Path(s"${spec.path}/$r"), false))
-
-        val newFiles = (relDataFilesUnder(spark, scopeDirs) -- before).toSeq
-        val newRows =
-          if (newFiles.isEmpty) spark.read.parquet(tmpIdx.toString).limit(0)
-          else {
-            val rd2 = spark.read.option("basePath", spec.path)
-            bloomRowsFor((sidecarSchema(spark) match {
-              case Some(sch) => rd2.schema(sch)
-              case None      => rd2.option("mergeSchema", "true")
-            }).parquet(newFiles.map(r => s"${spec.path}/$r"): _*), m, k)
+        // The next index is built in a stage: the surviving files' rows
+        // first, then the file replace (which deletes the live index
+        // before its files land — stale-absent from there on), then the
+        // new files' rows, and the stage is published last. A crash
+        // leaves no index (next use rebuilds with one scan), never a
+        // partial one that is blind to the new files.
+        commit(spark, commitTime, "upsert", WriterRecord) { _ =>
+          Staging.replaceDir(f, new Path(spec.path), new Path(bloomDir), "bloom") { stage =>
+            spark.read.parquet(bloomDir)
+              .filter(!col("file").isInCollection(candRel))
+              .coalesce(1).write.mode(SaveMode.Overwrite).parquet(stage.toString)
+            val landed = replaceFiles(spark, candRel,
+              merged.repartitionByRange(math.max(1, candRel.size), order: _*))
+            val added = landed.record._1
+            if (added.nonEmpty)
+              bloomRowsFor(spark.read.schema(new StructType().add(RecordKeyCol, StringType))
+                .parquet(added.map(r => s"${spec.path}/$r"): _*), m, k)
+                .coalesce(1).write.mode(SaveMode.Append).parquet(stage.toString)
+            landed
           }
-        newRows.unionByName(spark.read.parquet(tmpIdx.toString))
-          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(bloomDir)
-        f.delete(tmpIdx, true)
-        recordCommitRecord(spark, commitTime, "upsert", newFiles, candRel)
+        }
     }
   }
 
@@ -968,23 +926,26 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     * goes through a [[Staging.replaceDir]] stage: a crash leaves either
     * the old index or none at all (lookups fall back to the full read),
     * never a partially-committed one whose surviving rows would claim the
-    * new `built_at` and silently drop keys. `dist` is the probe column
-    * the entries hash-distribute on.
+    * new `built_at` and silently drop keys. The bloom and column-stats
+    * sidecars publish the same way. `rows` come laid out as the sidecar
+    * stores them.
     */
   private def publishSidecar(
-      spark: SparkSession, dirName: String, entries: DataFrame,
-      dist: Column): Unit = {
+      spark: SparkSession, dirName: String, rows: DataFrame): Unit = {
     val root = new Path(spec.path)
     Staging.replaceDir(fs(spark), root, new Path(root, dirName),
       dirName.stripPrefix("_graft_")) { tmp =>
-      entries
-        .repartition(4, dist)
-        .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+      rows.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     }
   }
 
+  /** Index entries hash-distributed on their probe column `dist`. */
+  private def publishIndex(
+      spark: SparkSession, dirName: String, entries: DataFrame, dist: Column): Unit =
+    publishSidecar(spark, dirName, entries.repartition(4, dist))
+
   private def publishRli(spark: SparkSession, entries: DataFrame): Unit =
-    publishSidecar(spark, RliDirName, entries, col("key"))
+    publishIndex(spark, RliDirName, entries, col("key"))
 
   /** Build the record-level index from one table scan: latest version
     * per key (the precombine resolve, so a history table indexes only
@@ -1068,7 +1029,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
         val merged = surviving.unionByName(deltaRows)
         val settled =
           if (rliResolves(spark)) rliResolveEntries(spark, merged) else merged
-        publishSidecar(spark, dirName,
+        publishIndex(spark, dirName,
           settled.withColumn("built_at", lit(newBoundary)), dist)
     }
   }
@@ -1491,7 +1452,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     val entries = lookupResolve(
       spark, readRaw(spark).withColumn("_graft_rel", relFileExpr(spark)))
       .select(siEntryCols(column): _*)
-    publishSidecar(spark, siDirName(column),
+    publishIndex(spark, siDirName(column),
       entries.withColumn("built_at", lit(builtAt)), col("sval"))
   }
 
@@ -1541,7 +1502,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
             (col(svAlias(c)).as("sval") +:
               spec.keyCols.indices.map(i =>
                 col(s"_graft_k_$i").as(s"k_$i"))): _*)
-        publishSidecar(spark, siDirName(c),
+        publishIndex(spark, siDirName(c),
           entries.withColumn("built_at", lit(builtAt)), col("sval"))
       }
     } finally combined.unpersist()
@@ -1845,11 +1806,10 @@ final class KeyedTable(val spec: KeyedTableSpec) {
                 col("file")))))
       } catch { case scala.util.control.NonFatal(_) => None }
     }
-    carriedPlusNew().getOrElse(
+    publishSidecar(spark, ColStatsDirName, carriedPlusNew().getOrElse(
         statsRowsOf(raw).withColumn("flen",
           KeyedTable.relLenUdf(lenByRel, rootPrefix)(col("file"))))
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(colStatsDir)
+      .coalesce(1))
     f.delete(new Path(staleStatsDir), true)
   }
 
@@ -2256,12 +2216,8 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     require(
       commits(spark).contains(commit),
       s"restore target '$commit' is not in this table's commit timeline")
-    val pre = preCommitFiles(spark)
-    rewriteViaTmp(
-      spark,
-      readRaw(spark).filter(col(CommitTimeCol) <= commit),
-      "restore")
-    recordCommit(spark, defaultCommitTime(), "restore", pre)
+    rewriteViaTmp(spark, "restore")(_ =>
+      readRaw(spark).filter(col(CommitTimeCol) <= commit))
   }
 
   /** Reclaim superseded versions (Hudi cleaning / Delta VACUUM): rewrite
@@ -2273,9 +2229,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     notEvolvedGuard(spark, "vacuum")
     require(spec.retainHistory, "vacuum applies to retainHistory tables")
     if (!exists(spark)) return
-    val pre = preCommitFiles(spark)
-    rewriteViaTmp(spark, resolveLatest(readRaw(spark)), "vacuum")
-    recordCommit(spark, defaultCommitTime(), "vacuum", pre)
+    rewriteViaTmp(spark, "vacuum")(_ => resolveLatest(readRaw(spark)))
   }
 
   /** PARTITION-selective vacuum — reclaim superseded versions in ONLY
@@ -2291,9 +2245,8 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     * partitions, and a partial resolve could keep a superseded row).
     * Winner rows rewrite AS-IS (commit times survive, so
     * [[readIncremental]] stays correct); time travel before the vacuum
-    * point is gone IN THESE PARTITIONS by definition. Same
-    * append-then-drop discipline and writer-supplied scoped commit
-    * record as [[compactPartitionDirs]].
+    * point is gone IN THESE PARTITIONS by definition. A file replace
+    * ([[replaceFiles]]), like [[compactPartitionDirs]].
     */
   def vacuumPartitions(
       spark: SparkSession, parts: DataFrame,
@@ -2310,20 +2263,12 @@ final class KeyedTable(val spec: KeyedTableSpec) {
       spec.partitionCols.forall(provided.columns.contains),
       s"partition-vacuum frame must carry ${spec.partitionCols.mkString(", ")}")
     if (!exists(spark)) return
-    requireFreshCommitId(spark, commitTime)
-    val f = fs(spark)
     val dirs = collectPartitionTuples(provided).map(partitionDirOf).toSet
-    val pre = relDataFilesUnder(spark, dirs)
+    val pre = relDataFilesUnder(spark, dirs).keys.toSeq.sorted
     if (pre.isEmpty) return
-    val winners = resolveLatest(readFilesRaw(spark, pre.toSeq))
-    retireColumnStats(f)
-    f.delete(new Path(bloomDir), true)
-    val w = winners.repartition(spec.partitionCols.map(col): _*)
-      .write.mode(SaveMode.Append)
-    w.partitionBy(spec.partitionCols: _*).parquet(spec.path)
-    pre.foreach(r => f.delete(new Path(s"${spec.path}/$r"), false))
-    val newFiles = (relDataFilesUnder(spark, dirs) -- pre).toSeq
-    recordCommitRecord(spark, commitTime, "vacuum", newFiles, pre.toSeq)
+    commit(spark, commitTime, "vacuum", WriterRecord)(_ =>
+      replaceFiles(spark, pre, resolveLatest(readFilesRaw(spark, pre))
+        .repartition(spec.partitionCols.map(col): _*)))
   }
 
   /** The user-facing schema [[read]] returns, or None before the first
@@ -2396,9 +2341,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
       if (spec.partitionCols.nonEmpty)
         all.repartition(spec.partitionCols.map(col): _*)
       else all.coalesce(1)
-    val pre = preCommitFiles(spark)
-    rewriteViaTmp(spark, clustered, "compact")
-    recordCommit(spark, defaultCommitTime(), "compact", pre)
+    rewriteViaTmp(spark, "compact")(_ => clustered)
   }
 
   /** PARTITION-selective compaction — merge small files in ONLY the
@@ -2410,12 +2353,10 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     * partition columns, like [[dropPartitions]] (extra columns
     * ignored; unknown values are no-ops). Rows are rewritten AS-IS —
     * original commit times and, on a `retainHistory` table, every
-    * stored version survive — via the same append-then-drop discipline
-    * as [[deleteIndexed]] (single-writer crash contract). The scoped
-    * commit record (writer-supplied added/removed, never a table
-    * listing) keeps incremental readers and the record-level index's
-    * freshness delta sound; value-stats and bloom sidecars go
-    * stale-absent as on every file-set change. Cost:
+    * stored version survive — through a file replace ([[replaceFiles]]),
+    * like [[deleteIndexed]]. Its commit record (writer-supplied
+    * added/removed, never a table listing) keeps incremental readers and
+    * the record-level index's freshness delta sound. Cost:
     * O(named partitions' bytes), zero reads elsewhere.
     */
   def compactPartitions(
@@ -2435,25 +2376,15 @@ final class KeyedTable(val spec: KeyedTableSpec) {
 
   private[graft] def compactPartitionDirs(
       spark: SparkSession, dirs: Set[String], commitTime: String): Unit = {
-    requireFreshCommitId(spark, commitTime)
     val f = fs(spark)
-    val pre = relDataFilesUnder(spark, dirs)
+    val pre = relDataFilesUnder(spark, dirs).keys.toSeq.sorted
     // Already ≤ one file per named partition: nothing to merge, no
     // commit to record.
     if (pre.size <= dirs.count(d => f.exists(new Path(s"${spec.path}/$d"))))
       return
-    val rows = readFilesRaw(spark, pre.toSeq)
-    // File set changes: the value-stats and bloom sidecars go
-    // stale-absent (see writeOut); the RLI settles this commit through
-    // the commit→files delta.
-    retireColumnStats(f)
-    f.delete(new Path(bloomDir), true)
-    val w = rows.repartition(spec.partitionCols.map(col): _*)
-      .write.mode(SaveMode.Append)
-    w.partitionBy(spec.partitionCols: _*).parquet(spec.path)
-    pre.foreach(r => f.delete(new Path(s"${spec.path}/$r"), false))
-    val newFiles = (relDataFilesUnder(spark, dirs) -- pre).toSeq
-    recordCommitRecord(spark, commitTime, "compact", newFiles, pre.toSeq)
+    commit(spark, commitTime, "compact", WriterRecord)(_ =>
+      replaceFiles(spark, pre,
+        readFilesRaw(spark, pre).repartition(spec.partitionCols.map(col): _*)))
   }
 
   /** Measure-and-merge: compact exactly the hive partitions whose
@@ -2516,19 +2447,16 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     notEvolvedGuard(spark, "sort clustering")
     if (!exists(spark)) return
     require(sortCols.nonEmpty, "cluster needs at least one sort column")
+    val all = readRaw(spark)
+    val order = (spec.partitionCols ++ sortCols).map(col)
     // Output file count = current data volume / target file size (the
     // clustering plan's small-file sizing): range partitioning alone
     // would default to spark.sql.shuffle.partitions regardless of data,
     // yielding tiny files at small volumes and oversized ones at large.
-    val parts = filePartsFor(spark, targetFileBytes)
-    val all = readRaw(spark)
-    val order = (spec.partitionCols ++ sortCols).map(col)
-    val pre = preCommitFiles(spark)
-    rewriteViaTmp(
-      spark,
-      all.repartitionByRange(parts, order: _*).sortWithinPartitions(order: _*),
-      "cluster")
-    recordCommit(spark, defaultCommitTime(), "cluster", pre)
+    rewriteViaTmp(spark, "cluster") { files =>
+      all.repartitionByRange(filePartsFor(files, targetFileBytes), order: _*)
+        .sortWithinPartitions(order: _*)
+    }
   }
 
   /** Incremental query — Hudi's incremental read semantics
@@ -2712,26 +2640,30 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     val prior = layoutVersionFiles(spark)
     val version = prior.lastOption
       .map(_.getName.stripPrefix("_graft_layout_").toInt + 1).getOrElse(1)
-    // Publish to a NEW versioned name (atomic — destination never
-    // pre-exists), THEN retire older versions: a crash anywhere leaves
-    // the previous sidecar readable, never an absence window.
-    Staging.createFile(f, new Path(spec.path, s"_graft_layout_$version"),
-      (gens :+ (next, newCols)).map { case (g, cs) => s"$g:${cs.mkString(",")}" }.mkString("\n"))
-    prior.foreach(p => f.delete(p, false))
-    invalidateLayoutCache(spark)
-    // Evolution moves no data files — the diff against the current
-    // listing records an accurately EMPTY file set for this commit.
-    recordCommit(spark, defaultCommitTime(), "evolve", Some(relDataFiles(spark)))
+    // Evolution moves no data files: its record is accurately EMPTY.
+    commit(spark, defaultCommitTime(), "evolve", WriterRecord) { _ =>
+      // Publish to a NEW versioned name (atomic — destination never
+      // pre-exists), THEN retire older versions: a crash anywhere leaves
+      // the previous sidecar readable, never an absence window.
+      Staging.createFile(f, new Path(spec.path, s"_graft_layout_$version"),
+        (gens :+ (next, newCols)).map { case (g, cs) => s"$g:${cs.mkString(",")}" }.mkString("\n"))
+      prior.foreach(p => f.delete(p, false))
+      invalidateLayoutCache(spark)
+      Landed(None)
+    }
   }
 
   /** Evolved-mode write: precombine-dedup (for upsert semantics), stamp
     * meta with the CURRENT generation's partition path, append into the
     * generation dir in its layout. Supersession is by commit time at
-    * read — the write itself is O(batch), the whole point.
+    * read — the write itself is O(batch), the whole point. Committed
+    * [[Unrecorded]]: generation dirs are metadata-prefixed (invisible to
+    * the data listing), so a listing diff would silently under-record;
+    * the legacy marker makes consumers fall back to the full scan.
     */
   private def evolvedAppend(
       spark: SparkSession, batch: DataFrame, commitTime: String,
-      dedup: Boolean): Unit = {
+      action: String, dedup: Boolean): Unit = {
     val incoming = SchemaEvolution.dropSystemColumns(batch)
     val current = currentUserSchema(spark).getOrElse(incoming.schema)
     require(!driftNeedsRewrite(current, incoming.schema),
@@ -2739,16 +2671,14 @@ final class KeyedTable(val spec: KeyedTableSpec) {
         "first (the rewrite must visit every generation)")
     val aligned = SchemaEvolution.align(incoming, current)
     val deduped = if (dedup) dedupLatest(aligned) else aligned
-    val gens = layoutGens(spark)
-    val (gen, cols) = gens.last
-    // file-set change: same stale-absent rule as writeOut
-    val f = fs(spark)
-    retireColumnStats(f)
-    f.delete(new Path(bloomDir), true)
+    val (gen, cols) = layoutGens(spark).last
     val stamped = withMetaLayout(deduped, commitTime, cols)
-    val w = stamped.write.mode(SaveMode.Append)
-    (if (cols.nonEmpty) w.partitionBy(cols: _*) else w).parquet(genDirStr(gen))
-    recordSchema(spark, stamped.schema)
+    commit(spark, commitTime, action, Unrecorded) { _ =>
+      retireFileSidecars(fs(spark))
+      val w = stamped.write.mode(SaveMode.Append)
+      (if (cols.nonEmpty) w.partitionBy(cols: _*) else w).parquet(genDirStr(gen))
+      Landed(Some(stamped.schema))
+    }
   }
 
   /** Fold every generation back into the SPEC's layout: one rewrite of
@@ -2771,17 +2701,14 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     val folded = (if (spec.retainHistory) all else resolveLatest(all))
       .drop(PartitionPathCol)
       .withColumn(PartitionPathCol, partitionPathExpr(spec.partitionCols))
-    // Deliberately NOT preCommitFiles (which snapshots None while
-    // evolved): the root-listing diff is sound here — generation files
-    // are invisible to the data listing on both sides, and they never
+    // The root-listing diff is sound here — generation files are
+    // invisible to the data listing on both sides, and they never
     // appeared in any earlier marker's `added` record (evolved commits
     // record legacy markers), so omitting their removal can never leave
     // a dangling candidate. Recording the fold's own file set re-enables
     // O(delta-files) reads for every boundary at or after the fold.
-    val pre = Some(relDataFiles(spark))
-    rewriteViaTmp(spark, folded, "fold")
+    rewriteViaTmp(spark, "fold")(_ => folded)
     invalidateLayoutCache(spark)
-    recordCommit(spark, defaultCommitTime(), "fold", pre)
   }
 
   private def notEvolvedGuard(spark: SparkSession, what: String): Unit =
@@ -3212,36 +3139,27 @@ final class KeyedTable(val spec: KeyedTableSpec) {
       .withColumn(PartitionPathCol, partitionPathExpr(layoutCols))
   }
 
-  private def writeOut(df: DataFrame, mode: SaveMode): Unit = {
-    // Every data write invalidates the column-stats index: appended files
-    // would be invisible to the prune (silent false negatives) and
-    // overwritten files would 404 it. RETIRED (moved aside, see
-    // retireColumnStats) BEFORE the data lands — a crash between the two
-    // steps then leaves stale-absent (readers full scan, correct) rather
-    // than stale-present (readers silently skip the new files — the one
-    // wrong state). Readers fall back to a full scan until
-    // recordColumnStats runs again; the retired cache makes that run
-    // scan only the files this write creates. (Full rewrites via
-    // rewriteViaTmp drop sidecar and cache with the directory.)
-    retireColumnStats(fs(df.sparkSession))
-    // The bloom record-key index has the same stale-absent rule: files
-    // appended or rewritten outside the bloom path would be invisible to
-    // the probe (silent missed merges — the one wrong state) or dangle
-    // as deleted candidate paths. Absent just means the next indexed
-    // upsert rebuilds with one scan.
-    fs(df.sparkSession).delete(new Path(bloomDir), true)
+  /** Write `df` into the table root — the bootstrap, unpartitioned-append
+    * and partition-overwrite writes — retiring the per-file sidecars
+    * before the write job starts ([[retireFileSidecars]]).
+    */
+  private def writeOut(df: DataFrame, mode: SaveMode): Landed = {
+    val spark = df.sparkSession
+    val f = fs(spark)
+    retireFileSidecars(f)
     // The catalog sidecar must survive every write: on an unpartitioned
     // table SaveMode.Overwrite is a STATIC overwrite that deletes the
     // whole directory (dynamic overwrite only replaces touched
-    // partitions), so capture the synced names first and restore after —
-    // registration is a property of the table, not of one directory
-    // generation. No-ops when nothing was ever synced.
-    val synced = syncedNames(df.sparkSession)
+    // partitions), so capture the synced names first and restore them
+    // if the write took the sidecar with it — registration is a property
+    // of the table, not of one directory generation. No-ops when nothing
+    // was ever synced.
+    val synced = syncedNames(spark)
     val w = df.write.mode(mode)
     (if (spec.partitionCols.nonEmpty) w.partitionBy(spec.partitionCols: _*) else w)
       .parquet(spec.path)
-    recordSchema(df.sparkSession, df.schema)
-    writeSyncedNames(df.sparkSession, synced)
+    if (synced.nonEmpty && !f.exists(catalogSidecarPath)) writeSyncedNames(spark, synced)
+    Landed(Some(df.schema))
   }
 
   /** Partition-scoped APPEND through a sibling staging directory: the
@@ -3256,9 +3174,10 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     * Spark actions and no directory diffing — O(batch files) driver FS
     * renames, which also scales strictly better than the scoped diff
     * (a hot partition's file count no longer enters the commit cost).
-    * The stale-absent sidecar retirement happens after the staging
-    * write but BEFORE any file lands in the table — the same ordering
-    * [[writeOut]] keeps. Crash shape matches the direct append (files
+    * The stage-and-move append shape ([[insert]], [[bulkInsert]]) and
+    * the base of [[replaceFiles]]. The stale-absent sidecar retirement
+    * happens after the staging write but BEFORE any file lands in the
+    * table. Crash shape matches the direct append (files
     * can land without a marker; readers see them as committed rows
     * exactly as a torn append's); rename collisions are impossible in
     * practice (part names embed the write job's UUID) and checked
@@ -3269,17 +3188,13 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     * object-store backend would pay a copy per file — the direct-append
     * path there pays the same copy inside its commit protocol.
     */
-  private def appendViaStaging(
-      spark: SparkSession, df: DataFrame): Seq[String] = {
+  private def appendViaStaging(spark: SparkSession, df: DataFrame): Landed = {
     val f = fs(spark)
     val added = Staging.staged(f, Staging.dir(new Path(spec.path), "ins")) { staging =>
       val w = df.write.mode(SaveMode.ErrorIfExists)
       (if (spec.partitionCols.nonEmpty) w.partitionBy(spec.partitionCols: _*) else w)
         .parquet(staging.toString)
-      // Sidecars retire before any file LANDS in the table (the staging
-      // write is invisible to readers) — writeOut's stale-absent order.
-      retireColumnStats(f)
-      f.delete(new Path(bloomDir), true)
+      retireFileSidecars(f)
       val moved = KeyedTable.dataFilesUnder(f, staging).map { case (rel, st) =>
         val dst = new Path(s"${spec.path}/$rel")
         f.mkdirs(dst.getParent)
@@ -3291,8 +3206,24 @@ final class KeyedTable(val spec: KeyedTableSpec) {
       f.delete(staging, true)
       moved
     }
-    recordSchema(spark, df.schema)
-    added.sorted
+    Landed(Some(df.schema), (added, Nil))
+  }
+
+  /** The file-replace shape ([[compactPartitionDirs]], [[vacuumPartitions]],
+    * [[deleteIndexed]], [[upsertBloomIndexed]]): `rows`, the replacement
+    * of the table-relative `files` laid out by the caller, are appended
+    * through a stage ([[appendViaStaging]]), then `files` are deleted.
+    * The record is exact with no listing: (the staged files, `files`).
+    * Single-writer crash contract: a crash between the two steps leaves
+    * both copies of the replaced rows, which the next merge's precombine
+    * collapses.
+    */
+  private def replaceFiles(
+      spark: SparkSession, files: Seq[String], rows: DataFrame): Landed = {
+    val landed = appendViaStaging(spark, rows)
+    val f = fs(spark)
+    files.foreach(r => f.delete(new Path(s"${spec.path}/$r"), false))
+    landed.copy(record = (landed.record._1, files))
   }
 
   /** Distinct partition tuples of `df`, collected driver-side under a hard
@@ -3394,43 +3325,84 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     }
   }
 
-  /** Full-table rewrite through a [[Staging.replaceDir]] stage of `kind`
-    * — a static overwrite would delete the very files the lazy plan is
-    * reading — then re-record the schema (the sidecar died with the old
-    * directory).
+  /** The partition-overwrite shape ([[upsert]], partitioned [[delete]]):
+    * `written` replaces every partition it writes rows into (dynamic
+    * partition overwrite through [[writeOut]]). Given `scanned`, the
+    * partition tuples its rows were read from, a scanned partition left
+    * with no rows is deleted — dynamic overwrite only replaces partitions
+    * it writes to (Hudi's file-group cleaning does the same job). Then
+    * `written` is evaluated twice, by its tuple collect and by the write:
+    * the caller persists it, or the frame it derives from.
     */
-  private def rewriteViaTmp(spark: SparkSession, df: DataFrame, kind: String): Unit = {
-    val f = fs(spark)
-    val root = new Path(spec.path)
-    val synced = Staging.replaceDir(f, root, root, kind) { tmp =>
-      val w = df.write.mode(SaveMode.Overwrite)
-      (if (spec.partitionCols.nonEmpty) w.partitionBy(spec.partitionCols: _*) else w)
-        .parquet(tmp.toString)
-      // The catalog sidecar must outlive the rewrite (registration is a
-      // property of the table, not of one directory generation).
-      val synced = syncedNames(spark)
-      // So must the key-mapping indexes (record-level + secondary): unlike
-      // the per-file sidecars (colstats/bloom, whose entries die with the
-      // files and follow the stale-absent rule), these reconcile staleness
-      // through the commit→files delta — every file this rewrite replaces
-      // lands on the marker's removed side, so the carried-over entries
-      // are subtracted and the rewritten files settle in via the delta.
-      // Dropping them here would instead force full-table rebuilds after
-      // every compaction.
-      val carried = (new Path(rliDir) +: {
-        if (!f.exists(root)) Seq.empty
-        else f.listStatus(root).toSeq.map(_.getPath)
-          .filter(_.getName.startsWith("_graft_si_"))
-      }).filter(f.exists)
-      carried.foreach { p =>
-        if (!f.rename(p, new Path(tmp, p.getName)))
-          throw new java.io.IOException(s"could not carry $p into $tmp")
-      }
-      synced
+  private def overwritePartitions(
+      spark: SparkSession, written: DataFrame,
+      scanned: Option[Array[org.apache.spark.sql.Row]]): Landed = {
+    val kept = scanned.fold(Set.empty[org.apache.spark.sql.Row])(_ =>
+      collectPartitionTuples(written).toSet)
+    withDynamicOverwrite(spark) {
+      val landed = writeOut(written, SaveMode.Overwrite)
+      deletePartitionDirs(spark, scanned.toSeq.flatten.filterNot(kept))
+      landed
     }
-    recordSchema(spark, df.schema)
-    writeSyncedNames(spark, synced)
   }
+
+  /** The table-wide key probe (≈ Hudi GLOBAL_BLOOM's index lookup): the
+    * rows of `existing` in every partition holding a key of `keys`, or
+    * in one of `alsoParts`.
+    */
+  private def keyProbe(
+      existing: DataFrame, keys: DataFrame,
+      alsoParts: Option[DataFrame] = None): DataFrame = {
+    val holding = existing.join(keys, spec.keyCols, "left_semi")
+      .select(spec.partitionCols.map(col): _*)
+      .distinct()
+    existing.join(alsoParts.fold(holding)(_.union(holding).distinct()),
+      spec.partitionCols, "left_semi")
+  }
+
+  /** The table-rewrite shape: one committed full rewrite of the table as
+    * `rows(files)`, `files` being the pre-write listing (file → bytes),
+    * through a [[Staging.replaceDir]] stage — a static overwrite would
+    * delete the very files the lazy plan is reading. The per-file
+    * sidecars and the schema sidecar die with the old directory; the
+    * catalog sidecar and the key-mapping indexes are carried over.
+    */
+  private def rewriteViaTmp(
+      spark: SparkSession, action: String, commitTime: String = defaultCommitTime())(
+      rows: Map[String, Long] => DataFrame): Unit =
+    commit(spark, commitTime, action, WholeTable) { files =>
+      val df = rows(files)
+      val f = fs(spark)
+      val root = new Path(spec.path)
+      val synced = Staging.replaceDir(f, root, root, action) { tmp =>
+        val w = df.write.mode(SaveMode.Overwrite)
+        (if (spec.partitionCols.nonEmpty) w.partitionBy(spec.partitionCols: _*) else w)
+          .parquet(tmp.toString)
+        // The catalog sidecar must outlive the rewrite (registration is a
+        // property of the table, not of one directory generation).
+        val synced = syncedNames(spark)
+        // So must the key-mapping indexes (record-level + secondary): unlike
+        // the per-file sidecars (colstats/bloom, whose entries die with the
+        // files and follow the stale-absent rule), these reconcile staleness
+        // through the commit→files delta — every file this rewrite replaces
+        // lands on the marker's removed side, so the carried-over entries
+        // are subtracted and the rewritten files settle in via the delta.
+        // Dropping them here would instead force full-table rebuilds after
+        // every compaction.
+        val carried = (new Path(rliDir) +: {
+          if (!f.exists(root)) Seq.empty
+          else f.listStatus(root).toSeq.map(_.getPath)
+            .filter(_.getName.startsWith("_graft_si_"))
+        }).filter(f.exists)
+        carried.foreach { p =>
+          if (!f.rename(p, new Path(tmp, p.getName)))
+            throw new java.io.IOException(s"could not carry $p into $tmp")
+        }
+        synced
+      }
+      writeSyncedNames(spark, synced)
+      Landed(Some(df.schema))
+    }
 
   /** INSERT write operation (the second value the reference's
     * `hoodie.datasource.write.operation` key accepts, glue_job_script.py:53):
@@ -3440,33 +3412,28 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     * uniqueness; a later upsert collapses any duplicates (latest wins).
     */
   def insert(spark: SparkSession, batch: DataFrame, commitTime: String = defaultCommitTime()): Unit = {
-    requireFreshCommitId(spark, commitTime)
     if (isEvolved(spark)) {
-      evolvedAppend(spark, batch, commitTime, dedup = false)
-      recordCommit(spark, commitTime, "insert", None)
+      evolvedAppend(spark, batch, commitTime, "insert", dedup = false)
       return
     }
     val incoming = SchemaEvolution.dropSystemColumns(batch)
     currentUserSchema(spark) match {
-      case None =>
-        val pre = preCommitFiles(spark) // bootstrap: the table is empty
-        writeOut(withMeta(incoming, commitTime), SaveMode.Overwrite)
-        recordCommit(spark, commitTime, "insert", pre)
+      case None => // bootstrap: the table is empty
+        commit(spark, commitTime, "insert", WholeTable)(_ =>
+          writeOut(withMeta(incoming, commitTime), SaveMode.Overwrite))
       case Some(current) if !driftNeedsRewrite(current, incoming.schema) =>
-        val aligned = SchemaEvolution.align(incoming, current)
+        val rows = withMeta(SchemaEvolution.align(incoming, current), commitTime)
         // A pure append only creates files under the batch's partition
         // dirs — the commit record comes from the staging tree itself
         // ([[appendViaStaging]]): no batch-scan partition-tuple collect,
         // no scoped listings (this is the streaming-ingest hot path:
         // one commit per micro-batch).
-        if (spec.partitionCols.isEmpty) {
-          val pre = preCommitFiles(spark) // unpartitioned: root IS the scope
-          writeOut(withMeta(aligned, commitTime), SaveMode.Append)
-          recordCommit(spark, commitTime, "insert", pre)
-        } else {
-          val added = appendViaStaging(spark, withMeta(aligned, commitTime))
-          recordCommitRecord(spark, commitTime, "insert", added, Nil)
-        }
+        if (spec.partitionCols.isEmpty) // unpartitioned: root IS the scope
+          commit(spark, commitTime, "insert", WholeTable)(_ =>
+            writeOut(rows, SaveMode.Append))
+        else
+          commit(spark, commitTime, "insert", WriterRecord)(_ =>
+            appendViaStaging(spark, rows))
       case Some(current) =>
         // Non-widen-readable drift (e.g. a column falling back to the
         // string choice type): existing files can't be read under the new
@@ -3474,15 +3441,12 @@ final class KeyedTable(val spec: KeyedTableSpec) {
         // rows keep their original commit times. The rewrite goes through
         // a temp directory + rename (like [[compact]]): a plain static
         // overwrite would delete the very files the plan lazily reads.
-        val pre = preCommitFiles(spark)
         val aligned = SchemaEvolution.align(incoming, current)
         val alignedC = aligned.withColumn(CommitTimeCol, lit(commitTime))
         val existing = SchemaEvolution.align(
           readRaw(spark).drop(RecordKeyCol, PartitionPathCol), alignedC.schema)
-        val combined = withMeta(
-          existing.unionByName(alignedC, allowMissingColumns = true), commitTime)
-        rewriteViaTmp(spark, combined, "rewrite")
-        recordCommit(spark, commitTime, "insert", pre)
+        rewriteViaTmp(spark, "insert", commitTime)(_ => withMeta(
+          existing.unionByName(alignedC, allowMissingColumns = true), commitTime))
     }
   }
 
@@ -3495,10 +3459,8 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     * rewrite — rather than silently corrupting the table's readability.
     */
   def bulkInsert(spark: SparkSession, batch: DataFrame, commitTime: String = defaultCommitTime()): Unit = {
-    requireFreshCommitId(spark, commitTime)
     if (isEvolved(spark)) {
-      evolvedAppend(spark, batch, commitTime, dedup = false)
-      recordCommit(spark, commitTime, "bulkinsert", None)
+      evolvedAppend(spark, batch, commitTime, "bulkinsert", dedup = false)
       return
     }
     val incoming = SchemaEvolution.dropSystemColumns(batch)
@@ -3508,20 +3470,17 @@ final class KeyedTable(val spec: KeyedTableSpec) {
         "bulk_insert batch type-drifts in a non-widen-readable way against " +
           "the table schema; use insert/upsert (they rewrite) instead")
     }
+    val rows = withMeta(incoming, commitTime)
     val append = exists(spark)
-    if (append && spec.partitionCols.nonEmpty) {
+    if (append && spec.partitionCols.nonEmpty)
       // Appends create files only under the batch's partition dirs —
       // exact file record from the staging tree, no batch-scan tuple
       // collect, no listings (see insert / [[appendViaStaging]]).
-      val added = appendViaStaging(spark, withMeta(incoming, commitTime))
-      recordCommitRecord(spark, commitTime, "bulkinsert", added, Nil)
-    } else {
-      val pre = preCommitFiles(spark)
-      writeOut(
-        withMeta(incoming, commitTime),
-        if (append) SaveMode.Append else SaveMode.Overwrite)
-      recordCommit(spark, commitTime, "bulkinsert", pre)
-    }
+      commit(spark, commitTime, "bulkinsert", WriterRecord)(_ =>
+        appendViaStaging(spark, rows))
+    else
+      commit(spark, commitTime, "bulkinsert", WholeTable)(_ =>
+        writeOut(rows, if (append) SaveMode.Append else SaveMode.Overwrite))
   }
 
   /** DELETE write operation — the remaining value of Hudi's
@@ -3560,47 +3519,27 @@ final class KeyedTable(val spec: KeyedTableSpec) {
       s"delete keys frame must carry the key columns ${spec.keyCols.mkString(", ")}")
     val delKeys = provided.select(joinCols.map(col): _*).distinct()
     val existing = readRaw(spark)
-
-    val affected =
-      if (spec.partitionCols.isEmpty) existing
-      else if (scoped)
-        affectedPartitionsFilter(delKeys).fold(existing)(existing.filter)
-      else {
-        // Table-wide key delete: probe for partitions holding a doomed key.
-        val parts = existing
-          .join(delKeys, spec.keyCols, "left_semi")
-          .select(spec.partitionCols.map(col): _*)
-          .distinct()
-        existing.join(parts, spec.partitionCols, "left_semi")
-      }
     if (spec.partitionCols.isEmpty) {
-      val pre = preCommitFiles(spark) // unpartitioned: root IS the scope
-      rewriteViaTmp(spark, affected.join(delKeys, joinCols, "left_anti"),
-        "delete")
-      recordCommit(spark, defaultCommitTime(), "delete", pre)
-    } else {
-      // `affected` is the expensive frame (table scan + doomed-key probe
-      // join); persist IT so the survivor anti-join, the scanned-partition
-      // collect, and the written-partition collect all reuse one pass
-      // instead of re-running the probe per consumer.
-      affected.persist()
-      val survivors = affected.join(delKeys, joinCols, "left_anti")
-      val scanned = collectPartitionTuples(affected)
-      val written = collectPartitionTuples(survivors).toSet
-      val stale = scanned.filterNot(written.contains)
-      // Only the scanned partitions can change — scoped commit record,
-      // no table listing (the snapshot happens before any write).
-      val dirs = scanned.map(partitionDirOf).toSet
-      val preScoped = relDataFilesUnder(spark, dirs)
-      try withDynamicOverwrite(spark) {
-        survivors.write.mode(SaveMode.Overwrite)
-          .partitionBy(spec.partitionCols: _*).parquet(spec.path)
-        deletePartitionDirs(spark, stale)
-        retireColumnStats(fs(spark)) // see writeOut
-        fs(spark).delete(new Path(bloomDir), true)    // see writeOut
-      } finally affected.unpersist()
-      recordCommitScoped(spark, defaultCommitTime(), "delete", preScoped, dirs)
+      rewriteViaTmp(spark, "delete")(_ => existing.join(delKeys, joinCols, "left_anti"))
+      return
     }
+    val affected =
+      if (scoped) affectedPartitionsFilter(delKeys).fold(existing)(existing.filter)
+      else keyProbe(existing, delKeys) // table-wide: partitions holding a doomed key
+    // `affected` is the expensive frame (table scan + doomed-key probe
+    // join); persist IT so the scanned-partition collect, the survivor
+    // collect and the write reuse one pass instead of re-running the
+    // probe per consumer.
+    affected.persist()
+    try {
+      val scanned = collectPartitionTuples(affected)
+      // Only the scanned partitions can change — scoped commit record,
+      // no table listing.
+      commit(spark, defaultCommitTime(), "delete",
+        PartitionDirs(scanned.map(partitionDirOf).toSet))(_ =>
+        overwritePartitions(spark, affected.join(delKeys, joinCols, "left_anti"),
+          Some(scanned)))
+    } finally affected.unpersist()
   }
 
   /** Metadata-only PARTITION drop — Hudi's `delete_partition` operation:
@@ -3629,15 +3568,15 @@ final class KeyedTable(val spec: KeyedTableSpec) {
       spec.partitionCols.forall(provided.columns.contains),
       s"partition-drop frame must carry ${spec.partitionCols.mkString(", ")}")
     if (!exists(spark)) return
-    requireFreshCommitId(spark, commitTime)
     val f = fs(spark)
     val dirs = collectPartitionTuples(provided).map(partitionDirOf).toSet
-    val pre = relDataFilesUnder(spark, dirs)
+    val pre = relDataFilesUnder(spark, dirs).keys.toSeq
     if (pre.isEmpty) return // nothing stored under these partitions
-    retireColumnStats(f) // see writeOut
-    f.delete(new Path(bloomDir), true)    // see writeOut
-    dirs.foreach(d => f.delete(new Path(s"${spec.path}/$d"), true))
-    recordCommitScoped(spark, commitTime, "delete", pre, dirs)
+    commit(spark, commitTime, "delete", WriterRecord) { _ =>
+      retireFileSidecars(f)
+      dirs.foreach(d => f.delete(new Path(s"${spec.path}/$d"), true))
+      Landed(None, (Nil, pre))
+    }
   }
 
   /** File-granular DELETE through the index family: rewrite ONLY the
@@ -3665,7 +3604,6 @@ final class KeyedTable(val spec: KeyedTableSpec) {
       commitTime: String = defaultCommitTime()): Unit = {
     notEvolvedGuard(spark, "indexed delete") // candidates are root-layout
     if (!exists(spark)) return
-    requireFreshCommitId(spark, commitTime)
     val provided = SchemaEvolution.dropSystemColumns(keys)
     require(
       spec.keyCols.forall(provided.columns.contains),
@@ -3678,27 +3616,13 @@ final class KeyedTable(val spec: KeyedTableSpec) {
       case None => delete(spark, keys) // no qualifying index
       case Some(rel) if rel.isEmpty => () // no file holds a doomed key
       case Some(rel) =>
-        val f = fs(spark)
-        val survivors = readFilesRaw(spark, rel)
-          .join(broadcast(delKeys), spec.keyCols, "left_anti")
-        // File set changes: the value-stats and bloom sidecars go
-        // stale-absent (see writeOut); the RLI tolerates this commit's
-        // record through the commit→files delta.
-        retireColumnStats(f)
-        f.delete(new Path(bloomDir), true)
-        val candDirs = rel.map { r =>
-          val i = r.lastIndexOf('/'); if (i < 0) "" else r.substring(0, i)
-        }.toSet
-        val before = relDataFilesUnder(spark, candDirs)
+        // File set changes: the RLI tolerates this commit's record
+        // through the commit→files delta.
         val order = (spec.partitionCols :+ RecordKeyCol).map(col)
-        val w = survivors
-          .repartitionByRange(math.max(1, rel.size), order: _*)
-          .write.mode(SaveMode.Append)
-        (if (spec.partitionCols.nonEmpty) w.partitionBy(spec.partitionCols: _*)
-         else w).parquet(spec.path)
-        rel.foreach(r => f.delete(new Path(s"${spec.path}/$r"), false))
-        val newFiles = (relDataFilesUnder(spark, candDirs) -- before).toSeq
-        recordCommitRecord(spark, commitTime, "delete", newFiles, rel)
+        commit(spark, commitTime, "delete", WriterRecord)(_ =>
+          replaceFiles(spark, rel, readFilesRaw(spark, rel)
+            .join(broadcast(delKeys), spec.keyCols, "left_anti")
+            .repartitionByRange(math.max(1, rel.size), order: _*)))
     }
   }
 
@@ -3719,10 +3643,8 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     * those is its own shuffle).
     */
   def upsert(spark: SparkSession, batch: DataFrame, commitTime: String = defaultCommitTime()): Unit = {
-    requireFreshCommitId(spark, commitTime)
     if (isEvolved(spark)) {
-      evolvedAppend(spark, batch, commitTime, dedup = true)
-      recordCommit(spark, commitTime, "upsert", None)
+      evolvedAppend(spark, batch, commitTime, "upsert", dedup = true)
       return
     }
     val incoming = SchemaEvolution.dropSystemColumns(batch)
@@ -3736,10 +3658,9 @@ final class KeyedTable(val spec: KeyedTableSpec) {
       return
     }
     currentUserSchema(spark) match {
-      case None =>
-        val pre = preCommitFiles(spark) // bootstrap: the table is empty
-        writeOut(withMeta(dedupLatest(incoming), commitTime), SaveMode.Overwrite)
-        recordCommit(spark, commitTime, "upsert", pre)
+      case None => // bootstrap: the table is empty
+        commit(spark, commitTime, "upsert", WholeTable)(_ =>
+          writeOut(withMeta(dedupLatest(incoming), commitTime), SaveMode.Overwrite))
 
       case Some(current) =>
         val aligned = SchemaEvolution.align(incoming, current)
@@ -3753,12 +3674,13 @@ final class KeyedTable(val spec: KeyedTableSpec) {
 
         // Non-global keys: only partitions present in the batch can change.
         // Global keys: additionally rewrite partitions holding an old copy
-        // of a batch key (the row relocates), found via a key lookup
+        // of a batch key (the row relocates), found via the key probe
         // (≈ Hudi's index probe). Non-widen-readable type drift forces a
         // one-off full-table rewrite (all partitions scanned, cast, and
         // rewritten) so old files never linger under a schema the parquet
         // reader can't widen them into.
         val fullRewrite = driftNeedsRewrite(current, incoming.schema)
+        val relocating = spec.globalKeys && spec.partitionCols.nonEmpty
         // One tuple collect serves the scan's partition pruning AND —
         // on the non-global path, where only batch partitions can change
         // — the commit record's scoped listing and a scan of exactly the
@@ -3770,55 +3692,29 @@ final class KeyedTable(val spec: KeyedTableSpec) {
         val scopeDirs: Option[Set[String]] =
           if (!spec.globalKeys) batchTuples.map(_.map(partitionDirOf).toSet)
           else None
-        val pre =
-          if (scopeDirs.isEmpty) preCommitFiles(spark) else None
-        val preScoped = scopeDirs.map(relDataFilesUnder(spark, _))
-        // The scoped listing doubles as the scan's file list; without a
-        // sidecar the root scan's schema merge stands in.
-        val scoped = preScoped.flatMap(files => sidecarSchema(spark).map(s =>
-            if (files.isEmpty) SchemaEvolution.emptyOf(spark, s)
-            else readFilesRaw(spark, files.toSeq.sorted)))
-          .map(alignExisting)
-          .getOrElse(batchTuples.map(tuplesFilter).fold(existing)(existing.filter))
-        val toScan =
-          if (fullRewrite || !spec.globalKeys || spec.partitionCols.isEmpty) scoped
-          else {
-            val batchParts =
-              aligned.select(spec.partitionCols.map(col): _*).distinct()
-            val movedParts = existing
-              .join(aligned.select(spec.keyCols.map(col): _*).distinct(), spec.keyCols, "left_semi")
-              .select(spec.partitionCols.map(col): _*)
-              .distinct()
-            existing.join(batchParts.union(movedParts).distinct(),
-              spec.partitionCols, "left_semi")
-          }
-
-        val combined = toScan.withColumn(SrcCol, lit(0))
-          .unionByName(alignedC.withColumn(SrcCol, lit(1)), allowMissingColumns = true)
-        val merged = dedupLatest(combined, extraOrder = Seq(col(SrcCol).desc))
-          .drop(SrcCol)
-
-        // Global-key relocation can leave a scanned partition with ZERO
-        // surviving rows; dynamic overwrite only rewrites partitions it
-        // writes to, so such a partition must be deleted explicitly
-        // (Hudi's file-group cleaning does the same job).
-        val staleParts: Array[org.apache.spark.sql.Row] =
-          if (spec.globalKeys && spec.partitionCols.nonEmpty) {
-            merged.persist()
-            val scanned = collectPartitionTuples(toScan)
-            val written = collectPartitionTuples(merged).toSet
-            scanned.filterNot(written.contains)
-          } else Array.empty
-
-        try withDynamicOverwrite(spark) {
-          writeOut(withMeta(merged, commitTime), SaveMode.Overwrite)
-          deletePartitionDirs(spark, staleParts)
-        } finally merged.unpersist()
-        scopeDirs match {
-          case Some(dirs) =>
-            recordCommitScoped(spark, commitTime, "upsert", preScoped.get, dirs)
-          case None =>
-            recordCommit(spark, commitTime, "upsert", pre)
+        commit(spark, commitTime, "upsert",
+          scopeDirs.fold[CommitScope](WholeTable)(PartitionDirs)) { before =>
+          // The scoped listing doubles as the scan's file list; without a
+          // sidecar the root scan's schema merge stands in.
+          val scoped = scopeDirs.flatMap(_ => sidecarSchema(spark).map(s =>
+              if (before.isEmpty) SchemaEvolution.emptyOf(spark, s)
+              else readFilesRaw(spark, before.keys.toSeq.sorted)))
+            .map(alignExisting)
+            .getOrElse(batchTuples.map(tuplesFilter).fold(existing)(existing.filter))
+          val toScan =
+            if (fullRewrite || !relocating) scoped
+            else keyProbe(existing, aligned.select(spec.keyCols.map(col): _*).distinct(),
+              Some(aligned.select(spec.partitionCols.map(col): _*).distinct()))
+          val combined = toScan.withColumn(SrcCol, lit(0))
+            .unionByName(alignedC.withColumn(SrcCol, lit(1)), allowMissingColumns = true)
+          val merged = dedupLatest(combined, extraOrder = Seq(col(SrcCol).desc))
+            .drop(SrcCol)
+          // Global-key relocation can leave a scanned partition with ZERO
+          // surviving rows.
+          if (relocating) merged.persist()
+          try overwritePartitions(spark, withMeta(merged, commitTime),
+            if (relocating) Some(collectPartitionTuples(toScan)) else None)
+          finally merged.unpersist()
         }
     }
   }
@@ -3872,6 +3768,35 @@ object KeyedTable {
   val CommitTimeCol = "_graft_commit_time"
   val RecordKeyCol = "_graft_record_key"
   val PartitionPathCol = "_graft_partition_path"
+
+  /** Where [[KeyedTable.commit]] takes a commit's file record from. */
+  private[table] sealed trait CommitScope
+  /** A diff of whole-table listings taken before and after the write —
+    * honest where the write itself is O(table): bootstrap, full
+    * rewrites, unpartitioned and global-key writes.
+    */
+  private[table] case object WholeTable extends CommitScope
+  /** A diff of listings of these table-relative partition dirs only:
+    * O(their files), never O(table files). Sound when the write creates
+    * and removes data files under `dirs` alone — untouched dirs add
+    * nothing to either side, so the scoped diff equals the full one.
+    */
+  private[table] final case class PartitionDirs(dirs: Set[String]) extends CommitScope
+  /** The writer's own record ([[Landed.record]]): it knows exactly which
+    * files it added and removed, so nothing is listed.
+    */
+  private[table] case object WriterRecord extends CommitScope
+  /** No record: a legacy marker, on which consumers fall back to the
+    * full scan (evolved-layout appends).
+    */
+  private[table] case object Unrecorded extends CommitScope
+
+  /** What a commit's write landed: the schema of the rows it wrote (None
+    * when it wrote none) and, under [[WriterRecord]], its file record —
+    * the table-relative data files it (added, removed).
+    */
+  private[table] final case class Landed(
+      schema: Option[StructType], record: (Seq[String], Seq[String]) = (Nil, Nil))
 
   /** Count of FULL-table recursive listings — observable so a spec can
     * pin that the partition-scoped write paths (upsert/insert/delete on

@@ -78,4 +78,21 @@ class SidecarSchemaSpec extends SparkTestBase {
     h.upsert(spark, frame(base :+ ("v" -> IntegerType): _*)(Row("a", "d1", 2L, "eu", 7)))
     assertMatchesRead(h, "merge-on-read")
   }
+
+  test("the schema sidecar is rewritten only when a batch changes the schema") {
+    val t = table(Seq("day"))
+    t.upsert(spark, frame(base: _*)(Row("a", "d1", 1L, "eu")))
+    val sidecar = java.nio.file.Paths.get(t.spec.path, "_graft_schema.json")
+    def state = (new String(Files.readAllBytes(sidecar), "UTF-8"), Files.getLastModifiedTime(sidecar),
+      Files.readAttributes(sidecar,
+        classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey())
+    val before = state
+    t.upsert(spark, frame(base: _*)(Row("b", "d1", 2L, "us"), Row("a", "d2", 3L, "eu")))
+    assert(state == before, "an upsert without a new column rewrote the schema sidecar")
+    t.upsert(spark, frame(base :+ ("v" -> IntegerType): _*)(Row("c", "d1", 4L, "eu", 7)))
+    val after = state
+    assert(after._1 != before._1 && after._3 != before._3,
+      "an upsert adding a column left the schema sidecar as it was")
+    assert(t.currentUserSchema(spark).get.fieldNames.contains("v"))
+  }
 }

@@ -5,6 +5,7 @@ import java.nio.file.attribute.FileTime
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
@@ -123,4 +124,117 @@ class StagingSpec extends SparkTestBase {
       "the failed insert left its stage beside the root")
     assert(rows(t.read(spark)) == want)
   }
+
+  /** A partitioned `id`/`v`/`day` table of 40 rows with column stats and a
+    * bloom index, so a failed commit has sidecars it could leave stale.
+    */
+  private def indexedTable(globalKeys: Boolean): (JPath, KeyedTable) = {
+    val dir = Files.createTempDirectory("graft_staging_commit_")
+    val t = KeyedTable(KeyedTableSpec(
+      path = s"$dir/events", keyCols = Seq("id"), precombineCol = "v",
+      partitionCols = Seq("day"), globalKeys = globalKeys))
+    t.upsert(spark, idRows(0, 40), commitTime = "c0")
+    t.recordColumnStats(spark, Seq("v"))
+    t.recordBloomIndex(spark)
+    (dir, t)
+  }
+
+  /** Rows `id` in [from, until), `v` = 10·id, `day` = d0..d2 — from a
+    * range, not a local relation, so no UDF over them runs at plan time.
+    */
+  private def idRows(from: Long, until: Long) =
+    spark.range(from, until).select(col("id"), (col("id") * 10).as("v"),
+      concat(lit("d"), (col("id") % 3).cast("string")).as("day"))
+
+  /** Part-file names of the table's data files. */
+  private def dataFileNames(t: KeyedTable): Set[String] = {
+    val s = Files.walk(java.nio.file.Paths.get(t.spec.path))
+    try s.iterator().asScala.map(_.toString)
+      .filter(p => p.endsWith(".parquet") && !p.contains("/_graft_"))
+      .map(p => java.nio.file.Paths.get(p).getFileName.toString).toSet
+    finally s.close()
+  }
+
+  /** Part-file names the per-file sidecar `dir` indexes, if it is present. */
+  private def sidecarFileNames(t: KeyedTable, dir: String): Option[Set[String]] = {
+    val p = s"${t.spec.path}/$dir"
+    if (!Files.exists(java.nio.file.Paths.get(p))) None
+    else Some(spark.read.parquet(p).select("file").collect()
+      .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).getName).toSet)
+  }
+
+  /** A UDF failing every row it meets inside a parquet write, or every
+    * row at all with `always`.
+    */
+  private def boom(always: Boolean): UserDefinedFunction = udf { (v: Long) =>
+    if (always || StagingSpec.inWrite()) throw new IllegalStateException("boom")
+    v
+  }
+
+  private final case class FailedCommit(label: String, globalKeys: Boolean, always: Boolean)(
+      val run: (KeyedTable, UserDefinedFunction) => Unit)
+
+  private val failedCommits = Seq(
+    FailedCommit("scoped upsert", globalKeys = false, always = false)((t, f) =>
+      t.upsert(spark, idRows(30, 50).withColumn("v", f(col("v"))), commitTime = "c1")),
+    // The relocating upsert evaluates its merge in a tuple collect before
+    // it writes, so its failure lands there.
+    FailedCommit("globalKeys upsert", globalKeys = true, always = true)((t, f) =>
+      t.upsert(spark, idRows(30, 50).withColumn("v", f(col("v"))), commitTime = "c1")),
+    FailedCommit("bloom-indexed upsert", globalKeys = false, always = false)((t, f) =>
+      t.upsertBloomIndexed(spark, idRows(30, 50).withColumn("v", f(col("v"))),
+        commitTime = "c1")),
+    FailedCommit("delete", globalKeys = false, always = false)((t, f) =>
+      t.delete(spark, idRows(0, 5).select(f(col("id")).as("id")))),
+    FailedCommit("indexed delete", globalKeys = false, always = false)((t, f) =>
+      t.deleteIndexed(spark, idRows(0, 5).select(f(col("id")).as("id")), commitTime = "c1")))
+
+  failedCommits.foreach { c =>
+    test(s"a failed ${c.label} leaves no marker, the same rows, no stage and no stale sidecar") {
+      val (dir, t) = indexedTable(c.globalKeys)
+      val want = rows(t.read(spark))
+      val markers = KeyedTable.timelineMarkers(spark, t.spec.path)
+
+      spark.sparkContext.addSparkListener(StagingSpec.Executions)
+      try intercept[Exception](c.run(t, boom(c.always)))
+      finally spark.sparkContext.removeSparkListener(StagingSpec.Executions)
+
+      assert(KeyedTable.timelineMarkers(spark, t.spec.path) == markers, "a marker was dropped")
+      assert(rows(t.read(spark)) == want)
+      assert(siblings(dir, "events_graft_stage_.*").isEmpty, "a stage was left beside the root")
+      val files = dataFileNames(t)
+      Seq("_graft_colstats", "_graft_bloom").foreach { d =>
+        sidecarFileNames(t, d).foreach(indexed =>
+          assert(indexed == files, s"$d is present but stale"))
+      }
+    }
+  }
+}
+
+object StagingSpec {
+  /** Whether each SQL execution seen so far writes parquet, by id. */
+  object Executions extends org.apache.spark.scheduler.SparkListener {
+    val writes = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]
+    override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+      e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          writes.put(s.executionId.toString,
+            s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand"))
+        case _ =>
+      }
+  }
+
+  /** Whether the running task belongs to a parquet write — its own job
+    * or one its plan runs first, such as a broadcast. The listener bus is
+    * asynchronous, so this waits until the execution's start is seen.
+    */
+  def inWrite(): Boolean =
+    Option(org.apache.spark.TaskContext.get())
+      .flatMap(tc => Option(tc.getLocalProperty("spark.sql.execution.id")))
+      .exists { id =>
+        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+        while (!Executions.writes.containsKey(id) && System.nanoTime() < deadline)
+          Thread.sleep(5)
+        Executions.writes.getOrDefault(id, false)
+      }
 }

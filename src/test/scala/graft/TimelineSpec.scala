@@ -180,7 +180,7 @@ class TimelineSpec extends SparkTestBase {
       partitionCols = Seq("day")))
     t.upsert(spark, day("d1", 1 -> 10).union(day("d2", 2 -> 20))
       .union(day("d3", 3 -> 30)), commitTime = "c0") // bootstrap may list
-    def check(label: String)(mutate: => Unit): Unit = {
+    def checkAt(path: String, label: String)(mutate: => Unit): Unit = {
       val pre = relFiles(path)
       val n0 = KeyedTable.fullListings.get()
       mutate
@@ -191,6 +191,8 @@ class TimelineSpec extends SparkTestBase {
       assert(a.toSet == (post -- pre) && r.toSet == (pre -- post),
         s"$label: scoped record != full diff")
     }
+    def check(label: String)(mutate: => Unit): Unit = checkAt(path, label)(mutate)
+    def parts(d: String) = spark.createDataFrame(Seq(Tuple1(d))).toDF("day")
     check("COW merge upsert") {
       t.upsert(spark, day("d2", 2 -> 21, 4 -> 40), commitTime = "c1")
     }
@@ -205,6 +207,27 @@ class TimelineSpec extends SparkTestBase {
     }
     check("key-only delete (probe-scoped)") {
       t.delete(spark, kv(6 -> 0).select("id"))
+    }
+    t.insert(spark, day("d1", 7 -> 70), commitTime = "c4")
+    check("partition compaction") {
+      t.compactPartitions(spark, parts("d1"), commitTime = "c5")
+    }
+    t.recordKeyIndex(spark)
+    check("indexed delete (file replace)") {
+      t.deleteIndexed(spark, kv(7 -> 0).select("id"), commitTime = "c6")
+    }
+    check("partition drop") {
+      t.dropPartitions(spark, parts("d3"), commitTime = "c7")
+    }
+    val hist = freshPath()
+    val h = KeyedTable(KeyedTableSpec(
+      hist, keyCols = Seq("id"), precombineCol = "v",
+      partitionCols = Seq("day"), retainHistory = true))
+    h.upsert(spark, day("d1", 1 -> 10, 2 -> 20).union(day("d2", 3 -> 30)),
+      commitTime = "c0")
+    h.upsert(spark, day("d1", 1 -> 11), commitTime = "c1")
+    checkAt(hist, "partition vacuum") {
+      h.vacuumPartitions(spark, parts("d1"), commitTime = "c2")
     }
   }
 
