@@ -110,38 +110,32 @@ object IndexAdvisor {
           Seq((m.spec.path, "record_key", m.spec.keyCols.head))
          else Nil)
     }
-    // Sorted limits ("latest N [of a kind]"): the top-k walk consults
-    // stats on the SORT column and on every classifiable filter column
-    // (shared TopKMatch matcher — advice ≡ serveability). Partition
-    // columns drop as everywhere: their conjuncts select sidecar rows
-    // without needing min/max, and directory pruning already serves
-    // them on the scan.
-    val topKRule = new TopKPruneRewrite(spark)
-    val topKWants = plans.flatMap(topKRule.topKShapes).flatMap { m =>
-      m.statCols.filterNot(isPartitionCol(m.spec, _))
-        .map(c => (m.spec.path, "column_stats", c))
-    }
-    // RESOLVED top-k over a history table (the MoR walk): the serve
-    // needs the record-level index (winner classification) AND stats on
-    // the sort column — recommend the chain together so one advisor
-    // round makes the shape serveable (same shared-matcher discipline).
-    val morTopKWants = plans.flatMap(topKRule.morTopKShapes).flatMap { m =>
-      Seq(
-        (m.spec.path, "record_key", m.spec.keyCols.head),
-        (m.spec.path, "column_stats", m.sortCol))
-    }
-    // Grouped top-k (rank ≤ N per partition group): the per-group walk
-    // consults stats on the window's sort column only (the group keys
-    // are partition columns by admission — the sidecar's p_ tuples
-    // carry them for free).
-    val groupTopKRule = new GroupTopKRewrite(spark)
+    // The stats families (sorted limits, grouped top-k, aggregate
+    // folds): one want-arm each, built from the rule's own matcher
+    // (advice ≡ serveability). Each wants column stats on every column
+    // its serve consults and, on a resolved read, the record-level
+    // index that classifies winner files — one advisor round makes the
+    // shape serveable. Partition columns drop from the top-k arms as
+    // everywhere: their conjuncts select sidecar rows without min/max,
+    // and directory pruning already serves them on the scan.
+    def statsChain(spec: graft.table.KeyedTableSpec, cols: Seq[String]) =
+      cols.map(c => (spec.path, "column_stats", c)) ++
+        (if (spec.retainHistory) Seq((spec.path, "record_key", spec.keyCols.head))
+         else Nil)
+    val topKWants = plans.flatMap(new TopKPruneRewrite(spark).topKShapes)
+      .flatMap(m => statsChain(m.spec, m.statCols.filterNot(isPartitionCol(m.spec, _))))
     // Data-column-grouped top-k shapes are excluded for the same reason
     // as the rollup arm: they serve only under a clustered layout a
     // static shape can't promise, so a blanket stats rec never settles.
-    val groupTopKWants = plans.flatMap(groupTopKRule.groupTopKShapes)
+    val groupTopKWants = plans.flatMap(new GroupTopKRewrite(spark).groupTopKShapes)
       .filter(_.dataGroupCols.isEmpty)
-      .flatMap(m => m.statCols.filterNot(isPartitionCol(m.spec, _))
-        .map(c => (m.spec.path, "column_stats", c)))
+      .flatMap(m => statsChain(m.spec, m.statCols.filterNot(isPartitionCol(m.spec, _))))
+    // Servable whole-table/grouped aggregates want stats on their data
+    // columns; a count(*)-only shape wants any build (the empty-column
+    // marker — every build records `cnt`).
+    val aggWants = plans.flatMap(aggRule.aggShapes).flatMap { case (spec, cols) =>
+      statsChain(spec, if (cols.isEmpty) Seq("") else cols)
+    }
     // STAR-JOIN fact chains: the join-prune rule's shape matcher
     // reports the fact table and its joined columns; recommend the
     // fact-side chain — the record-level index always (keys→files),
@@ -159,17 +153,6 @@ object IndexAdvisor {
         .filterNot(c => isPartitionCol(s.factSpec, c))
         .flatMap(c => Seq(rli, (s.factSpec.path, "secondary", c)))
     }
-    // RESOLVED grouped top-k (the MoR arm): the per-group walk needs
-    // the record-level index (winner classification) plus stats on the
-    // window's sort column — the same chain as the global MoR walk.
-    // Data-column group keys are excluded like the COW arm's: they
-    // serve only under a clustered layout a static shape can't promise.
-    val morGroupTopKWants = plans.flatMap(groupTopKRule.morGroupTopKShapes)
-      .filter(_.dataGroupCols.isEmpty)
-      .flatMap(m =>
-        (m.spec.path, "record_key", m.spec.keyCols.head) +:
-          m.statCols.filterNot(isPartitionCol(m.spec, _))
-            .map(c => (m.spec.path, "column_stats", c)))
     // LAYOUT advice: stats that exist but barely skip mean the files
     // overlap the probed column — the index can't help until a sort
     // rewrite makes per-file ranges tight. Measured against the
@@ -208,16 +191,8 @@ object IndexAdvisor {
     // chain's exact member); a non-key probe additionally needs the
     // secondary sidecar on its column; a range probe needs column
     // stats. Recommend only what's absent.
-    // Servable whole-table/grouped aggregates want stats on their data
-    // columns; a count(*)-only shape wants any build (the empty-column
-    // marker — every build records `cnt`).
-    val aggWants = plans.flatMap(aggRule.aggShapes).flatMap {
-      case (spec, cols) =>
-        if (cols.isEmpty) Seq((spec.path, "column_stats", ""))
-        else cols.map(c => (spec.path, "column_stats", c))
-    }
     // GROUPED-ROLLUP layout advice: `GROUP BY c` over a DATA column
-    // hybrid-serves only when files are single-valued in c — a LAYOUT
+    // union-serves only when files are single-valued in c — a LAYOUT
     // property, so the advisor must measure before it recommends (the
     // shared matcher alone can't promise the build will serve, which
     // is why aggShapes excludes these). Two measured gates: the
@@ -352,24 +327,12 @@ object IndexAdvisor {
           }
         }
       }
-    // MoR resolved-aggregate shapes (the winner-file serve) want BOTH
-    // sidecars: the record-level index for the live-winner
-    // classification and column stats on the aggregated columns for
-    // the pure-file folds. Whether pure files then exist is
-    // layout/value-dependent, but the rec settles either way — the
-    // next analyze sees both sidecars present and recommends nothing.
-    val morStatsWants = plans.flatMap(aggRule.morStatsShapes).flatMap {
-      case (spec, cols) =>
-        (spec.path, "record_key", spec.keyCols.head) +:
-          cols.map(c => (spec.path, "column_stats", c))
-    }
     val wants = shapes.flatMap { m =>
       val rli = (m.spec.path, "record_key", m.spec.keyCols.head)
       if (m.viaKey) Seq(rli)
       else Seq(rli, (m.spec.path, "secondary", m.probeAttr.name))
-    } ++ rangeShapes ++ topKWants ++ morTopKWants ++ groupTopKWants ++
-      morGroupTopKWants ++ joinWants ++ clusterRecs ++ aggWants ++
-      rollupRecs ++ morStatsWants
+    } ++ rangeShapes ++ topKWants ++ groupTopKWants ++ joinWants ++
+      clusterRecs ++ aggWants ++ rollupRecs
     val recs = (wants.groupBy(identity).toSeq
       .map { case ((path, kind, col), hs) => IndexRec(path, kind, col, hs.length) }
       ++ compactRecs ++ vacuumRecs)

@@ -86,6 +86,23 @@ private[plans] final case class KeyedScan(
     case _ => None
   }
 
+  /** The windows and conjuncts over the table's CURRENT rows. On a
+    * copy-on-write table that is the fragment as it stands. On a
+    * `retainHistory` table the BOTTOM window must be the table's resolve
+    * with its `rn = 1` directly above it; both are stripped, and the
+    * rest keep their depths. None when the resolve shape is absent, a
+    * conjunct sits below the resolve (it would filter versions before
+    * the winner is chosen), or another window is itself a resolve.
+    */
+  def current: Option[(Seq[Window], Seq[(Expression, Int)])] =
+    if (!spec.retainHistory) Some((windows, conjuncts))
+    else windows.lastOption.flatMap { resolve =>
+      val above = windows.init
+      if (above.exists(MvPlanShape.resolveRnOf(_, spec).isDefined)) None
+      else resolveSplit(resolve, above.length)
+        .filter(_.forall(_._2 <= above.length)).map((above, _))
+    }
+
   /** The relation's key attributes in spec key order, by name. */
   def keyAttrs: Option[Seq[Attribute]] = {
     val found = spec.keyCols.flatMap(kc =>

@@ -165,7 +165,13 @@ private[plans] object RangeConjuncts {
   final case class StatsConjuncts(
       partFilters: Seq[PartitionConjuncts.PartFilter],
       ranges: Seq[ColumnRange], notNull: Seq[String],
-      inLists: Seq[(String, Seq[Any])])
+      inLists: Seq[(String, Seq[Any])]) {
+    /** Some conjunct splits files into FULL and CANDIDATE. */
+    def classifies: Boolean = ranges.nonEmpty || notNull.nonEmpty || inLists.nonEmpty
+    /** The columns whose stats the classification reads. */
+    def columns: Seq[String] =
+      (ranges.map(_.column) ++ notNull ++ inLists.map(_._1)).distinct
+  }
 
   /** `conds` over `ks`'s relation as [[StatsConjuncts]], or None when
     * any conjunct is nondeterministic, an IS NULL, or classifies neither

@@ -211,36 +211,17 @@ class RangePruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * literal key guard; resolve and range residual stay above.
     */
   private def serveMorRange(m: RangeMatch): Option[LogicalPlan] = {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.col
     val table = KeyedTable(m.spec)
     val keyAttrs = m.morKeyAttrs.get
     val st = table.colStatsFrame(spark).getOrElse(return None)
-    def statCol(prefix: String, c: String): Option[String] =
-      st.columns.find(_.equalsIgnoreCase(s"${prefix}_$c"))
-    if (!m.ranges.forall(r => statCol("min", r.column).isDefined &&
-      statCol("max", r.column).isDefined)) return None
     val stSel = PartitionConjuncts.select(
       st, PartitionConjuncts.statCols(st, m.partFilters).getOrElse(return None))
-    // Intersection predicate over the recorded bounds — the same
-    // selection statsSelectedFilesTyped computes, over the
+    // The files whose recorded bounds intersect every range — the
+    // CANDIDATE class of the shared classification, over the
     // partition-narrowed sidecar rows.
-    val candPred = m.ranges.map { r =>
-      val (mnC, mxC) =
-        (statCol("min", r.column).get, statCol("max", r.column).get)
-      val loP = r.lo.map(v =>
-        if (r.loInclusive) org.apache.spark.sql.functions.col(mxC) >=
-          org.apache.spark.sql.functions.lit(v)
-        else org.apache.spark.sql.functions.col(mxC) >
-          org.apache.spark.sql.functions.lit(v))
-      val hiP = r.hi.map(v =>
-        if (r.hiInclusive) org.apache.spark.sql.functions.col(mnC) <=
-          org.apache.spark.sql.functions.lit(v)
-        else org.apache.spark.sql.functions.col(mnC) <
-          org.apache.spark.sql.functions.lit(v))
-      (loP.toSeq ++ hiP.toSeq)
-        .reduceOption(_ && _)
-        .getOrElse(org.apache.spark.sql.functions.lit(true))
-    }.reduce(_ && _)
+    val (candPred, _) =
+      RangeConjuncts.fileClasses(st, m.ranges, Nil, Nil).getOrElse(return None)
     val sel =
       try KeyedTable.withMetaConf(spark)(
         stSel.filter(candPred).select("file")

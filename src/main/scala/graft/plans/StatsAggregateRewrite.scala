@@ -27,14 +27,16 @@ import graft.table.{KeyedTable, TableMetaCache}
   *
   * Matches an `Aggregate` whose stripped child is a single parquet
   * relation rooted at a REGISTERED keyed-table path
-  * ([[KeyedTable.specRegistry]]) — no windows or joins, and filters
+  * ([[KeyedTable.specRegistry]]) — no joins, no window over the table's
+  * current rows ([[KeyedScan.current]]: a `retainHistory` table's
+  * resolve is stripped, and nothing may filter below it), and filters
   * only when every conjunct classifies as (a) a literal point predicate
   * (or inferred isnotnull) on a PARTITION column — partition conjuncts
   * select whole files exactly, so the fold over the selected sidecar
   * rows IS the aggregate over the filtered table, nothing residual — or
   * (b) a literal RANGE / IS NOT NULL / IN-list conjunct on an ordered
   * stats column (the shared [[RangeConjuncts]] extraction), which
-  * selects the HYBRID serve ([[serveHybrid]]): fully-contained files
+  * selects the UNION serve ([[serveUnion]]): fully-contained files
   * fold from the sidecar, boundary files scan with the filter residual.
   * An IN conjunct classifies a file FULL when the file is
   * single-valued in the column and that value is in the list
@@ -53,7 +55,7 @@ import graft.table.{KeyedTable, TableMetaCache}
   * per-file `cnt`), `count(col)` (served from `nn_<col>`), or
   * `avg(col)` (integral/decimal; sum + count folds with the final
   * division evaluated through the plan's own Average expression — on
-  * the hybrid it rides the union as a sum + count slice per side;
+  * the union it rides as a sum + count slice per side;
   * value-dependent exactness guards, see [[avgValue]]/[[avgBind]]).
   * DISTINCT admits exactly `count(DISTINCT part_col)`
   * (each file carries one partition tuple, so the sidecar's distinct
@@ -66,15 +68,18 @@ import graft.table.{KeyedTable, TableMetaCache}
   *
   * Grouping admits PARTITION columns (whole files per group, any type)
   * and ordered-stats DATA columns (per-file single-valued test — forces
-  * the hybrid serve: interior files of a clustered run fold, boundary
+  * the union serve: interior files of a clustered run fold, boundary
   * files scan; `GROUP BY lang` over a lang-clustered corpus). A
   * no-aggregate node — `SELECT DISTINCT day` — serves too: over
   * partition columns it is a pure metadata read of the sidecar's
-  * partition tuples, over clustered data columns the hybrid distinct.
+  * partition tuples, over clustered data columns the union.
   *
-  * Soundness: non-resolving (plain copy-on-write) tables only — on a
-  * `retainHistory` table stored rows are versions, so file stats
-  * over-count superseded versions. Freshness is the sidecar's exists ⇒
+  * On a `retainHistory` table stored rows are versions, so file stats
+  * over-count superseded ones: a resolved read serves through the union
+  * alone, over [[StatsView]]'s winner-file classification (pure files
+  * fold, mixed files scan their winner rows, dead files never open);
+  * its bare and partition-grouped counts serve from the record-level
+  * index instead ([[serveMorCount]]). Freshness is the sidecar's exists ⇒
   * current invariant (every data write deletes it before the write
   * lands): a present sidecar covers exactly the current data files. The
   * per-file fold is exact, not approximate — `min` over file minima
@@ -129,26 +134,30 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
   private case class CountCol(column: String) extends Need
   private case class DistinctPartOf(column: String) extends Need
 
-  import PartitionConjuncts.{PartFilter, PartIn, PartNotNull}
-
-  /** The shape half of the match, sidecar-IO-free. `ranges`/`notNull`
-    * nonempty selects the HYBRID serve: full files fold from the
-    * sidecar, boundary files scan.
+  /** The shape half of the match, sidecar-IO-free. A classifying
+    * conjunct (`sc.classifies`), a DATA grouping column or a resolved
+    * read selects the UNION serve ([[serveUnion]]); everything else is
+    * the metadata-only fold ([[serveWhole]]).
     */
   private final case class AggMatch(
       a: Aggregate, scan: KeyedScan, needs: Seq[Need],
       groupAttrs: Seq[Attribute], groupIsPart: Seq[Boolean],
-      partFilters: Seq[PartFilter],
-      ranges: Seq[graft.table.ColumnRange], notNull: Seq[String],
-      inLists: Seq[(String, Seq[Any])],
+      sc: RangeConjuncts.StatsConjuncts,
       casts: Map[Int, Cast] = Map.empty) {
     def spec: graft.table.KeyedTableSpec = scan.spec
     /** Grouping columns that are DATA columns (classified per file by
       * the single-valued test), not partition columns (whole files by
-      * layout). Their presence forces the hybrid serve.
+      * layout). Their presence forces the union serve.
       */
     def dataGroupCols: Seq[String] =
       groupAttrs.zip(groupIsPart).collect { case (at, false) => at.name }
+    /** The data columns whose stats the folds and classification read. */
+    def statCols: Seq[String] = (needs.collect {
+      case MinOf(c, _) => c
+      case MaxOf(c, _) => c
+      case SumOf(c, _) => c
+      case CountCol(c) => c
+    } ++ sc.columns).distinct
   }
 
   /** Every servable-aggregate shape in `plan`, as (table spec, the data
@@ -161,29 +170,17 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     */
   private[plans] def aggShapes(
       plan: LogicalPlan): Seq[(graft.table.KeyedTableSpec, Seq[String])] =
-    if (KeyedTable.specRegistry.isEmpty) Nil
-    else plan.collect { case ag: Aggregate =>
-      (try matchAgg(ag) catch { case scala.util.control.NonFatal(_) => None })
-        // Data-column-grouped and avg shapes are deliberately NOT
-        // advisor wants: a stats build serves a data grouping only when
-        // files are single-valued in the group column (a LAYOUT
-        // property clustering decides) and serves an avg only when the
-        // totals pass the value-dependent exactness guards — in either
-        // case the static shape cannot promise the build will serve, so
-        // a recommendation could never settle (the build lands, the
-        // serve still declines).
-        .filter(m => m.dataGroupCols.isEmpty &&
-          !m.needs.exists(_.isInstanceOf[AvgOf]))
-        .map { m =>
-          (m.spec, (m.needs.collect {
-            case MinOf(c, _) => c
-            case MaxOf(c, _) => c
-            case SumOf(c, _) => c
-            case CountCol(c) => c
-          } ++ m.ranges.map(_.column) ++ m.notNull ++
-            m.inLists.map(_._1)).distinct)
-        }
-    }.flatten
+    matches(plan)
+      // Data-column-grouped and avg shapes are deliberately NOT
+      // advisor wants: a stats build serves a data grouping only when
+      // files are single-valued in the group column (a LAYOUT
+      // property clustering decides) and serves an avg only when the
+      // totals pass the value-dependent exactness guards — in either
+      // case the static shape cannot promise the build will serve, so
+      // a recommendation could never settle (the build lands, the
+      // serve still declines).
+      .filter(m => m.dataGroupCols.isEmpty && !m.needs.exists(_.isInstanceOf[AvgOf]))
+      .map(m => (m.spec, m.statCols))
 
   /** Data-column-grouped aggregate shapes for the advisor's
     * rollup-layout arm: (table spec, the single data group column, the
@@ -192,25 +189,21 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * needs the LAYOUT to make files single-valued, so the advisor
     * measures cardinality and run length before recommending
     * cluster + stats. Multi-column data groupings (a Z-order decision
-    * this arm doesn't model) and avg-carrying shapes (the hybrid
-    * declines avg) are skipped.
+    * this arm doesn't model), avg-carrying shapes (the union declines
+    * avg guards it cannot prove) and resolved reads (whose folds also
+    * need purity, which the layout measure does not see) are skipped.
     */
   private[plans] def dataGroupShapes(
       plan: LogicalPlan): Seq[(graft.table.KeyedTableSpec, String, Seq[String])] =
+    matches(plan)
+      .filter(m => m.dataGroupCols.length == 1 && !m.spec.retainHistory &&
+        !m.needs.exists(_.isInstanceOf[AvgOf]))
+      .map(m => (m.spec, m.dataGroupCols.head, m.statCols))
+
+  private def matches(plan: LogicalPlan): Seq[AggMatch] =
     if (KeyedTable.specRegistry.isEmpty) Nil
     else plan.collect { case ag: Aggregate =>
-      (try matchAgg(ag) catch { case scala.util.control.NonFatal(_) => None })
-        .filter(m => m.dataGroupCols.length == 1 &&
-          !m.needs.exists(_.isInstanceOf[AvgOf]))
-        .map { m =>
-          (m.spec, m.dataGroupCols.head, (m.needs.collect {
-            case MinOf(c, _) => c
-            case MaxOf(c, _) => c
-            case SumOf(c, _) => c
-            case CountCol(c) => c
-          } ++ m.ranges.map(_.column) ++ m.notNull ++
-            m.inLists.map(_._1)).distinct)
-        }
+      try matchAgg(ag) catch { case scala.util.control.NonFatal(_) => None }
     }.flatten
 
   private def serve(a: Aggregate): Option[LogicalPlan] =
@@ -219,104 +212,73 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       // literal values — together with the path they pin the semantic
       // probe, so node churn across fixpoint iterations still hits.
       val key = (m.spec.path, m.needs.toVector,
-        m.groupAttrs.map(_.name).toVector,
-        m.partFilters.toVector, m.ranges.toVector, m.notNull.toVector,
-        m.inLists.map { case (c, vs) => (c, vs.toVector) }.toVector,
+        m.groupAttrs.map(_.name).toVector, m.sc,
         // Cast-wrapped and cast-free twins must gate independently: a
         // declined cast shape memoized under the bare key would rob
-        // the cast-free twin of its hybrid serve for the session.
+        // the cast-free twin of its union serve for the session.
         m.casts.toVector.map { case (i, c) => (i, c.dataType) }.sortBy(_._1))
-      TableMetaCache.declineGated(spark, this, m.spec.path)(key)(serveAgg(m))
-    }.orElse(serveMorCount(a)).orElse(serveMorStats(a))
-      .orElse(serveDistinctValues(a)).orElse(serveMorDistinct(a))
+      TableMetaCache.declineGated(spark, this, m.spec.path)(key) {
+        StatsView.of(spark, m.scan, m.sc).flatMap(serveAgg(m, _))
+      }
+    }.orElse(serveMorCount(a)).orElse(serveDistinct(a))
 
-  /** `count(DISTINCT c)` over a CLUSTERED data column, served as a
-    * VALUES union: files single-valued in `c` (min = max ∧ nn = cnt —
-    * sound under string truncation by the bound sandwich) contribute
-    * their one stored value straight from the sidecar, every other
-    * file scans projected to `c`, and a count-distinct over the union
-    * de-duplicates across both sides. On a lang-clustered corpus
-    * "how many languages" opens only the run-boundary files. The
-    * shape: a bare single-output `count(DISTINCT attr)` (no grouping)
-    * over a registered non-resolving table; nulls drop on both sides
-    * (count-distinct ignores them). FILTERS compose through the
-    * hybrid's classification: partition point conjuncts select whole
-    * sidecar rows, and literal ranges / IS NOT NULL / IN-lists split
-    * files into FULL (every row satisfies — its single value folds
-    * only then), candidate (scans with the original filter residual
-    * intact), and excluded ("how many languages shipped documents this
+  /** `count(DISTINCT c)` — or the no-aggregate `SELECT DISTINCT c`
+    * canonical form — over a CLUSTERED data column, served as a VALUES
+    * union: PURE files FULL under every conjunct and single-valued in
+    * `c` (min = max ∧ nn = cnt — sound under string truncation by the
+    * bound sandwich) contribute their one stored value straight from the
+    * sidecar; every other live candidate file scans ([[StatsView.rowsBack]])
+    * projected to `c`; a count-distinct (or grouping) over the union
+    * de-duplicates across both sides. On a lang-clustered corpus "how
+    * many languages" opens only the run-boundary files, and on a resolved
+    * read a superseded distinct value hides in a dead file that never
+    * opens. The shape: a single output over a registered table with no
+    * window over its current rows, `c` an ordered-stats DATA column
+    * (partition columns are the metadata-only [[DistinctPartOf]] arm's,
+    * or on a resolved read the index's); nulls drop on the fold side
+    * (nn = cnt) and ride the scan. FILTERS compose through the union's
+    * classification: partition point conjuncts select whole sidecar
+    * rows; literal ranges / IS NOT NULL / IN-lists fold a file's value
+    * only when it is FULL ("how many languages shipped documents this
     * week" stays a boundary-sized read). Zero folded values decline —
-    * nothing would fold. Partition columns never reach here (the
-    * metadata-only [[DistinctPartOf]] arm matches first).
+    * nothing would fold.
     */
-  private def serveDistinctValues(a: Aggregate): Option[LogicalPlan] = {
-    if (a.groupingExpressions.nonEmpty || a.aggregateExpressions.length != 1)
-      return None
-    val (child0, orig) = a.aggregateExpressions.head match {
-      case al @ Alias(ae: AggregateExpression, _)
-          if ae.isDistinct && ae.filter.isEmpty =>
-        ae.aggregateFunction match {
-          case Count(Seq(x)) => (x, al)
+  private def serveDistinct(a: Aggregate): Option[LogicalPlan] = {
+    if (a.aggregateExpressions.length != 1) return None
+    val (childAttr, orig, isCount) =
+      if (a.groupingExpressions.isEmpty)
+        a.aggregateExpressions.head match {
+          case al @ Alias(ae: AggregateExpression, _)
+              if ae.isDistinct && ae.filter.isEmpty =>
+            ae.aggregateFunction match {
+              case Count(Seq(x: Attribute)) => (x, al, true)
+              case _ => return None
+            }
           case _ => return None
         }
-      case _ => return None
-    }
+      else (a.groupingExpressions, a.aggregateExpressions.head) match {
+        case (Seq(g), at: Attribute) if g == at => (at, at, false)
+        case _ => return None
+      }
     val ks = KeyedScan.of(a.child).getOrElse(return None)
-    if (ks.windows.nonEmpty || ks.spec.retainHistory) return None
-    val spec = ks.spec
-    // The counted expression must be an attribute of the child's OWN
-    // output (the boundary Project re-aliases exactly it) that resolves
-    // to an ordered-stats DATA column of the relation.
-    val childAttr = child0 match {
-      case at: Attribute => at
-      case _ => return None
-    }
+    val conds = ks.current.collect { case (Seq(), cs) => cs }.getOrElse(return None)
     val relAttr = ks.relAttrOf(childAttr)
-      .filter(at => KeyedTable.statsOrderedType(at.dataType))
+      .filter(at => KeyedTable.statsOrderedType(at.dataType) &&
+        !ks.isPartitionCol(at.name))
       .getOrElse(return None)
-    if (ks.isPartitionCol(relAttr.name))
-      return None // the metadata-only arm's shape
-    // Conjuncts below the count: partition point filters select whole
-    // sidecar rows; literal ranges / IS NOT NULL / IN-lists classify
-    // per file through the hybrid's candidate/full predicates — a file
-    // FULL under every conjunct AND single-valued in the counted
-    // column contributes its one value; any other candidate file
-    // scans WITH the original filter residual intact; non-candidates
-    // drop. Anything else declines.
-    val RangeConjuncts.StatsConjuncts(partFilters, ranges, notNull, inLists) =
-      RangeConjuncts.statsConjuncts(ks, ks.conjuncts.map(_._1))
-        .getOrElse(return None)
-    val memoKey = ("distinctValues", spec.path, relAttr.name,
-      partFilters.toVector, ranges.toVector, notNull.toVector,
-      inLists.map { case (c, vs) => (c, vs.toVector) }.toVector)
-    TableMetaCache.declineGated(spark, this, spec.path)(memoKey) {
-      val table = KeyedTable(spec)
-      table.colStatsFrame(spark).flatMap { st =>
-        def statCol(prefix: String): Option[String] =
-          st.columns.find(_.equalsIgnoreCase(s"${prefix}_${relAttr.name}"))
-        val (mnC, mxC, nnC) =
-          (statCol("min"), statCol("max"), statCol("nn")) match {
-            case (Some(a1), Some(b), Some(c)) => (a1, b, c)
-            case _ => return None
-          }
-        if (!st.columns.contains("cnt")) return None
-        // The hybrid's classification (RangeConjuncts.fileClasses):
-        // candidate = may hold a satisfying row; fullRange = every row
-        // satisfies every conjunct.
-        val (candidate, fullRange) = RangeConjuncts
-          .fileClasses(st, ranges, notNull, inLists).getOrElse(return None)
-        val stSel = PartitionConjuncts.select(
-          st, PartitionConjuncts.statCols(st, partFilters).getOrElse(return None))
-        val singleValued = col(nnC) === col("cnt") && col(mnC) === col(mxC) &&
-          col("cnt") > 0
-        val fold = fullRange && singleValued
+    val sc = RangeConjuncts.statsConjuncts(ks, conds.map(_._1)).getOrElse(return None)
+    TableMetaCache.declineGated(spark, this, ks.spec.path)(
+        ("distinctValues", ks.spec.path, relAttr.name, isCount, sc)) {
+      StatsView.of(spark, ks, sc).flatMap { view =>
+        val (mn, _, _) = view.bounds(relAttr.name).getOrElse(return None)
+        val (_, single) =
+          view.groupKeys(Seq((relAttr.name, false))).getOrElse(return None)
+        val fold = view.pure && coalesce(single && view.full, lit(false))
         val fullValues = KeyedTable.withMetaConf(spark)(
-          stSel.filter(fold).select(col(mnC)).distinct()
+          view.files.filter(fold).select(mn).distinct()
             .limit(MaxGroups + 1).collect())
         if (fullValues.isEmpty || fullValues.length > MaxGroups) return None
-        val boundaryFiles = KeyedTable.withMetaConf(spark)(
-          stSel.filter(candidate && (!fold || fold.isNull)).select("file")
-            .collect().map(_.getString(0)).toSeq)
+        val scanned = view.boundary(fold, everyPureFileFolds = false)
         val conv =
           CatalystTypeConverters.createToCatalystConverter(relAttr.dataType)
         val uVal = AttributeReference("u", relAttr.dataType)()
@@ -325,18 +287,19 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           fullValues.toIndexedSeq.map(r =>
             InternalRow(conv(if (r.isNullAt(0)) null else r.get(0)))),
           false)
-        val newChild = ks.swap(spark, a.child, boundaryFiles.map(abs =>
-          new org.apache.hadoop.fs.Path(new java.net.URI(abs))))
-        val proj = Project(Seq(Alias(childAttr, "u")()), newChild)
-        val cd = AggregateExpression(
-          Count(Seq(uVal)), Complete, isDistinct = true)
-        logInfo(s"stats-aggregate rewrite: ${spec.path} count(distinct " +
+        val rest = view.rowsBack(a.child, a.child, scanned).getOrElse(return None)
+        val values = Union(Seq(local, Project(Seq(Alias(childAttr, "u")()), rest)))
+        logInfo(s"stats-aggregate rewrite: ${ks.spec.path} " +
+          (if (isCount) "count(distinct " else "DISTINCT ") +
           s"${relAttr.name}) over ${fullValues.length} folded values + " +
-          s"${boundaryFiles.length} boundary files")
-        Some(Aggregate(
-          Nil,
-          Seq(Alias(cd, orig.name)(exprId = orig.exprId)),
-          Union(Seq(local, proj))))
+          s"${scanned.length} scanned files")
+        Some(
+          if (isCount) Aggregate(Nil,
+            Seq(Alias(AggregateExpression(Count(Seq(uVal)), Complete, isDistinct = true),
+              orig.name)(exprId = orig.exprId)),
+            values)
+          else Aggregate(Seq(uVal),
+            Seq(Alias(uVal, orig.name)(exprId = orig.exprId)), values))
       }
     }
   }
@@ -435,549 +398,6 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  /** min/max/sum/count/avg over a history table's RESOLVED read, served
-    * by WINNER-FILE classification — [[serveMorCount]]'s soundness
-    * argument extended to value aggregates. Naively folding file stats
-    * is unsound on merge-on-read (stats cover every stored VERSION; a
-    * superseded extremum would surface), but the record-level index
-    * knows exactly which rows are live: joining its delta-reconciled
-    * winner entries against the stats sidecar classifies each file as
-    * PURE (every stored row is a live winner — its stats row aggregates
-    * exactly its winners, fold it), BOUNDARY (some rows live, some
-    * superseded — scan it, keeping only rows whose full resolve
-    * identity matches a winner entry), or DEAD (no winners — skip
-    * entirely). On the 100 TB daily-dashboard shape (yesterday's
-    * partitions churn, the archive is stable) the archive's files are
-    * pure and fold from metadata; only the churned files scan. Match:
-    * the exact shared resolve shape (rn = 1 plus, optionally,
-    * partition POINT conjuncts above the window — whole-file,
-    * whole-winner selections), bare or grouped by PARTITION columns (a
-    * pure file lives in exactly one hive directory, so its stats row
-    * folds into exactly one group) or by clustered DATA columns (a file
-    * folds only when pure AND single-valued in the group column —
-    * min = max ∧ nn = cnt — at once; group-spanning files scan;
-    * boundary winner rows carry their group values into the
-    * grouped residual), every output a servable min/max/sum/count/avg
-    * over a stats-covered column — same per-aggregate admission and
-    * exactness guards as the COW serves (string truncation, decimal
-    * narrowing, integral-avg order proof; the whole-VERSION stats
-    * bound every winner subset, so the guards transfer).
-    */
-  private final case class MorStatsMatch(
-      spec: graft.table.KeyedTableSpec, needs: Seq[Need],
-      groupAttrs: Seq[Attribute], groupIsPart: Seq[Boolean],
-      partFilters: Seq[PartFilter],
-      ranges: Seq[graft.table.ColumnRange], notNull: Seq[String],
-      inLists: Seq[(String, Seq[Any])]) {
-    /** Grouping columns that are DATA columns (not hive partitions):
-      * a file folds into such a group only when PURE and SINGLE-VALUED
-      * in the column at once — the q192 composition over a resolved
-      * read.
-      */
-    def dataGroupCols: Seq[String] =
-      groupAttrs.zip(groupIsPart).collect { case (at, false) => at.name }
-  }
-
-  /** Every winner-file-servable resolved-aggregate shape in `plan`, as
-    * (table spec, the data columns needing recorded stats) — the
-    * advisor's one-matcher hook for the MoR arm. Shapes carrying an
-    * avg are excluded for the same could-never-settle reason as
-    * [[aggShapes]] (value-dependent exactness guards).
-    */
-  private[plans] def morStatsShapes(
-      plan: LogicalPlan): Seq[(graft.table.KeyedTableSpec, Seq[String])] =
-    if (KeyedTable.specRegistry.isEmpty) Nil
-    else plan.collect { case ag: Aggregate =>
-      (try matchMorStats(ag)
-       catch { case scala.util.control.NonFatal(_) => None })
-        .filter(m => !m.needs.exists(_.isInstanceOf[AvgOf]) &&
-          // Data-column groups are layout-dependent serves (the fold
-          // set depends on clustering) — the advisor deliberately
-          // excludes them, like the q192 grouped top-k shape.
-          m.groupIsPart.forall(identity))
-        .map { m =>
-          (m.spec, (m.needs.collect {
-            case MinOf(c, _) => c
-            case MaxOf(c, _) => c
-            case SumOf(c, _) => c
-            case CountCol(c) => c
-          } ++ m.ranges.map(_.column) ++ m.notNull ++
-            m.inLists.map(_._1)).distinct)
-        }
-    }.flatten
-
-  private def serveMorStats(a: Aggregate): Option[LogicalPlan] =
-    matchMorStats(a).flatMap { m =>
-      val table = KeyedTable(m.spec)
-      val key = ("morStats", m.spec.path, m.needs.toVector,
-        m.groupAttrs.map(_.name).toVector, m.partFilters.toVector,
-        m.ranges.toVector, m.notNull.toVector,
-        m.inLists.map { case (c, vs) => (c, vs.toVector) }.toVector)
-      TableMetaCache.declineGated(spark, this, m.spec.path)(key) {
-        serveMorStatsImpl(a, table, m)
-      }
-    }
-
-  private def matchMorStats(a: Aggregate): Option[MorStatsMatch] = {
-    if (a.aggregateExpressions.isEmpty) return None
-    val ks = KeyedScan.of(a.child).getOrElse(return None)
-    if (!ks.spec.retainHistory) return None
-    val spec = ks.spec
-    val rest = ks.resolved.getOrElse(return None)
-    // Beside rn = 1, conjuncts ABOVE the window (on the RESOLVED state)
-    // compose two ways. Partition POINT conjuncts select whole files
-    // and whole winners (a winner row of partition p lives in a file
-    // of p — true even under globalKeys, where the winner
-    // determination is global and unaffected by the later selection).
-    // Literal RANGES / IS NOT NULL / IN-lists on stats-covered columns
-    // classify per file at serve time: a PURE file's stats describe
-    // exactly its winners (fold when fully contained), a MIXED file's
-    // all-version stats are outer bounds of its winners (sound as a
-    // may-contain test), and the scan side re-applies the conjuncts as
-    // the residual. Anything else — or anything BELOW the window —
-    // filters rows the winner counts assumed present, so it declines.
-    if (rest.exists(_._2 != 0)) return None
-    val RangeConjuncts.StatsConjuncts(partFilters, ranges, notNull, inLists) =
-      RangeConjuncts.statsConjuncts(ks, rest.map(_._1)).getOrElse(return None)
-    // Grouping: PARTITION columns (a pure file lives in one hive
-    // directory — its stats row folds into exactly one group) or
-    // ordered-stats DATA columns (the q192 composition: a file folds
-    // only when PURE and SINGLE-VALUED in the group column at once;
-    // everything else with winners scans, carrying its group values
-    // into the residual).
-    val groupAttrs: Seq[Attribute] = a.groupingExpressions.map { e =>
-      ks.relAttrOf(e).filter(at => ks.isPartitionCol(at.name) ||
-          KeyedTable.statsOrderedType(at.dataType))
-        .getOrElse(return None)
-    }
-    val groupIsPart: Seq[Boolean] = groupAttrs.map(at => ks.isPartitionCol(at.name))
-    val groupIdx: Map[ExprId, Int] =
-      groupAttrs.zipWithIndex.map { case (at, i) => at.exprId -> i }.toMap
-    def groupNeedOf(e: Expression): Option[GroupOf] = ks.subst(e) match {
-      case at: Attribute => groupIdx.get(at.exprId)
-        .map(i => GroupOf(at.name, at.dataType, i))
-      case _ => None
-    }
-    val needs: Seq[Need] = a.aggregateExpressions.map {
-      case at: Attribute => groupNeedOf(at).getOrElse(return None)
-      case Alias(ae: AggregateExpression, _)
-          if !ae.isDistinct && ae.filter.isEmpty =>
-        valueNeedOf(ks, ae.aggregateFunction).getOrElse(return None)
-      case Alias(e, _) => groupNeedOf(e).getOrElse(return None)
-      case _ => return None
-    }
-    // A pure-count shape is serveMorCount's (index-only, no sidecar
-    // needed); this arm exists for the value aggregates.
-    if (needs.forall(n => n == CountAll || n.isInstanceOf[GroupOf]))
-      return None
-    // Every grouping column must also be PROJECTED: the final combine
-    // groups only by the GroupOf slices present in `needs`, so an
-    // unprojected grouping column (SELECT min(x) ... GROUP BY p with p
-    // absent from the SELECT list) would collapse its groups into one
-    // row. Decline to the scan.
-    val projectedGis = needs.collect { case GroupOf(_, _, gi) => gi }.toSet
-    if (!groupAttrs.indices.forall(projectedGis.contains)) return None
-    Some(MorStatsMatch(
-      spec, needs, groupAttrs, groupIsPart, partFilters, ranges,
-      notNull, inLists))
-  }
-
-
-  private def serveMorStatsImpl(
-      a: Aggregate, table: KeyedTable,
-      m: MorStatsMatch): Option[LogicalPlan] = {
-    val MorStatsMatch(
-      _, needs, groupAttrs, groupIsPart, partFilters, ranges, notNull,
-      inLists) = m
-    val dataGroups = m.dataGroupCols
-    table.colStatsFrame(spark).flatMap { st =>
-      def statCol(prefix: String, c: String): Option[String] =
-        st.columns.find(_.equalsIgnoreCase(s"${prefix}_$c"))
-      if (!st.columns.contains("cnt")) return None
-      val settled = table.settledWinnerEntries(spark).getOrElse(return None)
-      val stRel = st.withColumn(
-        "_rfile", table.relOfFileCol(spark, col("file")))
-      val MorWinnerMaps.WinnerMaps(wcByFile, cntByFile, wcU, _) =
-        MorWinnerMaps.of(spark, table, settled, stRel).getOrElse(return None)
-      // Partition point conjuncts select whole sidecar rows BEFORE the
-      // classification — both the fold and the scan sides then see
-      // only the matching partitions' files (the winner counts stay
-      // global: purity of a file is partition-independent).
-      val partSel =
-        PartitionConjuncts.statCols(st, partFilters).getOrElse(return None)
-      // Winner purity × range containment (the hybrid's predicates; on
-      // a PURE file the stats describe exactly its winners, on a MIXED
-      // file they are outer bounds — sound as a may-contain test).
-      val (candidate, fullRange) = RangeConjuncts
-        .fileClasses(st, ranges, notNull, inLists).getOrElse(return None)
-      // A file folds into a DATA group only when SINGLE-VALUED in the
-      // column (min = max ∧ nn = cnt — sound under string truncation:
-      // stored-lower ≤ real-min ≤ real-max ≤ stored-upper forces the
-      // exact value when the stored bounds coincide). Group-spanning or
-      // null-carrying files fail the conjunct and scan as boundaries
-      // (winner rows carry their group values into the residual).
-      val dataSingle = dataGroups.map { c =>
-        (statCol("nn", c), statCol("min", c), statCol("max", c)) match {
-          case (Some(nnC), Some(mnC), Some(mxC)) =>
-            col(nnC) === col("cnt") && col(mnC) === col(mxC)
-          case _ => return None
-        }
-      }.reduceOption(_ && _).getOrElse(lit(true))
-      val joined = PartitionConjuncts.select(stRel, partSel)
-        .withColumn("wcnt", wcU(col("_rfile")))
-      val allWinners = col("wcnt").isNotNull && col("wcnt") === col("cnt") &&
-        col("cnt") > 0
-      // FOLD: every stored row is a live winner AND every row satisfies
-      // every conjunct AND (for data groups) the file is single-valued.
-      // SCAN: the file holds ≥1 winner and may hold a satisfying row,
-      // and it is not folded (mixed, pure-partial under the range, or
-      // group-spanning) — the winner semi-join plus the re-applied
-      // conjuncts make its contribution exact. Data groups restrict
-      // nothing on the candidate side: every file can hold rows of some
-      // group.
-      val pure = allWinners &&
-        coalesce(fullRange && dataSingle, lit(false))
-      val boundaryPred = col("wcnt").isNotNull && col("wcnt") > 0 &&
-        coalesce(candidate, lit(false)) && !pure
-      // Pure-file folds — the hybrid's fold set; pure files fold into
-      // their hive partition's group (the sidecar's per-file p_ tuple)
-      // or, for a data group, their single recorded value (min = max).
-      val groupStatCols = groupAttrs.zip(groupIsPart).map {
-        case (at, true)  => statCol("p", at.name)
-        case (at, false) => statCol("min", at.name)
-      }
-      if (groupStatCols.exists(_.isEmpty)) return None
-      val (slices, guardCols) = unionFolds(st, needs).getOrElse(return None)
-      // Integral-avg exactness: proven from the WHOLE-VERSION stats —
-      // the winner rows are a subset of all versions, so same-sign and
-      // the |total| < 2^53 bound cover every partial sum the boundary
-      // scan or combine performs.
-      if (!avgIntExact(st, needs)) return None
-      val offsets = slices.scanLeft(0)(_ + _.length)
-      val nGroups = groupAttrs.length
-      val valueExprs = slices.flatten.zipWithIndex
-        .map { case (c, i) => c.as(s"v$i") }
-      val guardExprs = guardCols.zipWithIndex
-        .map { case (g, i) => max(col(g)).as(s"g$i") }
-      val exprs = (valueExprs ++ guardExprs) :+ count(lit(1)).as("nfull")
-      val pureSel = joined.filter(pure)
-      val folded =
-        if (nGroups == 0) pureSel.agg(exprs.head, exprs.tail: _*)
-        else pureSel.groupBy(groupStatCols.flatten.map(col): _*)
-          .agg(exprs.head, exprs.tail: _*)
-      val rows = KeyedTable.withMetaConf(spark)(
-        folded.limit(MaxGroups + 1).collect())
-      if (rows.length > MaxGroups) return None
-      // Zero pure files anywhere: nothing folds — the plain resolve
-      // scan is the better plan. (A groupless fold always yields one
-      // row; its nfull decides.)
-      if (rows.map(r => r.getLong(r.length - 1)).sum == 0L) return None
-      val nGuards = guardExprs.length
-      val truncated = rows.exists { row =>
-        (0 until nGuards).exists { gi =>
-          val at = row.length - 1 - nGuards + gi
-          !row.isNullAt(at) && row.getBoolean(at)
-        }
-      }
-      if (truncated) return None
-      // Boundary files from the cached maps when no conjunct narrows
-      // the file set (no job); the sidecar-classified select otherwise
-      // (partition/range correctness must ride the p_/bounds columns,
-      // and a data group's single-valued test rides the sidecar too).
-      val boundaryRel: Seq[String] =
-        if (partFilters.isEmpty && ranges.isEmpty && notNull.isEmpty &&
-            inLists.isEmpty && dataGroups.isEmpty)
-          cntByFile.collect {
-            case (f, c) if wcByFile.get(f).exists(w => w > 0 && w < c) => f
-          }.toSeq.sorted
-        else KeyedTable.withMetaConf(spark)(
-          joined.filter(boundaryPred).select(col("_rfile"))
-            .collect().map(_.getString(0)).toSeq)
-
-      // Union row shape, needs order — the hybrid's uSlices.
-      val uSlices: Seq[Seq[AttributeReference]] = needs.zipWithIndex.map {
-        case (GroupOf(_, t, _), i) => Seq(AttributeReference(s"u$i", t)())
-        case (MinOf(_, t), i) => Seq(AttributeReference(s"u$i", t)())
-        case (MaxOf(_, t), i) => Seq(AttributeReference(s"u$i", t)())
-        case (SumOf(_, dt: DecimalType), i) =>
-          Seq(AttributeReference(s"u$i", sumResultType(dt))())
-        case (SumOf(_, _), i) => Seq(AttributeReference(s"u$i", LongType)())
-        case (AvgOf(_, t), i) => Seq(
-          AttributeReference(s"u${i}s", partialDecimal(t))(),
-          AttributeReference(s"u${i}c", LongType, nullable = false)())
-        case (_, i) =>
-          Seq(AttributeReference(s"u$i", LongType, nullable = false)())
-      }
-      val toCatalystGroup = groupAttrs.map(at =>
-        CatalystTypeConverters.createToCatalystConverter(at.dataType))
-      val localRows = rows.toIndexedSeq.map { row =>
-        val vals: Seq[Any] = needs.zipWithIndex.flatMap {
-          case (GroupOf(_, _, gi), _) => Seq(toCatalystGroup(gi)(row.get(gi)))
-          case (n, i) =>
-            def v(o: Int): Any = {
-              val p = nGroups + offsets(i) + o
-              if (row.isNullAt(p)) null else row.get(p)
-            }
-            n match {
-              case MinOf(_, t) => Seq(toCatalystStat(v(0), t))
-              case MaxOf(_, t) => Seq(toCatalystStat(v(0), t))
-              case SumOf(_, dt: DecimalType) =>
-                Seq(sumToDecimal(v(0), dt).getOrElse(return None))
-              case SumOf(_, _) => Seq(sumToLong(v(0)).getOrElse(return None))
-              case AvgOf(_, t) =>
-                val dec = v(0) match {
-                  case null => null
-                  case bd: java.math.BigDecimal =>
-                    CatalystTypeConverters
-                      .createToCatalystConverter(partialDecimal(t))(bd)
-                  case _ => return None
-                }
-                val cnt = v(1) match {
-                  case null => 0L
-                  case l: java.lang.Long => l.longValue()
-                  case _ => return None
-                }
-                Seq(dec, cnt)
-              case _ => Seq(if (v(0) == null) 0L else v(0))
-            }
-        }
-        InternalRow.fromSeq(vals)
-      }
-      val local = LocalRelation(uSlices.flatten, localRows, false)
-
-      // Boundary side: winner rows of the mixed files (semi-join on the
-      // full resolve identity), partially aggregated under the original
-      // grouping (partition values ride the rows) — or an EMPTY
-      // relation of the same shape when no file is mixed.
-      val partialPlan: LogicalPlan =
-        if (boundaryRel.isEmpty)
-          LocalRelation(
-            uSlices.flatten.map(at =>
-              AttributeReference(at.name, at.dataType, at.nullable)()),
-            IndexedSeq.empty, false)
-        else {
-          // The winner rows of the scan side, with the range/IS NOT
-          // NULL/IN conjuncts RE-APPLIED as the residual (the original
-          // child is replaced wholesale, so the filter must ride here).
-          val residual = RangeConjuncts.rowFilters(Nil, ranges, notNull, inLists)
-          val bdf0 = table.winnerRowsOf(spark, boundaryRel, settled)
-          val bdf = residual.foldLeft(bdf0)(_.filter(_))
-          val aggCols: Seq[org.apache.spark.sql.Column] =
-            needs.zipWithIndex.flatMap {
-              case (_: GroupOf, _)  => Seq.empty
-              case (MinOf(c, _), i) => Seq(min(col(c)).as(s"u$i"))
-              case (MaxOf(c, _), i) => Seq(max(col(c)).as(s"u$i"))
-              case (SumOf(c, _), i) => Seq(sum(col(c)).as(s"u$i"))
-              case (AvgOf(c, t), i) => Seq(
-                sum(col(c).cast(partialDecimal(t))).as(s"u${i}s"),
-                count(col(c)).as(s"u${i}c"))
-              case (CountAll, i)    => Seq(count(lit(1)).as(s"u$i"))
-              case (CountCol(c), i) => Seq(count(col(c)).as(s"u$i"))
-              case _ => return None
-            }
-          val grouped =
-            if (nGroups == 0) bdf.agg(aggCols.head, aggCols.tail: _*)
-            else bdf.groupBy(groupAttrs.map(at => col(at.name)): _*)
-              .agg(aggCols.head, aggCols.tail: _*)
-          // Re-project to the union's positional order (group outputs
-          // sit at their needs positions, aliased u$i like the rest).
-          val sel: Seq[org.apache.spark.sql.Column] =
-            needs.zipWithIndex.flatMap {
-              case (GroupOf(c, _, _), i) => Seq(col(c).as(s"u$i"))
-              case (AvgOf(_, _), i) => Seq(col(s"u${i}s"), col(s"u${i}c"))
-              case (_, i) => Seq(col(s"u$i"))
-            }
-          grouped.select(sel: _*).queryExecution.analyzed
-        }
-
-      def avgOfOutput(i: Int): Average = a.aggregateExpressions(i) match {
-        case Alias(ae: AggregateExpression, _) =>
-          ae.aggregateFunction.asInstanceOf[Average]
-        case other => throw new IllegalStateException(
-          s"AvgOf need without an Average expression: $other")
-      }
-      val finalGroups: Seq[Expression] = needs.zipWithIndex.collect {
-        case (_: GroupOf, i) => uSlices(i).head
-      }
-      val finalExprs: Seq[NamedExpression] = needs.zipWithIndex.map {
-        case (n, i) =>
-          def u = uSlices(i).head
-          val orig = a.aggregateExpressions(i).asInstanceOf[NamedExpression]
-          val combined: Expression = n match {
-            case _: GroupOf  => u
-            case MinOf(_, _) => Min(u).toAggregateExpression()
-            case MaxOf(_, _) => Max(u).toAggregateExpression()
-            case SumOf(_, dt: DecimalType) =>
-              Cast(Sum(u).toAggregateExpression(), sumResultType(dt))
-            case SumOf(_, _) => Sum(u).toAggregateExpression()
-            case _: AvgOf =>
-              val av = avgOfOutput(i)
-              avgBind(
-                av,
-                Cast(Sum(uSlices(i)(0)).toAggregateExpression(),
-                  av.sumDataType),
-                Coalesce(Seq(
-                  Sum(uSlices(i)(1)).toAggregateExpression(), Literal(0L))))
-                .getOrElse(return None)
-            case _ => Coalesce(Seq(
-              Sum(u).toAggregateExpression(), Literal(0L)))
-          }
-          Alias(combined, orig.name)(exprId = orig.exprId)
-      }
-      logInfo(s"stats-aggregate rewrite: ${table.spec.path} resolved " +
-        s"aggregate served by winner-file classification " +
-        s"(${rows.map(r => r.getLong(r.length - 1)).sum} pure files " +
-        s"folded over ${rows.length} group rows, " +
-        s"${boundaryRel.length} mixed files scanned)")
-      Some(Aggregate(finalGroups, finalExprs, Union(Seq(local, partialPlan))))
-    }
-  }
-
-  /** `count(DISTINCT col)` over a history table's RESOLVED read — the
-    * winner-file classification composed with the values-union serve:
-    * a PURE file (every stored row a live winner) that is also
-    * SINGLE-VALUED in the column contributes its one stored value
-    * straight from the sidecar (min = max pins the exact value even
-    * under string truncation, by the bound sandwich; nn = cnt excludes
-    * nulls), every other file holding ≥ 1 winner scans its winner rows
-    * (the full resolve-identity semi-join) projected to the column, and
-    * DEAD files — exactly where a superseded distinct value hides —
-    * never open. A count-distinct over the union de-duplicates the two
-    * sides. Match: a single-output `count(DISTINCT attr)` — or the
-    * no-aggregate `SELECT DISTINCT attr` canonical form, which serves
-    * the VALUE SET through the same union (nulls ride the scan side:
-    * an all-null pure file fails nn = cnt and scans, so the NULL group
-    * appears exactly when a live null exists) — over the
-    * exact shared resolve shape (rn = 1 above the window) on a
-    * registered `retainHistory` table, attr an ordered-stats DATA
-    * column (partition columns are [[serveMorCount]]'s index-side
-    * family). FILTERS compose like the COW values union (q194) ×
-    * winner purity: partition point conjuncts select whole files and
-    * whole winners before the classification; literal ranges /
-    * IS NOT NULL / IN-lists on stats-covered columns classify per file
-    * — a file folds its value only when PURE, single-valued, and FULL
-    * under every conjunct; candidate files with winners scan winner
-    * rows with the residual re-applied; excluded and DEAD files never
-    * open. Zero folded values decline — nothing would fold and the
-    * plain resolve is the better plan.
-    */
-  private def serveMorDistinct(a: Aggregate): Option[LogicalPlan] = {
-    if (a.aggregateExpressions.length != 1) return None
-    // Two admitted heads: `count(DISTINCT x)` (bare, no grouping) and
-    // the no-aggregate `SELECT DISTINCT x` canonical form
-    // (Aggregate(x, x, child)) — the same values union serves both; the
-    // final node differs only in whether it counts or groups.
-    val (child0, orig, isCount) =
-      if (a.groupingExpressions.isEmpty)
-        a.aggregateExpressions.head match {
-          case al @ Alias(ae: AggregateExpression, _)
-              if ae.isDistinct && ae.filter.isEmpty =>
-            ae.aggregateFunction match {
-              case Count(Seq(x)) => (x, al, true)
-              case _ => return None
-            }
-          case _ => return None
-        }
-      else (a.groupingExpressions, a.aggregateExpressions.head) match {
-        case (Seq(g), at: Attribute) if g == at =>
-          (at: Expression, at: NamedExpression, false)
-        case _ => return None
-      }
-    val ks = KeyedScan.of(a.child).getOrElse(return None)
-    if (!ks.spec.retainHistory) return None
-    val spec = ks.spec
-    val rest = ks.resolved.getOrElse(return None)
-    if (rest.exists(_._2 != 0)) return None // conjuncts above the window only
-    val relAttr = ks.relAttrOf(child0)
-      .filter(at => KeyedTable.statsOrderedType(at.dataType) &&
-        !ks.isPartitionCol(at.name))
-      .getOrElse(return None)
-    // Conjunct classification — the q194 split, verbatim.
-    val RangeConjuncts.StatsConjuncts(partFilters, ranges, notNull, inLists) =
-      RangeConjuncts.statsConjuncts(ks, rest.map(_._1)).getOrElse(return None)
-    val table = KeyedTable(spec)
-    TableMetaCache.declineGated(spark, this, spec.path)((
-        "morDistinct", spec.path, relAttr.name,
-      partFilters.toVector, ranges.toVector, notNull.toVector,
-      inLists.map { case (c, vs) => (c, vs.toVector) }.toVector)) {
-      table.colStatsFrame(spark).flatMap { st =>
-        def statCol(prefix: String): Option[String] =
-          st.columns.find(_.equalsIgnoreCase(s"${prefix}_${relAttr.name}"))
-        if (!st.columns.contains("cnt")) return None
-        val (mnC, mxC, nnC) =
-          (statCol("min"), statCol("max"), statCol("nn")) match {
-            case (Some(a1), Some(b), Some(c)) => (a1, b, c)
-            case _ => return None
-          }
-        // The hybrid's candidate/full classification (see serveHybrid's
-        // soundness notes) composed with winner purity.
-        val (candidate, fullRange) = RangeConjuncts
-          .fileClasses(st, ranges, notNull, inLists).getOrElse(return None)
-        val partSel =
-          PartitionConjuncts.statCols(st, partFilters).getOrElse(return None)
-        val settled = table.settledWinnerEntries(spark).getOrElse(return None)
-        val stRel = st.withColumn(
-          "_rfile", table.relOfFileCol(spark, col("file")))
-        val wcU = MorWinnerMaps.of(spark, table, settled, stRel)
-          .getOrElse(return None).wcU
-        val joined = PartitionConjuncts.select(stRel, partSel)
-          .withColumn("wcnt", wcU(col("_rfile")))
-        val allWinners = col("wcnt").isNotNull &&
-          col("wcnt") === col("cnt") && col("cnt") > 0
-        val singleValued = col(nnC) === col("cnt") && col(mnC) === col(mxC)
-        val fold = allWinners &&
-          coalesce(singleValued && fullRange, lit(false))
-        val fullValues = KeyedTable.withMetaConf(spark)(
-          joined.filter(fold).select(col(mnC)).distinct()
-            .limit(MaxGroups + 1).collect())
-        if (fullValues.isEmpty || fullValues.length > MaxGroups) return None
-        val scanRel = KeyedTable.withMetaConf(spark)(
-          joined.filter(col("wcnt").isNotNull && col("wcnt") > 0 &&
-              coalesce(candidate, lit(false)) && !fold)
-            .select(col("_rfile")).collect().map(_.getString(0)).toSeq)
-        val conv =
-          CatalystTypeConverters.createToCatalystConverter(relAttr.dataType)
-        val uVal = AttributeReference("u", relAttr.dataType)()
-        val local = LocalRelation(
-          Seq(uVal),
-          fullValues.toIndexedSeq.map(r =>
-            InternalRow(conv(if (r.isNullAt(0)) null else r.get(0)))),
-          false)
-        val scanPlan: LogicalPlan =
-          if (scanRel.isEmpty)
-            LocalRelation(
-              Seq(AttributeReference("u", relAttr.dataType)()),
-              IndexedSeq.empty, false)
-          else {
-            // Residual: the range/IS NOT NULL/IN conjuncts re-applied on
-            // the winner rows (the original child is replaced wholesale).
-            val residual = RangeConjuncts.rowFilters(Nil, ranges, notNull, inLists)
-            val bdf = residual
-              .foldLeft(table.winnerRowsOf(spark, scanRel, settled))(
-                _.filter(_))
-            val bplan = bdf.select(col(relAttr.name)).queryExecution.analyzed
-            Project(Seq(Alias(bplan.output.head, "u")()), bplan)
-          }
-        logInfo(s"stats-aggregate rewrite: ${spec.path} resolved " +
-          (if (isCount) "count(distinct " else "DISTINCT ") +
-          s"${relAttr.name}) served by winner-file " +
-          s"classification (${fullValues.length} folded values, " +
-          s"${scanRel.length} files scanned)")
-        if (isCount) {
-          val cd = AggregateExpression(
-            Count(Seq(uVal)), Complete, isDistinct = true)
-          Some(Aggregate(
-            Nil,
-            Seq(Alias(cd, orig.name)(exprId = orig.exprId)),
-            Union(Seq(local, scanPlan))))
-        } else Some(Aggregate(
-          Seq(uVal),
-          Seq(Alias(uVal, orig.name)(exprId = orig.exprId)),
-          Union(Seq(local, scanPlan))))
-      }
-    }
-  }
-
   /** The sidecar fold one non-distinct, unfiltered aggregate function
     * needs, or None when it does not fold exactly.
     */
@@ -1016,9 +436,9 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       // totals must be same-sign and < 2^53 so Spark's
       // order-sensitive DOUBLE accumulation was provably exact
       // (every partial is a subset sum bounded by the total — for
-      // the hybrid the guard is proven from the WHOLE table's
+      // the union the guard is proven from the WHOLE table's
       // stats, covering whatever subset the boundary scan sums).
-      // Through the hybrid union avg owns a sum + count slice per
+      // Through the union avg owns a sum + count slice per
       // side and the combine re-binds Average's evaluate expression.
       case av: Average =>
         ks.relAttrOf(av.child).filter(at => integral(at.dataType) ||
@@ -1033,15 +453,14 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
   private def matchAgg(a: Aggregate): Option[AggMatch] = {
     if (a.aggregateExpressions.isEmpty) return None
     val ks = KeyedScan.of(a.child).getOrElse(return None)
-    if (ks.windows.nonEmpty || ks.spec.retainHistory) return None
-    val spec = ks.spec
+    val conds = ks.current.collect { case (Seq(), cs) => cs }.getOrElse(return None)
 
     // Grouping: every expression must be an attribute that is either a
     // PARTITION column (whole files carry one tuple — the sidecar's
     // per-file constant groups exactly, any type) or an ordered-stats
     // DATA column (a file single-valued in it — min = max ∧ nn = cnt —
     // belongs wholly to that group; multi-valued and null-carrying
-    // files scan as boundaries, which forces the hybrid serve). The
+    // files scan as boundaries, which forces the union serve). The
     // clustered-rollup shape: `GROUP BY lang` over a lang-clustered
     // corpus folds every interior run file from metadata.
     val groupAttrs: Seq[Attribute] = a.groupingExpressions.map { e =>
@@ -1057,17 +476,16 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     // sidecar rows IS the aggregate over the filtered table (the
     // original metadata-only path). Everything else goes through the
     // SHARED range extraction ([[RangeConjuncts]]): literal ranges and
-    // IS NOT NULL on ordered stats columns select the HYBRID serve —
+    // IS NOT NULL on ordered stats columns select the UNION serve —
     // FULLY-contained files fold from the sidecar, boundary files scan
     // with the filter residual. Any conjunct neither classifies
     // declines: a leftover predicate would falsify the full-file fold.
     // IS NULL declines too (a fold over all-null files would need the
     // complement matrix; the audit shape belongs in
     // [[RangePruneRewrite]]'s pruned scan).
-    val RangeConjuncts.StatsConjuncts(partFilters, ranges, notNull, inLists) =
-      RangeConjuncts.statsConjuncts(ks, ks.conjuncts.map(_._1))
-        .getOrElse(return None)
-    // Grouped hybrid rides the same machinery: partition groups fold by
+    val sc = RangeConjuncts.statsConjuncts(ks, conds.map(_._1))
+      .getOrElse(return None)
+    // Grouped union rides the same machinery: partition groups fold by
     // the sidecar's per-file partition tuple, data-column groups by the
     // file's single value (FULL ⇒ min = max), and the boundary
     // Aggregate keeps the original grouping — no extra admission check.
@@ -1086,9 +504,9 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     // re-applies the plan's OWN Cast node to the folded value
     // driver-side (same instance, same eval mode and zone — identical
     // semantics to the scan, a plan-time ANSI overflow declines through
-    // the rule's catch exactly where the scan would throw). The hybrid
-    // and MoR arms decline cast shapes (their combines rebuild the
-    // plan's aggregate expressions).
+    // the rule's catch exactly where the scan would throw). The union
+    // serve declines cast shapes (its combine rebuilds the plan's
+    // aggregate expressions).
     val castAt = mutable.Map.empty[Int, Cast]
     val normExprs: Seq[NamedExpression] =
       a.aggregateExpressions.zipWithIndex.map {
@@ -1119,436 +537,358 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       case Alias(e, _) => groupNeedOf(e).getOrElse(return None)
       case _ => return None
     }
-    // Same projection guard as the MoR arm: the whole/hybrid combines
-    // group by the PROJECTED GroupOf slices, so a grouping column absent
-    // from the SELECT list would collapse its groups. Decline.
+    // The whole/union combines group by the PROJECTED GroupOf slices,
+    // so a grouping column absent from the SELECT list would collapse
+    // its groups. Decline.
     val projectedGis = needs.collect { case GroupOf(_, _, gi) => gi }.toSet
     if (!groupAttrs.indices.forall(projectedGis.contains)) return None
-    Some(AggMatch(
-      a, ks, needs, groupAttrs, groupIsPart, partFilters, ranges,
-      notNull, inLists, castAt.toMap))
+    // A resolved read serves through the union alone, which neither
+    // re-applies a cast nor folds a partition's distinct count; and a
+    // count-only or DISTINCT-only shape there belongs to the record-level
+    // index ([[serveMorCount]]) or the values union ([[serveDistinct]]).
+    if (ks.spec.retainHistory && (castAt.nonEmpty ||
+        needs.exists(_.isInstanceOf[DistinctPartOf]) ||
+        needs.forall(n => n == CountAll || n.isInstanceOf[GroupOf])))
+      return None
+    Some(AggMatch(a, ks, needs, groupAttrs, groupIsPart, sc, castAt.toMap))
   }
 
-  private def serveAgg(m: AggMatch): Option[LogicalPlan] =
-    if (m.ranges.isEmpty && m.notNull.isEmpty && m.inLists.isEmpty &&
-        m.dataGroupCols.isEmpty)
-      serveWhole(m)
-    else if (m.casts.nonEmpty) None // cast support is the whole arm's
-    else serveHybrid(m)
+  private def serveAgg(m: AggMatch, view: StatsView): Option[LogicalPlan] =
+    if (view.allPure && !m.sc.classifies && m.dataGroupCols.isEmpty)
+      serveWhole(m, view)
+    else if (m.casts.nonEmpty) None // cast support is the whole serve's
+    else serveUnion(m, view)
 
   /** The metadata-ONLY serve: one sidecar read + the LocalRelation fold
     * (whole table, or partition-filtered — every selected file
     * contributes all its rows).
     */
-  private def serveWhole(m: AggMatch): Option[LogicalPlan] = {
-    val AggMatch(a, _, needs, groupAttrs, _, partFilters, _, _, _, _) = m
-    val spec = m.spec
-    if (m.dataGroupCols.nonEmpty) return None // hybrid's shape (routing)
-    val table = KeyedTable(spec)
-    table.colStatsFrame(spark).flatMap { st =>
-      // Sidecar columns are named with the column string passed to
-      // recordColumnStats / the spec's partition cols; resolve
-      // case-insensitively like the analyzer.
-      def statCol(prefix: String, c: String): Option[String] =
-        st.columns.find(_.equalsIgnoreCase(s"${prefix}_$c"))
-      val groupStatCols = groupAttrs.map(at => statCol("p", at.name))
-      // Partition filters select sidecar rows (whole files) exactly.
-      val stSel = PartitionConjuncts.select(
-        st, PartitionConjuncts.statCols(st, partFilters).getOrElse(return None))
-      // Per-need fold columns; arity varies (avg folds FOUR: the exact
-      // sum, the non-null count, and the min/max its integral-exactness
-      // guard reads), so each need owns a SLICE of the fold row.
-      val folds: Seq[Option[Seq[org.apache.spark.sql.Column]]] = needs.map {
-        case _: GroupOf  => Some(Seq.empty)
-        case MinOf(c, _) => statCol("min", c).map(s => Seq(min(col(s))))
-        case MaxOf(c, _) => statCol("max", c).map(s => Seq(max(col(s))))
-        // Decimal fold: exact for both sidecar generations (new decimal
-        // partials directly; old long partials widen losslessly), and
-        // never overflows where an ANSI Sum would throw — the narrowing
-        // back to the aggregate's own result type declines instead
-        // (sumToLong / sumToDecimal).
-        case SumOf(c, t) =>
-          statCol("sum", c).map(s => Seq(sum(col(s).cast(partialDecimal(t)))))
-        case AvgOf(c, t) =>
-          for {
-            s <- statCol("sum", c); n <- statCol("nn", c)
-            mn <- statCol("min", c); mx <- statCol("max", c)
-          } yield Seq(sum(col(s).cast(partialDecimal(t))), sum(col(n)),
-            min(col(mn)), max(col(mx)))
-        case CountAll =>
-          if (st.columns.contains("cnt")) Some(Seq(sum(col("cnt")))) else None
-        case CountCol(c) => statCol("nn", c).map(s => Seq(sum(col(s))))
-        // cnt > 0 inside the fold (not a frame filter): a zero-row
-        // straggler file must not mint a partition value; nulls drop on
-        // both levels (countDistinct and the row-level count(distinct)).
-        case DistinctPartOf(c) =>
-          if (!st.columns.contains("cnt")) None
-          else statCol("p", c).map(s =>
-            Seq(countDistinct(when(col("cnt") > 0, col(s)))))
-      }
-      // String min/max: any selected truncated file declines the whole
-      // node to a scan. One guard fold per string column, appended after
-      // the value folds.
-      val guardCols = truncGuardCols(st, needs).getOrElse(return None)
-      if (folds.exists(_.isEmpty) || groupStatCols.exists(_.isEmpty)) None
-      else {
-        val slices = folds.map(_.get)
-        // Need i's fold slice starts at nGroups + offsets(i).
-        val offsets = slices.scanLeft(0)(_ + _.length)
-        val valueExprs = slices.flatten.zipWithIndex
-          .map { case (c, i) => c.as(s"v$i") }
-        val guardExprs = guardCols.zipWithIndex
-          .map { case (g, i) => max(col(g)).as(s"g$i") }
-        val exprs = valueExprs ++ guardExprs
-        val folded =
-          if (exprs.isEmpty) {
-            // Pure DISTINCT over partition columns (no aggregate
-            // functions at all): the sidecar's per-file partition
-            // tuples ARE the answer — `SELECT DISTINCT day FROM t` is
-            // a metadata read, the relational SHOW PARTITIONS. The
-            // cnt > 0 guard keeps a zero-row straggler file from
-            // minting a partition value no row carries.
-            if (!st.columns.contains("cnt")) return None
-            stSel.filter(col("cnt") > 0)
-              .select(groupStatCols.flatten.map(col): _*).distinct()
-          }
-          else if (groupStatCols.isEmpty) stSel.agg(exprs.head, exprs.tail: _*)
-          else {
-            // Same zero-row straggler guard as the DISTINCT arms: a
-            // cnt = 0 sidecar row (none is written today, but the guard
-            // is the contract) must not mint a phantom group. The
-            // groupless fold above stays unfiltered — an aggregate over
-            // an empty selection still answers (count 0, min null).
-            if (!st.columns.contains("cnt")) return None
-            stSel.filter(col("cnt") > 0)
-              .groupBy(groupStatCols.flatten.map(col): _*)
-              .agg(exprs.head, exprs.tail: _*)
-          }
-        val rows = KeyedTable.withMetaConf(spark)(
-          folded.limit(MaxGroups + 1).collect())
-        if (rows.length > MaxGroups) return None
-        val nGuards = guardExprs.length
-        val truncated = rows.exists { row =>
-          (0 until nGuards).exists { gi =>
-            val at = row.length - nGuards + gi
-            !row.isNullAt(at) && row.getBoolean(at)
-          }
-        }
-        if (truncated) return None
-        val nGroups = groupStatCols.length
-        val toCatalyst = groupAttrs.map(at =>
-          CatalystTypeConverters.createToCatalystConverter(at.dataType))
-        // The plan's own Average instance for need i — its
-        // evaluateExpression carries the exact result type, rounding
-        // and eval-mode semantics the unserved scan would use.
-        def avgAt(i: Int): Average = a.aggregateExpressions(i) match {
-          case Alias(ae: AggregateExpression, _) =>
-            ae.aggregateFunction.asInstanceOf[Average]
-          case Alias(Cast(ae: AggregateExpression, _, _, _), _) =>
-            ae.aggregateFunction.asInstanceOf[Average]
-          case other => throw new IllegalStateException(
-            s"AvgOf need without an Average expression: $other")
-        }
-        val data = rows.toIndexedSeq.map { row =>
-          val values: Seq[Any] = needs.zipWithIndex.map {
-            case (GroupOf(_, _, gi), _) => toCatalyst(gi)(row.get(gi))
-            case (n, i) =>
-              def at(o: Int): Int = nGroups + offsets(i) + o
-              def v(o: Int): Any =
-                if (row.isNullAt(at(o))) null else row.get(at(o))
-              val inner: Any = n match {
-                case MinOf(_, t) => toCatalystStat(v(0), t)
-                case MaxOf(_, t) => toCatalystStat(v(0), t)
-                // sum over no rows is null, like Spark; a total outside
-                // the result type declines the serve (the scan
-                // reproduces Spark's own overflow behavior)
-                case SumOf(_, dt: DecimalType) =>
-                  sumToDecimal(v(0), dt).getOrElse(return None)
-                case SumOf(_, _) => sumToLong(v(0)).getOrElse(return None)
-                case AvgOf(_, t) =>
-                  avgValue(avgAt(i), t, v(0), v(1), v(2), v(3))
-                    .getOrElse(return None)
-                // count over zero files is 0, never null
-                case _ => if (v(0) == null) 0L else v(0)
-              }
-              // An unwrapped Cast re-applies on the folded value via
-              // the PLAN'S OWN node (same eval mode / zone) — the
-              // LocalRelation row must carry the aggregate expression's
-              // final (cast) type.
-              m.casts.get(i) match {
-                case Some(c) => c
-                  .withNewChildren(Seq(Literal(inner, c.child.dataType)))
-                  .eval(InternalRow.empty)
-                case None => inner
-              }
-          }
-          InternalRow.fromSeq(values)
-        }
-        logInfo(s"stats-aggregate rewrite: ${spec.path} answered from the " +
-          s"column-stats sidecar (${rows.length} group rows, no scan)")
-        Some(LocalRelation(a.output, data, false))
-      }
+  private def serveWhole(m: AggMatch, view: StatsView): Option[LogicalPlan] = {
+    val AggMatch(a, _, needs, groupAttrs, _, _, _) = m
+    val groupStatCols = groupAttrs.map(at => view.statCol("p", at.name))
+    // Per-need fold columns; arity varies (avg folds FOUR: the exact
+    // sum, the non-null count, and the min/max its integral-exactness
+    // guard reads), so each need owns a SLICE of the fold row.
+    val folds: Seq[Option[Seq[org.apache.spark.sql.Column]]] = needs.map {
+      case _: GroupOf  => Some(Seq.empty)
+      case MinOf(c, _) => view.statCol("min", c).map(s => Seq(min(col(s))))
+      case MaxOf(c, _) => view.statCol("max", c).map(s => Seq(max(col(s))))
+      // Decimal fold: exact for both sidecar generations (new decimal
+      // partials directly; old long partials widen losslessly), and
+      // never overflows where an ANSI Sum would throw — the narrowing
+      // back to the aggregate's own result type declines instead
+      // (sumToLong / sumToDecimal).
+      case SumOf(c, t) =>
+        view.statCol("sum", c).map(s => Seq(sum(col(s).cast(partialDecimal(t)))))
+      case AvgOf(c, t) =>
+        for {
+          s <- view.statCol("sum", c); n <- view.statCol("nn", c)
+          mn <- view.statCol("min", c); mx <- view.statCol("max", c)
+        } yield Seq(sum(col(s).cast(partialDecimal(t))), sum(col(n)),
+          min(col(mn)), max(col(mx)))
+      case CountAll => Some(Seq(sum(col("cnt"))))
+      case CountCol(c) => view.statCol("nn", c).map(s => Seq(sum(col(s))))
+      // cnt > 0 inside the fold (not a frame filter): a zero-row
+      // straggler file must not mint a partition value; nulls drop on
+      // both levels (countDistinct and the row-level count(distinct)).
+      case DistinctPartOf(c) =>
+        view.statCol("p", c).map(s => Seq(countDistinct(when(col("cnt") > 0, col(s)))))
     }
-  }
-
-  /** The HYBRID serve: a range-filtered aggregate answered by folding
-    * the FULLY-contained files from the sidecar and scanning only the
-    * BOUNDARY files — on a time-clustered 100 TB table,
-    * `SELECT count(*), sum(x) WHERE ts BETWEEN …` opens the two files
-    * straddling the range edges instead of every file in the range. A
-    * file is FULL when every row satisfies every conjunct (bounds
-    * inside the range and zero nulls in every constrained column — the
-    * per-file `nn`/`cnt` counts decide); truncated string bounds stay
-    * sound for the classification (stored lower ≤ real min, stored
-    * upper ≥ real max, so stored-in implies real-in) though min/max
-    * VALUES over truncated full files still decline. The produced plan
-    * is `Aggregate(combine, Union(LocalRelation(full-file fold),
-    * Aggregate(original functions, Filter(original predicate,
-    * boundary-file scan))))` — counts/sums re-add, min/max re-fold, and
-    * the final aliases keep the original exprIds so nothing above
-    * changes. min/max/count are decomposable exactly; sum folds exactly
-    * because the sidecar stores exact DECIMAL(38,0) per-file partials,
-    * and the fold's final value joins the boundary side's long sum via
-    * the same narrow-or-decline contract as the metadata-only serve (a
-    * total outside long range declines to the scan, where Spark's own
-    * ANSI Sum raises).
-    * Zero full files declines (that shape is [[RangePruneRewrite]]'s);
-    * the boundary Aggregate over ZERO files still yields its neutral
-    * single row, so an exactly-aligned range serves with no data IO
-    * beyond an empty scan.
-    */
-  private def serveHybrid(m: AggMatch): Option[LogicalPlan] = {
-    val AggMatch(a, ks, needs, groupAttrs, groupIsPart, partFilters,
-      ranges, notNull, inLists, _) = m
-    val spec = ks.spec
-    val dataGroups = m.dataGroupCols
-    // A distinct count would need VALUES as partials through the union
-    // — metadata-only serve. (avg DOES ride the hybrid: it owns a
-    // sum + count slice on both union sides, see below.)
-    if (needs.exists(_.isInstanceOf[DistinctPartOf])) return None
-    val table = KeyedTable(spec)
-    table.colStatsFrame(spark).flatMap { st =>
-      def statCol(prefix: String, c: String): Option[String] =
-        st.columns.find(_.equalsIgnoreCase(s"${prefix}_$c"))
-      if (!st.columns.contains("cnt")) return None
-      // Candidate: the file can hold a satisfying row; full: every row
-      // satisfies every conjunct ([[RangeConjuncts.fileClasses]], with
-      // the soundness notes on truncation and IN-lists). An all-null
-      // stats row nulls both predicates — filtered out on both sides,
-      // rightly: no row of such a file satisfies a range conjunct. DATA
-      // grouping restricts nothing on the candidate side: every file can
-      // hold rows of some group, so with no other conjunct every
-      // non-full file is a boundary (routing guarantees at least one
-      // classifying dimension exists whenever hybrid runs).
-      val (candidate, fullFilter) = RangeConjuncts
-        .fileClasses(st, ranges, notNull, inLists).getOrElse(return None)
-      // A file folds into a DATA group only when SINGLE-VALUED in the
-      // column (min = max ∧ nn = cnt — every row carries exactly that
-      // value; sound under string truncation, because stored-lower ≤
-      // real-min ≤ real-max ≤ stored-upper forces the exact value
-      // when the stored bounds coincide). Multi-valued files span
-      // groups and null-carrying files hold rows of the NULL group —
-      // both fail the conjunct (nn = cnt is false once any null
-      // exists) and scan as boundaries, where the residual Aggregate
-      // groups them exactly. A zero-row file nulls min = max, which
-      // excludes it from BOTH sides — rightly, it holds no rows.
-      val full = dataGroups.foldLeft(fullFilter) { (acc, c) =>
-        (statCol("nn", c), statCol("min", c), statCol("max", c)) match {
-          case (Some(nnC), Some(mnC), Some(mxC)) =>
-            acc && col(nnC) === col("cnt") && col(mnC) === col(mxC)
-          case _ => return None
-        }
-      }
-
-      // Partition conjuncts select whole sidecar rows first, exactly as
-      // the metadata-only serve does.
-      val stSel = PartitionConjuncts.select(
-        st, PartitionConjuncts.statCols(st, partFilters).getOrElse(return None))
-
-      // Value folds over the FULL subset — same folds as the
-      // metadata-only serve — plus the string-truncation guards and the
-      // full-file count.
-      val (slices, guardCols) = unionFolds(st, needs).getOrElse(return None)
-      // Need i's fold slice starts at nGroups + offsets(i).
-      val offsets = slices.scanLeft(0)(_ + _.length)
-      if (!avgIntExact(st, needs)) return None
-      // Grouped serve: partition groups fold by the sidecar's per-file
-      // partition tuple (each file lives in exactly one partition dir);
-      // data groups fold by the file's single value — its recorded min
-      // (= max on every FULL file by the classification above).
-      val groupStatCols = groupAttrs.zip(groupIsPart).map {
-        case (at, true)  => statCol("p", at.name)
-        case (at, false) => statCol("min", at.name)
-      }
-      if (groupStatCols.exists(_.isEmpty)) return None
-      val valueExprs = slices.flatten.zipWithIndex
-        .map { case (c, i) => c.as(s"v$i") }
-      val guardExprs = guardCols.zipWithIndex
-        .map { case (g, i) => max(col(g)).as(s"g$i") }
-      val exprs = (valueExprs ++ guardExprs) :+ count(lit(1)).as("nfull")
-      // cnt > 0 beside the classification: a zero-row sidecar row passes
-      // the notNull-only `full` conjunct (0 = 0) and would mint a
-      // phantom group in the grouped fold — same straggler guard as the
-      // DISTINCT arms.
-      val fullSel = stSel.filter(full && col("cnt") > 0)
-      val folded =
-        if (groupStatCols.isEmpty) fullSel.agg(exprs.head, exprs.tail: _*)
-        else fullSel.groupBy(groupStatCols.flatten.map(col): _*)
-          .agg(exprs.head, exprs.tail: _*)
-      val rows = KeyedTable.withMetaConf(spark)(
-        folded.limit(MaxGroups + 1).collect())
-      if (rows.length > MaxGroups) return None
-      val nGroups = groupStatCols.length
-      // Zero full files anywhere: nothing folds — RangePrune's shape.
-      // (A groupless fold always yields one row; its nfull decides.)
-      if (rows.map(r => r.getLong(r.length - 1)).sum == 0L) return None
-      val nGuards = guardExprs.length
-      val truncated = rows.exists { row =>
-        (0 until nGuards).exists { gi =>
-          val at = row.length - 1 - nGuards + gi
-          !row.isNullAt(at) && row.getBoolean(at)
-        }
-      }
-      if (truncated) return None
-
-      val partialFiles = KeyedTable.withMetaConf(spark)(
-        stSel.filter(candidate && !full)
-          .select("file").collect().map(_.getString(0)).toSeq)
-
-      // Both Union sides share this row shape, in needs order (group
-      // outputs included, in their original positions); avg needs own a
-      // TWO-column slice (exact decimal sum + non-null count).
-      val uSlices: Seq[Seq[AttributeReference]] = needs.zipWithIndex.map {
-        case (GroupOf(_, t, _), i) => Seq(AttributeReference(s"u$i", t)())
-        case (MinOf(_, t), i) => Seq(AttributeReference(s"u$i", t)())
-        case (MaxOf(_, t), i) => Seq(AttributeReference(s"u$i", t)())
-        case (SumOf(_, dt: DecimalType), i) =>
-          Seq(AttributeReference(s"u$i", sumResultType(dt))())
-        case (SumOf(_, _), i) => Seq(AttributeReference(s"u$i", LongType)())
-        case (AvgOf(_, t), i) => Seq(
-          AttributeReference(s"u${i}s", partialDecimal(t))(),
-          AttributeReference(s"u${i}c", LongType, nullable = false)())
-        case (_, i) =>
-          Seq(AttributeReference(s"u$i", LongType, nullable = false)())
-      }
-      val toCatalystGroup = groupAttrs.map(at =>
-        CatalystTypeConverters.createToCatalystConverter(at.dataType))
-      val localRows = rows.toIndexedSeq.map { row =>
-        val vals: Seq[Any] = needs.zipWithIndex.flatMap {
-          case (GroupOf(_, _, gi), _) => Seq(toCatalystGroup(gi)(row.get(gi)))
-          case (n, i) =>
-            def v(o: Int): Any = {
-              val p = nGroups + offsets(i) + o
-              if (row.isNullAt(p)) null else row.get(p)
-            }
-            n match {
-              case MinOf(_, t) => Seq(toCatalystStat(v(0), t))
-              case MaxOf(_, t) => Seq(toCatalystStat(v(0), t))
-              // sum over no full rows is null, like Spark; a total
-              // outside the result type declines (overflow belongs to
-              // the real scan)
-              case SumOf(_, dt: DecimalType) =>
-                Seq(sumToDecimal(v(0), dt).getOrElse(return None))
-              case SumOf(_, _) => Seq(sumToLong(v(0)).getOrElse(return None))
-              // avg partials: the exact decimal sum (null when every
-              // full file is all-null) and the non-null count
-              case AvgOf(_, t) =>
-                val dec = v(0) match {
-                  case null => null
-                  case bd: java.math.BigDecimal =>
-                    CatalystTypeConverters
-                      .createToCatalystConverter(partialDecimal(t))(bd)
-                  case _ => return None
-                }
-                val cnt = v(1) match {
-                  case null => 0L
-                  case l: java.lang.Long => l.longValue()
-                  case _ => return None
-                }
-                Seq(dec, cnt)
-              case _ => Seq(if (v(0) == null) 0L else v(0))
-            }
-        }
-        InternalRow.fromSeq(vals)
-      }
-      val local = LocalRelation(uSlices.flatten, localRows, false)
-
-      // Boundary side: the original child subtree (filters, projects,
-      // renames intact) with the scan swapped onto the partial files,
-      // aggregated with the ORIGINAL functions.
-      val newChild = ks.swap(spark, a.child, partialFiles.map(abs =>
-        new org.apache.hadoop.fs.Path(new java.net.URI(abs))))
-      // The Average instance of output i (admission guarantees shape).
-      def avgOfOutput(i: Int): Average = a.aggregateExpressions(i) match {
-        case Alias(ae: AggregateExpression, _) =>
-          ae.aggregateFunction.asInstanceOf[Average]
-        case other => throw new IllegalStateException(
-          s"AvgOf need without an Average expression: $other")
-      }
-      val partialAliases: Seq[NamedExpression] =
-        a.aggregateExpressions.zipWithIndex.flatMap { case (e, i) =>
-          needs(i) match {
-            // avg's boundary partials: the exact widened-decimal sum
-            // (same arithmetic as the sidecar partials) and the
-            // non-null count over the ORIGINAL child expression.
-            case AvgOf(_, t) =>
-              val child = avgOfOutput(i).child
-              Seq(
-                Alias(Sum(Cast(child, partialDecimal(t)))
-                  .toAggregateExpression(), s"u${i}s")(),
-                Alias(Count(child).toAggregateExpression(), s"u${i}c")())
-            case _ => e match {
-              case Alias(x, _) => Seq(Alias(x, s"u$i")())
-              case x           => Seq(Alias(x, s"u$i")()) // bare group attr
-            }
-          }
-        }
-      val partial = Aggregate(a.groupingExpressions, partialAliases, newChild)
-
-      // Final combine: group values flow through the grouping, counts
-      // and sums re-add, min/max re-fold, avg re-binds Average's own
-      // evaluate expression over the re-added sum + count (its sum
-      // lands back in Average's sum-buffer type, so result type and
-      // rounding are Spark's own); aliases keep the original names AND
-      // exprIds so nothing above changes. Coalesce pins the count
-      // combine non-null (every group has at least one input row by
-      // construction, but the static type must stay non-nullable like
-      // Count's).
-      val finalGroups: Seq[Expression] = needs.zipWithIndex.collect {
-        case (_: GroupOf, i) => uSlices(i).head
-      }
-      val finalExprs: Seq[NamedExpression] = needs.zipWithIndex.map {
+    // String min/max: any selected truncated file declines the whole
+    // node to a scan. One guard fold per string column, appended after
+    // the value folds.
+    val guardCols = truncGuardCols(view, needs).getOrElse(return None)
+    if (folds.exists(_.isEmpty) || groupStatCols.exists(_.isEmpty)) return None
+    val slices = folds.map(_.get)
+    // Need i's fold slice starts at nGroups + offsets(i).
+    val offsets = slices.scanLeft(0)(_ + _.length)
+    val valueExprs = slices.flatten.zipWithIndex
+      .map { case (c, i) => c.as(s"v$i") }
+    val guardExprs = guardCols.zipWithIndex
+      .map { case (g, i) => max(col(g)).as(s"g$i") }
+    val exprs = valueExprs ++ guardExprs
+    val stSel = view.files
+    val folded =
+      // Pure DISTINCT over partition columns (no aggregate functions at
+      // all): the sidecar's per-file partition tuples ARE the answer —
+      // `SELECT DISTINCT day FROM t` is a metadata read, the relational
+      // SHOW PARTITIONS. The cnt > 0 guard keeps a zero-row straggler
+      // file from minting a partition value no row carries.
+      if (exprs.isEmpty)
+        stSel.filter(col("cnt") > 0)
+          .select(groupStatCols.flatten.map(col): _*).distinct()
+      else if (groupStatCols.isEmpty) stSel.agg(exprs.head, exprs.tail: _*)
+      // Same zero-row straggler guard as the DISTINCT arms: a cnt = 0
+      // sidecar row (none is written today, but the guard is the
+      // contract) must not mint a phantom group. The groupless fold
+      // above stays unfiltered — an aggregate over an empty selection
+      // still answers (count 0, min null).
+      else stSel.filter(col("cnt") > 0)
+        .groupBy(groupStatCols.flatten.map(col): _*)
+        .agg(exprs.head, exprs.tail: _*)
+    val rows = KeyedTable.withMetaConf(spark)(
+      folded.limit(MaxGroups + 1).collect())
+    if (rows.length > MaxGroups) return None
+    if (truncated(rows, guardExprs.length, trailing = 0)) return None
+    val nGroups = groupStatCols.length
+    val toCatalyst = groupAttrs.map(at =>
+      CatalystTypeConverters.createToCatalystConverter(at.dataType))
+    // The plan's own Average instance for need i — its
+    // evaluateExpression carries the exact result type, rounding
+    // and eval-mode semantics the unserved scan would use.
+    def avgAt(i: Int): Average = a.aggregateExpressions(i) match {
+      case Alias(ae: AggregateExpression, _) =>
+        ae.aggregateFunction.asInstanceOf[Average]
+      case Alias(Cast(ae: AggregateExpression, _, _, _), _) =>
+        ae.aggregateFunction.asInstanceOf[Average]
+      case other => throw new IllegalStateException(
+        s"AvgOf need without an Average expression: $other")
+    }
+    val data = rows.toIndexedSeq.map { row =>
+      val values: Seq[Any] = needs.zipWithIndex.map {
+        case (GroupOf(_, _, gi), _) => toCatalyst(gi)(row.get(gi))
         case (n, i) =>
-          def u = uSlices(i).head
-          val orig = a.aggregateExpressions(i).asInstanceOf[NamedExpression]
-          val combined: Expression = n match {
-            case _: GroupOf  => u
-            case MinOf(_, _) => Min(u).toAggregateExpression()
-            case MaxOf(_, _) => Max(u).toAggregateExpression()
+          def at(o: Int): Int = nGroups + offsets(i) + o
+          def v(o: Int): Any =
+            if (row.isNullAt(at(o))) null else row.get(at(o))
+          val inner: Any = n match {
+            case MinOf(_, t) => toCatalystStat(v(0), t)
+            case MaxOf(_, t) => toCatalystStat(v(0), t)
+            // sum over no rows is null, like Spark; a total outside
+            // the result type declines the serve (the scan
+            // reproduces Spark's own overflow behavior)
             case SumOf(_, dt: DecimalType) =>
-              Cast(Sum(u).toAggregateExpression(), sumResultType(dt))
-            case SumOf(_, _) => Sum(u).toAggregateExpression()
-            case _: AvgOf =>
-              val av = avgOfOutput(i)
-              avgBind(
-                av,
-                Cast(Sum(uSlices(i)(0)).toAggregateExpression(),
-                  av.sumDataType),
-                Coalesce(Seq(
-                  Sum(uSlices(i)(1)).toAggregateExpression(), Literal(0L))))
+              sumToDecimal(v(0), dt).getOrElse(return None)
+            case SumOf(_, _) => sumToLong(v(0)).getOrElse(return None)
+            case AvgOf(_, t) =>
+              avgValue(avgAt(i), t, v(0), v(1), v(2), v(3))
                 .getOrElse(return None)
-            case _ => Coalesce(Seq(
-              Sum(u).toAggregateExpression(), Literal(0L)))
+            // count over zero files is 0, never null
+            case _ => if (v(0) == null) 0L else v(0)
           }
-          Alias(combined, orig.name)(exprId = orig.exprId)
+          // An unwrapped Cast re-applies on the folded value via
+          // the PLAN'S OWN node (same eval mode / zone) — the
+          // LocalRelation row must carry the aggregate expression's
+          // final (cast) type.
+          m.casts.get(i) match {
+            case Some(c) => c
+              .withNewChildren(Seq(Literal(inner, c.child.dataType)))
+              .eval(InternalRow.empty)
+            case None => inner
+          }
       }
-      logInfo(s"stats-aggregate hybrid: ${spec.path} folded " +
-        s"${rows.map(r => r.getLong(r.length - 1)).sum} full files from " +
-        s"the sidecar (${rows.length} group rows), scanning " +
-        s"${partialFiles.length} boundary files")
-      Some(Aggregate(finalGroups, finalExprs, Union(Seq(local, partial))))
+      InternalRow.fromSeq(values)
     }
+    logInfo(s"stats-aggregate rewrite: ${m.spec.path} answered from the " +
+      s"column-stats sidecar (${rows.length} group rows, no scan)")
+    Some(LocalRelation(a.output, data, false))
   }
+
+  /** The UNION serve: fold the files whose every row is a current row
+    * satisfying every conjunct from the sidecar, scan the rest — on a
+    * time-clustered 100 TB table `SELECT count(*), sum(x) WHERE ts
+    * BETWEEN …` opens the two files straddling the range edges instead
+    * of every file in the range, and on a resolved read the daily
+    * dashboard folds the stable archive's pure files and scans only the
+    * churned ones. A file FOLDS when it is pure ([[StatsView.pure]]),
+    * FULL under every conjunct (bounds inside the range and zero nulls
+    * in every constrained column — truncated string bounds stay sound
+    * for the classification, though min/max VALUES over truncated files
+    * still decline) and, for a DATA grouping, single-valued in the group
+    * column (min = max ∧ nn = cnt: every row in one group; group-spanning
+    * and null-carrying files scan, where the residual grouping places
+    * their rows exactly). Every other live candidate file scans
+    * ([[StatsView.boundary]], [[StatsView.rowsBack]]). Pure files fold
+    * into their hive partition's group (the sidecar's per-file p_ tuple)
+    * or their single recorded value.
+    *
+    * The produced plan is `Aggregate(combine, Union(LocalRelation(fold),
+    * Aggregate(original functions, scanned rows)))` — counts/sums
+    * re-add, min/max re-fold, avg rides as a sum + count slice per side
+    * and re-binds Average's own evaluate expression; the final aliases
+    * keep the original exprIds so nothing above changes. Sums fold
+    * exactly from the sidecar's DECIMAL(38,0) partials and narrow back
+    * through the same narrow-or-decline contract as the metadata-only
+    * serve. Zero folded files decline (the scan alone is
+    * [[RangePruneRewrite]]'s shape, or the plain resolve's); the scanned
+    * Aggregate over ZERO files still yields its neutral single row.
+    */
+  private def serveUnion(m: AggMatch, view: StatsView): Option[LogicalPlan] = {
+    val AggMatch(a, _, needs, groupAttrs, groupIsPart, _, _) = m
+    val (groupStatCols, single) =
+      view.groupKeys(groupAttrs.map(_.name).zip(groupIsPart)).getOrElse(return None)
+    val (slices, guardCols) = unionFolds(view, needs).getOrElse(return None)
+    // Need i's fold slice starts at nGroups + offsets(i).
+    val offsets = slices.scanLeft(0)(_ + _.length)
+    if (!avgIntExact(view, needs)) return None
+    val valueExprs = slices.flatten.zipWithIndex
+      .map { case (c, i) => c.as(s"v$i") }
+    val guardExprs = guardCols.zipWithIndex
+      .map { case (g, i) => max(col(g)).as(s"g$i") }
+    val exprs = (valueExprs ++ guardExprs) :+ count(lit(1)).as("nfull")
+    // cnt > 0: a zero-row sidecar row passes a notNull-only FULL test
+    // (0 = 0) and would mint a phantom group in the grouped fold.
+    val fold = view.pure && coalesce(view.full && single, lit(false)) &&
+      col("cnt") > 0
+    val foldSel = view.files.filter(fold)
+    val folded =
+      if (groupStatCols.isEmpty) foldSel.agg(exprs.head, exprs.tail: _*)
+      else foldSel.groupBy(groupStatCols.map(col): _*)
+        .agg(exprs.head, exprs.tail: _*)
+    val rows = KeyedTable.withMetaConf(spark)(
+      folded.limit(MaxGroups + 1).collect())
+    if (rows.length > MaxGroups) return None
+    val nGroups = groupStatCols.length
+    // Zero folded files anywhere: nothing folds. (A groupless fold
+    // always yields one row; its nfull decides.)
+    val nFolded = rows.map(r => r.getLong(r.length - 1)).sum
+    if (nFolded == 0L) return None
+    if (truncated(rows, guardExprs.length, trailing = 1)) return None
+
+    val scanned = view.boundary(fold, everyPureFileFolds = m.dataGroupCols.isEmpty)
+
+    // Both Union sides share this row shape, in needs order (group
+    // outputs included, in their original positions); avg needs own a
+    // TWO-column slice (exact decimal sum + non-null count).
+    val uSlices: Seq[Seq[AttributeReference]] = needs.zipWithIndex.map {
+      case (GroupOf(_, t, _), i) => Seq(AttributeReference(s"u$i", t)())
+      case (MinOf(_, t), i) => Seq(AttributeReference(s"u$i", t)())
+      case (MaxOf(_, t), i) => Seq(AttributeReference(s"u$i", t)())
+      case (SumOf(_, dt: DecimalType), i) =>
+        Seq(AttributeReference(s"u$i", sumResultType(dt))())
+      case (SumOf(_, _), i) => Seq(AttributeReference(s"u$i", LongType)())
+      case (AvgOf(_, t), i) => Seq(
+        AttributeReference(s"u${i}s", partialDecimal(t))(),
+        AttributeReference(s"u${i}c", LongType, nullable = false)())
+      case (_, i) =>
+        Seq(AttributeReference(s"u$i", LongType, nullable = false)())
+    }
+    val toCatalystGroup = groupAttrs.map(at =>
+      CatalystTypeConverters.createToCatalystConverter(at.dataType))
+    val localRows = rows.toIndexedSeq.map { row =>
+      val vals: Seq[Any] = needs.zipWithIndex.flatMap {
+        case (GroupOf(_, _, gi), _) => Seq(toCatalystGroup(gi)(row.get(gi)))
+        case (n, i) =>
+          def v(o: Int): Any = {
+            val p = nGroups + offsets(i) + o
+            if (row.isNullAt(p)) null else row.get(p)
+          }
+          n match {
+            case MinOf(_, t) => Seq(toCatalystStat(v(0), t))
+            case MaxOf(_, t) => Seq(toCatalystStat(v(0), t))
+            // sum over no folded rows is null, like Spark; a total
+            // outside the result type declines (overflow belongs to
+            // the real scan)
+            case SumOf(_, dt: DecimalType) =>
+              Seq(sumToDecimal(v(0), dt).getOrElse(return None))
+            case SumOf(_, _) => Seq(sumToLong(v(0)).getOrElse(return None))
+            // avg partials: the exact decimal sum (null when every
+            // folded file is all-null) and the non-null count
+            case AvgOf(_, t) =>
+              val dec = v(0) match {
+                case null => null
+                case bd: java.math.BigDecimal =>
+                  CatalystTypeConverters
+                    .createToCatalystConverter(partialDecimal(t))(bd)
+                case _ => return None
+              }
+              val cnt = v(1) match {
+                case null => 0L
+                case l: java.lang.Long => l.longValue()
+                case _ => return None
+              }
+              Seq(dec, cnt)
+            case _ => Seq(if (v(0) == null) 0L else v(0))
+          }
+      }
+      InternalRow.fromSeq(vals)
+    }
+    val local = LocalRelation(uSlices.flatten, localRows, false)
+
+    // Scanned side: the kept files' current rows in place of the child
+    // subtree, aggregated with the ORIGINAL functions.
+    val rest = view.rowsBack(a.child, a.child, scanned).getOrElse(return None)
+    // The Average instance of output i (admission guarantees shape).
+    def avgOfOutput(i: Int): Average = a.aggregateExpressions(i) match {
+      case Alias(ae: AggregateExpression, _) =>
+        ae.aggregateFunction.asInstanceOf[Average]
+      case other => throw new IllegalStateException(
+        s"AvgOf need without an Average expression: $other")
+    }
+    val partialAliases: Seq[NamedExpression] =
+      a.aggregateExpressions.zipWithIndex.flatMap { case (e, i) =>
+        needs(i) match {
+          // avg's scanned partials: the exact widened-decimal sum
+          // (same arithmetic as the sidecar partials) and the
+          // non-null count over the ORIGINAL child expression.
+          case AvgOf(_, t) =>
+            val child = avgOfOutput(i).child
+            Seq(
+              Alias(Sum(Cast(child, partialDecimal(t)))
+                .toAggregateExpression(), s"u${i}s")(),
+              Alias(Count(child).toAggregateExpression(), s"u${i}c")())
+          case _ => e match {
+            case Alias(x, _) => Seq(Alias(x, s"u$i")())
+            case x           => Seq(Alias(x, s"u$i")()) // bare group attr
+          }
+        }
+      }
+    val partial = Aggregate(a.groupingExpressions, partialAliases, rest)
+
+    // Final combine: group values flow through the grouping, counts
+    // and sums re-add, min/max re-fold, avg re-binds Average's own
+    // evaluate expression over the re-added sum + count (its sum
+    // lands back in Average's sum-buffer type, so result type and
+    // rounding are Spark's own); aliases keep the original names AND
+    // exprIds so nothing above changes. Coalesce pins the count
+    // combine non-null (every group has at least one input row by
+    // construction, but the static type must stay non-nullable like
+    // Count's).
+    val finalGroups: Seq[Expression] = needs.zipWithIndex.collect {
+      case (_: GroupOf, i) => uSlices(i).head
+    }
+    val finalExprs: Seq[NamedExpression] = needs.zipWithIndex.map {
+      case (n, i) =>
+        def u = uSlices(i).head
+        val orig = a.aggregateExpressions(i).asInstanceOf[NamedExpression]
+        val combined: Expression = n match {
+          case _: GroupOf  => u
+          case MinOf(_, _) => Min(u).toAggregateExpression()
+          case MaxOf(_, _) => Max(u).toAggregateExpression()
+          case SumOf(_, dt: DecimalType) =>
+            Cast(Sum(u).toAggregateExpression(), sumResultType(dt))
+          case SumOf(_, _) => Sum(u).toAggregateExpression()
+          case _: AvgOf =>
+            val av = avgOfOutput(i)
+            avgBind(
+              av,
+              Cast(Sum(uSlices(i)(0)).toAggregateExpression(),
+                av.sumDataType),
+              Coalesce(Seq(
+                Sum(uSlices(i)(1)).toAggregateExpression(), Literal(0L))))
+              .getOrElse(return None)
+          case _ => Coalesce(Seq(
+            Sum(u).toAggregateExpression(), Literal(0L)))
+        }
+        Alias(combined, orig.name)(exprId = orig.exprId)
+    }
+    logInfo(s"stats-aggregate union: ${m.spec.path} folded $nFolded files " +
+      s"from the sidecar (${rows.length} group rows), scanning " +
+      s"${scanned.length} files")
+    Some(Aggregate(finalGroups, finalExprs, Union(Seq(local, partial))))
+  }
+
+  /** Whether a fold row's string-truncation guard is set: the `nGuards`
+    * guard columns sit before the last `trailing` columns of each row.
+    */
+  private def truncated(
+      rows: Seq[org.apache.spark.sql.Row], nGuards: Int, trailing: Int): Boolean =
+    rows.exists { row =>
+      (0 until nGuards).exists { gi =>
+        val at = row.length - trailing - nGuards + gi
+        !row.isNullAt(at) && row.getBoolean(at)
+      }
+    }
 
   /** The string-truncation guard columns of `needs`: string min/max
     * serve only from EXACT stored bounds — a file whose bounds were
@@ -1556,44 +896,41 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * bound, not the answer. None when a flag column is missing (the
     * sidecar predates the convention).
     */
-  private def truncGuardCols(
-      st: org.apache.spark.sql.DataFrame, needs: Seq[Need]): Option[Seq[String]] = {
+  private def truncGuardCols(view: StatsView, needs: Seq[Need]): Option[Seq[String]] = {
     val cols = needs.collect {
       case MinOf(c, StringType) => c
       case MaxOf(c, StringType) => c
-    }.distinct.map(c => st.columns.find(_.equalsIgnoreCase(s"trunc_$c")))
+    }.distinct.map(view.statCol("trunc", _))
     if (cols.exists(_.isEmpty)) None else Some(cols.map(_.get))
   }
 
-  /** The per-need partial folds of the UNION serves (hybrid and
-    * winner-file) plus their truncation guard columns. Arity varies per
-    * need: avg rides the union as SUM + COUNT partials (a final value
-    * cannot combine), so it owns a two-column slice on the fold, the
-    * union row and the partial. None when a stats column is missing.
+  /** The per-need partial folds of the union serve plus their
+    * truncation guard columns. Arity varies per need: avg rides the
+    * union as SUM + COUNT partials (a final value cannot combine), so it
+    * owns a two-column slice on the fold, the union row and the partial.
+    * None when a stats column is missing.
     */
-  private def unionFolds(st: org.apache.spark.sql.DataFrame, needs: Seq[Need])
+  private def unionFolds(view: StatsView, needs: Seq[Need])
       : Option[(Seq[Seq[org.apache.spark.sql.Column]], Seq[String])] = {
-    def statCol(prefix: String, c: String): Option[String] =
-      st.columns.find(_.equalsIgnoreCase(s"${prefix}_$c"))
     val folds: Seq[Option[Seq[org.apache.spark.sql.Column]]] = needs.map {
       case _: GroupOf  => Some(Seq.empty)
-      case MinOf(c, _) => statCol("min", c).map(s => Seq(min(col(s))))
-      case MaxOf(c, _) => statCol("max", c).map(s => Seq(max(col(s))))
+      case MinOf(c, _) => view.statCol("min", c).map(s => Seq(min(col(s))))
+      case MaxOf(c, _) => view.statCol("max", c).map(s => Seq(max(col(s))))
       case SumOf(c, t) =>
-        statCol("sum", c).map(s => Seq(sum(col(s).cast(partialDecimal(t)))))
+        view.statCol("sum", c).map(s => Seq(sum(col(s).cast(partialDecimal(t)))))
       case AvgOf(c, t) =>
-        for { s <- statCol("sum", c); n <- statCol("nn", c) }
+        for { s <- view.statCol("sum", c); n <- view.statCol("nn", c) }
           yield Seq(sum(col(s).cast(partialDecimal(t))), sum(col(n)))
       case CountAll    => Some(Seq(sum(col("cnt"))))
-      case CountCol(c) => statCol("nn", c).map(s => Seq(sum(col(s))))
+      case CountCol(c) => view.statCol("nn", c).map(s => Seq(sum(col(s))))
       case _: DistinctPartOf => None // the metadata-only serve's need
     }
     if (folds.exists(_.isEmpty)) None
-    else truncGuardCols(st, needs).map(g => (folds.map(_.get), g))
+    else truncGuardCols(view, needs).map(g => (folds.map(_.get), g))
   }
 
   /** INTEGRAL avg exactness for whatever subset a union serve sums in
-    * DOUBLE — provable only from the WHOLE stats frame `st`: all values
+    * DOUBLE — provable only from the WHOLE stats frame: all values
     * same sign and the all-rows exact total < 2^53 bound every subset's
     * partial sums (each is a subset sum ≤ the total, exactly
     * representable). On a history table the whole-VERSION stats bound
@@ -1602,23 +939,20 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * combine narrows through Average's own sum-buffer type. False
     * declines to the plain scan.
     */
-  private def avgIntExact(
-      st: org.apache.spark.sql.DataFrame, needs: Seq[Need]): Boolean = {
-    def statCol(prefix: String, c: String): Option[String] =
-      st.columns.find(_.equalsIgnoreCase(s"${prefix}_$c"))
+  private def avgIntExact(view: StatsView, needs: Seq[Need]): Boolean = {
     val avgIntCols = needs.collect {
       case AvgOf(c, t) if !t.isInstanceOf[DecimalType] => c
     }.distinct
     if (avgIntCols.isEmpty) return true
-    if (avgIntCols.exists(c => statCol("min", c).isEmpty ||
-        statCol("max", c).isEmpty || statCol("sum", c).isEmpty))
-      return false
-    val gAggs = avgIntCols.flatMap(c => Seq(
-      min(col(statCol("min", c).get)),
-      max(col(statCol("max", c).get)),
-      sum(col(statCol("sum", c).get).cast(DecimalType(38, 0)))))
+    val gAggs = avgIntCols.flatMap { c =>
+      (view.statCol("min", c), view.statCol("max", c), view.statCol("sum", c)) match {
+        case (Some(mn), Some(mx), Some(s)) =>
+          Seq(min(col(mn)), max(col(mx)), sum(col(s).cast(DecimalType(38, 0))))
+        case _ => return false
+      }
+    }
     val g = KeyedTable.withMetaConf(spark)(
-      st.agg(gAggs.head, gAggs.tail: _*).collect())(0)
+      view.st.agg(gAggs.head, gAggs.tail: _*).collect())(0)
     avgIntCols.indices.forall { k =>
       val mnV = if (g.isNullAt(3 * k)) null else g.get(3 * k)
       val mxV = if (g.isNullAt(3 * k + 1)) null else g.get(3 * k + 1)
@@ -1685,7 +1019,7 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
   /** [[Average.evaluateExpression]] with its sum/count buffer attributes
     * replaced — by literals for the metadata-only serve, by aggregate
-    * expressions over the union columns for the hybrid combine.
+    * expressions over the union columns for the union combine.
     */
   private def avgBind(
       av: Average, sumE: Expression, cntE: Expression): Option[Expression] =
@@ -1764,77 +1098,4 @@ object StatsAggregateRewrite {
     * many groups the answer belongs in a real scan, not the plan.
     */
   val MaxGroups = 4096
-}
-
-/** Per-file winner/stored-count maps for a history table's resolved
-  * serves — shared by every rule composing the winner-file
-  * classification ([[StatsAggregateRewrite]]'s value/distinct arms,
-  * [[TopKPruneRewrite]]'s resolved walk): winner count per
-  * table-relative file, stored row count per table-relative file. Both
-  * maps are file-count-sized — the same class as a Hudi timeline.
-  * Cached per table version ([[TableMetaCache]]), which keeps the
-  * per-invocation serve to ONE index-sized fold job instead of
-  * re-aggregating the index per query.
-  */
-private[plans] object MorWinnerMaps {
-
-  /** `winners` re-aliased to `output`'s names and exprIds, so it can
-    * replace the subtree that produced `output` with everything above
-    * untouched; None when a column is missing or its type differs.
-    */
-  def asOutput(
-      winners: org.apache.spark.sql.DataFrame,
-      output: Seq[Attribute]): Option[LogicalPlan] = {
-    val bplan = winners.queryExecution.analyzed
-    val byName = bplan.output.map(at => KeyedScan.lower(at.name) -> at).toMap
-    val aliases = output.map { at =>
-      byName.get(KeyedScan.lower(at.name)).filter(_.dataType == at.dataType)
-        .map(src => Alias(src, at.name)(exprId = at.exprId))
-        .getOrElse(return None)
-    }
-    Some(Project(aliases, bplan))
-  }
-
-  /** The per-version winner artifacts: the in-memory maps (plan-time
-    * walks, prune accounting) plus the winner-count lookup UDF, which
-    * closes over a BROADCAST handle rather than the map itself — the
-    * per-task closure stays O(1) at 10⁶-file scale, the map ships once
-    * per executor via torrent instead of once per task. Closing it
-    * destroys the broadcast: the cache does so when a racing planner's
-    * copy loses the install or the table's version supersedes it
-    * (non-blocking; a query racing the table change that superseded it
-    * was already in undefined territory), so stale winner maps never
-    * accumulate for the JVM lifetime.
-    */
-  private[plans] final case class WinnerMaps(
-      wcByFile: Map[String, Long], cntByFile: Map[String, Long],
-      wcU: org.apache.spark.sql.expressions.UserDefinedFunction,
-      bc: org.apache.spark.broadcast.Broadcast[Map[String, Long]])
-      extends AutoCloseable {
-    def close(): Unit = bc.destroy()
-  }
-
-  /** The maps + lookup UDF, cached per table version, with the
-    * soundness cross-check applied: every winner entry's file must be
-    * covered by the stats sidecar (exists ⇒ current guarantees it; a
-    * violation means a racing write — `None`: decline, don't drop
-    * winners).
-    */
-  def of(
-      spark: SparkSession, table: KeyedTable,
-      settled: org.apache.spark.sql.DataFrame,
-      stRel: org.apache.spark.sql.DataFrame): Option[WinnerMaps] = {
-    import org.apache.spark.sql.functions.{col, count, lit, udf}
-    val m = TableMetaCache.get(spark, table.spec.path, "winnerMaps") {
-      val w0 = settled.groupBy(col("file"))
-        .agg(count(lit(1)).as("wcnt")).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val c0 = KeyedTable.withMetaConf(spark)(
-        stRel.select(col("_rfile"), col("cnt")).collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap)
-      val bc = spark.sparkContext.broadcast(w0)
-      WinnerMaps(w0, c0, udf((f: String) => bc.value.get(f)), bc)
-    }
-    if (!m.wcByFile.keySet.subsetOf(m.cntByFile.keySet)) None else Some(m)
-  }
 }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -14,21 +14,24 @@ import graft.table.{KeyedTable, TableMetaCache}
   * N" query every time-series table serves (`ORDER BY ts DESC LIMIT
   * 100`) opens only the files that can hold a top-k row instead of
   * feeding a full scan into the cluster-wide TakeOrdered. The bound is
-  * the standard stats top-k argument
-  * ([[KeyedTable.topKCandidateFiles]]): walking files by min descending
-  * until the accumulated non-null count reaches k proves the kth value
-  * is at least that walk's last min, so files whose max falls below it
-  * cannot contribute. On a table clustered by the sort column the kept
-  * set is O(k / rows-per-file) files; unclustered, the stats still
-  * answer, they just skip less.
+  * the standard stats top-k argument ([[TopKPruneRewrite.walk]]):
+  * walking files by min descending until the accumulated non-null count
+  * reaches k proves the kth value is at least that walk's last min, so
+  * files whose max falls below it cannot contribute. On a table
+  * clustered by the sort column the kept set is O(k / rows-per-file)
+  * files; unclustered, the stats still answer, they just skip less.
   *
   * Matches `GlobalLimit(k, LocalLimit(k, Sort(...)))` — optionally with
   * a deterministic `Project` between limit and sort — whose sort child
   * strips to a single parquet relation rooted at a REGISTERED keyed
-  * table ([[KeyedTable.specRegistry]]); the LEADING sort key must be a
-  * stats-covered ordered column. Trailing tiebreak keys ride untouched:
-  * only the scan's file set changes, the full Sort + Limit stay as the
-  * residual, so boundary ties resolve exactly as they would unpruned.
+  * table ([[KeyedTable.specRegistry]]) with no window over its current
+  * rows ([[KeyedScan.current]]: a `retainHistory` table's resolve is
+  * stripped); the LEADING sort key must be a stats-covered ordered
+  * column. Trailing tiebreak keys ride untouched: only the kept files'
+  * rows reach the residual Sort + Limit, so boundary ties resolve exactly
+  * as they would unpruned. On a resolved read the walk runs over the
+  * winner-file view ([[StatsView]]): pure files accumulate, files with
+  * winners are kept, dead files never open.
   *
   * FILTERS below the sort compose when every conjunct classifies
   * against the sidecar — "latest N of a kind", the most common real
@@ -38,26 +41,22 @@ import graft.table.{KeyedTable, TableMetaCache}
   *    constant), and the walk runs over the selected subset unchanged.
   *  - Literal RANGE / IS NOT NULL / IN conjuncts on stats-covered
   *    columns ([[RangeConjuncts]]) split files into FULL (every row
-  *    satisfies — bounds inside the range, zero nulls in each
-  *    constrained column; for IN, single-valued with the value in the
-  *    list) and CANDIDATE (may hold a satisfying row). The count accumulation
-  *    walks FULL files only — their rows all survive the filter, so
-  *    "Σnn ≥ k rows ≥ L" still proves the filtered kth value is ≥ L —
-  *    while the kept set is every CANDIDATE file whose max reaches L
-  *    (boundary files' partially-matching rows are the residual
-  *    filter's job). Truncated string bounds only widen the kept set
-  *    and only shrink the walked FULL set — sound both ways.
+  *    satisfies) and CANDIDATE (may hold a satisfying row). The count
+  *    accumulation walks FULL files only — their rows all survive the
+  *    filter, so "Σnn ≥ k rows ≥ L" still proves the filtered kth value
+  *    is ≥ L — while the kept set is every CANDIDATE file whose max
+  *    reaches L (boundary files' partially-matching rows are the
+  *    residual filter's job). Truncated string bounds only widen the
+  *    kept set and only shrink the walked FULL set — sound both ways.
   *
-  * Declines: `retainHistory` tables (a pruned resolve could resurrect
-  * superseded versions), any conjunct that classifies neither way
-  * (IS NULL, non-literal predicates, uncovered
-  * columns — a leftover predicate would break the accumulation bound),
-  * windows/joins below the sort, non-global sorts, k ≤ 0, and walks
-  * whose guaranteed-matching non-null counts never reach k (a selective
-  * filter with no full files cannot bound the kth value — that shape is
-  * [[RangePruneRewrite]]'s). Same registry-gated plan-time cost and
-  * natural idempotency as the range rule (a swapped scan no longer
-  * roots at the registered path).
+  * Declines: any conjunct that classifies neither way (IS NULL,
+  * non-literal predicates, uncovered columns — a leftover predicate
+  * would break the accumulation bound), windows/joins below the sort,
+  * non-global sorts, k ≤ 0, and walks whose guaranteed-matching
+  * non-null counts never reach k (a selective filter with no full files
+  * cannot bound the kth value — that shape is [[RangePruneRewrite]]'s).
+  * Same registry-gated plan-time cost and natural idempotency as the
+  * range rule (a served scan no longer roots at the registered path).
   */
 class TopKPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
@@ -65,7 +64,7 @@ class TopKPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     if (KeyedTable.specRegistry.isEmpty) return plan
     TableMetaCache.pinVersions(plan.transformUp {
       case lim: GlobalLimit =>
-        try tryRewrite(lim).orElse(tryMorRewrite(lim)).getOrElse(lim)
+        try tryRewrite(lim).getOrElse(lim)
         catch { case scala.util.control.NonFatal(_) => lim }
     })
   }
@@ -82,21 +81,18 @@ class TopKPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * point/range/aggregate families follow).
     */
   private[plans] final case class TopKMatch(
-      lim: GlobalLimit, scan: KeyedScan,
+      lim: GlobalLimit, sort: Sort, scan: KeyedScan,
       sortCol: String, k: Int, desc: Boolean, nullsFirst: Boolean,
-      partFilters: Seq[PartitionConjuncts.PartFilter],
-      ranges: Seq[graft.table.ColumnRange],
-      notNull: Seq[String], inLists: Seq[(String, Seq[Any])]) {
+      sc: RangeConjuncts.StatsConjuncts) {
     def spec: graft.table.KeyedTableSpec = scan.spec
     /** Every column whose stats the serve consults. */
-    def statCols: Seq[String] =
-      (sortCol +: (ranges.map(_.column) ++ notNull ++ inLists.map(_._1)))
-        .distinct
+    def statCols: Seq[String] = (sortCol +: sc.columns).distinct
   }
 
   /** Every top-k shape in `plan` this rule would serve if column stats
-    * existed (no sidecar IO, no filesystem work beyond the registry).
-    * On an already-served plan the sort child no longer roots at the
+    * (and, on a resolved read, the record-level index) existed — no
+    * sidecar IO, no filesystem work beyond the registry. On an
+    * already-served plan the sort child no longer roots at the
     * registered path, so served shapes naturally drop out.
     */
   private[plans] def topKShapes(plan: LogicalPlan): Seq[TopKMatch] =
@@ -107,10 +103,8 @@ class TopKPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def tryRewrite(lim: GlobalLimit): Option[LogicalPlan] =
     matchTopK(lim).flatMap { m =>
-      TableMetaCache.declineGated(spark, this, m.scan.root)((m.scan.root, m.sortCol,
-        m.k, m.desc, m.nullsFirst,
-        m.partFilters.toVector, m.ranges.toVector, m.notNull.toVector,
-        m.inLists.map { case (c, vs) => (c, vs.toVector) }.toVector)) {
+      TableMetaCache.declineGated(spark, this, m.scan.root)(
+          (m.scan.root, m.sortCol, m.k, m.desc, m.nullsFirst, m.sc)) {
         serveTopK(m)
       }
     }
@@ -144,289 +138,92 @@ class TopKPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
   private def matchTopK(lim: GlobalLimit): Option[TopKMatch] = {
     val (k, sort) = limitSort(lim).getOrElse(return None)
     val ks = KeyedScan.of(sort.child).getOrElse(return None)
-    if (ks.windows.nonEmpty || ks.spec.retainHistory) return None
+    val conds = ks.current.collect { case (Seq(), cs) => cs }.getOrElse(return None)
 
     // Classify every filter conjunct below the sort: partition
     // point/IN conjuncts select whole sidecar rows, range / IS NOT
     // NULL / IN conjuncts on stats-covered ordered columns drive the
     // FULL / CANDIDATE split. Anything else declines — a leftover
     // predicate would break the count-accumulation bound.
-    val sc = RangeConjuncts.statsConjuncts(ks, ks.conjuncts.map(_._1))
+    val sc = RangeConjuncts.statsConjuncts(ks, conds.map(_._1))
       .getOrElse(return None)
-    val attr = sortAttr(ks, sort).getOrElse(return None)
+    val attr = ks.relAttrOf(sort.order.head.child)
+      .filter(at => KeyedTable.statsOrderedType(at.dataType))
+      .getOrElse(return None)
     val head = sort.order.head
     Some(TopKMatch(
-      lim, ks, attr.name, k,
-      head.direction == Descending, head.nullOrdering == NullsFirst,
-      sc.partFilters, sc.ranges, sc.notNull, sc.inLists))
+      lim, sort, ks, attr.name, k,
+      head.direction == Descending, head.nullOrdering == NullsFirst, sc))
   }
 
-  /** The leading sort key as an ordered-stats column of the relation. */
-  private def sortAttr(ks: KeyedScan, sort: Sort): Option[Attribute] =
-    ks.relAttrOf(sort.order.head.child)
-      .filter(at => KeyedTable.statsOrderedType(at.dataType))
-
-  /** The IO half: walk the sidecar, swap the scan. */
-  private def serveTopK(m: TopKMatch): Option[LogicalPlan] = {
-    val table = KeyedTable(m.spec)
-    val nConds = m.partFilters.length + m.ranges.length + m.notNull.length +
-      m.inLists.length
-    val cand =
-      if (nConds == 0)
-        table.topKCandidateFiles(
-          spark, m.sortCol, m.k.toLong, m.desc, m.nullsFirst)
-      else filteredCandidates(
-        table, m.sortCol, m.k.toLong, m.desc, m.nullsFirst,
-        m.partFilters, m.ranges, m.notNull, m.inLists)
-    cand.flatMap { case (files, _) =>
-      m.scan.prune(spark, m.lim, files)(s"top-k for ORDER BY ${m.sortCol} " +
-        (if (m.desc) "DESC" else "ASC") + s" LIMIT ${m.k}" +
-        (if (nConds > 0) s" under $nConds filter conjunct(s)" else ""))
+  /** The IO half: walk the sidecar, keep the files that can hold a row. */
+  private def serveTopK(m: TopKMatch): Option[LogicalPlan] =
+    StatsView.of(spark, m.scan, m.sc).flatMap { view =>
+      try TopKPruneRewrite.walk(spark, view, m.sortCol, m.k, m.desc,
+          m.nullsFirst, Nil).flatMap { kept =>
+        view.prune(m.lim, m.sort.child, kept)(s"top-k for ORDER BY ${m.sortCol} " +
+          (if (m.desc) "DESC" else "ASC") + s" LIMIT ${m.k}")
+      } catch { case scala.util.control.NonFatal(_) => None }
     }
-  }
+}
 
-  /** The FILTERED top-k walk (see the class doc's soundness argument):
-    * partition conjuncts select sidecar rows exactly; range/not-null
-    * conjuncts split the selection into FULL files (count-accumulated
-    * to fix the boundary bound) and CANDIDATE files (kept when their
-    * max reaches it). Mirrors [[KeyedTable.topKCandidateFiles]]'s
-    * unfiltered walk and [[StatsAggregateRewrite]]'s hybrid
-    * classification — all comparisons run IN Spark over the
-    * metadata-sized sidecar, in the exact ordering the residual
-    * Filter + Sort evaluate with.
+private[plans] object TopKPruneRewrite {
+
+  /** The stats top-k walk, per group — global top-k is the case with no
+    * group columns. `groups` are (column, is a partition column); a
+    * file's group key and single-group test come from
+    * [[StatsView.groupKeys]]. Within each group, walk the files that are
+    * single-group, PURE and FULL under every conjunct (all their rows
+    * rank) by recorded min descending (max ascending for ASC), and
+    * accumulate non-null counts until ≥ `n`: those rows all rank at or
+    * ahead of the last walked min L, so a file whose max < L cannot hold
+    * a rank-≤-n row (non-strict: boundary ties stay). Files outside the
+    * walk only under-count, which weakens bounds — more files kept,
+    * never fewer. Kept: every live CANDIDATE file that reaches its
+    * group's bound, every file of a group that proves no bound, files
+    * that may hold a null when nulls rank first (null rows are invisible
+    * to min/max), and every live candidate spanning groups. A global
+    * walk that proves no bound declines instead (the filter alone is
+    * [[RangePruneRewrite]]'s shape). All comparisons run in Spark over
+    * the metadata-sized sidecar, in the ordering the residual Sort uses.
     */
-  private def filteredCandidates(
-      table: KeyedTable,
-      column: String,
-      k: Long,
-      desc: Boolean,
-      nullsFirst: Boolean,
-      partFilters: Seq[PartitionConjuncts.PartFilter],
-      ranges: Seq[graft.table.ColumnRange],
-      notNull: Seq[String],
-      inLists: Seq[(String, Seq[Any])])
-      : Option[(Seq[org.apache.hadoop.fs.Path], Int)] =
-    table.colStatsFrame(spark).flatMap { st =>
-      import org.apache.spark.sql.expressions.{Window => W}
-      import org.apache.spark.sql.functions.{col, lit, sum}
-      def statCol(prefix: String, c: String): Option[String] =
-        st.columns.find(_.equalsIgnoreCase(s"${prefix}_$c"))
-      if (!st.columns.contains("cnt")) return None
-      val (mnS, mxS, nnS) =
-        (statCol("min", column), statCol("max", column), statCol("nn", column))
-      if (mnS.isEmpty || mxS.isEmpty || nnS.isEmpty) return None
-      val partSel =
-        PartitionConjuncts.statCols(st, partFilters).getOrElse(return None)
-      // Same candidate/full split as the hybrid aggregate serve.
-      val (candidate, full) = RangeConjuncts
-        .fileClasses(st, ranges, notNull, inLists).getOrElse(return None)
-      val stSel = PartitionConjuncts.select(st, partSel)
-
-      val (mn, mx, nn) = (col(mnS.get), col(mxS.get), col(nnS.get))
-      KeyedTable.withMetaConf(spark) {
-        try {
-          val total = st.count().toInt
-          val walkKey = if (desc) mn else mx
-          val w = W.orderBy(if (desc) walkKey.desc_nulls_last
-            else walkKey.asc_nulls_last)
-          val crossing = stSel.filter(full)
-            .withColumn("_graft_cum", sum(nn).over(
-              w.rowsBetween(W.unboundedPreceding, W.currentRow)))
-            .filter(col("_graft_cum") >= k && nn > 0)
-            .orderBy(if (desc) walkKey.desc else walkKey.asc)
-            .limit(1)
-            .select(walkKey)
-            .collect()
-          if (crossing.isEmpty) None // < k guaranteed-matching rows
-          else {
-            val bound = crossing(0).get(0)
-            val valuePred =
-              if (desc) mx >= lit(bound) else mn <= lit(bound)
-            val pred =
-              if (nullsFirst) valuePred || (col("cnt") > nn) else valuePred
-            val sel = stSel.filter(candidate && pred)
-              .select("file").collect().map(_.getString(0)).toSeq
-            Some((sel.map(abs =>
-              new org.apache.hadoop.fs.Path(new java.net.URI(abs))), total))
-          }
-        } catch { case scala.util.control.NonFatal(_) => None }
-      }
-    }
-
-  /** `ORDER BY col LIMIT k` over a history table's RESOLVED read — the
-    * stats top-k walk composed with the winner-file classification
-    * ([[StatsAggregateRewrite]]'s MoR arm): PURE files (every stored
-    * row a live winner) drive the count accumulation exactly as COW
-    * files do — a pure file's `nn` counts its non-null WINNER values,
-    * so walking pure files by min (DESC; max ASC) until Σnn ≥ k proves
-    * the kth resolved value reaches the walk bound L. The kept set is
-    * every file holding ≥ 1 winner whose bounds reach L: a MIXED
-    * file's all-version bounds are OUTER bounds of its winners
-    * (winners ⊆ stored rows), so "max < L" (DESC) soundly excludes it,
-    * and DEAD files — exactly where the superseded extremum hides —
-    * never open. The plan then replaces the resolve window wholesale
-    * with the winner rows of the kept files (the full resolve-identity
-    * semi-join), re-aliased to the sort child's own attribute ids so
-    * the residual Sort + Limit stay untouched and boundary ties
-    * resolve exactly as the full resolve would. Match: the exact
-    * shared resolve shape (rn = 1 the only conjunct anywhere) on a
-    * registered `retainHistory` table, leading sort key an
-    * ordered-stats DATA column; other filters decline (composing them
-    * with winner purity is future surface). NULLS: with nulls last the
-    * walk's ≥ k non-null winners outrank every null; nulls-first keeps
-    * any file that may hold a null winner (cnt > nn).
-    */
-  /** The shape half of the MoR arm: the resolve window, the rn = 1
-    * conjunct, the ordered-stats leading sort key, and OPTIONALLY
-    * partition POINT conjuncts ABOVE the window — a partition filter on
-    * the resolved state selects whole files and whole winners (a winner
-    * row of partition p is stored in a file of p, true even under
-    * globalKeys — the winner determination is global but the winning
-    * VERSION lives where it was written), so the walk and the kept set
-    * simply run over the selected sidecar rows, and the residual
-    * re-applies on the winner rows defensively. Any other conjunct
-    * declines. Shared with the advisor via [[morTopKShapes]].
-    */
-  private[plans] final case class MorTopKMatch(
-      lim: GlobalLimit, sort: Sort, spec: graft.table.KeyedTableSpec,
-      sortCol: String, k: Int, desc: Boolean, nullsFirst: Boolean,
-      partFilters: Seq[PartitionConjuncts.PartFilter],
-      ranges: Seq[graft.table.ColumnRange],
-      notNull: Seq[String], inLists: Seq[(String, Seq[Any])]) {
-    /** Every column whose stats the MoR walk consults. */
-    def statCols: Seq[String] =
-      (sortCol +: (ranges.map(_.column) ++ notNull ++ inLists.map(_._1)))
-        .distinct
-  }
-
-  private def matchMorTopK(lim: GlobalLimit): Option[MorTopKMatch] = {
-    val (k, sort) = limitSort(lim).getOrElse(return None)
-    val ks = KeyedScan.of(sort.child).getOrElse(return None)
-    if (!ks.spec.retainHistory) return None
-    val rest = ks.resolved.getOrElse(return None)
-    // Beside rn = 1: conjuncts ABOVE the window only. Partition point
-    // conjuncts select whole files; literal ranges / IS NOT NULL /
-    // IN-lists on stats-covered columns ride the COW walk's
-    // full/candidate classification composed with winner purity (see
-    // serveMorTopK); anything else declines. A partition column never
-    // leads the sort.
-    if (rest.exists(_._2 != 0)) return None
-    val sc = RangeConjuncts.statsConjuncts(ks, rest.map(_._1))
-      .getOrElse(return None)
-    val attr = sortAttr(ks, sort).filterNot(at => ks.isPartitionCol(at.name))
-      .getOrElse(return None)
-    val head = sort.order.head
-    Some(MorTopKMatch(
-      lim, sort, ks.spec, attr.name, k,
-      head.direction == Descending, head.nullOrdering == NullsFirst,
-      sc.partFilters, sc.ranges, sc.notNull, sc.inLists))
-  }
-
-  /** Every resolved top-k shape in `plan` the MoR arm would serve if
-    * the record-level index and sort-column stats existed — the
-    * advisor's hook (advice ≡ serveability, the one-matcher
-    * discipline).
-    */
-  private[plans] def morTopKShapes(plan: LogicalPlan): Seq[MorTopKMatch] =
-    if (KeyedTable.specRegistry.isEmpty) Nil
-    else plan.collect { case lim: GlobalLimit =>
-      try matchMorTopK(lim)
-      catch { case scala.util.control.NonFatal(_) => None }
-    }.flatten
-
-  private def tryMorRewrite(lim: GlobalLimit): Option[LogicalPlan] =
-    matchMorTopK(lim).flatMap { m =>
-      TableMetaCache.declineGated(spark, this, m.spec.path)(("mor",
-        m.spec.path, m.sortCol, m.k, m.desc,
-        m.nullsFirst, m.partFilters.toVector, m.ranges.toVector,
-        m.notNull.toVector,
-        m.inLists.map { case (c, vs) => (c, vs.toVector) }.toVector)) {
-        serveMorTopK(m, KeyedTable(m.spec))
-      }
-    }
-
-  private def serveMorTopK(
-      m: MorTopKMatch, table: KeyedTable): Option[LogicalPlan] = {
-    val MorTopKMatch(lim, sort, _, column, k, desc, nullsFirst,
-      partFilters, ranges, notNull, inLists) = m
-    table.colStatsFrame(spark).flatMap { st =>
-      import org.apache.spark.sql.expressions.{Window => W}
-      import org.apache.spark.sql.functions.{coalesce, col, lit, sum}
-      def statCol(prefix: String, c: String): Option[String] =
-        st.columns.find(_.equalsIgnoreCase(s"${prefix}_$c"))
-      if (!st.columns.contains("cnt")) return None
-      val (mnS, mxS, nnS) =
-        (statCol("min", column), statCol("max", column),
-          statCol("nn", column))
-      if (mnS.isEmpty || mxS.isEmpty || nnS.isEmpty) return None
-      // Partition point conjuncts select whole sidecar rows (and whole
-      // winners) BEFORE the walk — both the accumulation and the kept
-      // set then see only the matching partitions' files.
-      val partSel =
-        PartitionConjuncts.statCols(st, partFilters).getOrElse(return None)
-      // The COW walk's full/candidate classification composed with
-      // winner purity: a PURE file FULL under every conjunct has all
-      // its (winner) rows matching, so its nn drives the accumulation;
-      // any file with winners that MAY hold a matching row is kept when
-      // its bounds reach the walk bound (all-version bounds are outer
-      // bounds of winners).
-      val (candidate, full) = RangeConjuncts
-        .fileClasses(st, ranges, notNull, inLists).getOrElse(return None)
-      val settled = table.settledWinnerEntries(spark).getOrElse(return None)
-      val stRel = st.withColumn(
-        "_rfile", table.relOfFileCol(spark, col("file")))
-      val MorWinnerMaps.WinnerMaps(_, cntByFile, wcU, _) =
-        MorWinnerMaps.of(spark, table, settled, stRel)
-          .getOrElse(return None)
-      val joined = PartitionConjuncts.select(stRel, partSel)
-        .withColumn("wcnt", wcU(col("_rfile")))
-      val (mn, mx, nn) = (col(mnS.get), col(mxS.get), col(nnS.get))
-      val pure = col("wcnt").isNotNull && col("wcnt") === col("cnt") &&
-        col("cnt") > 0
-      KeyedTable.withMetaConf(spark) {
-        try {
-          val walkKey = if (desc) mn else mx
-          val w = W.orderBy(if (desc) walkKey.desc_nulls_last
-            else walkKey.asc_nulls_last)
-          val crossing = joined
-            .filter(pure && coalesce(full, lit(false)) && nn > 0)
-            .withColumn("_graft_cum", sum(nn).over(
-              w.rowsBetween(W.unboundedPreceding, W.currentRow)))
-            .filter(col("_graft_cum") >= k && nn > 0)
-            .orderBy(if (desc) walkKey.desc else walkKey.asc)
-            .limit(1)
-            .select(walkKey)
-            .collect()
-          if (crossing.isEmpty) return None // < k provable winner rows
-          val bound = crossing(0).get(0)
-          val valuePred =
-            if (desc) mx >= lit(bound) else mn <= lit(bound)
-          val pred =
-            if (nullsFirst) valuePred || (col("cnt") > nn) else valuePred
-          val kept = joined
-            .filter(col("wcnt").isNotNull && col("wcnt") > 0 &&
-              coalesce(candidate, lit(false)) &&
-              coalesce(pred, lit(false)))
-            .select(col("_rfile")).collect().map(_.getString(0)).toSeq
-          if (kept.length >= cntByFile.size) return None // nothing pruned
-          // Residual: every conjunct re-applied on the winner rows (the
-          // original child is replaced wholesale; for partition filters
-          // this is defensive — they selected whole files).
-          val residual =
-            RangeConjuncts.rowFilters(partFilters, ranges, notNull, inLists)
-          val winners = residual.foldLeft(
-            table.winnerRowsOf(spark, kept, settled))(_.filter(_))
-          val newChild =
-            MorWinnerMaps.asOutput(winners, sort.child.output).getOrElse(return None)
-          logInfo(s"top-k rewrite: ${table.spec.path} RESOLVED scan " +
-            s"replaced by winner rows of ${kept.length} of " +
-            s"${cntByFile.size} files for ORDER BY $column " +
-            (if (desc) "DESC" else "ASC") + s" LIMIT $k")
-          Some(lim.transformUp {
-            case s: Sort if s eq sort => s.copy(child = newChild)
-          })
-        } catch { case scala.util.control.NonFatal(_) => None }
-      }
-    }
+  def walk(spark: SparkSession, view: StatsView, sortCol: String, n: Int,
+      desc: Boolean, nullsFirst: Boolean,
+      groups: Seq[(String, Boolean)]): Option[Seq[String]] = {
+    import org.apache.spark.sql.expressions.{Window => W}
+    import org.apache.spark.sql.functions.{coalesce, col, lit, max, min, sum}
+    val (mn, mx, nn) = view.bounds(sortCol).getOrElse(return None)
+    val (groupCols, single) = view.groupKeys(groups).getOrElse(return None)
+    val inGroup = coalesce(single, lit(false))
+    val walkKey = if (desc) mn else mx
+    val w = W.partitionBy(groupCols.map(col): _*).orderBy(
+      if (desc) walkKey.desc_nulls_last else walkKey.asc_nulls_last)
+    val crossed = view.files
+      .filter(inGroup && view.pure && coalesce(view.full, lit(false)))
+      .withColumn("_graft_cum", sum(nn).over(
+        w.rowsBetween(W.unboundedPreceding, W.currentRow)))
+      .filter(col("_graft_cum") >= n && nn > 0)
+    // The first file crossing n in walk order carries its group's bound:
+    // the largest walk key among crossing files (asc: the smallest).
+    val bound = if (desc) max(walkKey) else min(walkKey)
+    def reaches(b: Column): Column =
+      (if (desc) mx >= b else mn <= b) ||
+        (if (nullsFirst) col("cnt") > nn else lit(false))
+    val keepable = view.files.filter(
+      inGroup && view.live && coalesce(view.candidate, lit(false)))
+    val kept =
+      if (groupCols.isEmpty) {
+        val b = KeyedTable.withMetaConf(spark)(crossed.agg(bound).collect())(0)
+        if (b.isNullAt(0)) return None // < n provable rows
+        view.names(keepable.filter(coalesce(reaches(lit(b.get(0))), lit(false))))
+      } else view.names(keepable
+        .join(crossed.groupBy(groupCols.map(col): _*).agg(bound.as("_graft_bound")),
+          groupCols, "left")
+        .filter(col("_graft_bound").isNull || reaches(col("_graft_bound"))))
+    val spanning =
+      if (groups.forall(_._2)) Nil
+      else view.names(view.files.filter(
+        view.live && !inGroup && coalesce(view.candidate, lit(false))))
+    Some((kept ++ spanning).distinct)
   }
 }

@@ -1925,86 +1925,6 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     }
   }
 
-  /** The stats index's candidate files for a TOP-K by `column` — the
-    * files that can hold any of the k first rows of `ORDER BY column
-    * [ASC|DESC] LIMIT k` — or `None` when the sidecar is absent, the
-    * column uncovered, or fewer than k non-null values are indexed (the
-    * caller keeps the full scan). The bound is the classic stats top-k
-    * argument (desc case; asc mirrors): walk files by recorded `min`
-    * descending, accumulate non-null counts until ≥ k — those files hold
-    * ≥ k rows, each ≥ the LAST accumulated file's min `L`, so the true
-    * kth-largest value is ≥ `L` and only files whose `max ≥ L` can
-    * contribute (non-strict: boundary ties stay). Nulls: when they sort
-    * toward the HEAD (asc nulls-first, Spark's ascending default), every
-    * null-carrying file is additionally kept — null rows are invisible
-    * to min/max; when they sort to the tail (desc default) the Σnn ≥ k
-    * gate proves no null reaches the top k. String bounds may be
-    * truncated (Iceberg convention): the stored min under-approximates
-    * and the stored max over-approximates, which only ever widens the
-    * kept set — sound. All selection comparisons run IN Spark over the
-    * metadata-sized sidecar, so they use exactly the ordering the
-    * residual Sort uses; the one collected row is the boundary value.
-    *
-    * On a clustered table this turns `ORDER BY ts DESC LIMIT 100` — the
-    * "latest N" query every 100 TB time-series table serves — into an
-    * open of O(k / rows-per-file) files instead of a full scan feeding
-    * a cluster-wide TakeOrdered.
-    */
-  private[graft] def topKCandidateFiles(
-      spark: SparkSession,
-      column: String,
-      k: Long,
-      desc: Boolean,
-      nullsFirst: Boolean): Option[(Seq[Path], Int)] =
-    KeyedTable.withMetaConf(spark) {
-      topKCandidateFilesImpl(spark, column, k, desc, nullsFirst)
-    }
-
-  private def topKCandidateFilesImpl(
-      spark: SparkSession,
-      column: String,
-      k: Long,
-      desc: Boolean,
-      nullsFirst: Boolean): Option[(Seq[Path], Int)] = {
-    require(!spec.retainHistory,
-      "top-k candidates require a copy-on-write table (see readPruned)")
-    if (k <= 0) return None
-    colStatsFrame(spark).flatMap { st =>
-      if (!st.columns.contains(s"min_$column")) None
-      else try {
-        val total = st.count().toInt
-        val mn = col(s"min_$column")
-        val mx = col(s"max_$column")
-        val nn = col(s"nn_$column")
-        // Accumulate non-null counts along the sort direction; the first
-        // file crossing k fixes the boundary bound (its own walked-from
-        // bound). All-null files (null min/max) sort out via nn = 0.
-        val walkKey = if (desc) mn else mx
-        val w = Window.orderBy(if (desc) walkKey.desc_nulls_last
-          else walkKey.asc_nulls_last)
-        val crossing = st
-          .withColumn("_graft_cum", sum(nn).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-          .filter(col("_graft_cum") >= k && nn > 0)
-          .orderBy(if (desc) walkKey.desc else walkKey.asc)
-          .limit(1)
-          .select(walkKey)
-          .collect()
-        if (crossing.isEmpty) None // fewer than k non-null values indexed
-        else {
-          val bound = crossing(0).get(0)
-          val valuePred =
-            if (desc) mx >= lit(bound) else mn <= lit(bound)
-          val pred =
-            if (nullsFirst) valuePred || (col("cnt") > nn) else valuePred
-          val sel = st.filter(pred)
-            .select("file").collect().map(_.getString(0)).toSeq
-          Some((sel.map(abs => new Path(new java.net.URI(abs))), total))
-        }
-      } catch { case scala.util.control.NonFatal(_) => None }
-    }
-  }
-
   /** The index's file selection for `column ∈ [lo, hi]`: (selected files,
     * total indexed files). Driver-side size is the file count.
     */
@@ -3507,7 +3427,11 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     * scanned partitions to identical content (key-only form scans nothing
     * at all — the index probe finds no partitions).
     */
-  def delete(spark: SparkSession, keys: DataFrame): Unit = {
+  def delete(spark: SparkSession, keys: DataFrame): Unit =
+    deleteAs(spark, keys, defaultCommitTime())
+
+  /** [[delete]] committed under `commitTime`. */
+  private def deleteAs(spark: SparkSession, keys: DataFrame, commitTime: String): Unit = {
     notEvolvedGuard(spark, "delete") // the rewrite must visit every generation
     if (!exists(spark)) return
     val provided = SchemaEvolution.dropSystemColumns(keys)
@@ -3520,7 +3444,8 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     val delKeys = provided.select(joinCols.map(col): _*).distinct()
     val existing = readRaw(spark)
     if (spec.partitionCols.isEmpty) {
-      rewriteViaTmp(spark, "delete")(_ => existing.join(delKeys, joinCols, "left_anti"))
+      rewriteViaTmp(spark, "delete", commitTime)(_ =>
+        existing.join(delKeys, joinCols, "left_anti"))
       return
     }
     val affected =
@@ -3535,7 +3460,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
       val scanned = collectPartitionTuples(affected)
       // Only the scanned partitions can change — scoped commit record,
       // no table listing.
-      commit(spark, defaultCommitTime(), "delete",
+      commit(spark, commitTime, "delete",
         PartitionDirs(scanned.map(partitionDirOf).toSet))(_ =>
         overwritePartitions(spark, affected.join(delKeys, joinCols, "left_anti"),
           Some(scanned)))
@@ -3613,7 +3538,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
       if (spec.retainHistory) bloomRelCandidateFiles(spark, delKeys)
       else lookupCandidateFiles(spark, delKeys)
     candsOpt match {
-      case None => delete(spark, keys) // no qualifying index
+      case None => deleteAs(spark, keys, commitTime) // no qualifying index
       case Some(rel) if rel.isEmpty => () // no file holds a doomed key
       case Some(rel) =>
         // File set changes: the RLI tolerates this commit's record

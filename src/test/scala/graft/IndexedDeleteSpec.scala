@@ -127,6 +127,14 @@ class IndexedDeleteSpec extends SparkTestBase {
     assert(outputSet(table.read(spark)) == expected)
   }
 
+  test("the fallback delete commits under the caller's commit id") {
+    val path = Files.createTempDirectory("graft_idel_ct_").toString + "/t"
+    val table = KeyedTable(cowSpec(path))
+    table.upsert(spark, eventsUs, commitTime = "c0")
+    table.deleteIndexed(spark, Seq(5L, 11L).toDF("event_id"), commitTime = "mine")
+    assert(KeyedTable.timelineEntries(spark, path).last == (("mine", "delete")))
+  }
+
   test("partition drop: directory deletes only, untouched files by name, index survives") {
     val path = Files.createTempDirectory("graft_dropp_s_").toString + "/t"
     val table = KeyedTable(cowSpec(path))

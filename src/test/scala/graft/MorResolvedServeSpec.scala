@@ -156,6 +156,19 @@ class MorResolvedServeSpec extends SparkTestBase {
     assert(!dataScans(qv).exists(_.endsWith(dead)))
   }
 
+  test("resolved top-k under a computed column named like a table column: the computed values survive") {
+    val (t, _) = fixture(
+      trap0 = (999L, "b", 999999L, 0L),
+      trap1 = (999L, "b", 0L, 1L))
+    // `rev` here is v + 1000, not the stored precombine column: the
+    // winner rows must not stand in for it.
+    def q = t.read(spark)
+      .select(col("id"), col("v"), (col("v") + 1000L).as("rev"))
+      .orderBy(col("v").desc, col("id").desc).limit(3)
+    assert(q.collect().map(r => (r.getLong(0), r.getLong(2))).toSeq ==
+      Seq((40L, 1040L), (39L, 1039L), (38L, 1038L)))
+  }
+
   test("partition-filtered resolved top-k: other partitions never open, dead extremum stays dead") {
     val path = Files.createTempDirectory("graft_morservep_").toString + "/t"
     val t = KeyedTable(KeyedTableSpec(
@@ -387,6 +400,38 @@ class MorResolvedServeSpec extends SparkTestBase {
     val a2 = graft.plans.IndexAdvisor.analyze(spark, Seq(q))
     assert(!a2.recommendations.exists(r =>
       r.kind == "record_key" || (r.kind == "column_stats" && r.column == "v")),
+      s"served chain must settle: ${a2.recommendations}")
+  }
+
+  test("the advisor recommends stats on a resolved top-k's filter column; building them serves the walk") {
+    val path = Files.createTempDirectory("graft_morservnn_").toString + "/t"
+    val t = KeyedTable(KeyedTableSpec(
+      path = path, keyCols = Seq("id"), precombineCol = "rev",
+      retainHistory = true))
+    // x is null on the ten lowest v only: the high-v files are FULL
+    // under x IS NOT NULL, so their counts bound the walk.
+    val bulk = (1L to 40L).map(i =>
+      (i, if (i <= 10) None else Some(i * 10), i, 0L))
+    t.upsert(spark, spark.createDataFrame(bulk)
+      .toDF("id", "x", "v", "rev"), commitTime = "c0")
+    t.cluster(spark, Seq("v"), targetFileBytes = 1L << 10)
+    def q = t.read(spark).filter(col("x").isNotNull)
+      .orderBy(col("v").desc, col("id").desc).limit(3).select("id", "v")
+    // The walk classifies files by every filter column's stats, so the
+    // chain includes stats on x, not only on the sort column.
+    val a1 = graft.plans.IndexAdvisor.analyze(spark, Seq(q))
+    val k1 = a1.recommendations.map(r => (r.kind, r.column)).toSet
+    assert(Set(("record_key", "id"), ("column_stats", "v"), ("column_stats", "x"))
+      .subsetOf(k1), s"round 1: $k1")
+    graft.plans.IndexAdvisor.createRecommended(spark, a1)
+    val scanned = dataScans(q)
+    assert(scanned.nonEmpty && scanned.size <
+      spark.read.parquet(s"$path/_graft_colstats").count(),
+      s"the built chain must let the walk prune, got $scanned")
+    assert(q.collect().map(_.getLong(0)).toSeq == Seq(40L, 39L, 38L))
+    val a2 = graft.plans.IndexAdvisor.analyze(spark, Seq(q))
+    assert(!a2.recommendations.exists(r =>
+      r.kind == "record_key" || r.kind == "column_stats"),
       s"served chain must settle: ${a2.recommendations}")
   }
 }
