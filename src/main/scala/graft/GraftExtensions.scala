@@ -12,6 +12,10 @@ import graft.functions._
   * is `spark.sql.extensions=graft.GraftExtensions`, mirroring how the
   * reference enables Hudi's SQL surface through Spark session config
   * (glue-streaming-job-script/glue_job_script.py:19's `.config(...)` style).
+  * The same wiring installs three optimizer rules — the year-predicate
+  * range, the materialized-rollup rewrite and [[graft.plans.KeyedServe]],
+  * the one rule that serves keyed-table reads from their sidecars — and
+  * the catalog-registry resolution hook.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -28,48 +32,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // ([[graft.plans.MvAggregateRewrite]]); no-op while no MV is
     // registered.
     e.injectOptimizerRule(s => new graft.plans.MvAggregateRewrite(s))
-    // Star-join fact-side file pruning through the index family
-    // ([[graft.plans.JoinPruneRewrite]]); injected BEFORE the point rule
-    // so the dim side's probe is still recognizable when the join is
-    // examined (the point rule's serve swaps the dim scan off the
-    // registered path).
-    e.injectOptimizerRule(s => new graft.plans.JoinPruneRewrite(s))
-    // Point-lookup filter over a keyed table's read → candidate-file
-    // scan through the record-level index
-    // ([[graft.plans.PointLookupRewrite]]); no-op while no keyed table
-    // has been read in the session.
-    e.injectOptimizerRule(s => new graft.plans.PointLookupRewrite(s))
-    // Aggregates over a keyed table's read → answered from the
-    // column-stats sidecar (whole-table / partition-filtered: no scan;
-    // range-filtered: full files fold, boundary files scan)
-    // ([[graft.plans.StatsAggregateRewrite]]). Injected BEFORE the range
-    // rule: both match a range filter over a registered scan, and once
-    // the range rule swaps the scan onto its candidate files the
-    // aggregate rule can no longer recognize the table — the hybrid
-    // serve strictly dominates there (it opens only the BOUNDARY subset
-    // of the range candidates). When the hybrid declines, the range
-    // rule still serves the same filter in the same pass.
-    e.injectOptimizerRule(s => new graft.plans.StatsAggregateRewrite(s))
-    // ORDER BY col LIMIT k over a keyed table's read → scan only the
-    // files that can hold a top-k row, via the column-stats sidecar
-    // ([[graft.plans.TopKPruneRewrite]]). Injected BEFORE the range
-    // rule for the same reason the aggregate rule is: a FILTERED top-k
-    // matches both (the filter alone is the range rule's shape), and
-    // the top-k walk strictly dominates there — it opens O(k) of the
-    // range's candidate files instead of all of them. When the walk
-    // declines, the range rule still serves the filter in the same
-    // pass.
-    e.injectOptimizerRule(s => new graft.plans.TopKPruneRewrite(s))
-    // rank()/row_number() ≤ N per table-partition group over a keyed
-    // read → scan only each group's top-N candidate files
-    // ([[graft.plans.GroupTopKRewrite]] — the per-group twin of the
-    // sorted-limit rule, same position: before the range rule so the
-    // O(N·groups) walk wins any shape both could touch).
-    e.injectOptimizerRule(s => new graft.plans.GroupTopKRewrite(s))
-    // Range filter over a keyed table's read → file-skipping scan
-    // through the column-stats sidecar ([[graft.plans.RangePruneRewrite]]);
-    // same registry gate as the point rule.
-    e.injectOptimizerRule(s => new graft.plans.RangePruneRewrite(s))
+    // Reads of registered keyed tables served from their sidecars:
+    // point, range, top-k, grouped top-k, join and stats-aggregate
+    // pruning as ONE rule ([[graft.plans.KeyedServe]] — the families'
+    // order and its reasons live there); no-op while no keyed table has
+    // been read in the session.
+    e.injectOptimizerRule(s => new graft.plans.KeyedServe(s))
     // Resolution hook: when a query references a table the session
     // catalog doesn't know, consult the persistent registry
     // ([[graft.table.GraftCatalog]]) before resolution fails — discovery

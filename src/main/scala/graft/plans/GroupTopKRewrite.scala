@@ -5,7 +5,6 @@ import java.util.Locale
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Window}
-import org.apache.spark.sql.catalyst.rules.Rule
 
 import graft.table.{KeyedTable, TableMetaCache}
 
@@ -56,18 +55,10 @@ import graft.table.{KeyedTable, TableMetaCache}
   * the rank window's child is replaced by the kept files' winner rows,
   * so the residual Window + Filter rank exactly as over the full
   * resolve. Same registry gate, decline memo, and natural idempotency
-  * as the rest of the pushdown family.
+  * as the rest of the pushdown family: a family of [[KeyedServe]].
   */
-class GroupTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (KeyedTable.specRegistry.isEmpty) return plan
-    TableMetaCache.pinVersions(plan.transformUp {
-      case f: Filter =>
-        try tryRewrite(f).getOrElse(f)
-        catch { case scala.util.control.NonFatal(_) => f }
-    })
-  }
+private[plans] final class GroupTopKRewrite(spark: SparkSession)
+    extends KeyedServe.Family {
 
   private[plans] final case class GroupTopKMatch(
       f: Filter, rankW: Window, scan: KeyedScan, groupCols: Seq[String],
@@ -85,19 +76,8 @@ class GroupTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     def statCols: Seq[String] = (sortCol +: sc.columns).distinct
   }
 
-  /** Every grouped-top-k shape in `plan` this rule would serve if
-    * column stats (and, on a resolved read, the record-level index)
-    * existed — no sidecar IO; shared with [[IndexAdvisor]], the
-    * one-matcher discipline.
-    */
-  private[plans] def groupTopKShapes(plan: LogicalPlan): Seq[GroupTopKMatch] =
-    if (KeyedTable.specRegistry.isEmpty) Nil
-    else plan.collect { case f: Filter =>
-      try matchShape(f) catch { case scala.util.control.NonFatal(_) => None }
-    }.flatten
-
-  private def tryRewrite(f: Filter): Option[LogicalPlan] =
-    matchShape(f).flatMap { m =>
+  def rewrite(node: LogicalPlan): Option[LogicalPlan] =
+    matchShape(node).flatMap { m =>
       TableMetaCache.declineGated(spark, this, m.scan.root)((m.scan.root, m.groupCols,
         m.sortCol, m.n, m.desc, m.nullsFirst, m.sc)) {
         serve(m)
@@ -168,7 +148,13 @@ class GroupTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  private def matchShape(f: Filter): Option[GroupTopKMatch] = {
+  /** The grouped-top-k shape of `node` this rule would serve if column
+    * stats (and, on a resolved read, the record-level index) existed —
+    * no sidecar IO; shared with [[IndexAdvisor]], the one-matcher
+    * discipline.
+    */
+  def matchShape(node: LogicalPlan): Option[GroupTopKMatch] = {
+    val f = node match { case f: Filter => f; case _ => return None }
     val ks = KeyedScan.of(f).getOrElse(return None)
     val (w, conds) = ks.current.collect { case (Seq(one), cs) => (one, cs) }
       .getOrElse(return None)

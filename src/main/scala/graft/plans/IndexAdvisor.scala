@@ -9,7 +9,8 @@ import graft.table.{KeyedTable, TableMetaCache}
   * analyze a set of query frames, find the literal point probes over
   * registered keyed tables that [[PointLookupRewrite]] would serve if the
   * needed index sidecars existed, and recommend exactly those builds.
-  * One matcher ([[PointLookupRewrite.probeShapes]]) is shared with the
+  * One matcher per family ([[PointLookupRewrite.matchProbe]] and its
+  * siblings, collected by [[KeyedServe.shapes]]) is shared with the
   * serving rule, so the advisor can never recommend a shape the rule
   * later declines — the same one-matcher discipline the MV advisor keeps
   * with the MV rewrite.
@@ -60,9 +61,7 @@ object IndexAdvisor {
     }
 
   def analyze(spark: SparkSession, queries: Seq[DataFrame]): IndexAdvice = {
-    val rule = new PointLookupRewrite(spark)
-    val rangeRule = new RangePruneRewrite(spark)
-    val aggRule = new StatsAggregateRewrite(spark)
+    val serve = new KeyedServe(spark)
     val skipped = Seq.newBuilder[String]
     val plans = queries.zipWithIndex.flatMap { case (q, i) =>
       // A poison frame (analysis exception on .optimizedPlan) lands in
@@ -90,14 +89,14 @@ object IndexAdvisor {
     // was already metadata-only).
     def isPartitionCol(spec: graft.table.KeyedTableSpec, c: String): Boolean =
       spec.partitionCols.exists(_.equalsIgnoreCase(c))
-    val shapes = plans.flatMap(rule.probeShapes)
+    val shapes = plans.flatMap(KeyedServe.shapes(_)(serve.point.matchProbe))
       .filterNot(m => !m.viaKey && isPartitionCol(m.spec, m.probeAttr.name))
     // Genuine ranges only (an open side or lo < hi): an equality probe
     // belongs to the point family above — recommending column stats for
     // it would shadow the exact index with a weaker one. Partition
     // columns drop for the same reason as point probes: directory
     // pruning already serves them.
-    val rangeMatches = plans.flatMap(rangeRule.rangeShapes)
+    val rangeMatches = plans.flatMap(KeyedServe.shapes(_)(serve.range.matchRange))
       .map(m => (m, m.ranges.filterNot(r =>
         r.isPoint || isPartitionCol(m.spec, r.column))))
       .filter(_._2.nonEmpty)
@@ -122,37 +121,39 @@ object IndexAdvisor {
       cols.map(c => (spec.path, "column_stats", c)) ++
         (if (spec.retainHistory) Seq((spec.path, "record_key", spec.keyCols.head))
          else Nil)
-    val topKWants = plans.flatMap(new TopKPruneRewrite(spark).topKShapes)
+    val topKWants = plans.flatMap(KeyedServe.shapes(_)(serve.topK.matchTopK))
       .flatMap(m => statsChain(m.spec, m.statCols.filterNot(isPartitionCol(m.spec, _))))
     // Data-column-grouped top-k shapes are excluded for the same reason
     // as the rollup arm: they serve only under a clustered layout a
     // static shape can't promise, so a blanket stats rec never settles.
-    val groupTopKWants = plans.flatMap(new GroupTopKRewrite(spark).groupTopKShapes)
+    val groupTopKWants = plans.flatMap(KeyedServe.shapes(_)(serve.groupTopK.matchShape))
       .filter(_.dataGroupCols.isEmpty)
       .flatMap(m => statsChain(m.spec, m.statCols.filterNot(isPartitionCol(m.spec, _))))
     // Servable whole-table/grouped aggregates want stats on their data
     // columns; a count(*)-only shape wants any build (the empty-column
     // marker — every build records `cnt`).
-    val aggWants = plans.flatMap(aggRule.aggShapes).flatMap { case (spec, cols) =>
+    val aggWants = plans.flatMap(serve.stats.aggShapes).flatMap { case (spec, cols) =>
       statsChain(spec, if (cols.isEmpty) Seq("") else cols)
     }
-    // STAR-JOIN fact chains: the join-prune rule's shape matcher
-    // reports the fact table and its joined columns; recommend the
-    // fact-side chain — the record-level index always (keys→files),
-    // plus the secondary sidecar when the join rides one non-key fact
-    // column (value→keys first). Fact PARTITION join columns recommend
-    // nothing: Spark's own dynamic partition pruning already serves a
-    // partitioned fact join from directory metadata. The dim side's
-    // probe needs are collected by the point/range matchers over the
-    // same plan — one analyze round recommends the whole star chain.
-    val joinRule = new JoinPruneRewrite(spark)
-    val joinWants = analyzedPlans.flatMap(joinRule.joinShapes).flatMap { s =>
-      val rli = (s.factSpec.path, "record_key", s.factSpec.keyCols.head)
-      if (s.coversFactKey) Seq(rli)
-      else s.factJoinCols.headOption.toSeq
-        .filterNot(c => isPartitionCol(s.factSpec, c))
-        .flatMap(c => Seq(rli, (s.factSpec.path, "secondary", c)))
-    }
+    // STAR-JOIN fact chains: the join family's shape matcher reports
+    // the fact table and its joined columns; recommend the fact-side
+    // chain — the record-level index always (keys→files), plus the
+    // secondary sidecar when the join rides one non-key fact column
+    // (value→keys first; the serve admits no other non-key join).
+    // Fact PARTITION join columns recommend nothing: Spark's own dynamic
+    // partition pruning already serves a partitioned fact join from
+    // directory metadata. The dim side's probe needs are collected by
+    // the point/range matchers over the same plan — one analyze round
+    // recommends the whole star chain.
+    val joinWants = analyzedPlans.flatMap(KeyedServe.shapes(_)(serve.join.matchJoin))
+      .filter(m => m.coversFactKey || m.joined.length == 1)
+      .flatMap { m =>
+        val spec = m.fact.spec
+        val rli = (spec.path, "record_key", spec.keyCols.head)
+        if (m.coversFactKey) Seq(rli)
+        else Seq(m.joined.head._1.name).filterNot(c => isPartitionCol(spec, c))
+          .flatMap(c => Seq(rli, (spec.path, "secondary", c)))
+      }
     // LAYOUT advice: stats that exist but barely skip mean the files
     // overlap the probed column — the index can't help until a sort
     // rewrite makes per-file ranges tight. Measured against the
@@ -208,7 +209,7 @@ object IndexAdvisor {
     val rollupTarget = spark.conf
       .getOption("spark.graft.cluster.target.bytes")
       .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(128L << 20)
-    val rollupRecs = plans.flatMap(aggRule.dataGroupShapes).flatMap {
+    val rollupRecs = plans.flatMap(serve.stats.dataGroupShapes).flatMap {
       case (spec, gcol, needCols) =>
         try {
           val t = KeyedTable(spec)

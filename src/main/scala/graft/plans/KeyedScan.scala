@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.internal.Logging
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Window}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
@@ -114,6 +114,16 @@ private[plans] final case class KeyedScan(
   def relPaths(rel: Seq[String]): Seq[Path] =
     rel.map(r => new Path(new Path(spec.path), r))
 
+  /** Files under the table root (qualified or not) as table-relative
+    * names — the inverse of [[relPaths]].
+    */
+  def relNames(spark: SparkSession, files: Seq[Path]): Seq[String] = {
+    val root = new Path(spec.path)
+    val prefix = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(root).toUri.getPath + "/"
+    files.map(_.toUri.getPath.stripPrefix(prefix))
+  }
+
   /** The scan's own file count — lists the relation's files, so only
     * the serve path calls it, never the matcher.
     */
@@ -184,6 +194,20 @@ private[plans] object KeyedScan {
         },
         windows.toSeq, MvPlanShape.substFn(renames))
     }
+  }
+
+  /** The one "point-sized" cap: a probe of more values or keys than this
+    * is not point-shaped — the literal key guard would bloat the plan and
+    * a per-key index probe stops paying; the query belongs in a scan.
+    */
+  val MaxPointKeys = 128
+
+  /** `df`'s rows when there are at most [[MaxPointKeys]] of them, else
+    * None. One bounded plan-time job under the metadata conf.
+    */
+  def pointSized(spark: SparkSession, df: DataFrame): Option[Array[Row]] = {
+    val rows = KeyedTable.withMetaConf(spark)(df.limit(MaxPointKeys + 1).collect())
+    if (rows.length > MaxPointKeys) None else Some(rows)
   }
 
   /** The exact key-set guard over `rows` (key values in `keyAttrs`

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.table.{KeyedTable, TableMetaCache}
@@ -48,28 +47,16 @@ import graft.table.{KeyedTable, TableMetaCache}
   * full scan when unprovable — a stale index is never wrong here either.
   * Plan-time cost is one small index probe (like dynamic partition
   * pruning's subquery), gated behind the registry hit and the literal
-  * probe; re-application is naturally idempotent because the swapped
-  * relation no longer roots at the registered path.
+  * probe of at most [[KeyedScan.MaxPointKeys]] values; re-application is
+  * naturally idempotent because the swapped relation no longer roots at
+  * the registered path. A family of [[KeyedServe]].
   */
-class PointLookupRewrite(spark: SparkSession)
-    extends Rule[LogicalPlan] {
+private[plans] final class PointLookupRewrite(spark: SparkSession)
+    extends KeyedServe.Family {
+  import KeyedScan.MaxPointKeys
 
-  /** Point-lookup contract: beyond this many probe values the scan is
-    * not point-shaped and the index probe is not worth plan-time work.
-    */
-  private val MaxProbeValues = 128
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (KeyedTable.specRegistry.isEmpty) return plan
-    TableMetaCache.pinVersions(plan.transformUp {
-      case f: Filter =>
-        try tryRewrite(f).getOrElse(f)
-        catch { case scala.util.control.NonFatal(_) => f }
-    })
-  }
-
-  private def tryRewrite(f: Filter): Option[LogicalPlan] =
-    matchProbe(f).flatMap { m =>
+  def rewrite(node: LogicalPlan): Option[LogicalPlan] =
+    matchProbe(node).flatMap { m =>
       val key = (m.scan.root, m.viaKey,
         m.probes.map(p => (p._1.name, p._2.toVector)))
       TableMetaCache.declineGated(spark, this, m.scan.root)(key)(serveProbe(m))
@@ -109,18 +96,13 @@ class PointLookupRewrite(spark: SparkSession)
     }
   }
 
-  /** Every point-probe shape in `plan` this rule would serve if the
-    * needed indexes existed (no index IO, no filesystem work beyond the
+  /** The point-probe shape of `node` this rule would serve if the needed
+    * indexes existed (no index IO, no filesystem work beyond the
     * registry). On an already-index-served plan the Filter no longer
     * roots at the registered path, so served probes naturally drop out.
     */
-  private[plans] def probeShapes(plan: LogicalPlan): Seq[ProbeMatch] =
-    if (KeyedTable.specRegistry.isEmpty) Nil
-    else plan.collect { case f: Filter =>
-      try matchProbe(f) catch { case scala.util.control.NonFatal(_) => None }
-    }.flatten
-
-  private def matchProbe(f: Filter): Option[ProbeMatch] = {
+  def matchProbe(node: LogicalPlan): Option[ProbeMatch] = {
+    val f = node match { case f: Filter => f; case _ => return None }
     val ks = KeyedScan.of(f).getOrElse(return None)
     val spec = ks.spec
     val keyColsL = spec.keyCols.map(_.toLowerCase(java.util.Locale.ROOT))
@@ -149,7 +131,7 @@ class PointLookupRewrite(spark: SparkSession)
     def nameOf(a: Attribute) = a.name.toLowerCase(java.util.Locale.ROOT)
 
     val probes = split.flatMap { case (c, d) => probeOf(c).map((_, d)) }
-      .filter { case ((_, vs), _) => vs.nonEmpty && vs.length <= MaxProbeValues }
+      .filter { case ((_, vs), _) => vs.nonEmpty && vs.length <= MaxPointKeys }
     if (probes.isEmpty) return None
 
     // Key probe: EVERY key column carries a literal point conjunct — a
@@ -171,7 +153,7 @@ class PointLookupRewrite(spark: SparkSession)
         }
         if (perCol.exists(_._2.isEmpty)) return None // unsatisfiable: scan
         val tuples = perCol.map(_._2.length.toLong).product
-        if (tuples > MaxProbeValues) return None
+        if (tuples > MaxPointKeys) return None
         (perCol, keyColsL.flatMap(keyProbeByCol))
       } else {
         val first = probes.head
@@ -225,11 +207,10 @@ class PointLookupRewrite(spark: SparkSession)
             // in the probe by the sidecar's coverage guarantee). Needs
             // the key literals, so the key set must be point-sized too.
             val keyAttrs = ks.keyAttrs.getOrElse(return None)
-            val collected = KeyedTable.withMetaConf(spark)(keys
-              .select(spec.keyCols.map(org.apache.spark.sql.functions.col): _*)
-              .limit(MaxProbeValues + 1).collect())
-            if (collected.length > MaxProbeValues || collected.isEmpty) None
-            else Some((keys, Some(KeyedScan.keyGuard(keyAttrs, collected.toSeq))))
+            KeyedScan.pointSized(spark, keys
+              .select(spec.keyCols.map(org.apache.spark.sql.functions.col): _*))
+              .filter(_.nonEmpty)
+              .map(collected => (keys, Some(KeyedScan.keyGuard(keyAttrs, collected.toSeq))))
           }
         }
       }

@@ -35,7 +35,7 @@ private[plans] object RangeConjuncts {
       /** One (column, SCALA-side values) per IN/InSet conjunct on an
         * admitted column — a disjunction of point ranges, servable from
         * min/max stats as OR-of-containment. Values capped at
-        * [[MaxInValues]]; larger lists land in `other`.
+        * [[KeyedScan.MaxPointKeys]]; larger lists land in `other`.
         */
       inLists: Seq[(String, Seq[Any])],
       /** Conjuncts consumed by no classification. */
@@ -79,7 +79,7 @@ private[plans] object RangeConjuncts {
     // (values already Catalyst-typed); both convert to SCALA values
     // here so serving code can `lit()` them directly.
     def inListOf(e: Expression): Option[(Attribute, Seq[Any])] = e match {
-      case In(x, vs) if vs.nonEmpty && vs.length <= MaxInValues &&
+      case In(x, vs) if vs.nonEmpty && vs.length <= KeyedScan.MaxPointKeys &&
         vs.forall { case Literal(v, _) => v != null; case _ => false } =>
         // Mirror ok()'s literal-type check: a type-mismatched literal
         // (possible in hand-built plans) must not reach the
@@ -90,7 +90,7 @@ private[plans] object RangeConjuncts {
             .createToScalaConverter(a.dataType)
           (a, vs.map(l => toScala(l.asInstanceOf[Literal].value)))
         }
-      case InSet(x, hset) if hset.nonEmpty && hset.size <= MaxInValues &&
+      case InSet(x, hset) if hset.nonEmpty && hset.size <= KeyedScan.MaxPointKeys &&
         !hset.contains(null) =>
         relAttrOf(x).map { a =>
           val toScala = org.apache.spark.sql.catalyst.CatalystTypeConverters
@@ -273,12 +273,6 @@ private[plans] object RangeConjuncts {
     } ++ notNull.map(c => col(c).isNotNull) ++
       inLists.map { case (c, vs) => col(c).isin(vs: _*) }
   }
-
-  /** Beyond this many IN values the disjunction is not point-shaped and
-    * the per-value stats containment test stops paying — the same
-    * contract as [[PointLookupRewrite]]'s probe cap.
-    */
-  val MaxInValues = 128
 }
 
 /** Shared extraction of literal PARTITION-column conjuncts — point

@@ -4,7 +4,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
-import org.apache.spark.sql.catalyst.rules.Rule
 
 import graft.table.{KeyedTable, TableMetaCache}
 
@@ -57,7 +56,7 @@ import graft.table.{KeyedTable, TableMetaCache}
   * serves in three steps: (a) the all-version stats select the
   * candidate range files; (b) the DISTINCT KEYS of their in-range rows
   * — the only keys whose winner can be in range, a winner being itself
-  * a version — are collected at plan time (≤ [[MaxResolveKeys]], else
+  * a version — are collected at plan time (≤ [[KeyedScan.MaxPointKeys]], else
   * decline: a range matching half the table belongs in a full
   * resolve); (c) the scan swaps onto those keys' record-level-index
   * candidate files (winner + delta — resolving over them yields
@@ -71,30 +70,16 @@ import graft.table.{KeyedTable, TableMetaCache}
   * arm, one candidate-file key scan — the DPP-subquery-shaped cost the
   * point rule also pays), gated behind the registry hit and a literal
   * range conjunct; re-application is naturally idempotent because the
-  * swapped relation no longer roots at the registered path.
+  * swapped relation no longer roots at the registered path. A family of
+  * [[KeyedServe]].
   */
-class RangePruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
-
-  /** MoR-arm contract: beyond this many in-range keys the probe is not
-    * point-sized — the literal key guard would bloat the plan and the
-    * per-key index probe stops paying; the query belongs in a full
-    * resolve. Same cap as [[PointLookupRewrite]]'s probe.
-    */
-  private val MaxResolveKeys = 128
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (KeyedTable.specRegistry.isEmpty) return plan
-    TableMetaCache.pinVersions(plan.transformUp {
-      case f: Filter =>
-        try tryRewrite(f).getOrElse(f)
-        catch { case scala.util.control.NonFatal(_) => f }
-    })
-  }
+private[plans] final class RangePruneRewrite(spark: SparkSession)
+    extends KeyedServe.Family {
 
   /** The shape half of the match, sidecar-IO-free — shared with
     * [[IndexAdvisor]], so the advisor recommends exactly the stats
     * builds this rule can later serve (one matcher, like
-    * [[PointLookupRewrite.probeShapes]] for the point family).
+    * [[PointLookupRewrite.matchProbe]] for the point family).
     */
   private[plans] final case class RangeMatch(
       f: Filter, scan: KeyedScan, ranges: Seq[graft.table.ColumnRange],
@@ -114,26 +99,21 @@ class RangePruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     def spec: graft.table.KeyedTableSpec = scan.spec
   }
 
-  /** Every range shape in `plan` this rule would serve if column stats
-    * existed (no sidecar IO, no filesystem work beyond the registry).
-    * On an already-served plan the Filter no longer roots at the
-    * registered path, so served ranges naturally drop out.
-    */
-  private[plans] def rangeShapes(plan: LogicalPlan): Seq[RangeMatch] =
-    if (KeyedTable.specRegistry.isEmpty) Nil
-    else plan.collect { case f: Filter =>
-      try matchRange(f) catch { case scala.util.control.NonFatal(_) => None }
-    }.flatten
-
-  private def tryRewrite(f: Filter): Option[LogicalPlan] =
-    matchRange(f).flatMap { m =>
+  def rewrite(node: LogicalPlan): Option[LogicalPlan] =
+    matchRange(node).flatMap { m =>
       val key = (m.scan.root, m.ranges.toVector, m.nullPreds.toVector,
         m.inLists.map { case (c, vs) => (c, vs.toVector) }.toVector,
         m.morKeyAttrs.isDefined, m.partFilters.toVector)
       TableMetaCache.declineGated(spark, this, m.scan.root)(key)(serveRange(m))
     }
 
-  private def matchRange(f: Filter): Option[RangeMatch] = {
+  /** The range shape of `node` this rule would serve if column stats
+    * existed (no sidecar IO, no filesystem work beyond the registry).
+    * On an already-served plan the Filter no longer roots at the
+    * registered path, so served ranges naturally drop out.
+    */
+  def matchRange(node: LogicalPlan): Option[RangeMatch] = {
+    val f = node match { case f: Filter => f; case _ => return None }
     val ks = KeyedScan.of(f).getOrElse(return None)
     if (!ks.deterministic) return None
 
@@ -240,17 +220,11 @@ class RangePruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     // In-range rows' distinct keys — the only keys whose winner can be
     // in range. One bounded plan-time job, like a DPP subquery.
     val residual = RangeConjuncts.rowFilters(Nil, m.ranges, Nil, Nil).reduce(_ && _)
-    val rootPath = new Path(m.spec.path)
-    val fsys = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rootPrefix = fsys.makeQualified(rootPath).toUri.getPath + "/"
-    val rel = sel.map(p => p.toUri.getPath.stripPrefix(rootPrefix))
-    val keysDf = table.readFilesRaw(spark, rel)
+    val keysDf = table.readFilesRaw(spark, m.scan.relNames(spark, sel))
       .filter(residual)
       .select(m.spec.keyCols.map(col): _*)
       .distinct()
-    val collected = KeyedTable.withMetaConf(spark)(
-      keysDf.limit(MaxResolveKeys + 1).collect())
-    if (collected.length > MaxResolveKeys) return None
+    val collected = KeyedScan.pointSized(spark, keysDf).getOrElse(return None)
     if (collected.isEmpty) return swap(Nil, None, "no in-range version row")
 
     // keys → candidate files (winner + delta; freshness proven through

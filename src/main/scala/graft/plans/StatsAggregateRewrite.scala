@@ -2,12 +2,12 @@ package graft.plans
 
 import scala.collection.mutable
 
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Average, Complete, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan, Project, Union}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions.{coalesce, col, count, countDistinct, lit, max, min, sum, when}
 import org.apache.spark.sql.types._
 
@@ -92,23 +92,12 @@ import graft.table.{KeyedTable, TableMetaCache}
   *
   * Plan-time cost is one metadata-sized sidecar read, gated behind the
   * registry hit and the all-servable aggregate list; idempotent because
-  * the produced LocalRelation contains no relation to re-match.
+  * the produced LocalRelation contains no relation to re-match. A family
+  * of [[KeyedServe]].
   */
-class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
+private[plans] final class StatsAggregateRewrite(spark: SparkSession)
+    extends KeyedServe.Family with Logging {
   import StatsAggregateRewrite.MaxGroups
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (KeyedTable.specRegistry.isEmpty) return plan
-    TableMetaCache.pinVersions(plan.transformUp {
-      case a: Aggregate =>
-        try serve(a).getOrElse(a)
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            logInfo(s"stats-aggregate rewrite declined on error: $e")
-            a
-        }
-    })
-  }
 
   private def integral(t: DataType): Boolean = t match {
     case ByteType | ShortType | IntegerType | LongType => true
@@ -170,7 +159,7 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     */
   private[plans] def aggShapes(
       plan: LogicalPlan): Seq[(graft.table.KeyedTableSpec, Seq[String])] =
-    matches(plan)
+    KeyedServe.shapes(plan)(matchAgg)
       // Data-column-grouped and avg shapes are deliberately NOT
       // advisor wants: a stats build serves a data grouping only when
       // files are single-valued in the group column (a LAYOUT
@@ -195,32 +184,29 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     */
   private[plans] def dataGroupShapes(
       plan: LogicalPlan): Seq[(graft.table.KeyedTableSpec, String, Seq[String])] =
-    matches(plan)
+    KeyedServe.shapes(plan)(matchAgg)
       .filter(m => m.dataGroupCols.length == 1 && !m.spec.retainHistory &&
         !m.needs.exists(_.isInstanceOf[AvgOf]))
       .map(m => (m.spec, m.dataGroupCols.head, m.statCols))
 
-  private def matches(plan: LogicalPlan): Seq[AggMatch] =
-    if (KeyedTable.specRegistry.isEmpty) Nil
-    else plan.collect { case ag: Aggregate =>
-      try matchAgg(ag) catch { case scala.util.control.NonFatal(_) => None }
-    }.flatten
-
-  private def serve(a: Aggregate): Option[LogicalPlan] =
-    matchAgg(a).flatMap { m =>
-      // Needs carry data types and column names; PartFilters carry
-      // literal values — together with the path they pin the semantic
-      // probe, so node churn across fixpoint iterations still hits.
-      val key = (m.spec.path, m.needs.toVector,
-        m.groupAttrs.map(_.name).toVector, m.sc,
-        // Cast-wrapped and cast-free twins must gate independently: a
-        // declined cast shape memoized under the bare key would rob
-        // the cast-free twin of its union serve for the session.
-        m.casts.toVector.map { case (i, c) => (i, c.dataType) }.sortBy(_._1))
-      TableMetaCache.declineGated(spark, this, m.spec.path)(key) {
-        StatsView.of(spark, m.scan, m.sc).flatMap(serveAgg(m, _))
-      }
-    }.orElse(serveMorCount(a)).orElse(serveDistinct(a))
+  def rewrite(node: LogicalPlan): Option[LogicalPlan] = node match {
+    case a: Aggregate =>
+      matchAgg(a).flatMap { m =>
+        // Needs carry data types and column names; PartFilters carry
+        // literal values — together with the path they pin the semantic
+        // probe, so node churn across fixpoint iterations still hits.
+        val key = (m.spec.path, m.needs.toVector,
+          m.groupAttrs.map(_.name).toVector, m.sc,
+          // Cast-wrapped and cast-free twins must gate independently: a
+          // declined cast shape memoized under the bare key would rob
+          // the cast-free twin of its union serve for the session.
+          m.casts.toVector.map { case (i, c) => (i, c.dataType) }.sortBy(_._1))
+        TableMetaCache.declineGated(spark, this, m.spec.path)(key) {
+          StatsView.of(spark, m.scan, m.sc).flatMap(serveAgg(m, _))
+        }
+      }.orElse(serveMorCount(a)).orElse(serveDistinct(a))
+    case _ => None
+  }
 
   /** `count(DISTINCT c)` — or the no-aggregate `SELECT DISTINCT c`
     * canonical form — over a CLUSTERED data column, served as a VALUES
@@ -450,7 +436,8 @@ class StatsAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       case _ => None
     }
 
-  private def matchAgg(a: Aggregate): Option[AggMatch] = {
+  private def matchAgg(node: LogicalPlan): Option[AggMatch] = {
+    val a = node match { case a: Aggregate => a; case _ => return None }
     if (a.aggregateExpressions.isEmpty) return None
     val ks = KeyedScan.of(a.child).getOrElse(return None)
     val conds = ks.current.collect { case (Seq(), cs) => cs }.getOrElse(return None)

@@ -3,7 +3,6 @@ package graft.plans
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
-import org.apache.spark.sql.catalyst.rules.Rule
 
 import graft.table.{KeyedTable, TableMetaCache}
 
@@ -57,17 +56,10 @@ import graft.table.{KeyedTable, TableMetaCache}
   * cannot bound the kth value — that shape is [[RangePruneRewrite]]'s).
   * Same registry-gated plan-time cost and natural idempotency as the
   * range rule (a served scan no longer roots at the registered path).
+  * A family of [[KeyedServe]].
   */
-class TopKPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (KeyedTable.specRegistry.isEmpty) return plan
-    TableMetaCache.pinVersions(plan.transformUp {
-      case lim: GlobalLimit =>
-        try tryRewrite(lim).getOrElse(lim)
-        catch { case scala.util.control.NonFatal(_) => lim }
-    })
-  }
+private[plans] final class TopKPruneRewrite(spark: SparkSession)
+    extends KeyedServe.Family {
 
   private def projOk(pl: Seq[NamedExpression]): Boolean = pl.forall {
     case _: AttributeReference => true
@@ -89,20 +81,8 @@ class TopKPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     def statCols: Seq[String] = (sortCol +: sc.columns).distinct
   }
 
-  /** Every top-k shape in `plan` this rule would serve if column stats
-    * (and, on a resolved read, the record-level index) existed — no
-    * sidecar IO, no filesystem work beyond the registry. On an
-    * already-served plan the sort child no longer roots at the
-    * registered path, so served shapes naturally drop out.
-    */
-  private[plans] def topKShapes(plan: LogicalPlan): Seq[TopKMatch] =
-    if (KeyedTable.specRegistry.isEmpty) Nil
-    else plan.collect { case lim: GlobalLimit =>
-      try matchTopK(lim) catch { case scala.util.control.NonFatal(_) => None }
-    }.flatten
-
-  private def tryRewrite(lim: GlobalLimit): Option[LogicalPlan] =
-    matchTopK(lim).flatMap { m =>
+  def rewrite(node: LogicalPlan): Option[LogicalPlan] =
+    matchTopK(node).flatMap { m =>
       TableMetaCache.declineGated(spark, this, m.scan.root)(
           (m.scan.root, m.sortCol, m.k, m.desc, m.nullsFirst, m.sc)) {
         serveTopK(m)
@@ -135,7 +115,14 @@ class TopKPruneRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  private def matchTopK(lim: GlobalLimit): Option[TopKMatch] = {
+  /** The top-k shape of `node` this rule would serve if column stats
+    * (and, on a resolved read, the record-level index) existed — no
+    * sidecar IO, no filesystem work beyond the registry. On an
+    * already-served plan the sort child no longer roots at the
+    * registered path, so served shapes naturally drop out.
+    */
+  def matchTopK(node: LogicalPlan): Option[TopKMatch] = {
+    val lim = node match { case l: GlobalLimit => l; case _ => return None }
     val (k, sort) = limitSort(lim).getOrElse(return None)
     val ks = KeyedScan.of(sort.child).getOrElse(return None)
     val conds = ks.current.collect { case (Seq(), cs) => cs }.getOrElse(return None)

@@ -3115,9 +3115,11 @@ final class KeyedTable(val spec: KeyedTableSpec) {
       (if (spec.partitionCols.nonEmpty) w.partitionBy(spec.partitionCols: _*) else w)
         .parquet(staging.toString)
       retireFileSidecars(f)
-      val moved = KeyedTable.dataFilesUnder(f, staging).map { case (rel, st) =>
+      val staged = KeyedTable.dataFilesUnder(f, staging)
+      staged.map { case (rel, _) => new Path(s"${spec.path}/$rel").getParent }
+        .distinct.foreach(f.mkdirs)
+      val moved = staged.map { case (rel, st) =>
         val dst = new Path(s"${spec.path}/$rel")
-        f.mkdirs(dst.getParent)
         require(!f.exists(dst), s"staged append collision: $dst exists")
         require(f.rename(st.getPath, dst),
           s"staged append could not move ${st.getPath} to $dst")

@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** The one cache of metadata derived from a table's on-disk state:
-  * sidecar snapshots and head rows, the optimizer rules' declined
+  * sidecar snapshots and head rows, the pruning families' declined
   * serves, MoR winner maps, advisor measurements. Entries are grouped by
   * table root and hold only while the root's on-disk version
   * is unchanged:
@@ -43,11 +43,12 @@ object TableMetaCache {
   // Versions read inside a [[pinVersions]] scope, per qualified root.
   private val pinned = new ThreadLocal[scala.collection.mutable.Map[String, Version]]
 
-  /** Run `body` reading each root's version at most once: an optimizer
-    * rule application wraps itself in this, so its decline check and the
-    * snapshots its serve reads all agree on one version per table. Only
-    * for read-only work — a mutation inside the scope would go unseen
-    * until the scope ends. Nested scopes share the outermost one.
+  /** Run `body` reading each root's version at most once. Each
+    * [[graft.plans.KeyedServe]] application is one scope, so all six
+    * pruning families' decline checks and the snapshots their serves read
+    * agree on one version per table, read once per application. Only for
+    * read-only work — a mutation inside the scope would go unseen until
+    * the scope ends. Nested scopes share the outermost one.
     */
   def pinVersions[A](body: => A): A =
     if (pinned.get != null) body
@@ -61,9 +62,16 @@ object TableMetaCache {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p).toString
   }
 
+  /** Reads of a table's on-disk version (one listing of the root plus its
+    * latest timeline marker) — observable so a spec can pin how often
+    * planning pays them.
+    */
+  private[graft] val versionReads = new java.util.concurrent.atomic.AtomicLong
+
   /** The on-disk version of the table at the qualified `root`. */
   private def version(spark: SparkSession, root: String): Version = {
     def read(): Version = {
+      versionReads.incrementAndGet()
       val p = new Path(root)
       val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val sidecars =
@@ -136,11 +144,12 @@ object TableMetaCache {
 
   private case object Declined
 
-  /** Gate an optimizer rule's serve (per `owner`, the rule instance): a
+  /** Gate a pruning family's serve (per `owner`, the family instance,
+    * which lives as long as its [[graft.plans.KeyedServe]] rule): a
     * decline remembered for `key` while every root in `roots` is at its
     * current version short-circuits to `None`, and a fresh decline is
-    * remembered. Catalyst's fixpoint batches re-run every rule per
-    * iteration and sibling rules rebuild node instances between them, so
+    * remembered. Catalyst's fixpoint batches re-apply the rule per
+    * iteration and other rules rebuild node instances between them, so
     * without this a declined probe re-pays its plan-time sidecar IO many
     * times per optimization; `key` is the SEMANTIC probe (table root plus
     * the normalized values, ranges, aggregate needs the rule derived), so

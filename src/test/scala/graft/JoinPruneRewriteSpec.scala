@@ -193,6 +193,44 @@ class JoinPruneRewriteSpec extends SparkTestBase {
     assert(empty.count() == 0L)
   }
 
+  test("dim RANGE probe past the key cap declines even when a null rides the window") {
+    val tmp = Files.createTempDirectory("graft_jpr_cap_").toString
+    // One fact file per user: the fact scan prunes to exactly the
+    // derived users' files, so a key missing from the derivation is a
+    // user missing from the join.
+    val fact = KeyedTable(KeyedTableSpec(
+      path = s"$tmp/fact", keyCols = Seq("u"), precombineCol = "rev",
+      partitionCols = Seq("p")))
+    val factRows = spark.range(1L, 151L).select(
+      col("id").as("u"), (col("id") * 10).as("v"), lit(0L).as("rev"),
+      col("id").as("p"))
+    fact.upsert(spark, factRows, commitTime = "c0")
+    fact.recordKeyIndex(spark)
+    // Dim keyed by d_id with u as a non-key attribute: d_id 0 carries a
+    // null u, d_id 1..129 carry 129 distinct users, and d_id ≥ 1000
+    // fills files the probe window never touches.
+    val dim = KeyedTable(KeyedTableSpec(
+      path = s"$tmp/dim", keyCols = Seq("d_id"), precombineCol = "rev"))
+    val dimRows = spark.range(0L, 130L)
+      .union(spark.range(1000L, 1300L))
+      .select(col("id").as("d_id"),
+        when(col("id") === 0L, lit(null).cast("long"))
+          .when(col("id") < 1000L, col("id"))
+          .otherwise(col("id") % 150 + 1).as("u"),
+        lit(0L).as("rev"))
+    dim.upsert(spark, dimRows, commitTime = "c0")
+    dim.cluster(spark, Seq("d_id"), targetFileBytes = 1L << 10)
+    dim.recordColumnStats(spark, Seq("d_id"))
+    val f = fact.read(spark)
+    val d = dim.read(spark).filter(col("d_id").between(0L, 129L))
+    val joined = f.join(d, f("u") === d("u")).select(f("u"), f("v"), d("d_id"))
+    val got = joined.as[(Long, Long, Long)].collect().toSet
+    // 129 derived keys exceed the cap: the join must scan, not drop users.
+    val missing = (1L to 129L).filterNot(u => got.contains((u, u * 10, u)))
+    assert(missing.isEmpty, s"users missing from the join: $missing")
+    assert(got.size == 129)
+  }
+
   test("left-semi joins prune the output side") {
     val tmp = Files.createTempDirectory("graft_jpr_semi_").toString
     val fact = buildFact(s"$tmp/fact")
