@@ -78,7 +78,7 @@ private[plans] final class GroupTopKRewrite(spark: SparkSession)
 
   def rewrite(node: LogicalPlan): Option[LogicalPlan] =
     matchShape(node).flatMap { m =>
-      TableMetaCache.declineGated(spark, this, m.scan.root)((m.scan.root, m.groupCols,
+      TableMetaCache.declineGated(spark, declines, m.scan.root)((m.scan.root, m.groupCols,
         m.sortCol, m.n, m.desc, m.nullsFirst, m.sc)) {
         serve(m)
       }

@@ -92,7 +92,7 @@ private[plans] final class JoinPruneRewrite(
         case scala.Right(rm) => (pairs, rm.ranges.toVector, rm.nullPreds.toVector,
           rm.inLists.map { case (c, vs) => (c, vs.toVector) }.toVector)
       }
-      TableMetaCache.declineGated(spark, this, m.fact.root, m.dim.root)(
+      TableMetaCache.declineGated(spark, declines, m.fact.root, m.dim.root)(
           (m.fact.root, m.dim.root, key)) {
         m.probe.fold(serveOrientation(m, _), serveRangeOrientation(m, _))
       }

@@ -74,11 +74,15 @@ final class KeyedServe(spark: SparkSession) extends Rule[LogicalPlan] {
 object KeyedServe {
 
   /** One pruning family: an IO-free matcher plus its serve. Declines are
-    * remembered under the family instance ([[TableMetaCache.declineGated]]),
+    * remembered in the family's own memo ([[TableMetaCache.declineGated]]),
     * which lives as long as its [[KeyedServe]] — the session's optimizer
     * builds the injected rule for each optimization it runs.
     */
   private[plans] trait Family {
+
+    /** The serves this instance declined, per probe and table versions. */
+    protected val declines: scala.collection.mutable.Set[Any] =
+      scala.collection.mutable.HashSet.empty
 
     /** `node` served from the table's sidecars, or None to leave it. */
     def rewrite(node: LogicalPlan): Option[LogicalPlan]

@@ -178,19 +178,13 @@ class MvAggregateRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
             val i = markers.lastIndexWhere(_ == mv.baseCommit)
             val since = markers.drop(i + 1)
             val insertClass = i >= 0 && since.forall(m =>
-              Set("insert", "bulkinsert").contains(KeyedTable.markerAction(m)))
+              KeyedTable.InsertActions.contains(KeyedTable.markerAction(m)))
             if (!insertClass) None
-            else {
-              val recs =
-                since.map(KeyedTable.commitFileRecord(spark, mv.basePath, _))
-              if (recs.exists(_.isEmpty)) None // legacy marker: no file index
-              else {
-                val files = scala.collection.mutable.LinkedHashSet.empty[String]
-                recs.flatten.foreach { case (a, r) => files ++= a; files --= r }
-                if (files.isEmpty) Some(None)
-                else Some(Some(DeltaServe(
-                  files.toSeq, since.map(KeyedTable.markerCommit))))
-              }
+            // None from the fold: a legacy marker without a file record.
+            else KeyedTable.fileDeltaAfter(spark, mv.basePath, markers,
+              KeyedTable.markerCommit(mv.baseCommit)).map { case (files, _) =>
+              if (files.isEmpty) None
+              else Some(DeltaServe(files, since.map(KeyedTable.markerCommit)))
             }
           }
         case None =>

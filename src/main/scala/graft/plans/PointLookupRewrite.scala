@@ -59,7 +59,7 @@ private[plans] final class PointLookupRewrite(spark: SparkSession)
     matchProbe(node).flatMap { m =>
       val key = (m.scan.root, m.viaKey,
         m.probes.map(p => (p._1.name, p._2.toVector)))
-      TableMetaCache.declineGated(spark, this, m.scan.root)(key)(serveProbe(m))
+      TableMetaCache.declineGated(spark, declines, m.scan.root)(key)(serveProbe(m))
     }
 
   /** The shape half of the match, index-IO-free — shared with

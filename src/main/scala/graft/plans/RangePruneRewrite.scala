@@ -104,7 +104,7 @@ private[plans] final class RangePruneRewrite(spark: SparkSession)
       val key = (m.scan.root, m.ranges.toVector, m.nullPreds.toVector,
         m.inLists.map { case (c, vs) => (c, vs.toVector) }.toVector,
         m.morKeyAttrs.isDefined, m.partFilters.toVector)
-      TableMetaCache.declineGated(spark, this, m.scan.root)(key)(serveRange(m))
+      TableMetaCache.declineGated(spark, declines, m.scan.root)(key)(serveRange(m))
     }
 
   /** The range shape of `node` this rule would serve if column stats

@@ -201,7 +201,7 @@ private[plans] final class StatsAggregateRewrite(spark: SparkSession)
           // declined cast shape memoized under the bare key would rob
           // the cast-free twin of its union serve for the session.
           m.casts.toVector.map { case (i, c) => (i, c.dataType) }.sortBy(_._1))
-        TableMetaCache.declineGated(spark, this, m.spec.path)(key) {
+        TableMetaCache.declineGated(spark, declines, m.spec.path)(key) {
           StatsView.of(spark, m.scan, m.sc).flatMap(serveAgg(m, _))
         }
       }.orElse(serveMorCount(a)).orElse(serveDistinct(a))
@@ -253,7 +253,7 @@ private[plans] final class StatsAggregateRewrite(spark: SparkSession)
         !ks.isPartitionCol(at.name))
       .getOrElse(return None)
     val sc = RangeConjuncts.statsConjuncts(ks, conds.map(_._1)).getOrElse(return None)
-    TableMetaCache.declineGated(spark, this, ks.spec.path)(
+    TableMetaCache.declineGated(spark, declines, ks.spec.path)(
         ("distinctValues", ks.spec.path, relAttr.name, isCount, sc)) {
       StatsView.of(spark, ks, sc).flatMap { view =>
         val (mn, _, _) = view.bounds(relAttr.name).getOrElse(return None)
@@ -342,7 +342,7 @@ private[plans] final class StatsAggregateRewrite(spark: SparkSession)
     if (!ks.resolved.exists(_.isEmpty)) return None
     val table = KeyedTable(spec)
     if (groupAttrs.isEmpty) {
-      TableMetaCache.declineGated(spark, this, spec.path)(
+      TableMetaCache.declineGated(spark, declines, spec.path)(
           ("morCount", spec.path)) {
         table.resolvedCount(spark).map { n =>
           logInfo(s"stats-aggregate rewrite: ${spec.path} resolved count " +
@@ -355,7 +355,7 @@ private[plans] final class StatsAggregateRewrite(spark: SparkSession)
       }
     } else {
       val key = ("morGroupCount", spec.path, groupAttrs.map(_.name).toVector)
-      TableMetaCache.declineGated(spark, this, spec.path)(key) {
+      TableMetaCache.declineGated(spark, declines, spec.path)(key) {
         table.resolvedGroupCounts(spark).flatMap { tuples =>
           // Combine the full partition tuples down to the requested
           // grouping projection (a subset groups coarser; counts add).

@@ -83,7 +83,7 @@ private[plans] final class TopKPruneRewrite(spark: SparkSession)
 
   def rewrite(node: LogicalPlan): Option[LogicalPlan] =
     matchTopK(node).flatMap { m =>
-      TableMetaCache.declineGated(spark, this, m.scan.root)(
+      TableMetaCache.declineGated(spark, declines, m.scan.root)(
           (m.scan.root, m.sortCol, m.k, m.desc, m.nullsFirst, m.sc)) {
         serveTopK(m)
       }

@@ -661,19 +661,6 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     * rendering), the index's stored (m, k) and the indexed-file count —
     * previously three separate actions per bloom probe.
     */
-  /** The sidecar's build boundary — the `built_at` of its head row — the
-    * freshness probe every index consumer runs before its real work.
-    * Cached per (dir, table version): one `limit(1)` job instead of one
-    * per consumer call, without collecting the (potentially
-    * key-count-sized) sidecar itself. `None` = empty sidecar.
-    */
-  private def builtAtOf(
-      spark: SparkSession, sidecarDir: String, idx: DataFrame): Option[String] =
-    TableMetaCache.get(spark, spec.path, ("builtAt", sidecarDir)) {
-      KeyedTable.withMetaConf(spark)(
-        idx.select(col("built_at")).limit(1).collect()).headOption.map(_.getString(0))
-    }
-
   private def bloomHeadAgg(idx: DataFrame): org.apache.spark.sql.Row =
     idx.agg(
       first(col("file")).as("f0"), first(col("m")).as("m0"),
@@ -851,7 +838,8 @@ final class KeyedTable(val spec: KeyedTableSpec) {
   // know about (added after its build boundary) are unioned into the
   // candidate set, files removed since are subtracted — a stale index is
   // never wrong, only less selective, and an unprovable delta falls back
-  // to the full read.
+  // to the full read. Every consumer of this index and of the secondary
+  // indexes below reads its sidecar through one [[IndexView]].
 
   private val RliDirName = "_graft_rli"
   private def rliDir = s"${spec.path}/$RliDirName"
@@ -860,7 +848,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     * normalization the commit markers record, so index entries and
     * marker file records compare as equals.
     */
-  private def relFileExpr(spark: SparkSession): Column = {
+  private[table] def relFileExpr(spark: SparkSession): Column = {
     val root = fs(spark).makeQualified(new Path(spec.path)).toUri.getPath
     substring_index(input_file_name(), s"$root/", -1)
   }
@@ -902,7 +890,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     * [[lookupResolve]] — the index must return the same rows a full
     * read would.)
     */
-  private def rliResolves(spark: SparkSession): Boolean =
+  private[table] def rliResolves(spark: SparkSession): Boolean =
     spec.retainHistory || isEvolved(spark)
 
   /** [[dedupLatest]]'s winner selection re-expressed over index ENTRIES:
@@ -910,7 +898,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     * resolve orders rows — so resolving entries and resolving the rows
     * they point at always agree on the winner.
     */
-  private def rliResolveEntries(spark: SparkSession, entries: DataFrame): DataFrame = {
+  private[table] def rliResolveEntries(spark: SparkSession, entries: DataFrame): DataFrame = {
     val scope =
       if (spec.globalKeys) Seq(col("key")) else Seq(col("key"), col("pp"))
     val order = (col("pre") +: spec.tiebreakCols.indices.map(i => col(s"tb_$i")))
@@ -947,6 +935,10 @@ final class KeyedTable(val spec: KeyedTableSpec) {
   private def publishRli(spark: SparkSession, entries: DataFrame): Unit =
     publishIndex(spark, RliDirName, entries, col("key"))
 
+  /** The `built_at` an index built now stamps. */
+  private def timelineBoundary(spark: SparkSession): String =
+    KeyedTable.boundaryOf(KeyedTable.timelineMarkers(spark, spec.path))
+
   /** Build the record-level index from one table scan: latest version
     * per key (the precombine resolve, so a history table indexes only
     * the version a lookup would return), keyed by `_graft_record_key`,
@@ -959,8 +951,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     */
   def recordKeyIndex(spark: SparkSession): Unit = {
     if (!exists(spark)) return
-    val builtAt = KeyedTable.timelineMarkers(spark, spec.path)
-      .lastOption.map(KeyedTable.markerCommit).getOrElse("")
+    val builtAt = timelineBoundary(spark)
     val entries = lookupResolve(
       spark, readRaw(spark).withColumn("_graft_rel", relFileExpr(spark)))
       .select(rliEntryCols: _*)
@@ -985,23 +976,15 @@ final class KeyedTable(val spec: KeyedTableSpec) {
 
   /** The incremental-maintenance skeleton shared by the record-level and
     * secondary indexes (their entries differ only in the extra columns
-    * carried; staleness, survival, settling, and atomic publish are
-    * identical): drop entries in removed files, re-derive entries from
-    * added files, settle winners on a resolving table, advance the
-    * boundary. `rebuild` runs when the sidecar is absent/foreign-schema
-    * or the delta is unprovable.
+    * carried): the sidecar's [[IndexView.current]] entries, published
+    * under the view's boundary. `rebuild` runs when the sidecar is
+    * absent/foreign-schema or the delta is unprovable.
     */
   private def refreshIndexSidecar(
       spark: SparkSession, dirName: String, entryCols: Seq[Column],
       required: Set[String], dist: Column)(rebuild: => Unit): Unit = {
-    val f = fs(spark)
-    val dir = new Path(new Path(spec.path), dirName)
-    if (!f.exists(dir)) { rebuild; return }
-    val idx = spark.read.parquet(dir.toString)
-    if (!required.subsetOf(idx.columns.toSet)) { rebuild; return }
-    val builtAt = builtAtOf(spark, dir.toString, idx).getOrElse("")
-    val newBoundary = KeyedTable.timelineMarkers(spark, spec.path)
-      .lastOption.map(KeyedTable.markerCommit).getOrElse("")
+    val view = IndexView.open(spark, this, dirName, required)
+      .getOrElse { rebuild; return }
     // Entry-schema drift (an index written before a column joined the
     // entry layout, e.g. the typed pv_ partition values) rebuilds: the
     // carried rows could not union with the delta's, and a mixed-schema
@@ -1009,30 +992,16 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     val expectedEntryCols = readRaw(spark).limit(0)
       .withColumn("_graft_rel", lit(""))
       .select(entryCols: _*).columns.toSet
-    if (idx.columns.toSet - "built_at" != expectedEntryCols) {
-      rebuild; return
-    }
-    KeyedTable.fileDeltaSince(spark, spec.path, builtAt) match {
-      case None => rebuild
-      case Some((added, removed)) =>
-        if (added.isEmpty && removed.isEmpty) return
-        val live = idx.drop("built_at")
-        val surviving =
-          if (removed.isEmpty) live
-          else live.filter(!col("file").isin(removed: _*))
-        val deltaRows =
-          if (added.isEmpty) surviving.limit(0)
-          else lookupResolve(spark,
-            readFilesRaw(spark, added)
-              .withColumn("_graft_rel", relFileExpr(spark)))
-            .select(entryCols: _*)
-        val merged = surviving.unionByName(deltaRows)
-        val settled =
-          if (rliResolves(spark)) rliResolveEntries(spark, merged) else merged
-        publishIndex(spark, dirName,
-          settled.withColumn("built_at", lit(newBoundary)), dist)
-    }
+    if (view.entries.columns.toSet != expectedEntryCols) { rebuild; return }
+    if (view.fresh) return
+    publishIndex(spark, dirName,
+      view.current(entryCols, resolve = lookupResolve(spark, _))
+        .withColumn("built_at", lit(view.boundary)), dist)
   }
+
+  /** The record-level index as of the current timeline. */
+  private def rliView(spark: SparkSession): Option[IndexView] =
+    IndexView.open(spark, this, RliDirName, rliRequiredCols)
 
   /** The lookup's candidate file set for `probe` keys, or `None` when
     * the index is absent/unreadable or freshness cannot be proven (the
@@ -1047,80 +1016,32 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     */
   private[graft] def rliCandidateFiles(
       spark: SparkSession, probe: DataFrame): Option[Seq[String]] =
-    KeyedTable.withMetaConf(spark)(rliCandidateFilesImpl(spark, probe))
-
-  private def rliCandidateFilesImpl(
-      spark: SparkSession, probe: DataFrame): Option[Seq[String]] = {
-    val f = fs(spark)
-    if (!f.exists(new Path(rliDir))) return None
-    try {
-      val idx = spark.read.parquet(rliDir)
-      if (!rliRequiredCols.subsetOf(idx.columns.toSet)) return None
-      val builtAt = builtAtOf(spark, rliDir, idx).getOrElse(return None)
-      KeyedTable.fileDeltaSince(spark, spec.path, builtAt).map {
-        case (added, removed) =>
-          val probePk = probe.select(keyExpr.as("key")).distinct()
-          val idxSel0 = idx.drop("built_at").join(broadcast(probePk), Seq("key"))
-          val idxSel =
-            if (removed.isEmpty) idxSel0
-            else idxSel0.filter(KeyedTable.notInSetUdf(removed)(col("file")))
-          val deltaSel =
-            if (added.isEmpty) idxSel.limit(0)
-            else readFilesRaw(spark, added)
-              .withColumn("_graft_rel", relFileExpr(spark))
-              .select(rliEntryCols: _*)
-              .join(broadcast(probePk), Seq("key"))
-          val cands = idxSel.unionByName(deltaSel)
-          val settled =
-            if (rliResolves(spark)) rliResolveEntries(spark, cands) else cands
-          settled.select(col("file")).distinct()
-            .collect().map(_.getString(0)).toSeq
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
+    KeyedTable.withMetaConf(spark) {
+      try rliView(spark).map { view =>
+        val probePk = probe.select(keyExpr.as("key")).distinct()
+        view.current(rliEntryCols, _.join(broadcast(probePk), Seq("key")))
+          .select(col("file")).distinct()
+          .collect().map(_.getString(0)).toSeq
+      } catch { case scala.util.control.NonFatal(_) => None }
+    }
 
   /** The resolved (latest-per-key) row count served from the
     * record-level index, or `None` when the index is absent or its
     * staleness is unprovable — the serving half of
-    * [[graft.plans.StatsAggregateRewrite]]'s MoR count arm. On a
-    * resolving table the index stores exactly ONE entry per live
-    * resolve scope ([[rliEntryCols]]), so its row count IS the resolved
-    * count at `built_at`; commits after the build reconcile through the
-    * commit→files delta exactly as [[rliCandidateFiles]] does — entries
-    * in removed files drop, the added files' versions join, and the
-    * union settles to one winner per scope. Cost is O(index + delta
-    * files), never O(table data): counting a 100 TB history table's
-    * live keys reads the key/file index, not the data (and with an
-    * empty delta it is a bare index count, no shuffle at all) — which
+    * [[graft.plans.StatsAggregateRewrite]]'s MoR count arm: the row count
+    * of [[settledWinnerEntries]]. On a resolving table the index stores
+    * exactly ONE entry per live resolve scope ([[rliEntryCols]]), so its
+    * row count IS the resolved count at `built_at`. Cost is O(index +
+    * delta files), never O(table data): counting a 100 TB history
+    * table's live keys reads the key/file index, not the data (and with
+    * an empty delta it is a bare index count, no shuffle at all) — which
     * is why this deliberately does NOT run under [[withMetaConf]]'s
     * 8-partition squeeze: the index is key-count-sized, not
     * metadata-sized.
     */
-  private[graft] def resolvedCount(spark: SparkSession): Option[Long] = {
-    val f = fs(spark)
-    if (!f.exists(new Path(rliDir)) || !spec.retainHistory) return None
-    try {
-      val idx = spark.read.parquet(rliDir)
-      if (!rliRequiredCols.subsetOf(idx.columns.toSet)) return None
-      val builtAt = builtAtOf(spark, rliDir, idx).getOrElse(return None)
-      KeyedTable.fileDeltaSince(spark, spec.path, builtAt).map {
-        case (added, removed) =>
-          if (added.isEmpty && removed.isEmpty) idx.count()
-          else {
-            val idxSel =
-              if (removed.isEmpty) idx.drop("built_at")
-              else idx.drop("built_at")
-                .filter(KeyedTable.notInSetUdf(removed)(col("file")))
-            val deltaSel =
-              if (added.isEmpty) idxSel.limit(0)
-              else readFilesRaw(spark, added)
-                .withColumn("_graft_rel", relFileExpr(spark))
-                .select(rliEntryCols: _*)
-            rliResolveEntries(spark, idxSel.unionByName(deltaSel)).count()
-          }
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
+  private[graft] def resolvedCount(spark: SparkSession): Option[Long] =
+    try settledWinnerEntries(spark).map(_.count())
+    catch { case scala.util.control.NonFatal(_) => None }
 
   /** Resolved (latest-per-key) row counts per FULL partition tuple,
     * served from the record-level index — the grouped twin of
@@ -1133,72 +1054,31 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     */
   private[graft] def resolvedGroupCounts(
       spark: SparkSession): Option[Seq[(Seq[Any], Long)]] = {
-    val f = fs(spark)
-    if (!f.exists(new Path(rliDir)) || !spec.retainHistory ||
-        spec.partitionCols.isEmpty) return None
-    try {
-      val idx = spark.read.parquet(rliDir)
-      if (!rliRequiredCols.subsetOf(idx.columns.toSet) ||
-          !rliPvCols.forall(idx.columns.contains)) return None
-      val builtAt = builtAtOf(spark, rliDir, idx).getOrElse(return None)
-      KeyedTable.fileDeltaSince(spark, spec.path, builtAt).map {
-        case (added, removed) =>
-          val idxSel =
-            if (removed.isEmpty) idx.drop("built_at")
-            else idx.drop("built_at")
-              .filter(KeyedTable.notInSetUdf(removed)(col("file")))
-          val settled =
-            if (added.isEmpty && removed.isEmpty) idxSel
-            else {
-              val deltaSel =
-                if (added.isEmpty) idxSel.limit(0)
-                else readFilesRaw(spark, added)
-                  .withColumn("_graft_rel", relFileExpr(spark))
-                  .select(rliEntryCols: _*)
-              rliResolveEntries(spark, idxSel.unionByName(deltaSel))
-            }
-          settled.groupBy(rliPvCols.map(col): _*).count().collect()
-            .map(r => (rliPvCols.indices.map(r.get), r.getLong(r.length - 1)))
-            .toSeq
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
+    if (spec.partitionCols.isEmpty) return None
+    try settledWinnerEntries(spark)
+      .filter(settled => rliPvCols.forall(settled.columns.contains))
+      .map(_.groupBy(rliPvCols.map(col): _*).count().collect()
+        .map(r => (rliPvCols.indices.map(r.get), r.getLong(r.length - 1)))
+        .toSeq)
+    catch { case scala.util.control.NonFatal(_) => None }
   }
 
   /** Every live resolve scope's WINNING entry (key, scope, table-
     * relative file, full resolve ordering), delta-reconciled to the
-    * current timeline — the classification input for serving resolved
-    * aggregates beyond count(*): joined against the column-stats
-    * sidecar it tells which files hold ONLY winners (their stats fold)
-    * and which must scan. `None` when the index is absent, not a
-    * resolving table, or staleness is unprovable — same contract and
-    * cost shape as [[resolvedCount]] (O(index + delta files), never
-    * table data).
+    * current timeline ([[IndexView.current]]; with an empty delta, the
+    * stored entries as they are) — the classification input for serving
+    * resolved aggregates beyond count(*): joined against the
+    * column-stats sidecar it tells which files hold ONLY winners (their
+    * stats fold) and which must scan. `None` when the index is absent,
+    * not a resolving table, or staleness is unprovable. Cost O(index +
+    * delta files), never table data.
     */
   private[graft] def settledWinnerEntries(
       spark: SparkSession): Option[DataFrame] = {
-    val f = fs(spark)
-    if (!f.exists(new Path(rliDir)) || !spec.retainHistory) return None
-    try {
-      val idx = spark.read.parquet(rliDir)
-      if (!rliRequiredCols.subsetOf(idx.columns.toSet)) return None
-      val builtAt = builtAtOf(spark, rliDir, idx).getOrElse(return None)
-      KeyedTable.fileDeltaSince(spark, spec.path, builtAt).map {
-        case (added, removed) =>
-          val idxSel =
-            if (removed.isEmpty) idx.drop("built_at")
-            else idx.drop("built_at")
-              .filter(KeyedTable.notInSetUdf(removed)(col("file")))
-          if (added.isEmpty && removed.isEmpty) idxSel
-          else {
-            val deltaSel =
-              if (added.isEmpty) idxSel.limit(0)
-              else readFilesRaw(spark, added)
-                .withColumn("_graft_rel", relFileExpr(spark))
-                .select(rliEntryCols: _*)
-            rliResolveEntries(spark, idxSel.unionByName(deltaSel))
-          }
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
+    if (!spec.retainHistory) return None
+    try rliView(spark).map(view =>
+      if (view.fresh) view.entries else view.current(rliEntryCols))
+    catch { case scala.util.control.NonFatal(_) => None }
   }
 
   /** Table-relative rendering of an ABSOLUTE-path column (the stats
@@ -1268,13 +1148,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
           st.columns.find(_.equalsIgnoreCase(s"p_$c")))
         if (pCols.exists(_.isEmpty) || !st.columns.contains("cnt"))
           return None
-        val idx = spark.read.parquet(rliDir)
-        if (!rliRequiredCols.subsetOf(idx.columns.toSet)) return None
-        val builtAt = builtAtOf(spark, rliDir, idx).getOrElse(return None)
-        val fresh = KeyedTable
-          .fileDeltaSince(spark, spec.path, builtAt)
-          .exists { case (a, r) => a.isEmpty && r.isEmpty }
-        if (!fresh) return None
+        val idx = rliView(spark).filter(_.fresh).getOrElse(return None).entries
         val cap = spark.conf
           .get("spark.graft.partition.collect.max", "100000").toInt
         val totals = KeyedTable.withMetaConf(spark)(
@@ -1447,8 +1321,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     if (!exists(spark)) return
     require(readRaw(spark).columns.contains(column),
       s"secondary-index column '$column' is not in the table schema")
-    val builtAt = KeyedTable.timelineMarkers(spark, spec.path)
-      .lastOption.map(KeyedTable.markerCommit).getOrElse("")
+    val builtAt = timelineBoundary(spark)
     val entries = lookupResolve(
       spark, readRaw(spark).withColumn("_graft_rel", relFileExpr(spark)))
       .select(siEntryCols(column): _*)
@@ -1472,8 +1345,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     val tableCols = readRaw(spark).columns.toSet
     siColumns.foreach(c => require(tableCols.contains(c),
       s"secondary-index column '$c' is not in the table schema"))
-    val builtAt = KeyedTable.timelineMarkers(spark, spec.path)
-      .lastOption.map(KeyedTable.markerCommit).getOrElse("")
+    val builtAt = timelineBoundary(spark)
     val resolved = lookupResolve(
       spark, readRaw(spark).withColumn("_graft_rel", relFileExpr(spark)))
     // One narrow frame carrying every sidecar's columns (values aliased
@@ -1578,33 +1450,17 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     * were rewritten into delta files).
     */
   private[graft] def siProbeKeys(
-      spark: SparkSession, column: String, values: Seq[Any]): Option[DataFrame] = {
-    val f = fs(spark)
-    val dir = new Path(new Path(spec.path), siDirName(column))
-    if (!f.exists(dir)) return None
-    try {
-      val idx = spark.read.parquet(dir.toString)
-      if (!siRequiredCols.subsetOf(idx.columns.toSet)) return None
-      val builtAt = builtAtOf(spark, dir.toString, idx).getOrElse(return None)
-      KeyedTable.fileDeltaSince(spark, spec.path, builtAt).map {
-        case (added, removed) =>
-          val idxSel0 = idx.filter(col("sval").isin(values: _*))
-          val idxSel =
-            if (removed.isEmpty) idxSel0
-            else idxSel0.filter(!col("file").isin(removed: _*))
-          val idxKeys = spec.keyCols.zipWithIndex.foldLeft(
-            idxSel.select(spec.keyCols.indices.map(i => col(s"k_$i")): _*)) {
-            case (df, (c, i)) => df.withColumnRenamed(s"k_$i", c)
-          }
-          val deltaKeys =
-            if (added.isEmpty) idxKeys.limit(0)
-            else readFilesRaw(spark, added)
-              .filter(col(column).isin(values: _*))
-              .select(spec.keyCols.map(col): _*)
-          idxKeys.unionByName(deltaKeys).distinct()
+      spark: SparkSession, column: String, values: Seq[Any]): Option[DataFrame] =
+    try IndexView.open(spark, this, siDirName(column), siRequiredCols).map { view =>
+      val idxKeys = spec.keyCols.zipWithIndex.foldLeft(
+        view.surviving.filter(col("sval").isin(values: _*))
+          .select(spec.keyCols.indices.map(i => col(s"k_$i")): _*)) {
+        case (df, (c, i)) => df.withColumnRenamed(s"k_$i", c)
       }
+      view.addedRows.fold(idxKeys)(rows => idxKeys.unionByName(
+        rows.filter(col(column).isin(values: _*)).select(spec.keyCols.map(col): _*)))
+        .distinct()
     } catch { case scala.util.control.NonFatal(_) => None }
-  }
 
   /** Point lookup on a NON-KEY column: the latest state of every row
     * whose `column` value is in `values` (a small literal set — the
@@ -4052,7 +3908,7 @@ object KeyedTable {
     fileDeltaAfter(spark, path, timelineMarkers(spark, path), sinceCommit)
 
   /** [[fileDeltaSince]] over an already-listed timeline (`markers`). */
-  private[table] def fileDeltaAfter(
+  private[graft] def fileDeltaAfter(
       spark: SparkSession, path: String, markers: Seq[String],
       sinceCommit: String): Option[(Seq[String], Seq[String])] = {
     val i = markers.lastIndexWhere(m => markerCommit(m) == sinceCommit)
@@ -4088,13 +3944,25 @@ object KeyedTable {
   def timelineEntries(spark: SparkSession, path: String): Seq[(String, String)] =
     timelineMarkers(spark, path).map(parseMarker)
 
+  /** Listings of a timeline directory — observable so a spec can pin how
+    * often a refresh or a planning pays them.
+    */
+  private[graft] val timelineReads = new java.util.concurrent.atomic.AtomicLong
+
   /** Raw marker names, sorted (chronological). */
   def timelineMarkers(spark: SparkSession, path: String): Seq[String] = {
+    timelineReads.incrementAndGet()
     val dir = timelineDir(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) Nil
     else fs.listStatus(dir).map(_.getPath.getName).toSeq.sorted
   }
+
+  /** The commit an index built or refreshed over the listing `markers` is
+    * current as of — its `built_at` boundary ("" before any commit).
+    */
+  private[table] def boundaryOf(markers: Seq[String]): String =
+    markers.lastOption.map(markerCommit).getOrElse("")
 
   /** Latest marker name, or "" for a table with no recorded commits —
     * the value derived-state staleness guards compare.
@@ -4104,5 +3972,9 @@ object KeyedTable {
 
   /** Commit-class sets for maintenance decisions (see the header above). */
   val DataActions: Set[String] = Set("insert", "bulkinsert", "upsert")
+  /** The data actions that only append rows: nothing they commit
+    * supersedes a stored row on a copy-on-write table.
+    */
+  val InsertActions: Set[String] = Set("insert", "bulkinsert")
   val LayoutActions: Set[String] = Set("compact", "cluster", "zorder", "evolve", "fold")
 }

@@ -921,7 +921,7 @@ object MaterializedView {
         }
       } finally { delta.unpersist(); () }
     } else if ((actions -- KeyedTable.LayoutActions)
-      .subsetOf(Set("insert", "bulkinsert"))) {
+      .subsetOf(KeyedTable.InsertActions)) {
       // COW inserts are pure row appends; rows keep their commit times,
       // so the delta is exactly the rows of the NEW insert commits —
       // selected by id MEMBERSHIP (the timeline names them), never by
@@ -932,7 +932,8 @@ object MaterializedView {
       val newDataIds = since
         .filter(m => !KeyedTable.LayoutActions.contains(KeyedTable.markerAction(m)))
         .map(KeyedTable.markerCommit).distinct
-      val rawDelta = KeyedTable.addedFilesSince(spark, d.basePath, sinceCommit) match {
+      val rawDelta = KeyedTable.fileDeltaAfter(
+          spark, d.basePath, markers, sinceCommit).map(_._1) match {
         case Some(files) if files.nonEmpty => table.readFilesRaw(spark, files)
         case Some(_) => table.readRaw(spark).filter(lit(false))
         case None => table.readRaw(spark)

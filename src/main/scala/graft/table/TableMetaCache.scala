@@ -6,10 +6,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** The one cache of metadata derived from a table's on-disk state:
-  * sidecar snapshots and head rows, the pruning families' declined
-  * serves, MoR winner maps, advisor measurements. Entries are grouped by
-  * table root and hold only while the root's on-disk version
-  * is unchanged:
+  * sidecar snapshots and head rows, MoR winner maps, advisor
+  * measurements. Entries are grouped by table root and hold only while
+  * the root's on-disk version is unchanged:
   *   - the latest timeline marker — every commit records one (Hudi's
   *     `.hoodie` instant, SURVEY §1);
   *   - the (name, modification time) of each `_graft_*` child of the
@@ -22,8 +21,8 @@ import org.apache.spark.sql.SparkSession
   * table instance, session or process is seen on the next lookup, and a
   * commit to one table leaves every other table's entries alone.
   * Soundness never rests here — a stale entry only skips an optimization,
-  * and positive serves re-prove freshness through
-  * [[KeyedTable.fileDeltaSince]] every time. (On an object store without
+  * and positive serves re-prove freshness through the commit→files
+  * delta ([[IndexView]]) every time. (On an object store without
   * directory modification times only the marker half moves; sidecar
   * publishes there would need a marker of their own.)
   */
@@ -116,11 +115,14 @@ object TableMetaCache {
     case _ => ()
   }
 
+  /** Values cached across all tables. */
+  private[graft] def valueCount: Int =
+    entries.values.stream.mapToInt(_.values.size).sum
+
   private def put(e: Entry, key: Any, value: Any): Any = {
     // Dropped entries' broadcasts are left to Spark's ContextCleaner
     // rather than destroyed: a running query may still hold one.
-    if (entries.values.stream.mapToInt(_.values.size).sum > MaxValues)
-      entries.clear()
+    if (valueCount > MaxValues) entries.clear()
     e.values.putIfAbsent(key, value) match {
       case null => value
       case won => release(value); won
@@ -142,29 +144,28 @@ object TableMetaCache {
     }
   }
 
-  private case object Declined
-
-  /** Gate a pruning family's serve (per `owner`, the family instance,
-    * which lives as long as its [[graft.plans.KeyedServe]] rule): a
-    * decline remembered for `key` while every root in `roots` is at its
-    * current version short-circuits to `None`, and a fresh decline is
-    * remembered. Catalyst's fixpoint batches re-apply the rule per
-    * iteration and other rules rebuild node instances between them, so
-    * without this a declined probe re-pays its plan-time sidecar IO many
-    * times per optimization; `key` is the SEMANTIC probe (table root plus
-    * the normalized values, ranges, aggregate needs the rule derived), so
-    * node churn and inferred-filter duplicates all hit one entry. The
-    * decline lives in the first root's entry, keyed also on the other
-    * roots' versions: a join's decline depends on both sides.
+  /** Gate a pruning family's serve on `declines`, the memo the family
+    * instance owns: a decline remembered for `key` while every root in
+    * `roots` is at its current version short-circuits to `None`, and a
+    * fresh decline is remembered. Catalyst's fixpoint batches re-apply the
+    * rule per iteration and other rules rebuild node instances between
+    * them, so without this a declined probe re-pays its plan-time sidecar
+    * IO many times per optimization; `key` is the SEMANTIC probe (table
+    * root plus the normalized values, ranges, aggregate needs the rule
+    * derived), so node churn and inferred-filter duplicates all hit one
+    * entry. The versions of ALL roots join the key: a join's decline
+    * depends on both sides. The memo lives and dies with the family —
+    * the session's optimizer builds the injected rule afresh for each
+    * optimization — so declines never occupy this cache.
     */
-  def declineGated[A](spark: SparkSession, owner: AnyRef, roots: String*)(
+  def declineGated[A](
+      spark: SparkSession, declines: scala.collection.mutable.Set[Any], roots: String*)(
       key: Any)(serve: => Option[A]): Option[A] = {
-    val e = entryOf(spark, roots.head)
-    val k = (owner, key, roots.tail.map(r => version(spark, qualified(spark, r))))
-    if (e.values.containsKey(k)) None
+    val k = (key, roots.map(r => version(spark, qualified(spark, r))))
+    if (declines.contains(k)) None
     else {
       val r = serve
-      if (r.isEmpty) put(e, k, Declined)
+      if (r.isEmpty) declines += k
       r
     }
   }

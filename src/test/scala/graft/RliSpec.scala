@@ -209,6 +209,43 @@ class RliSpec extends SparkTestBase {
     assert(table.rliCandidateFiles(spark, probe).get.size < dataFileCount(path))
   }
 
+  test("stale index across a partition compaction and an upsert: counts, winners and refresh match the read") {
+    val path = Files.createTempDirectory("graft_rli_fold_").toString + "/t"
+    val table = KeyedTable(morSpec(path))
+    val ev = eventsUs
+    table.upsert(spark, ev.filter(col("event_id") % 2 === 0), commitTime = "c0")
+    table.upsert(spark, ev.filter(col("event_id") % 3 === 0)
+      .withColumn("ts_us", col("ts_us") + 1), commitTime = "c1")
+    table.recordKeyIndex(spark)
+    table.compactPartitions(spark, Seq("click").toDF("event_type"), commitTime = "c2")
+    table.upsert(spark, ev.filter(col("event_id") % 2 === 1), commitTime = "c3")
+    val (added, removed) = KeyedTable.fileDeltaSince(spark, path, "c1").get
+    assert(added.nonEmpty && removed.nonEmpty, "the delta must hold both sides")
+
+    val read = table.read(spark)
+    assert(table.resolvedCount(spark).contains(read.count()))
+    val groups = table.resolvedGroupCounts(spark).get
+      .map { case (p, n) => p.head.toString -> n }.toMap
+    assert(groups == read.groupBy("event_type").count()
+      .as[(String, Long)].collect().toMap)
+    // The winners' files are live, and their winner rows are the read.
+    val winners = table.settledWinnerEntries(spark).get
+    val files = winners.select("file").distinct().as[String].collect().toSeq
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    files.foreach(rel =>
+      assert(fs.exists(new org.apache.hadoop.fs.Path(s"$path/$rel")), rel))
+    assert(outputSet(table.winnerRowsOf(spark, files, winners)) == outputSet(read))
+
+    // Refresh over that delta writes exactly what a rebuild of the same
+    // table writes, boundary included.
+    def entries = spark.read.parquet(s"$path/_graft_rli").collect().map(_.toSeq).toSet
+    table.refreshRecordKeyIndex(spark)
+    val refreshed = entries
+    table.recordKeyIndex(spark)
+    assert(refreshed == entries)
+  }
+
   test("bloom fallback: no RLI, the bloom sidecar serves a pruned exact lookup") {
     val path = Files.createTempDirectory("graft_rli_blm_").toString + "/t"
     // event_id keys: a 2-key probe genuinely lives in few files.

@@ -202,6 +202,26 @@ class SecondaryIndexSpec extends SparkTestBase {
     assert(cands.get.size < dataFileCount(path))
   }
 
+  test("a refresh lists the timeline twice per sidecar: its boundary and delta share one listing") {
+    val path = Files.createTempDirectory("graft_si_list_").toString + "/t"
+    val table = KeyedTable(cowSpec(path))
+    val ev = eventsUs
+    table.upsert(spark, ev.filter(col("event_id") % 2 === 0), commitTime = "c0")
+    table.recordIndexes(spark, Seq("event_id"))
+    table.upsert(spark, ev.filter(col("event_id") % 2 === 1), commitTime = "c1")
+    // Per sidecar: the version read behind the cached `built_at`, and the
+    // one listing the stamped boundary and the folded delta both come from.
+    val before = KeyedTable.timelineReads.get
+    assert(table.refreshIndexes(spark))
+    assert(KeyedTable.timelineReads.get - before == 4)
+    for (dir <- Seq("_graft_rli", "_graft_si_event_id"))
+      assert(spark.read.parquet(s"$path/$dir").select("built_at").distinct()
+        .as[String].collect().toSeq == Seq("c1"), dir)
+    val vals = probeVals
+    assert(outputSet(table.lookupByColumn(spark, "event_id", vals))
+      == oracle(table, vals))
+  }
+
   test("absent index falls back to the full filtered read; COW non-resolving tables stay exact") {
     val path = Files.createTempDirectory("graft_si_none_").toString + "/t"
     val table = KeyedTable(cowSpec(path))

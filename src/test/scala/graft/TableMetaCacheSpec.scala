@@ -132,8 +132,9 @@ class TableMetaCacheSpec extends SparkTestBase {
     // marker, and a decline over two tables follows both versions.
     val other = clustered("graft_tmc_other_").spec.path
     var probes = 0
+    val declines = scala.collection.mutable.HashSet.empty[Any]
     def probe(): Option[Unit] =
-      TableMetaCache.declineGated(spark, this, t.spec.path, other)("p") {
+      TableMetaCache.declineGated(spark, declines, t.spec.path, other)("p") {
         probes += 1; None
       }
     probe(); probe()
@@ -144,6 +145,21 @@ class TableMetaCacheSpec extends SparkTestBase {
     KeyedTable.recordTimeline(s2, other, "c9", "upsert")
     probe()
     assert(probes == 3, "a marker on the second table lifts it")
+  }
+
+  test("declined plannings leave nothing behind in the shared cache") {
+    // No sidecar: a point probe declines in every planning. The session's
+    // optimizer builds its rules afresh for each optimization, so a
+    // decline kept in the shared cache would be an entry no later
+    // planning can reach.
+    val t = clustered("graft_tmc_leak_")
+    def plan(): Unit =
+      t.read(spark).filter(col("event_id") === 42L).queryExecution.optimizedPlan
+    plan()
+    val before = TableMetaCache.valueCount
+    (1 to 20).foreach(_ => plan())
+    assert(TableMetaCache.valueCount == before)
+    assert(!served(t.read(spark).filter(col("event_id") === 42L)))
   }
 
   test("a commit to one table does not evict another table's entries") {
