@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -22,7 +20,7 @@ object Demo {
     val spark = Sessions.builder("local[8]", "8").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val tmp = Files.createTempDirectory("graft_demo_").toString
+    val tmp = Scratch.dir("demo")
     val table = KeyedTable(KeyedTableSpec(
       path = s"$tmp/events_keyed",
       keyCols = Seq("user_id"),

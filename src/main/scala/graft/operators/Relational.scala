@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Scratch
 import graft.sources.Tables
 
 /** Cross-engine-exact numeric helpers. Double aggregation is
@@ -463,15 +464,6 @@ object Relational {
         countDistinct(col("o_orderkey")).as("n_orders"))
   }
 
-  // Hive-partitioned copy of `orders` (by o_year), one write per
-  // (session, dir) — scaffolding for the dynamic-partition-pruning query:
-  // a production fact table IS stored partitioned; the fixture isn't, so
-  // the layout is materialized once and the MEASURED query is the pruned
-  // join. Keyed by session identity like the media fixtures (a dir-keyed
-  // path could outlive its creating session's temp space).
-  private val partitionedOrdersCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), String]
-
   /** Revenue by year over a date-partitioned fact, where the year set
     * comes from a runtime subquery — the dynamic-partition-pruning shape
     * (star-schema "scan only the partitions the dim filter selects"). The
@@ -487,14 +479,19 @@ object Relational {
     */
   def partitionPrunedRevenue(
       s: SparkSession, dir: String, threshold: Double = 499000.0): DataFrame = {
-    val path = partitionedOrdersCache.getOrElseUpdate(
-      (System.identityHashCode(s), dir), {
-        val p = java.nio.file.Files.createTempDirectory("graft_dpp_").toString
-        Tables.orders(s, dir)
-          .withColumn("o_year", year(col("o_orderdate")).cast("int"))
-          .write.mode("overwrite").partitionBy("o_year").parquet(p)
-        p
-      })
+    // Hive-partitioned copy of `orders` (by o_year), one write per
+    // (session, dir) — scaffolding: a production fact table IS stored
+    // partitioned; the fixture isn't, so the layout is materialized once
+    // and the MEASURED query is the pruned join. Keyed by session
+    // identity like the media fixtures (a dir-keyed path could outlive
+    // its creating session's temp space).
+    val path = Scratch.once("dppOrders", System.identityHashCode(s), dir) { r =>
+      val p = s"$r/orders"
+      Tables.orders(s, dir)
+        .withColumn("o_year", year(col("o_orderdate")).cast("int"))
+        .write.partitionBy("o_year").parquet(p)
+      p
+    }
     val fact = s.read.parquet(path)
     val dim = Tables.orders(s, dir)
       .filter(col("o_totalprice") > threshold)

@@ -223,24 +223,15 @@ private[plans] object RangeConjuncts {
     def nn(c: String) = col(nnOf(c).get)
     def mn(c: String) = col(mmOf(c)._1.get)
     def mx(c: String) = col(mmOf(c)._2.get)
-    val candidate = (ranges.map { r =>
-      val loP = r.lo.map(v =>
-        if (r.loInclusive) mx(r.column) >= lit(v) else mx(r.column) > lit(v))
-      val hiP = r.hi.map(v =>
-        if (r.hiInclusive) mn(r.column) <= lit(v) else mn(r.column) < lit(v))
-      (loP.toSeq ++ hiP.toSeq).reduceOption(_ && _).getOrElse(lit(true))
-    } ++ notNull.map(c => nn(c) > lit(0L))
+    val candidate = (ranges.map(r => r.within(mx(r.column), mn(r.column)))
+      ++ notNull.map(c => nn(c) > lit(0L))
       ++ inLists.map { case (c, vs) =>
         vs.map(v => mn(c) <= lit(v) && mx(c) >= lit(v)).reduce(_ || _)
       })
       .reduceOption(_ && _).getOrElse(lit(true))
-    val full = (ranges.map { r =>
-      val loP = r.lo.map(v =>
-        if (r.loInclusive) mn(r.column) >= lit(v) else mn(r.column) > lit(v))
-      val hiP = r.hi.map(v =>
-        if (r.hiInclusive) mx(r.column) <= lit(v) else mx(r.column) < lit(v))
-      (Seq(nn(r.column) === col("cnt")) ++ loP.toSeq ++ hiP.toSeq).reduce(_ && _)
-    } ++ notNull.map(c => nn(c) === col("cnt"))
+    val full = (ranges.map(r =>
+      nn(r.column) === col("cnt") && r.within(mn(r.column), mx(r.column)))
+      ++ notNull.map(c => nn(c) === col("cnt"))
       ++ inLists.map { case (c, vs) =>
         nn(c) === col("cnt") && mn(c) === mx(c) &&
           vs.map(v => mn(c) === lit(v)).reduce(_ || _)
@@ -257,20 +248,15 @@ private[plans] object RangeConjuncts {
       partFilters: Seq[PartitionConjuncts.PartFilter], ranges: Seq[ColumnRange],
       notNull: Seq[String], inLists: Seq[(String, Seq[Any])])
       : Seq[org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.col
     partFilters.map {
       case PartitionConjuncts.PartIn(c, t, vs) =>
         val toScala = org.apache.spark.sql.catalyst.CatalystTypeConverters
           .createToScalaConverter(t)
         col(c).isin(vs.map(toScala): _*)
       case PartitionConjuncts.PartNotNull(c) => col(c).isNotNull
-    } ++ ranges.map { r =>
-      val loP = r.lo.map(v =>
-        if (r.loInclusive) col(r.column) >= lit(v) else col(r.column) > lit(v))
-      val hiP = r.hi.map(v =>
-        if (r.hiInclusive) col(r.column) <= lit(v) else col(r.column) < lit(v))
-      (loP.toSeq ++ hiP.toSeq).reduceOption(_ && _).getOrElse(lit(true))
-    } ++ notNull.map(c => col(c).isNotNull) ++
+    } ++ ranges.map(r => r.within(col(r.column), col(r.column))) ++
+      notNull.map(c => col(c).isNotNull) ++
       inLists.map { case (c, vs) => col(c).isin(vs: _*) }
   }
 }

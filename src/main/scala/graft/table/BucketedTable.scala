@@ -1,10 +1,9 @@
 package graft.table
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
 import graft.operators.Exact
 import graft.sources.Tables
 
@@ -52,35 +51,31 @@ object BucketedTable {
 
   val Buckets = 8
 
-  // dir -> (orders table, customer table); written once per JVM (the
-  // ingest-pipeline trade again: the co-location shuffle is paid at write,
-  // every subsequent join and custkey-grouped aggregate rides it free).
-  private val prepared = TrieMap.empty[String, (String, String)]
-
   /** Bucket the orders/customer pair on the customer key, once per
-    * (JVM, source dir), registered in the session catalog.
+    * (JVM, source dir) — the ingest-pipeline trade again: the co-location
+    * shuffle is paid at write, every subsequent join and custkey-grouped
+    * aggregate rides it free — registered in the session catalog.
     */
   def ensureCustomerBucketed(s: SparkSession, dir: String): (String, String) = {
-    def register(): (String, String) = {
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-      val ot = s"graft_bkt_orders_$key"
-      val ct = s"graft_bkt_customer_$key"
-      val base = s"${sys.props("java.io.tmpdir")}/graft_bucketed/$key"
+    val key = java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+    val ot = s"graft_bkt_orders_$key"
+    val ct = s"graft_bkt_customer_$key"
+    def register(base: String): Unit = {
       write(
         Tables.orders(s, dir).select("o_custkey", "o_orderkey", "o_totalprice"),
         ot, Buckets, "o_custkey", path = Some(s"$base/orders"))
       write(
         Tables.customer(s, dir).select("c_custkey", "c_mktsegment"),
         ct, Buckets, "c_custkey", path = Some(s"$base/customer"))
-      (ot, ct)
     }
-    val (ot, ct) = prepared.getOrElseUpdate(dir, register())
-    // The memo is per-JVM but registration lives in the session catalog: an
-    // independently built SparkSession (own SharedState/metastore) in the
-    // same JVM hits the memo yet has no such tables. Re-register over the
-    // external location when the catalog disagrees.
-    if (!s.catalog.tableExists(ot) || !s.catalog.tableExists(ct)) register()
+    val base = Scratch.once("bucketed", dir) { r => register(r); r }
+    // The files are per-JVM but registration lives in the session
+    // catalog: an independently built SparkSession (own
+    // SharedState/metastore) in the same JVM finds the files yet has no
+    // such tables. Re-register over the external location when the
+    // catalog disagrees.
+    if (!s.catalog.tableExists(ot) || !s.catalog.tableExists(ct)) register(base)
     (ot, ct)
   }
 

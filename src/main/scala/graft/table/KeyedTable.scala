@@ -64,6 +64,17 @@ final case class ColumnRange(
     */
   def isPoint: Boolean =
     loInclusive && hiInclusive && lo.isDefined && lo == hi
+
+  /** The range as one predicate: `lo` bounds `loSide`, `hi` bounds
+    * `hiSide`. Rows pass `(col, col)`; over a stats row, a file that MAY
+    * hold a match passes `(max, min)` and a file wholly inside passes
+    * `(min, max)`. True when both sides are unbounded.
+    */
+  def within(loSide: Column, hiSide: Column): Column = {
+    val loP = lo.map(v => if (loInclusive) loSide >= lit(v) else loSide > lit(v))
+    val hiP = hi.map(v => if (hiInclusive) hiSide <= lit(v) else hiSide < lit(v))
+    (loP.toSeq ++ hiP.toSeq).reduceOption(_ && _).getOrElse(lit(true))
+  }
 }
 
 object ColumnRange {
@@ -1828,15 +1839,8 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     val snap = colStatsSnapshot(spark)
     val st = snap.map(_._1).getOrElse(spark.read.parquet(colStatsDir))
     val all = snap.map(_._2).getOrElse(st.count().toInt)
-    val rangePreds = ranges.map { r =>
-      val loP = r.lo.map(v =>
-        if (r.loInclusive) col(s"max_${r.column}") >= lit(v)
-        else col(s"max_${r.column}") > lit(v))
-      val hiP = r.hi.map(v =>
-        if (r.hiInclusive) col(s"min_${r.column}") <= lit(v)
-        else col(s"min_${r.column}") < lit(v))
-      (loP.toSeq ++ hiP.toSeq).reduceOption(_ && _).getOrElse(lit(true))
-    }
+    val rangePreds = ranges.map(r =>
+      r.within(col(s"max_${r.column}"), col(s"min_${r.column}")))
     // Null predicates select on the per-file null count (cnt − nn):
     // `IS NULL` needs at least one null in the file, `IS NOT NULL` at
     // least one non-null value — per-row facts, so conjunction-subset
@@ -1938,13 +1942,8 @@ final class KeyedTable(val spec: KeyedTableSpec) {
       spec.retainHistory,
       "readPrunedResolving is the merge-on-read path; a copy-on-write " +
         "table prunes directly via readPruned")
-    val residual = ranges.map { r =>
-      val loP = r.lo.map(v =>
-        if (r.loInclusive) col(r.column) >= lit(v) else col(r.column) > lit(v))
-      val hiP = r.hi.map(v =>
-        if (r.hiInclusive) col(r.column) <= lit(v) else col(r.column) < lit(v))
-      (loP.toSeq ++ hiP.toSeq).reduceOption(_ && _).getOrElse(lit(true))
-    }.reduce(_ && _)
+    val residual =
+      ranges.map(r => r.within(col(r.column), col(r.column))).reduce(_ && _)
     def fallback = read(spark).filter(residual)
     val covered = colStatsFrame(spark).exists { st =>
       val cols = st.columns.toSet

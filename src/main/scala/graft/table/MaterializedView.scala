@@ -9,6 +9,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Expression}
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
 import graft.schema.SchemaEvolution
 
 /** Aggregate materialized views with automatic query rewrite — the
@@ -1222,20 +1223,11 @@ object MaterializedView {
   // path planned).
   // ---------------------------------------------------------------------
 
-  // Previous invocation's scratch rollup per runner — deleted at the next
-  // call, so a bench loop holds at most one live temp dir per query
-  // instead of one per rep.
-  private val benchWork =
-    TrieMap.empty[String, java.nio.file.Path]
-
-  private[graft] def freshBenchWork(key: String): java.nio.file.Path = {
-    benchWork.remove(key).foreach { p =>
-      org.apache.commons.io.FileUtils.deleteQuietly(p.toFile); ()
-    }
-    val work = Files.createTempDirectory(s"graft_mv_${key}_")
-    benchWork.put(key, work)
-    work
-  }
+  // A runner's scratch rollup dir: an empty-template clone per runner,
+  // so the previous invocation's dir is retired at the next call and a
+  // bench loop holds at most one live temp dir per query.
+  private def freshWork(key: String): java.nio.file.Path =
+    java.nio.file.Paths.get(Scratch.clone("mvWork", key)(_ => ())._3)
 
   /** Optimize `q` with the registry armed (the rewrite fires), PIN the
     * rewritten plan, and drop the registration — so a process running
@@ -1261,7 +1253,7 @@ object MaterializedView {
     */
   def mvRewriteRevenue(spark: SparkSession, dir: String): DataFrame = {
     val base = s"$dir/orders.parquet"
-    val work = freshBenchWork("revenue")
+    val work = freshWork("revenue")
     create(
       spark, "orders_by_status_priority", base, s"$work/mv",
       groupCols = Seq("o_orderstatus", "o_orderpriority"),
@@ -1292,7 +1284,7 @@ object MaterializedView {
     */
   def mvAvgDocLen(spark: SparkSession, dir: String): DataFrame = {
     val base = s"$dir/documents.parquet"
-    val work = freshBenchWork("avgdoclen")
+    val work = freshWork("avgdoclen")
     create(
       spark, "docs_by_lang_source", base, s"$work/mv",
       groupCols = Seq("lang", "source"),
@@ -1328,7 +1320,7 @@ object MaterializedView {
     // and the incremental signed-delta refresh it triggers.
     val ev = graft.sources.Tables.eventsUs(spark, dir)
     val (tplRoot, tplDef, root) =
-      graft.operators.UpsertOps.stagedRoot(dir, "mvKeyedC0") { r =>
+      Scratch.clone(dir, "mvKeyedC0") { r =>
         val t = KeyedTable(KeyedTableSpec(
           path = s"$r/events_keyed",
           keyCols = Seq("user_id"),
@@ -1372,7 +1364,7 @@ object MaterializedView {
     */
   def mvSelectCheapest(spark: SparkSession, dir: String): DataFrame = {
     val base = s"$dir/lineitem.parquet"
-    val work = freshBenchWork("select")
+    val work = freshWork("select")
     create(spark, "li_fine", base, s"$work/mv_fine",
       groupCols = Seq("l_returnflag", "l_linestatus", "l_shipdate"),
       sums = Seq("sum_qty" -> expr("CAST(l_quantity AS DECIMAL(18,4))")),
@@ -1408,7 +1400,7 @@ object MaterializedView {
     // subject is the update-delta upsert + group-scoped refresh.
     val ev = graft.sources.Tables.eventsUs(spark, dir)
     val (tplRoot, tplDef, root) =
-      graft.operators.UpsertOps.stagedRoot(dir, "mvMinMaxC0") { r =>
+      Scratch.clone(dir, "mvMinMaxC0") { r =>
         val t = KeyedTable(KeyedTableSpec(
           path = s"$r/events_keyed",
           keyCols = Seq("user_id"),
@@ -1464,7 +1456,7 @@ object MaterializedView {
     */
   def mvMonthlyRevenue(spark: SparkSession, dir: String): DataFrame = {
     val base = s"$dir/orders.parquet"
-    val work = freshBenchWork("monthly")
+    val work = freshWork("monthly")
     create(
       spark, "orders_by_year_month", base, s"$work/mv",
       groupCols = Nil,
@@ -1498,7 +1490,7 @@ object MaterializedView {
     */
   def mvAdvisorRevenue(spark: SparkSession, dir: String): DataFrame = {
     val base = s"$dir/orders.parquet"
-    val work = freshBenchWork("advisor")
+    val work = freshWork("advisor")
     def qStatus = spark.read.parquet(base)
       .groupBy(col("o_orderstatus"))
       .agg(
@@ -1532,7 +1524,7 @@ object MaterializedView {
     * file AFTER the rollup was built — served hybrid, never refreshed.
     */
   def mvHybridServe(spark: SparkSession, dir: String): DataFrame = {
-    val work = freshBenchWork("hybrid")
+    val work = freshWork("hybrid")
     val base = Files.createDirectories(work.resolve("orders.parquet"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(dir, "orders.parquet"),
@@ -1575,7 +1567,7 @@ object MaterializedView {
     */
   def mvRollupServe(spark: SparkSession, dir: String): DataFrame = {
     val base = s"$dir/lineitem.parquet"
-    val work = freshBenchWork("gsets")
+    val work = freshWork("gsets")
     create(
       spark, "li_rf_ls", base, s"$work/mv",
       groupCols = Seq("l_returnflag", "l_linestatus"),
@@ -1613,17 +1605,12 @@ object MaterializedView {
   // state (rollup + unrefreshed insert commit) is immutable, and the
   // registration is re-pinned per invocation so the pin-and-drop
   // hygiene is unchanged.
-  private val keyedHybridFixture =
-    TrieMap.empty[String, (KeyedTableSpec, MvDef)]
-
   /** Per-event-type count + value sum over a keyed COW events table whose
     * second half arrived as an UNREFRESHED insert commit — served hybrid
     * from the rollup plus the index'd delta files.
     */
   def mvKeyedHybridServe(spark: SparkSession, dir: String): DataFrame = {
-    val (spec, d) = keyedHybridFixture.getOrElseUpdate(dir, {
-      val tmp =
-        Files.createTempDirectory("graft_mv_keyedhybrid_").toString
+    val (spec, d) = Scratch.once("mvKeyedHybrid", dir) { tmp =>
       val table = KeyedTable(KeyedTableSpec(
         path = s"$tmp/events_cow",
         keyCols = Seq("event_id"),
@@ -1643,7 +1630,7 @@ object MaterializedView {
         commitTime = "c1")
       drop(table.spec.path) // registered per serve below
       (table.spec, mvDef)
-    })
+    }
     register(d)
     val table = KeyedTable(spec)
     pinAndDrop(spark, spec.path,
@@ -1678,7 +1665,7 @@ object MaterializedView {
     // append-merge refresh, and the coarse-from-finer hierarchy
     // refresh — the rollup-from-rollup path this query exists to price.
     val (tplRoot, tplDefs, root) =
-      graft.operators.UpsertOps.stagedRoot(dir, "mvCoarseC0") { r =>
+      Scratch.clone(dir, "mvCoarseC0") { r =>
         val base = Files.createDirectories(
           java.nio.file.Paths.get(r, "orders.parquet"))
         java.nio.file.Files.copy(
@@ -1729,7 +1716,7 @@ object MaterializedView {
     */
   def mvRollupSinglePhase(spark: SparkSession, dir: String): DataFrame = {
     val base = s"$dir/lineitem.parquet"
-    val work = freshBenchWork("gs1p")
+    val work = freshWork("gs1p")
     create(
       spark, "li_rf_ls_1p", base, s"$work/mv",
       groupCols = Seq("l_returnflag", "l_linestatus"),
@@ -1758,7 +1745,7 @@ object MaterializedView {
   def mvStarSinglePhase(spark: SparkSession, dir: String): DataFrame = {
     val fact = s"$dir/orders.parquet"
     val dim = s"$dir/customer.parquet"
-    val work = freshBenchWork("gs1pstar")
+    val work = freshWork("gs1pstar")
     createJoined(
       spark, "ord_cust_1p", fact, s"$work/mv",
       joins = Seq((dim, "o_custkey", "c_custkey")),
@@ -1794,7 +1781,7 @@ object MaterializedView {
   def mvAdvisorStar(spark: SparkSession, dir: String): DataFrame = {
     val fact = s"$dir/orders.parquet"
     val dim = s"$dir/customer.parquet"
-    val work = freshBenchWork("advstar")
+    val work = freshWork("advstar")
     def joined = spark.read.parquet(fact)
       .join(spark.read.parquet(dim),
         col("o_custkey") === col("c_custkey"), "inner")
@@ -1822,7 +1809,7 @@ object MaterializedView {
   def mvJoinRevenue(spark: SparkSession, dir: String): DataFrame = {
     val fact = s"$dir/orders.parquet"
     val dim = s"$dir/customer.parquet"
-    val work = freshBenchWork("joinrev")
+    val work = freshWork("joinrev")
     createJoined(
       spark, "orders_by_segment", fact, s"$work/mv",
       joins = Seq((dim, "o_custkey", "c_custkey")),

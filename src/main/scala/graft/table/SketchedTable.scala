@@ -5,6 +5,7 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
 import graft.functions.VectorFunctions
 import graft.operators.Similarity
 import graft.sources.Tables
@@ -50,12 +51,6 @@ object SketchedTable {
   private val built =
     TrieMap.empty[String, (Seq[(String, Long, Long)], AnnIndex)]
 
-  private def indexPath(dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    s"${sys.props("java.io.tmpdir")}/graft_ann_index/$key"
-  }
-
   /** Build (once per JVM per source dir and data-file set) and return
     * the indexed layout: parquet partitioned by `cid` with materialized
     * `sketch` (hyperplane LSH) and `pq` (packed product-quantization
@@ -70,13 +65,13 @@ object SketchedTable {
         val e = raw.repartition(s.sparkContext.defaultParallelism)
         val centroids = Similarity.ivfCentroids(raw, NList, Iters)
         val codebooks = Similarity.pqTrain(e, PqM, PqK, Dim)
-        val path = indexPath(dir)
+        val path = s"${Scratch.dir("ann_index")}/index"
         Similarity.withCentroidId(
             e.withColumn("sketch",
               VectorFunctions.hyperplaneSketch(col("embedding"), Bits, Dim))
              .withColumn("pq", Similarity.pqCodeExpr(col("embedding"), codebooks)),
             centroids)
-          .write.mode("overwrite").partitionBy("cid").parquet(path)
+          .write.partitionBy("cid").parquet(path)
         val idx = AnnIndex(path, centroids, codebooks)
         files.foreach(f => built.put(dir, (f, idx)))
         idx

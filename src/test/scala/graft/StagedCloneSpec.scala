@@ -10,7 +10,7 @@ import graft.operators.UpsertOps
 import graft.sources.Tables
 import graft.table.{KeyedTable, KeyedTableSpec, MaterializedView}
 
-/** The staged-clone discipline ([[UpsertOps.stagedRoot]]): priced write
+/** The staged-clone discipline ([[Scratch.clone]]): priced write
   * queries build their pre-mutation state ONCE per (fixture, kind) and
   * mutate a per-invocation deep copy. The whole scheme is sound only if
   * (a) the clone is byte-faithful to the template — table data,
@@ -50,7 +50,7 @@ class StagedCloneSpec extends SparkTestBase {
     var tplRoot = ""
     var cloneRoots = Seq.empty[String]
     (0 until 2).foreach { _ =>
-      val (tpl, _, clone) = UpsertOps.stagedRoot(
+      val (tpl, _, clone) = Scratch.clone(
         sf0001, "cloneSpecBF") { r =>
         val t = KeyedTable(KeyedTableSpec(
           path = s"$r/events_keyed", keyCols = Seq("event_id"),
@@ -71,7 +71,7 @@ class StagedCloneSpec extends SparkTestBase {
     assert(tplInv.keys.exists(_.contains("_graft_colstats")))
     assert(tplInv.keys.exists(_.contains("_graft_timeline")),
       "the sibling timeline directory must be inside the cloned root")
-    // NOTE: stagedRoot retires the previous clone per (dir, kind), so
+    // NOTE: Scratch.clone retires the previous clone per (dir, kind), so
     // only the LAST clone is on disk — it must be byte-identical.
     assert(inventory(cloneRoots.last) == tplInv,
       "clone must be byte-identical to the template")
@@ -80,7 +80,7 @@ class StagedCloneSpec extends SparkTestBase {
   }
 
   test("mutating the clone leaves the template byte-identical; re-clones restart clean") {
-    val (tpl, _, clone1) = UpsertOps.stagedRoot(
+    val (tpl, _, clone1) = Scratch.clone(
       sf0001, "cloneSpecMut") { r =>
       val t = KeyedTable(KeyedTableSpec(
         path = s"$r/events_keyed", keyCols = Seq("event_id"),
@@ -100,10 +100,30 @@ class StagedCloneSpec extends SparkTestBase {
       "mutating the clone must never touch the template")
     // A second invocation starts from the pre-mutation state: the c1
     // delete is invisible to it.
-    val (_, _, clone2) = UpsertOps.stagedRoot[KeyedTable](
+    val (_, _, clone2) = Scratch.clone[KeyedTable](
       sf0001, "cloneSpecMut")(_ => fail("template must be memoized"))
     assert(inventory(clone2) == before,
       "a re-clone must restart from the unmutated template")
+  }
+
+  test("the two-commit table's clone keeps its timeline: c0/c1 markers survive a cluster") {
+    // Stage the template, then read its spec back from the memo (which
+    // retires that first clone) before taking the clone under test.
+    UpsertOps.twoCommitTable(spark, sf0001, history = false)
+    val (_, tplSpec, _) = Scratch.clone[KeyedTableSpec](
+      sf0001, "twoCommitCow")(_ => fail("template must be memoized"))
+    val template = KeyedTable(tplSpec)
+    val clone = UpsertOps.twoCommitTable(spark, sf0001, history = false)
+    val tplEntries = KeyedTable.timelineEntries(spark, template.spec.path)
+    assert(tplEntries.map(_._1) == Seq("c0", "c1"))
+    assert(KeyedTable.timelineEntries(spark, clone.spec.path) == tplEntries,
+      "the clone must carry the template's timeline")
+    assert(clone.commits(spark) == Seq("c0", "c1"))
+    clone.cluster(spark, Seq("ts_us"))
+    assert(clone.commits(spark) == Seq("c0", "c1"),
+      "a layout action must not hide the data commits")
+    assert(KeyedTable.timelineEntries(spark, template.spec.path) == tplEntries,
+      "clustering the clone must never touch the template's timeline")
   }
 
   private def sortedRows(df: DataFrame): Seq[String] =
