@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
-import graft.table.{KeyedTable, KeyedTableSpec}
+import graft.table.{ColumnRange, KeyedTable, KeyedTableSpec}
 
 /** End-to-end usage demo of the library surface, runnable as a main:
   * ingest events → keyed upsert (two commits) → catalog sync → plain
@@ -66,7 +66,8 @@ object Demo {
     val Array(bounds) = ev.agg(min("ts_us"), max("ts_us")).collect()
     val (mnTs, mxTs) = (bounds.getLong(0), bounds.getLong(1))
     val lo = mxTs - (mxTs - mnTs) / 20
-    val (sel, total) = table.statsSelectedFiles(spark, "ts_us", lo, mxTs)
+    val (sel, total) =
+      table.statsCandidates(spark, Seq(ColumnRange.inclusive("ts_us", lo, mxTs))).get
     println(s"recent-slice time range touches ${sel.length} of $total files")
     table.readPruned(spark, "ts_us", lo, mxTs)
       .groupBy("event_type").count().orderBy("event_type")

@@ -160,16 +160,17 @@ object IndexAdvisor {
     // workload's OWN ranges (the advisor context affords the sidecar
     // read); a table without stats first gets the column_stats rec
     // above, and the next analyze round measures.
-    val clusterRecs = rangeMatches.flatMap { case (m, rs) =>
+    // Copy-on-write tables only: there the selection is the pruned scan;
+    // a history table's range serve derives keys from it instead.
+    // Only stats-COVERED columns can be measured (uncovered ones got the
+    // column_stats rec above; the next analyze round measures).
+    val clusterRecs = rangeMatches.filterNot(_._1.spec.retainHistory).flatMap { case (m, rs) =>
       try {
         val t = KeyedTable(m.spec)
         val statCols = t.colStatsFrame(spark).map(_.columns.toSeq).getOrElse(Nil)
-        // Only stats-COVERED columns can be measured (uncovered ones got
-        // the column_stats rec above; the next analyze round measures).
         val covered = rs.filter(r =>
           statCols.exists(_.equalsIgnoreCase(s"min_${r.column}")))
-        if (covered.isEmpty) Nil
-        else t.rangeCandidateFilesTyped(spark, covered) match {
+        t.statsCandidates(spark, covered) match {
           case Some((sel, total)) if total > 1 &&
               sel.length.toDouble / total > 0.8 =>
             covered.map(r => (m.spec.path, "cluster", r.column))
@@ -183,11 +184,11 @@ object IndexAdvisor {
     // Column stats need a COLUMN-level coverage check: the sidecar dir
     // existing with other columns' stats can't serve this range.
     def statsCover(path: String, c: String): Boolean =
-      exists(s"$path/_graft_colstats") &&
-        (c.isEmpty || // the count(*)-only marker: any sidecar carries cnt
-          (try spark.read.parquet(s"$path/_graft_colstats")
-            .columns.exists(_.equalsIgnoreCase(s"min_$c"))
-          catch { case _: Exception => false }))
+      try Option(KeyedTable.specRegistry.get(graft.table.MaterializedView.qualify(spark, path)))
+        .flatMap(KeyedTable(_).colStatsFrame(spark))
+        .exists(st => c.isEmpty || // the count(*)-only marker: any sidecar carries cnt
+          st.columns.exists(_.equalsIgnoreCase(s"min_$c")))
+      catch { case scala.util.control.NonFatal(_) => false }
     // Every point probe needs the record-level index (the candidate
     // chain's exact member); a non-key probe additionally needs the
     // secondary sidecar on its column; a range probe needs column

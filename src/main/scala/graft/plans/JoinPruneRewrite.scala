@@ -273,7 +273,7 @@ private[plans] final class JoinPruneRewrite(
       m: JoinMatch, rm: RangePruneRewrite#RangeMatch): Option[LogicalPlan] = {
     val dimTable = KeyedTable(m.dim.spec)
     val (sel, total) = dimTable
-      .rangeCandidateFilesTyped(spark, rm.ranges, rm.nullPreds, rm.inLists)
+      .statsCandidates(spark, rm.ranges, rm.nullPreds, rm.inLists)
       .getOrElse(return None)
     // The stats must actually bound the derivation: deriving keys from
     // an unclustered dim would be a plan-time full dim scan.
@@ -287,7 +287,7 @@ private[plans] final class JoinPruneRewrite(
         if (isNull) col(c).isNull else col(c).isNotNull
       }).reduce(_ && _)
     val collected = joinKeys(
-      dimTable.readFilesRaw(spark, m.dim.relNames(spark, sel)).filter(residual),
+      dimTable.readFilesRaw(spark, sel).filter(residual),
       m.joined.map(_._2))
     swapFactScan(m, collected.getOrElse(return None))
   }
@@ -359,7 +359,7 @@ private[plans] final class JoinPruneRewrite(
     // Only the file set changes (plus the key guard directly above the
     // scan on a resolving fact), so the join condition and everything
     // above keep their exprIds.
-    fact.prune(spark, j, fact.relPaths(files), guard)(
+    fact.prune(spark, j, files, guard)(
       s"join prune via ${collected.length} dim join keys from ${dim.root}" +
         (if (resolving) " (resolved, key-guarded)" else ""))
   }

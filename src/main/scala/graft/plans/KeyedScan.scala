@@ -110,51 +110,53 @@ private[plans] final case class KeyedScan(
     if (found.length == spec.keyCols.length) Some(found) else None
   }
 
-  /** Table-relative file names as absolute paths under the table root. */
-  def relPaths(rel: Seq[String]): Seq[Path] =
+  /** Table-relative file names as paths under the table root. */
+  private def relPaths(rel: Seq[String]): Seq[Path] =
     rel.map(r => new Path(new Path(spec.path), r))
-
-  /** Files under the table root (qualified or not) as table-relative
-    * names — the inverse of [[relPaths]].
-    */
-  def relNames(spark: SparkSession, files: Seq[Path]): Seq[String] = {
-    val root = new Path(spec.path)
-    val prefix = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(root).toUri.getPath + "/"
-    files.map(_.toUri.getPath.stripPrefix(prefix))
-  }
 
   /** The scan's own file count — lists the relation's files, so only
     * the serve path calls it, never the matcher.
     */
   def listedFiles: Int = fsRel.location.inputFiles.length
 
-  /** `in` with this scan's file set replaced by `files` and, when given,
-    * `guard` as a Filter directly above the swapped scan.
+  /** `in` with this scan's file set replaced by the table-relative
+    * `files` and, when given, `guard` as a Filter directly above the
+    * swapped scan; None when the new index lists fewer files than it was
+    * given. Spark drops a missing root path with only a warning, so a
+    * name that is not on disk (a file moved outside the engine, a
+    * sidecar written under another naming) would otherwise serve as
+    * silently missing rows. The index lists its files when it is built,
+    * so the count costs no filesystem call.
     */
-  def swap(spark: SparkSession, in: LogicalPlan, files: Seq[Path],
-      guard: Option[Expression] = None): LogicalPlan = {
+  def swap(spark: SparkSession, in: LogicalPlan, files: Seq[String],
+      guard: Option[Expression] = None): Option[LogicalPlan] = {
+    val paths = relPaths(files.distinct)
     val partSchema = Option(fsRel.partitionSchema).filter(_.nonEmpty)
     val pruned = new InMemoryFileIndex(
-      spark, files, Map("basePath" -> root), partSchema)
-    in.transformUp {
+      spark, paths, Map("basePath" -> root), partSchema)
+    val listed = pruned.allFiles().length
+    if (listed < paths.length) {
+      logWarning(s"$root: $listed of ${paths.length} candidate files listed; " +
+        "the scan stays whole")
+      None
+    } else Some(in.transformUp {
       case l: LogicalRelation if l eq lr =>
         val swapped = l.copy(relation = fsRel.copy(location = pruned)(spark))
         guard.fold(swapped: LogicalPlan)(Filter(_, swapped))
-    }
+    })
   }
 
   /** [[swap]] when `files` is smaller than `total` (by default the
     * scan's own listing), else None — a candidate set that prunes
     * nothing is a decline. `how` names the serve in the log line.
     */
-  def prune(spark: SparkSession, in: LogicalPlan, files: Seq[Path],
+  def prune(spark: SparkSession, in: LogicalPlan, files: Seq[String],
       guard: Option[Expression] = None, total: Int = listedFiles)(
       how: => String): Option[LogicalPlan] =
     if (files.length >= total) None
-    else {
+    else swap(spark, in, files, guard).map { p =>
       logInfo(s"$root scan pruned to ${files.length} of $total files — $how")
-      Some(swap(spark, in, files, guard))
+      p
     }
 }
 

@@ -221,7 +221,7 @@ private[plans] final class PointLookupRewrite(spark: SparkSession)
       // sound). The key guard, where the secondary path needs it, sits
       // directly above the swapped scan.
       table.lookupCandidateFiles(spark, keys).flatMap { rel0 =>
-        ks.prune(spark, f, ks.relPaths(rel0), guard)(
+        ks.prune(spark, f, rel0, guard)(
           "point lookup via the " +
             (if (viaKey) "record-level index"
              else s"secondary index on ${probes.head._1.name}"))

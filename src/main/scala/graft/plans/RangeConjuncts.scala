@@ -189,57 +189,6 @@ private[plans] object RangeConjuncts {
       ex.nullPreds.map(_._1), ex.inLists))
   }
 
-  /** The FULL/CANDIDATE split of a file under literal ranges, IS NOT
-    * NULL columns and IN-lists, as predicates over the column-stats
-    * sidecar frame `st` (stat columns resolved case-insensitively):
-    *  - CANDIDATE: the file may hold a row satisfying every conjunct —
-    *    each range intersects the recorded [min, max], each IS NOT NULL
-    *    column holds a non-null, each IN-list has a value inside
-    *    [min, max];
-    *  - FULL: every row satisfies every conjunct — bounds inside each
-    *    range and zero nulls in each constrained column; for IN, the
-    *    file is single-valued in the column with that value in the list
-    *    (sound under string truncation: stored lower ≤ real min ≤ real
-    *    max ≤ stored upper, so stored min = max forces the exact value).
-    *    Multi-valued files whose [min, max] lies inside the list's value
-    *    set also satisfy, but proving it needs per-value knowledge the
-    *    stats don't carry.
-    * An all-null stats row nulls both predicates. None when a
-    * constrained column lacks recorded stats.
-    */
-  def fileClasses(
-      st: org.apache.spark.sql.DataFrame, ranges: Seq[ColumnRange],
-      notNull: Seq[String], inLists: Seq[(String, Seq[Any])])
-      : Option[(org.apache.spark.sql.Column, org.apache.spark.sql.Column)] = {
-    import org.apache.spark.sql.functions.{col, lit}
-    def statCol(prefix: String, c: String): Option[String] =
-      st.columns.find(_.equalsIgnoreCase(s"${prefix}_$c"))
-    val nnOf = (ranges.map(_.column) ++ notNull ++ inLists.map(_._1)).distinct
-      .map(c => c -> statCol("nn", c)).toMap
-    val mmOf = (ranges.map(_.column) ++ inLists.map(_._1)).distinct
-      .map(c => c -> ((statCol("min", c), statCol("max", c)))).toMap
-    if (nnOf.values.exists(_.isEmpty) ||
-        mmOf.values.exists(p => p._1.isEmpty || p._2.isEmpty)) return None
-    def nn(c: String) = col(nnOf(c).get)
-    def mn(c: String) = col(mmOf(c)._1.get)
-    def mx(c: String) = col(mmOf(c)._2.get)
-    val candidate = (ranges.map(r => r.within(mx(r.column), mn(r.column)))
-      ++ notNull.map(c => nn(c) > lit(0L))
-      ++ inLists.map { case (c, vs) =>
-        vs.map(v => mn(c) <= lit(v) && mx(c) >= lit(v)).reduce(_ || _)
-      })
-      .reduceOption(_ && _).getOrElse(lit(true))
-    val full = (ranges.map(r =>
-      nn(r.column) === col("cnt") && r.within(mn(r.column), mx(r.column)))
-      ++ notNull.map(c => nn(c) === col("cnt"))
-      ++ inLists.map { case (c, vs) =>
-        nn(c) === col("cnt") && mn(c) === mx(c) &&
-          vs.map(v => mn(c) === lit(v)).reduce(_ || _)
-      })
-      .reduceOption(_ && _).getOrElse(lit(true))
-    Some((candidate, full))
-  }
-
   /** The conjuncts as row predicates over the table's own column names
     * — the residual a serve re-applies when it replaces the filtered
     * subtree wholesale.

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
@@ -177,7 +176,7 @@ private[plans] final class RangePruneRewrite(spark: SparkSession)
 
   private def serveCowRange(m: RangeMatch): Option[LogicalPlan] = {
     val table = KeyedTable(m.spec)
-    table.rangeCandidateFilesTyped(spark, m.ranges, m.nullPreds, m.inLists)
+    table.statsCandidates(spark, m.ranges, m.nullPreds, m.inLists)
       .flatMap { case (files, _) =>
         m.scan.prune(spark, m.f, files)("range prune via column stats on " +
           (m.ranges.map(_.column) ++ m.inLists.map(_._1)).mkString(", "))
@@ -194,22 +193,13 @@ private[plans] final class RangePruneRewrite(spark: SparkSession)
     import org.apache.spark.sql.functions.col
     val table = KeyedTable(m.spec)
     val keyAttrs = m.morKeyAttrs.get
-    val st = table.colStatsFrame(spark).getOrElse(return None)
-    val stSel = PartitionConjuncts.select(
-      st, PartitionConjuncts.statCols(st, m.partFilters).getOrElse(return None))
-    // The files whose recorded bounds intersect every range — the
-    // CANDIDATE class of the shared classification, over the
+    // The files whose recorded bounds intersect the ranges, over the
     // partition-narrowed sidecar rows.
-    val (candPred, _) =
-      RangeConjuncts.fileClasses(st, m.ranges, Nil, Nil).getOrElse(return None)
-    val sel =
-      try KeyedTable.withMetaConf(spark)(
-        stSel.filter(candPred).select("file")
-          .collect().map(_.getString(0)).toSeq
-          .map(abs => new Path(new java.net.URI(abs))))
-      catch { case scala.util.control.NonFatal(_) => return None }
+    val (sel, _) = table.statsCandidates(spark, m.ranges, narrow = st =>
+      PartitionConjuncts.statCols(st, m.partFilters).map(PartitionConjuncts.select(st, _)))
+      .getOrElse(return None)
     val total = m.scan.listedFiles
-    def swap(files: Seq[Path], guard: Option[Expression],
+    def swap(files: Seq[String], guard: Option[Expression],
         how: String): Option[LogicalPlan] =
       m.scan.prune(spark, m.f, files, guard, total)(s"resolved range prune: $how")
 
@@ -220,7 +210,7 @@ private[plans] final class RangePruneRewrite(spark: SparkSession)
     // In-range rows' distinct keys — the only keys whose winner can be
     // in range. One bounded plan-time job, like a DPP subquery.
     val residual = RangeConjuncts.rowFilters(Nil, m.ranges, Nil, Nil).reduce(_ && _)
-    val keysDf = table.readFilesRaw(spark, m.scan.relNames(spark, sel))
+    val keysDf = table.readFilesRaw(spark, sel)
       .filter(residual)
       .select(m.spec.keyCols.map(col): _*)
       .distinct()
@@ -234,7 +224,7 @@ private[plans] final class RangePruneRewrite(spark: SparkSession)
     val probe = spark.createDataFrame(
       java.util.Arrays.asList(collected: _*), keysDf.schema)
     table.lookupCandidateFiles(spark, probe).flatMap { rel0 =>
-      swap(m.scan.relPaths(rel0), Some(KeyedScan.keyGuard(keyAttrs, collected.toSeq)),
+      swap(rel0, Some(KeyedScan.keyGuard(keyAttrs, collected.toSeq)),
         s"${collected.length} in-range keys via the record-level index")
     }
   }

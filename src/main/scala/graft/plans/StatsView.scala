@@ -1,20 +1,19 @@
 package graft.plans
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.functions.{coalesce, col, count, lit, udf}
 
-import graft.table.{KeyedTable, TableMetaCache}
+import graft.table.{ColumnRange, KeyedTable, TableMetaCache}
 
 /** The column-stats sidecar as a view of the files that hold a table's
   * CURRENT rows — the one place the stats serves ([[StatsAggregateRewrite]],
   * [[TopKPruneRewrite]], [[GroupTopKRewrite]]) learn the table kind. It
   * answers the two questions on which a copy-on-write serve and a
   * resolved (`retainHistory`) serve differ; everything else — the
-  * FULL/CANDIDATE classification ([[RangeConjuncts.fileClasses]]), the
+  * FULL/CANDIDATE classification ([[ColumnRange.fileClasses]]), the
   * folds, the walks — is one code path over [[files]].
   *
   *  - Which files fold or walk ([[pure]]) and which may be opened
@@ -45,7 +44,9 @@ private[plans] final class StatsView private (
     spark: SparkSession, ks: KeyedScan, sc: RangeConjuncts.StatsConjuncts,
     /** The whole sidecar, one row per stored file. */
     val st: DataFrame,
-    /** The sidecar rows the partition conjuncts select. */
+    /** The sidecar rows the partition conjuncts select, each with its
+      * table-relative file name `_rfile`.
+      */
     val files: DataFrame,
     /** May hold a row satisfying every range / IS NOT NULL / IN conjunct. */
     val candidate: Column,
@@ -93,9 +94,11 @@ private[plans] final class StatsView private (
     Some((keyCols, single.reduceOption(_ && _).getOrElse(lit(true))))
   }
 
-  /** The file names of `sel`'s rows — one plan-time action. */
+  /** The table-relative file names of `sel`'s rows — one plan-time
+    * action.
+    */
   def names(sel: DataFrame): Seq[String] = KeyedTable.withMetaConf(spark)(
-    sel.select(winners.fold("file")(_ => "_rfile")).collect().map(_.getString(0)).toSeq)
+    sel.select("_rfile").collect().map(_.getString(0)).toSeq)
 
   /** The stored file count a walk's kept set must undercut. */
   lazy val total: Int = winners.fold(
@@ -121,8 +124,7 @@ private[plans] final class StatsView private (
     */
   def rowsBack(in: LogicalPlan, sub: LogicalPlan, kept: Seq[String]): Option[LogicalPlan] =
     winners match {
-      case None =>
-        Some(ks.swap(spark, in, kept.map(abs => new Path(new java.net.URI(abs)))))
+      case None => ks.swap(spark, in, kept)
       case Some(w) =>
         val rows =
           if (kept.isEmpty) Some(LocalRelation(sub.output, Nil))
@@ -161,15 +163,16 @@ private[plans] object StatsView {
     val table = KeyedTable(ks.spec)
     val st = table.colStatsFrame(spark).getOrElse(return None)
     if (!st.columns.contains("cnt")) return None
-    val (candidate, full) = RangeConjuncts
-      .fileClasses(st, sc.ranges, sc.notNull, sc.inLists).getOrElse(return None)
+    val (candidate, full) = ColumnRange
+      .fileClasses(st, sc.ranges, sc.notNull.map((_, false)), sc.inLists)
+      .getOrElse(return None)
     val partSel = PartitionConjuncts.statCols(st, sc.partFilters).getOrElse(return None)
+    val stRel = st.withColumn("_rfile", table.relFileName(spark, col("file")))
     if (!ks.spec.retainHistory)
-      Some(new StatsView(spark, ks, sc, st, PartitionConjuncts.select(st, partSel),
+      Some(new StatsView(spark, ks, sc, st, PartitionConjuncts.select(stRel, partSel),
         candidate, full, None))
     else {
       val settled = table.settledWinnerEntries(spark).getOrElse(return None)
-      val stRel = st.withColumn("_rfile", table.relOfFileCol(spark, col("file")))
       val maps = MorWinnerMaps.of(spark, table, settled, stRel).getOrElse(return None)
       Some(new StatsView(spark, ks, sc, st,
         PartitionConjuncts.select(stRel, partSel).withColumn("wcnt", maps.wcU(col("_rfile"))),

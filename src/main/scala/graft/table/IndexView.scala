@@ -59,7 +59,7 @@ private[table] final class IndexView private (
     val kept = narrow(surviving)
     val merged = addedRows.fold(kept) { rows =>
       kept.unionByName(narrow(
-        resolve(rows.withColumn("_graft_rel", table.relFileExpr(spark))).select(cols: _*)))
+        resolve(rows.withColumn("_graft_rel", table.relFileName(spark))).select(cols: _*)))
     }
     if (table.rliResolves(spark)) table.rliResolveEntries(spark, merged) else merged
   }

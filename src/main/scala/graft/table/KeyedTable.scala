@@ -82,6 +82,61 @@ object ColumnRange {
   def inclusive(column: String, lo: Long, hi: Long): ColumnRange =
     ColumnRange(column, Some(lo), loInclusive = true,
       Some(hi), hiInclusive = true)
+
+  /** The FULL/CANDIDATE split of a file under literal ranges, null
+    * predicates (column, isNull) and IN-lists, as predicates over the
+    * column-stats sidecar frame `st` (stat columns resolved
+    * case-insensitively):
+    *  - CANDIDATE: the file may hold a row satisfying every conjunct —
+    *    each range intersects the recorded [min, max], each IS NULL
+    *    column holds a null (`cnt > nn`), each IS NOT NULL column a
+    *    non-null, each IN-list has a value inside [min, max];
+    *  - FULL: every row satisfies every conjunct — bounds inside each
+    *    range, zero nulls in each range, IS NOT NULL and IN column, only
+    *    nulls in each IS NULL column; for IN, the file is single-valued
+    *    in the column with that value in the list (sound under string
+    *    truncation: stored lower ≤ real min ≤ real max ≤ stored upper,
+    *    so stored min = max forces the exact value). Multi-valued files
+    *    whose [min, max] lies inside the list's value set also satisfy,
+    *    but proving it needs per-value knowledge the stats don't carry.
+    * An all-null stats row nulls both predicates. None when a
+    * constrained column lacks recorded stats.
+    */
+  private[graft] def fileClasses(
+      st: DataFrame, ranges: Seq[ColumnRange],
+      nullPreds: Seq[(String, Boolean)], inLists: Seq[(String, Seq[Any])])
+      : Option[(Column, Column)] = {
+    def statCol(prefix: String, c: String): Option[String] =
+      st.columns.find(_.equalsIgnoreCase(s"${prefix}_$c"))
+    val nnOf = (ranges.map(_.column) ++ nullPreds.map(_._1) ++ inLists.map(_._1)).distinct
+      .map(c => c -> statCol("nn", c)).toMap
+    val mmOf = (ranges.map(_.column) ++ inLists.map(_._1)).distinct
+      .map(c => c -> ((statCol("min", c), statCol("max", c)))).toMap
+    if (nnOf.values.exists(_.isEmpty) ||
+        mmOf.values.exists(p => p._1.isEmpty || p._2.isEmpty)) return None
+    def nn(c: String) = col(nnOf(c).get)
+    def mn(c: String) = col(mmOf(c)._1.get)
+    def mx(c: String) = col(mmOf(c)._2.get)
+    val candidate = (ranges.map(r => r.within(mx(r.column), mn(r.column)))
+      ++ nullPreds.map { case (c, isNull) =>
+        if (isNull) col("cnt") > nn(c) else nn(c) > lit(0L)
+      }
+      ++ inLists.map { case (c, vs) =>
+        vs.map(v => mn(c) <= lit(v) && mx(c) >= lit(v)).reduce(_ || _)
+      })
+      .reduceOption(_ && _).getOrElse(lit(true))
+    val full = (ranges.map(r =>
+      nn(r.column) === col("cnt") && r.within(mn(r.column), mx(r.column)))
+      ++ nullPreds.map { case (c, isNull) =>
+        if (isNull) nn(c) === lit(0L) else nn(c) === col("cnt")
+      }
+      ++ inLists.map { case (c, vs) =>
+        nn(c) === col("cnt") && mn(c) === mx(c) &&
+          vs.map(v => mn(c) === lit(v)).reduce(_ || _)
+      })
+      .reduceOption(_ && _).getOrElse(lit(true))
+    Some((candidate, full))
+  }
 }
 
 /** Keyed upsert table over hive-partitioned Parquet.
@@ -615,22 +670,18 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     transform(sequence(lit(0), lit(k - 1)),
       i => pmod(xxhash64(i, key), lit(m.toLong)).cast("int"))
 
-  // `file` is stored TABLE-RELATIVE like every other sidecar (stats,
-  // RLI, commit records): the index must survive a table move /
-  // restore-from-snapshot byte-copy, where a stored absolute path would
-  // resolve to the source tree. Relativization happens AFTER the
-  // groupBy, on the file-count-sized result, not per data row.
-  private def bloomRowsFor(df: DataFrame, m: Int, k: Int): DataFrame = {
-    val spark = df.sparkSession
-    val rootPrefix =
-      fs(spark).makeQualified(new Path(spec.path)).toUri.getPath + "/"
+  // `file` is stored TABLE-RELATIVE like the RLI and the commit records:
+  // the index must survive a table move / restore-from-snapshot
+  // byte-copy, where a stored absolute path would resolve to the source
+  // tree. Relativization happens AFTER the groupBy, on the
+  // file-count-sized result, not per data row.
+  private def bloomRowsFor(df: DataFrame, m: Int, k: Int): DataFrame =
     df.withColumn("file", input_file_name())
       .select(col("file"), explode(bloomPositions(col(RecordKeyCol), m, k)).as("pos"))
       .groupBy(col("file"))
       .agg(array_sort(collect_set(col("pos"))).as("bits"))
-      .withColumn("file", KeyedTable.relPathUdf(rootPrefix)(col("file")))
+      .withColumn("file", relFileName(df.sparkSession, col("file")))
       .withColumn("m", lit(m)).withColumn("k", lit(k))
-  }
 
   /** Build/refresh the record-key bloom index: per data file, the bloom of
     * its `_graft_record_key`s, in ONE scan (groupBy `input_file_name`,
@@ -855,14 +906,23 @@ final class KeyedTable(val spec: KeyedTableSpec) {
   private val RliDirName = "_graft_rli"
   private def rliDir = s"${spec.path}/$RliDirName"
 
-  /** The table-relative rendering of `input_file_name()` — the same
-    * normalization the commit markers record, so index entries and
-    * marker file records compare as equals.
+  /** The table-relative name of a scan's file string — by default the
+    * current row's `input_file_name()`, else a column of such strings
+    * (the stats sidecar's absolute `file`). The only conversion from a
+    * scan's file string to the name [[KeyedTable.dataFilesUnder]] lists
+    * and the commit records store, so every candidate source (record-
+    * level, secondary and bloom indexes, column stats) and the timeline
+    * compare as equals. A scan reports files URL-encoded (Spark's
+    * `SparkPath`); the URI path decoding the listing applies takes the
+    * encoding off once and leaves hive escaping alone: the directory
+    * `p=x%3Ay` on disk is reported `p=x%253Ay` and named `p=x%3Ay`,
+    * `p=a%20b` is named `p=a b`, and a literal `+` stays (form decoding
+    * would make it a space).
     */
-  private[table] def relFileExpr(spark: SparkSession): Column = {
-    val root = fs(spark).makeQualified(new Path(spec.path)).toUri.getPath
-    substring_index(input_file_name(), s"$root/", -1)
-  }
+  private[graft] def relFileName(
+      spark: SparkSession, file: Column = input_file_name()): Column =
+    KeyedTable.relNameUdf(
+      fs(spark).makeQualified(new Path(spec.path)).toUri.getPath + "/")(file)
 
   /** One index entry per LIVE row version for resolving tables (one per
     * stored row for plain COW): the record key, its resolve scope
@@ -964,7 +1024,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     if (!exists(spark)) return
     val builtAt = timelineBoundary(spark)
     val entries = lookupResolve(
-      spark, readRaw(spark).withColumn("_graft_rel", relFileExpr(spark)))
+      spark, readRaw(spark).withColumn("_graft_rel", relFileName(spark)))
       .select(rliEntryCols: _*)
     publishRli(spark, entries.withColumn("built_at", lit(builtAt)))
   }
@@ -1092,15 +1152,6 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  /** Table-relative rendering of an ABSOLUTE-path column (the stats
-    * sidecar's `file`), matching [[relFileExpr]]'s normalization so
-    * sidecar rows and index entries compare as equals.
-    */
-  private[graft] def relOfFileCol(spark: SparkSession, c: Column): Column = {
-    val root = fs(spark).makeQualified(new Path(spec.path)).toUri.getPath
-    substring_index(c, s"$root/", -1)
-  }
-
   /** The rows of `boundaryRel` files that ARE live winners: a left-semi
     * join against the settled entries on the FULL resolve identity
     * (key, scope, file, precombine, commit id, tiebreaks — the entry
@@ -1116,7 +1167,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
       spark: SparkSession, boundaryRel: Seq[String],
       settled: DataFrame): DataFrame = {
     val data = readFilesRaw(spark, boundaryRel)
-      .withColumn("_graft_rel", relFileExpr(spark))
+      .withColumn("_graft_rel", relFileName(spark))
     val eCols = Seq("key", "pp", "file", "pre", "ct") ++
       spec.tiebreakCols.indices.map(i => s"tb_$i")
     val e = settled.select(eCols.map(col): _*)
@@ -1334,7 +1385,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
       s"secondary-index column '$column' is not in the table schema")
     val builtAt = timelineBoundary(spark)
     val entries = lookupResolve(
-      spark, readRaw(spark).withColumn("_graft_rel", relFileExpr(spark)))
+      spark, readRaw(spark).withColumn("_graft_rel", relFileName(spark)))
       .select(siEntryCols(column): _*)
     publishIndex(spark, siDirName(column),
       entries.withColumn("built_at", lit(builtAt)), col("sval"))
@@ -1358,7 +1409,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
       s"secondary-index column '$c' is not in the table schema"))
     val builtAt = timelineBoundary(spark)
     val resolved = lookupResolve(
-      spark, readRaw(spark).withColumn("_graft_rel", relFileExpr(spark)))
+      spark, readRaw(spark).withColumn("_graft_rel", relFileName(spark)))
     // One narrow frame carrying every sidecar's columns (values aliased
     // positionally — a user column may be named `sval`/`k_0`), persisted
     // so the scan + window resolve runs once; each publish below is a
@@ -1622,12 +1673,10 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     // file identity — a relative path reused with different content
     // (no current write path does, but nothing else enforces it) shows a
     // changed length and RESCANS instead of serving stale bounds.
-    val rootPrefix =
-      f.makeQualified(new Path(spec.path)).toUri.getPath + "/"
-    def relOf(abs: String): String =
-      new Path(abs).toUri.getPath.stripPrefix(rootPrefix)
     val lenByRel: Map[String, Long] =
       listDataFiles(spark).map { case (r, st) => r -> st.getLen }.toMap
+    def withLen(rows: DataFrame): DataFrame = rows.withColumn("flen",
+      KeyedTable.relLenUdf(lenByRel)(relFileName(spark, col("file"))))
     def carriedPlusNew(): Option[DataFrame] = {
       if (!f.exists(new Path(staleStatsDir))) return None
       try {
@@ -1648,15 +1697,14 @@ final class KeyedTable(val spec: KeyedTableSpec) {
           .toMap
         if (actual != expected) return None
         val staleFiles = KeyedTable.withMetaConf(spark)(
-          stale.select("file", "flen").collect()
-            .map(r => r.getString(0) -> r.getLong(1)).toSeq)
+          stale.select(col("file"), relFileName(spark, col("file")), col("flen"))
+            .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq)
         // A cached row carries only while its file is still listed AT
         // THE RECORDED LENGTH; a mismatched length rescans (below, via
         // newRel). Set-closure filter, never an IN list: both sides are
         // file-count-sized, which at 100 TB is 10^5–10^6 entries.
-        val keepAbs = staleFiles.collect {
-          case (a, len) if lenByRel.get(relOf(a)).contains(len) => a
-        }.toSet
+        val kept = staleFiles.filter { case (_, rel, len) => lenByRel.get(rel).contains(len) }
+        val keepAbs = kept.map(_._1).toSet
         // Empty overlap: a rebuilt file set (clustering/compaction/full
         // rewrite — q120's fresh-per-invocation shape) shares nothing
         // with the cache, so the carry plan (cache read + UDF filter +
@@ -1664,19 +1712,14 @@ final class KeyedTable(val spec: KeyedTableSpec) {
         if (keepAbs.isEmpty) return None
         val keepU = udf((s: String) => keepAbs.contains(s))
         val carried = stale.filter(keepU(col("file")))
-        val newRel = (lenByRel.keySet -- keepAbs.map(relOf)).toSeq.sorted
+        val newRel = (lenByRel.keySet -- kept.map(_._2)).toSeq.sorted
         Some(
           if (newRel.isEmpty) carried
-          else carried.unionByName(
-            statsRowsOf(readFilesRaw(spark, newRel))
-              .withColumn("flen", KeyedTable.relLenUdf(lenByRel, rootPrefix)(
-                col("file")))))
+          else carried.unionByName(withLen(statsRowsOf(readFilesRaw(spark, newRel)))))
       } catch { case scala.util.control.NonFatal(_) => None }
     }
-    publishSidecar(spark, ColStatsDirName, carriedPlusNew().getOrElse(
-        statsRowsOf(raw).withColumn("flen",
-          KeyedTable.relLenUdf(lenByRel, rootPrefix)(col("file"))))
-      .coalesce(1))
+    publishSidecar(spark, ColStatsDirName,
+      carriedPlusNew().getOrElse(withLen(statsRowsOf(raw))).coalesce(1))
     f.delete(new Path(staleStatsDir), true)
   }
 
@@ -1755,112 +1798,49 @@ final class KeyedTable(val spec: KeyedTableSpec) {
       } catch { case scala.util.control.NonFatal(_) => None }
     }
 
-  /** The stats index's candidate files for a conjunction of ranges, as
-    * absolute [[Path]]s plus the total indexed file count, or `None`
-    * when the sidecar is absent or doesn't cover every range column —
-    * the serving half of the declarative range prune
-    * ([[graft.plans.RangePruneRewrite]]). Sound on non-resolving tables
-    * only (same argument as [[readPruned]]): dropped files hold no row
-    * inside EVERY range (stats admit false positives, never false
-    * negatives), and on a copy-on-write table rows are independent, so
-    * removing them cannot change any other row's visibility. Bounds are
-    * in the columns' own types with per-side inclusivity — the shape
-    * the rule extracts over dates, timestamps, decimals and strings as
-    * well as integers.
+  /** The column-stats selection: (the table-relative files that may hold
+    * a row satisfying every covered conjunct, total indexed files), or
+    * `None` when the sidecar is absent or unreadable or records stats
+    * for none of the conjuncts' columns. A conjunct whose column has no
+    * recorded stats is left out: selecting on the COVERED subset stays
+    * sound, since a dropped file satisfies no covered conjunct and hence
+    * not the conjunction. The predicate is [[ColumnRange.fileClasses]]'
+    * CANDIDATE class — the comparisons run in Spark over the sidecar, so
+    * they use exactly the ordering the residual data filter uses, and an
+    * all-null file is dropped by a range (null-rejecting). `narrow`
+    * selects sidecar rows first (the resolved range serve's partition
+    * conjuncts) and declines with `None`.
+    *
+    * The selection holds every stored VERSION that may match. As a
+    * scan's file set it is sound on copy-on-write tables only, where
+    * rows are independent ([[readPruned]]); a resolving table's callers
+    * derive keys from it ([[readPrunedResolving]]). Driver-side size is
+    * the file count.
     */
-  private[graft] def rangeCandidateFilesTyped(
+  private[graft] def statsCandidates(
       spark: SparkSession,
       ranges: Seq[ColumnRange],
       nullPreds: Seq[(String, Boolean)] = Nil,
-      inLists: Seq[(String, Seq[Any])] = Nil): Option[(Seq[Path], Int)] = {
-    require(!spec.retainHistory,
-      "range candidates require a copy-on-write table (see readPruned)")
+      inLists: Seq[(String, Seq[Any])] = Nil,
+      narrow: DataFrame => Option[DataFrame] = Some(_)): Option[(Seq[String], Int)] =
     colStatsFrame(spark).flatMap { st =>
-      val cols = st.columns.toSet
-      // Selecting on the COVERED subset of the conjunction stays sound
-      // (dropped files satisfy no covered range, hence not the whole
-      // conjunction); uncovered columns just don't contribute skipping.
-      val covered = ranges.filter(r => cols.contains(s"min_${r.column}"))
-      val coveredNulls = nullPreds.filter(p => cols.contains(s"nn_${p._1}"))
-      val coveredIns = inLists.filter(p => cols.contains(s"min_${p._1}"))
-      if (covered.isEmpty && coveredNulls.isEmpty && coveredIns.isEmpty) None
-      else try {
-        val (sel, total) =
-          statsSelectedFilesTyped(spark, covered, coveredNulls, coveredIns)
-        Some((sel.map(abs => new Path(new java.net.URI(abs))), total))
+      def covers(r: Seq[ColumnRange], n: Seq[(String, Boolean)],
+          i: Seq[(String, Seq[Any])]) = ColumnRange.fileClasses(st, r, n, i).isDefined
+      val cr = ranges.filter(r => covers(Seq(r), Nil, Nil))
+      val cn = nullPreds.filter(p => covers(Nil, Seq(p), Nil))
+      val ci = inLists.filter(p => covers(Nil, Nil, Seq(p)))
+      if (cr.isEmpty && cn.isEmpty && ci.isEmpty) None
+      else try KeyedTable.withMetaConf(spark) {
+        val (candidate, _) = ColumnRange.fileClasses(st, cr, cn, ci).get
+        narrow(st).map { sel =>
+          val files = sel.filter(candidate).select(relFileName(spark, col("file")))
+            .collect().map(_.getString(0)).toSeq
+          // The snapshot's row count rides along free; counting a
+          // parquet-backed sidecar is one more scan job.
+          (files, colStatsSnapshot(spark).map(_._2).getOrElse(st.count().toInt))
+        }
       } catch { case scala.util.control.NonFatal(_) => None }
     }
-  }
-
-  /** The index's file selection for `column ∈ [lo, hi]`: (selected files,
-    * total indexed files). Driver-side size is the file count.
-    */
-  private[graft] def statsSelectedFiles(
-      spark: SparkSession, column: String, lo: Long, hi: Long): (Seq[String], Int) =
-    statsSelectedFiles(spark, Seq((column, lo, hi)))
-
-  /** Multi-predicate file selection: files whose recorded [min, max]
-    * intersects EVERY range — the conjunctive prune a 2-D probe over a
-    * Z-ordered layout needs (each Morton file is a rectangle in key
-    * space, so both dimensions' stats are tight and the intersection
-    * multiplies the skip rates).
-    */
-  private[graft] def statsSelectedFiles(
-      spark: SparkSession, ranges: Seq[(String, Long, Long)]): (Seq[String], Int) =
-    statsSelectedFilesTyped(
-      spark, ranges.map { case (c, lo, hi) => ColumnRange.inclusive(c, lo, hi) })
-
-  /** Typed multi-predicate file selection. A file survives a range iff
-    * its recorded [min, max] intersects it: `max ≥(>) lo` and
-    * `min ≤(<) hi`, with strict comparisons for exclusive bounds —
-    * uniform across every ordered type, no integer ±1. The comparisons
-    * run in Spark over the sidecar, so they use exactly the ordering the
-    * residual data filter uses (UTF8String byte order for strings,
-    * micros for timestamps, …). An all-null file has null min/max and is
-    * correctly dropped: a range conjunct is null-rejecting.
-    */
-  private[graft] def statsSelectedFilesTyped(
-      spark: SparkSession,
-      ranges: Seq[ColumnRange],
-      nullPreds: Seq[(String, Boolean)] = Nil,
-      inLists: Seq[(String, Seq[Any])] = Nil): (Seq[String], Int) =
-    KeyedTable.withMetaConf(spark) {
-      statsSelectedFilesTypedImpl(spark, ranges, nullPreds, inLists)
-    }
-
-  private def statsSelectedFilesTypedImpl(
-      spark: SparkSession,
-      ranges: Seq[ColumnRange],
-      nullPreds: Seq[(String, Boolean)],
-      inLists: Seq[(String, Seq[Any])]): (Seq[String], Int) = {
-    // Localized sidecar: the total count rides the snapshot and the
-    // selection is ONE local action instead of a parquet count + a
-    // parquet filter-collect (two scan jobs per serve).
-    val snap = colStatsSnapshot(spark)
-    val st = snap.map(_._1).getOrElse(spark.read.parquet(colStatsDir))
-    val all = snap.map(_._2).getOrElse(st.count().toInt)
-    val rangePreds = ranges.map(r =>
-      r.within(col(s"max_${r.column}"), col(s"min_${r.column}")))
-    // Null predicates select on the per-file null count (cnt − nn):
-    // `IS NULL` needs at least one null in the file, `IS NOT NULL` at
-    // least one non-null value — per-row facts, so conjunction-subset
-    // soundness carries over unchanged.
-    val nullSel = nullPreds.map { case (c, isNull) =>
-      if (isNull) col("cnt") > col(s"nn_$c") else col(s"nn_$c") > lit(0L)
-    }
-    // IN lists select files by per-value containment, OR-ed: a file can
-    // hold v only when min <= v <= max — the multi-point disjunction
-    // (`lang IN ('en','de')` over a lang-clustered table opens just
-    // those values' files). Per-row fact, so conjunction-subset
-    // soundness carries over unchanged.
-    val inSel = inLists.map { case (c, vs) =>
-      vs.map(v => col(s"min_$c") <= lit(v) && col(s"max_$c") >= lit(v))
-        .reduce(_ || _)
-    }
-    val pred = (rangePreds ++ nullSel ++ inSel).reduce(_ && _)
-    val sel = st.filter(pred).select("file").collect().map(_.getString(0)).toSeq
-    (sel, all)
-  }
 
   /** Range read through the column-stats index: only files whose recorded
     * [min, max] intersects [lo, hi] are opened — file skipping on a
@@ -1892,25 +1872,12 @@ final class KeyedTable(val spec: KeyedTableSpec) {
       "readPruned requires a copy-on-write table: latest-per-key resolution " +
         "over a pruned file subset is unsound on history tables")
     notEvolvedGuard(spark, "stats-pruned read") // evolved reads resolve too
-    val f = fs(spark)
-    // "Index absent" is per COLUMN, not just per directory: stats recorded
-    // for other columns can't answer this predicate — fall back to the
-    // full scan the contract promises instead of failing analysis.
-    def indexCovers: Boolean = {
-      val cols = spark.read.parquet(colStatsDir).columns.toSet
-      ranges.forall { case (c, _, _) => cols.contains(s"min_$c") }
+    val raw = statsCandidates(spark,
+      ranges.map { case (c, lo, hi) => ColumnRange.inclusive(c, lo, hi) }) match {
+      case None => readRaw(spark)
+      case Some((sel, _)) if sel.isEmpty => readRaw(spark).filter(lit(false))
+      case Some((sel, _)) => readFilesRaw(spark, sel)
     }
-    val raw =
-      if (!f.exists(new Path(colStatsDir)) || !indexCovers) readRaw(spark)
-      else statsSelectedFiles(spark, ranges) match {
-        case (sel, _) if sel.isEmpty => readRaw(spark).filter(lit(false))
-        case (sel, _) =>
-          val rd = spark.read.option("basePath", spec.path)
-          (sidecarSchema(spark) match {
-            case Some(s) => rd.schema(s)
-            case None    => rd.option("mergeSchema", "true")
-          }).parquet(sel: _*)
-      }
     val residual = ranges
       .map { case (c, lo, hi) => col(c).between(lo, hi) }
       .reduce(_ && _)
@@ -1933,7 +1900,7 @@ final class KeyedTable(val spec: KeyedTableSpec) {
     * resurrected. Cost: O(candidate files) + O(probe keys + delta) —
     * range-SELECTIVE reads only; a range matching half a 100 TB table
     * belongs in a full resolve. Falls back to resolve ∘ filter when
-    * stats are absent or don't cover every range column.
+    * stats are absent or cover no range column.
     */
   def readPrunedResolving(
       spark: SparkSession, ranges: Seq[ColumnRange]): DataFrame = {
@@ -1944,23 +1911,12 @@ final class KeyedTable(val spec: KeyedTableSpec) {
         "table prunes directly via readPruned")
     val residual =
       ranges.map(r => r.within(col(r.column), col(r.column))).reduce(_ && _)
-    def fallback = read(spark).filter(residual)
-    val covered = colStatsFrame(spark).exists { st =>
-      val cols = st.columns.toSet
-      ranges.forall(r => cols.contains(s"min_${r.column}"))
-    }
-    if (!covered) return fallback
-    val (sel, _) =
-      try statsSelectedFilesTyped(spark, ranges)
-      catch { case scala.util.control.NonFatal(_) => return fallback }
+    val (sel, _) = statsCandidates(spark, ranges)
+      .getOrElse(return read(spark).filter(residual))
     // No version intersects the range ⇒ no winner can (a winner is a
     // version) ⇒ empty, with the read's own schema.
     if (sel.isEmpty) return read(spark).filter(lit(false))
-    val f = fs(spark)
-    val rootPrefix = f.makeQualified(new Path(spec.path)).toUri.getPath + "/"
-    val rel = sel.map(abs =>
-      new Path(new java.net.URI(abs)).toUri.getPath.stripPrefix(rootPrefix))
-    val keys = readFilesRaw(spark, rel)
+    val keys = readFilesRaw(spark, sel)
       .filter(residual)
       .select(spec.keyCols.map(col): _*)
       .distinct()
@@ -3701,22 +3657,20 @@ object KeyedTable {
   private[table] val truncUpperUdf =
     udf((s: String) => truncUpper(s))
 
-  /** Current listed length of a stats row's file (−1 when unlisted —
-    * unreachable for rows just scanned), keyed by table-relative path.
-    * A companion-object factory so the closure captures only the two
-    * serializable locals, never the table instance.
+  /** [[KeyedTable.relFileName]]'s decoding: the URI's decoded path below
+    * `rootPrefix`. A companion-object factory so the closure captures
+    * only the prefix, never the table instance.
     */
-  private[table] def relLenUdf(
-      lenByRel: Map[String, Long], rootPrefix: String) =
-    udf((abs: String) => lenByRel.getOrElse(
-      new Path(abs).toUri.getPath.stripPrefix(rootPrefix), -1L))
+  private[table] def relNameUdf(rootPrefix: String) =
+    udf((file: String) => new java.net.URI(file).getPath.stripPrefix(rootPrefix))
 
-  /** `input_file_name()`-style URI string → table-relative path. Applied
-    * to file-count-sized frames only (post-groupBy sidecar rows).
+  /** Current listed length of a table-relative file (−1 when unlisted —
+    * unreachable for rows just scanned). A companion-object factory so
+    * the closure captures only the serializable map, never the table
+    * instance.
     */
-  private[table] def relPathUdf(rootPrefix: String) =
-    udf((abs: String) =>
-      new Path(new java.net.URI(abs)).toUri.getPath.stripPrefix(rootPrefix))
+  private[table] def relLenUdf(lenByRel: Map[String, Long]) =
+    udf((rel: String) => lenByRel.getOrElse(rel, -1L))
 
   /** NOT-IN over a file-count-sized exclusion set as a set-closure UDF:
     * `isin(removed: _*)` builds a literal expression tree that at

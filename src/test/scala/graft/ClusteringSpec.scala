@@ -85,7 +85,8 @@ class ClusteringSpec extends SparkTestBase {
     val (mn, mx) = (b.getLong(0), b.getLong(1))
     val third = (mx - mn) / 3
     val (lo, hi) = (mn + third, mn + 2 * third)
-    val (sel, total) = t.statsSelectedFiles(spark, "ts_us", lo, hi)
+    val (sel, total) =
+      t.statsCandidates(spark, Seq(graft.table.ColumnRange.inclusive("ts_us", lo, hi))).get
     assert(total > 2, s"fixture produced only $total files; pruning unobservable")
     assert(sel.nonEmpty && sel.length < total,
       s"no pruning: selected ${sel.length} of $total files")

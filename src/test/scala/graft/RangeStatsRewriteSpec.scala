@@ -267,7 +267,7 @@ class RangeStatsRewriteSpec extends SparkTestBase {
     assert(!got.exists(_._1 % 11 == 0),
       "superseded in-range versions must not resurrect")
     // The stats selection itself prunes (all-version files, narrow range).
-    val (sel, total) = table.statsSelectedFilesTyped(spark, range)
+    val (sel, total) = table.statsCandidates(spark, range).get
     assert(sel.length < total, s"must prune: ${sel.length} of $total")
 
     // DECLARATIVE arm ([[graft.plans.RangePruneRewrite]]'s resolving
@@ -1470,8 +1470,8 @@ class RangeStatsRewriteSpec extends SparkTestBase {
     val served = plain(t.read(spark))
     assert(hybridServed(served), "the hybrid union must serve")
     val scanned = scannedData(served)
-    val (cands, _) = t.statsSelectedFilesTyped(spark,
-      Seq(graft.table.ColumnRange.inclusive("ts_us", lo, hi)))
+    val (cands, _) = t.statsCandidates(spark,
+      Seq(graft.table.ColumnRange.inclusive("ts_us", lo, hi))).get
     assert(scanned.nonEmpty && scanned.length < cands.length,
       s"boundary files (${scanned.length}) must be fewer than the range " +
         s"candidates (${cands.length})")
@@ -1525,8 +1525,8 @@ class RangeStatsRewriteSpec extends SparkTestBase {
     val served = plain(t.read(spark))
     assert(hybridServed(served), "the grouped hybrid union must serve")
     val scanned = scannedData(served)
-    val (cands, _) = t.statsSelectedFilesTyped(spark,
-      Seq(graft.table.ColumnRange.inclusive("ts_us", lo, hi)))
+    val (cands, _) = t.statsCandidates(spark,
+      Seq(graft.table.ColumnRange.inclusive("ts_us", lo, hi))).get
     assert(scanned.nonEmpty && scanned.length < cands.length,
       s"boundary files (${scanned.length}) must stay under the " +
         s"candidates (${cands.length})")
@@ -1598,8 +1598,8 @@ class RangeStatsRewriteSpec extends SparkTestBase {
     val served = plain(t.read(spark))
     assert(hybridServed(served), "range-filtered avg must serve hybrid")
     val scanned = scannedData(served)
-    val (cands, _) = t.statsSelectedFilesTyped(spark,
-      Seq(graft.table.ColumnRange.inclusive("ts_us", lo, hi)))
+    val (cands, _) = t.statsCandidates(spark,
+      Seq(graft.table.ColumnRange.inclusive("ts_us", lo, hi))).get
     assert(scanned.nonEmpty && scanned.length < cands.length,
       s"boundary files (${scanned.length}) must stay under the " +
         s"candidates (${cands.length})")
@@ -1763,8 +1763,8 @@ class RangeStatsRewriteSpec extends SparkTestBase {
     // possibly EMPTY when the run boundaries align with file boundaries
     // (every candidate single-valued: the fold answers everything).
     val scanned = scannedData(served)
-    val (cands, _) = t.statsSelectedFilesTyped(
-      spark, Nil, Nil, Seq(("lang", Seq("de", "zh"))))
+    val (cands, _) = t.statsCandidates(
+      spark, Nil, Nil, Seq(("lang", Seq("de", "zh")))).get
     assert(scanned.length < cands.length,
       s"boundary files (${scanned.length}) must be fewer than the IN " +
         s"candidates (${cands.length})")

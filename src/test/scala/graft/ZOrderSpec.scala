@@ -34,7 +34,8 @@ class ZOrderSpec extends SparkTestBase {
     // a ~10%-of-domain slice in the middle
     val lo = mn + (mx - mn) * 45 / 100
     val hi = mn + (mx - mn) * 55 / 100
-    val (sel, total) = t.statsSelectedFiles(spark, column, lo, hi)
+    val (sel, total) =
+      t.statsCandidates(spark, Seq(graft.table.ColumnRange.inclusive(column, lo, hi))).get
     (sel.length, total)
   }
 
@@ -99,9 +100,12 @@ class ZOrderSpec extends SparkTestBase {
     val (tLo, tHi) = bounds("ts_us")
     val (uLo, uHi) = bounds("user_id")
     val ranges = Seq(("ts_us", tLo, tHi), ("user_id", uLo, uHi))
-    val (sel2d, total) = z.statsSelectedFiles(spark, ranges)
-    val (selTs, _) = z.statsSelectedFiles(spark, "ts_us", tLo, tHi)
-    val (selUser, _) = z.statsSelectedFiles(spark, "user_id", uLo, uHi)
+    val (sel2d, total) = z.statsCandidates(spark,
+      ranges.map { case (c, l, h) => graft.table.ColumnRange.inclusive(c, l, h) }).get
+    val (selTs, _) =
+      z.statsCandidates(spark, Seq(graft.table.ColumnRange.inclusive("ts_us", tLo, tHi))).get
+    val (selUser, _) =
+      z.statsCandidates(spark, Seq(graft.table.ColumnRange.inclusive("user_id", uLo, uHi))).get
     info(s"2-D: ${sel2d.length}/$total vs ts ${selTs.length}, user ${selUser.length}")
     assert(total > 4, "need several files to measure")
     // conjunction can only shrink either axis's selection — and on a

@@ -32,6 +32,13 @@ class KeyedScanSpec extends SparkTestBase {
 
   private def analyzed(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
 
+  /** The table's data files, table-relative — what swap and prune take. */
+  private def relFiles: Seq[String] = {
+    val root = new Path(table.spec.path)
+    KeyedTable.dataFilesUnder(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root).map(_._1)
+  }
+
   private def registeredScan: (LogicalPlan, KeyedScan) = {
     val plan = analyzed(table.read(spark).filter(col("k") === 3L))
     (plan, KeyedScan.of(plan).getOrElse(fail("the registered read must match")))
@@ -71,10 +78,11 @@ class KeyedScanSpec extends SparkTestBase {
 
   test("swap keeps the relation's exprIds and guards directly above the scan") {
     val (plan, ks) = registeredScan
-    val files = ks.fsRel.location.inputFiles.take(2).map(new Path(_)).toSeq
+    val files = relFiles.take(2)
     val key = ks.keyAttrs.getOrElse(fail("key attribute")).head
     val guard = EqualTo(key, Literal(3L))
     val swapped = ks.swap(spark, plan, files, Some(guard))
+      .getOrElse(fail("every candidate is listed"))
     assert(swapped.output.map(_.exprId) == plan.output.map(_.exprId))
     val guarded = swapped.collect {
       case Filter(c, l: LogicalRelation) if c == guard => l
@@ -83,14 +91,14 @@ class KeyedScanSpec extends SparkTestBase {
     assert(guarded.head.output.map(_.exprId) == ks.lr.output.map(_.exprId))
     val loc = guarded.head.relation.asInstanceOf[HadoopFsRelation].location
     def pathsOf(ps: Seq[String]) = ps.map(new Path(_).toUri.getPath).sorted
-    assert(pathsOf(loc.inputFiles.toSeq) == pathsOf(files.map(_.toString)))
+    assert(pathsOf(loc.inputFiles.toSeq) == pathsOf(files.map(f => s"${table.spec.path}/$f")))
     // The swapped scan no longer roots at the registered path.
     assert(KeyedScan.of(swapped).isEmpty)
   }
 
   test("prune declines a candidate set no smaller than the listing") {
     val (plan, ks) = registeredScan
-    val all = ks.fsRel.location.inputFiles.map(new Path(_)).toSeq
+    val all = relFiles
     assert(all.length > 1)
     assert(ks.prune(spark, plan, all)("every file").isEmpty)
     assert(ks.prune(spark, plan, all.take(1), total = 1)("one of one").isEmpty)
